@@ -54,18 +54,16 @@ def _flat_binary(arr, pa):
     n = len(arr)
     bufs = arr.buffers()
     width = np.int64 if pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type) else np.int32
-    if bufs[1] is None:  # 0-row (or all-absent) batch: no offsets buffer
+    nulls = ~np.asarray(arr.is_valid()) if arr.null_count else None
+    if bufs[1] is None:  # 0-row (or all-null) batch: no offsets buffer
         zero = np.zeros(n + 1, np.int64)
-        return np.empty(0, np.uint8), zero[:-1], zero[1:], None
+        return np.empty(0, np.uint8), zero[:-1], zero[1:], nulls
     off = np.frombuffer(bufs[1], dtype=width)[arr.offset : arr.offset + n + 1].astype(np.int64)
     data = (
         np.frombuffer(bufs[2], dtype=np.uint8)
         if bufs[2] is not None
         else np.empty(0, np.uint8)
     )
-    nulls = None
-    if arr.null_count:
-        nulls = ~np.asarray(arr.is_valid())
     return data, off[:-1], off[1:], nulls
 
 

@@ -131,7 +131,8 @@ def scan_is_underparallel(df: DataFrame, par: int) -> bool:
     count stands in — at warehouse scale the file count alone exceeds
     any core count, which is the only fact the callers need. The gate is
     purely a performance decision: a false True costs one narrow
-    exchange, never a result change.
+    exchange, never a result change. So is an unparseable
+    `maxPartitionBytes` (a fractional size, garbage): it widens.
     """
     files = df.inputFiles()
     if len(files) >= par:
@@ -140,7 +141,12 @@ def scan_is_underparallel(df: DataFrame, par: int) -> bool:
     s = raw.strip().lower().removesuffix("b")
     units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
     mult = units.get(s[-1:], 1)
-    max_pb = int(s[:-1] if s[-1:] in units else s) * mult
+    try:
+        max_pb = int(s[:-1] if s[-1:] in units else s) * mult
+    except ValueError:
+        return True
+    if max_pb <= 0:
+        return True
     total = 0
     for uri in files:
         if not uri.startswith("file:"):

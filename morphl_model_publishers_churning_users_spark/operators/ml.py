@@ -137,8 +137,7 @@ def raw_train(spark, sf_dir):
     """Fitted LogisticRegression coefficients (one row per feature +
     intercept) — the distributed replacement for the reference's
     single-node Keras fit."""
-    labeled = churn.label_churn(churn.user_features(spark, sf_dir))
-    model, _, _ = churn.fit_with_fallback(labeled)
+    model, _, _ = churn.fit_with_fallback(churn.labeled_users(spark, sf_dir))
     lr = model.stages[-1]
     coefs = [(name, float(c)) for name, c in zip(churn.FEATURE_COLS, lr.coefficients)]
     coefs.append(("__intercept__", float(lr.intercept)))
@@ -181,8 +180,7 @@ def ml_eval(spark, sf_dir):
 def raw_eval(spark, sf_dir) -> float:
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
-    labeled = churn.label_churn(churn.user_features(spark, sf_dir))
-    model, _, eval_set = churn.fit_with_fallback(labeled)
+    model, _, eval_set = churn.fit_with_fallback(churn.labeled_users(spark, sf_dir))
     scored = model.transform(eval_set)
     return float(
         BinaryClassificationEvaluator(
@@ -257,20 +255,16 @@ def raw_crossval(spark, sf_dir) -> list[tuple[float, float, bool]]:
             clean = dataset.withColumn(col, F.col(col).alias(col, metadata={}))
             return super()._evaluate(clean)
 
-    labeled = churn.label_churn(churn.user_features(spark, sf_dir))
-    # Stratified fold assignment: hash within each class so every fold
-    # sees the minority class whenever it has >= numFolds members (the
-    # fixture's positive rate is ~7%; random folds can go single-class).
-    labeled = labeled.withColumn(
+    # The materialized per-user table: the CrossValidator's 6 fold fits,
+    # 6 validation transforms and final refit all read it instead of
+    # re-running the two-shuffle events aggregate. Stratified fold
+    # assignment on top: hash within each class so every fold sees the
+    # minority class whenever it has >= numFolds members (the fixture's
+    # positive rate is ~7%; random folds can go single-class).
+    labeled = churn.labeled_users(spark, sf_dir).withColumn(
         "fold",
         F.pmod(F.xxhash64(F.col("user_id"), F.col("churned"), F.lit(7)), F.lit(3)).cast("int"),
     )
-    # Materialize the labeled feature table ONCE before CV: the
-    # CrossValidator's 6 fold fits + 6 validation transforms + final
-    # refit each re-evaluate the dataset lineage, and user_features is
-    # a two-shuffle aggregate over events — ~13 recomputes without
-    # this (r13 optimization, guide §5; the per-user table is tiny).
-    labeled = ckpt(labeled)
     pipeline = churn.build_ml_pipeline()
     lr = pipeline.getStages()[-1]
     grid = ParamGridBuilder().addGrid(lr.regParam, [0.01, 0.5]).build()

@@ -9,14 +9,23 @@ This version keeps every stage distributed: events (parquet) →
 sessionization (native session_window) → per-user feature rollup (one
 hash aggregate) → recency label → MLlib LogisticRegression (distributed
 LBFGS) → scored users. No driver-side data movement anywhere.
+
+One materialization point: :func:`labeled_users` checkpoints the
+labeled per-user table once, and the class probe, StandardScaler fit,
+every LBFGS pass and the scoring transform all read it. Without it each
+of those consumers re-runs the two-shuffle ``events`` aggregate (about
+48 jobs per fit at sf 0.01). The per-user table is far smaller than
+``events`` (one row per user), so holding it costs little, and ``ckpt``
+honours ``SPARK_GRAFT_CHECKPOINT_DIR`` for a fault-tolerant copy.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..catalog import table
+from ..operators._shared import ckpt
 
 # Fixture event horizon (FIXTURES.md: ts ∈ [2024-01-01, 2024-01-30]).
 # The fixture compresses activity into one month, so the recency
@@ -24,6 +33,9 @@ from ..catalog import table
 # (1/15, 12/150, 106/1500 positives at sf 0.001/0.01/0.1).
 HORIZON = "2024-01-30"
 CHURN_CUTOFF = "2024-01-29 20:00:00"
+
+# Hash buckets 0..TRAIN_BUCKETS-1 of 10 form the train side of the split.
+TRAIN_BUCKETS = 8
 
 FEATURE_COLS = [
     "n_events",
@@ -81,16 +93,27 @@ def label_churn(features: DataFrame) -> DataFrame:
     )
 
 
-def split_train_test(labeled: DataFrame, train_buckets: int = 8) -> tuple[DataFrame, DataFrame]:
+def labeled_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The labeled per-user table, materialized once for every consumer."""
+    return ckpt(label_churn(user_features(spark, sf_dir)))
+
+
+def _in_train(train_buckets: int = TRAIN_BUCKETS) -> Column:
+    """Train side of the split: hash bucket 0-9 of the user key below
+    `train_buckets`. Shared by the split and the class probe."""
+    return F.pmod(F.xxhash64(F.col("user_id"), F.lit(42)), F.lit(10)) < train_buckets
+
+
+def split_train_test(
+    labeled: DataFrame, train_buckets: int = TRAIN_BUCKETS
+) -> tuple[DataFrame, DataFrame]:
     """Deterministic, cluster-stable split: hash-bucket on the key.
 
     randomSplit depends on partition layout; hashing the key gives the
     same split on any cluster size — the scale-correct seeded split.
     """
-    bucket = F.pmod(F.xxhash64(F.col("user_id"), F.lit(42)), F.lit(10))
-    train = labeled.filter(bucket < train_buckets)
-    test = labeled.filter(bucket >= train_buckets)
-    return train, test
+    in_train = _in_train(train_buckets)
+    return labeled.filter(in_train), labeled.filter(~in_train)
 
 
 def build_ml_pipeline():
@@ -112,12 +135,16 @@ def build_ml_pipeline():
 
 def fit_with_fallback(labeled: DataFrame):
     """Fit on the train bucket; if hashing isolated one class (tiny sf),
-    fall back to the full labeled set so the fit is non-degenerate."""
+    fall back to the full labeled set so the fit is non-degenerate.
+
+    One grouped probe counts the classes on both sides of the split."""
     train, test = split_train_test(labeled)
-    if train.select("churned").distinct().count() < 2:
+    pairs = labeled.select(_in_train().alias("is_train"), "churned").distinct().collect()
+    train_classes = sum(1 for r in pairs if r["is_train"])
+    if train_classes < 2:
         train = labeled
     model = build_ml_pipeline().fit(train)
-    eval_set = test if test.select("churned").distinct().count() == 2 else labeled
+    eval_set = test if len(pairs) - train_classes == 2 else labeled
     return model, train, eval_set
 
 
@@ -125,7 +152,7 @@ def run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end: returns (user_id, churned, churn_prob) for all users."""
     from pyspark.ml.functions import vector_to_array
 
-    labeled = label_churn(user_features(spark, sf_dir))
+    labeled = labeled_users(spark, sf_dir)
     model, _, _ = fit_with_fallback(labeled)
     scored = model.transform(labeled)
     return scored.select(

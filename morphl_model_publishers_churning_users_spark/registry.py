@@ -275,6 +275,14 @@ def register(key: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Quer
 # set it to any key whose operator code changes post-green in r15;
 # the r14 changes are fully covered by the r14 window below.
 #
+# ROUND-15 MAINTENANCE (APPLIED): CORRECTNESS_r14 came back 50/50
+# hash-green — exactly the staged window: the 14 _REVERIFY keys under
+# their r14 code, the 2 canaries fn_string/ts_tumbling and 34
+# second-touch round-2 keys, all re-tagged 14 in place below.
+# _REVERIFY cleared, then set to the 5 ml_ keys whose code changed
+# post-green (see the _REVERIFY block); _CANARY rotated to agg_pivot +
+# ml_train (r16 next: continue the oldest-family rotation).
+#
 # The original r13-close pre-staged plan, kept verbatim:
 # ROUND-14 PRE-STAGED MAINTENANCE: fold the CORRECTNESS_r13 greens in
 # with tag 13 (expect the 2 canaries dq_profile/source_csv re-tagged +
@@ -419,30 +427,30 @@ _VERIFIED_ROUND: dict[str, int] = {
     "ts_calendar_dim": 13,
     "ts_decay_score": 13, "ts_markov_transitions": 13, "ts_rfm_segment": 13,
         # --- round 2 greens ---
-    "agg_topn_array": 2, "agg_approx_distinct": 4, "agg_sketch_hll": 13,
-    "agg_hll_union": 13, "agg_percentile_approx": 2,
-    "scan_parquet": 8, "scan_projected": 2, "sink_parquet_part": 2, "sink_upsert": 2,
-    "scan_partition_pruned": 2, "scan_schema_evolution": 2, "scan_csv_malformed": 2,
-    "scan_binary_files": 2, "scan_recursive_glob": 2, "join_dpp": 4,
-    "scan_file_provenance": 2, "source_csv": 13, "sink_csv_gzip": 2,
-    "source_ga_json": 2, "source_json": 2, "sink_orc": 2, "source_python_ds": 2,
-    "source_python_ds_stream": 2, "project_derive": 2, "filter_pred": 2,
-    "cast_types": 2, "cond_expr": 2, "null_handling": 2, "dedup_exact": 2,
-    "subquery_scalar": 8, "subquery_correlated": 2, "subquery_lateral": 2,
-    "fn_try": 2, "cte_recursive": 2, "fn_format": 2, "source_range": 2,
-    "subquery_exists_in": 2, "fn_greatest_least": 2, "dq_orphan_audit": 2,
-    "dq_profile": 13, "win_rownum": 3, "win_lag": 4, "win_frame_rows": 2,
-    "win_frame_range": 2, "win_running": 7, "win_ntile": 2, "win_firstlast": 2,
+    "agg_topn_array": 14, "agg_approx_distinct": 4, "agg_sketch_hll": 13,
+    "agg_hll_union": 13, "agg_percentile_approx": 14,
+    "scan_parquet": 8, "scan_projected": 14, "sink_parquet_part": 14, "sink_upsert": 14,
+    "scan_partition_pruned": 14, "scan_schema_evolution": 14, "scan_csv_malformed": 14,
+    "scan_binary_files": 14, "scan_recursive_glob": 14, "join_dpp": 4,
+    "scan_file_provenance": 14, "source_csv": 13, "sink_csv_gzip": 14,
+    "source_ga_json": 14, "source_json": 14, "sink_orc": 14, "source_python_ds": 2,
+    "source_python_ds_stream": 2, "project_derive": 14, "filter_pred": 14,
+    "cast_types": 14, "cond_expr": 14, "null_handling": 14, "dedup_exact": 14,
+    "subquery_scalar": 8, "subquery_correlated": 14, "subquery_lateral": 14,
+    "fn_try": 14, "cte_recursive": 14, "fn_format": 14, "source_range": 14,
+    "subquery_exists_in": 14, "fn_greatest_least": 14, "dq_orphan_audit": 14,
+    "dq_profile": 13, "win_rownum": 3, "win_lag": 4, "win_frame_rows": 14,
+    "win_frame_range": 14, "win_running": 7, "win_ntile": 14, "win_firstlast": 14,
         # --- round 3 greens ---
     "sample_rows": 3, "sample_stratified": 3, "ts_interval_merge": 3,
-    "fn_string": 6, "fn_date": 3, "fn_math": 3, "fn_json": 4, "fn_array": 3, "fn_map": 3,
+    "fn_string": 14, "fn_date": 3, "fn_math": 3, "fn_json": 4, "fn_array": 3, "fn_map": 3,
     "fn_hash": 3, "fn_struct": 3, "fn_url": 3, "fn_variant": 3, "fn_bitwise": 3,
     "fn_string_distance": 3, "fn_mask": 3,
     "sort_multi": 3, "topk": 3, "topk_nulls_last": 3, "limit_offset": 3,
     "set_union": 10,  # r10 canary re-touch
     "set_union_by_name": 3, "set_intersect": 3,
     "set_intersect_all": 3, "set_except": 3, "set_except_all": 3,
-    "ts_tumbling": 4, "ts_sliding": 3, "ts_session": 7, "ts_gap_fill": 3,
+    "ts_tumbling": 14, "ts_sliding": 3, "ts_session": 7, "ts_gap_fill": 3,
     "ts_resample_ohlc": 3, "ts_ewma": 4, "ts_funnel": 3, "ts_retention_cohorts": 3,
     "ts_day_over_day": 3, "ts_session_attrs": 3, "ts_attribution_first_touch": 3,
     "ts_active_users": 3, "ts_traffic_profile": 3,
@@ -455,7 +463,7 @@ _VERIFIED_ROUND: dict[str, int] = {
     "llm_dedup_simhash": 4,
     "llm_dedup_ngram": 4, "llm_simsearch": 4, "llm_dedup_cosine": 4,
     "llm_simsearch_ann": 4, "llm_simsearch_ivf": 4, "llm_textstats": 4,
-    "llm_langfilter": 4, "llm_quality": 4, "llm_tokens": 4, "llm_langid": 4,
+    "llm_langfilter": 4, "llm_quality": 4, "llm_tokens": 4, "llm_langid": 14,
     "llm_fingerprint": 4, "llm_tfidf": 4, "llm_embed_ops": 4, "llm_pii_scrub": 4,
     "llm_contamination": 4, "llm_chunk": 4, "llm_pack": 4, "llm_tfidf_exact": 4,
     "llm_dedup_cluster": 4, "llm_unigram_lm": 4, "llm_kmeans_embed": 4,
@@ -486,7 +494,7 @@ _VERIFIED_ROUND: dict[str, int] = {
     "ts_cohort_value_curve": 5, "ts_conversion_latency": 5,
     "ts_survival_curve": 5, "ts_anomaly_robust": 5, "ts_scd2_history": 5,
     "ts_forecast_linear": 5, "ts_holt_forecast": 5, "ts_seasonal_decompose": 5,
-    "join_fuzzy_blocked": 5,
+    "join_fuzzy_blocked": 14,
         # --- round 6 greens (CORRECTNESS_r06: 50/50 hash-green; the 2
         # canaries agg_group/fn_string were re-tagged 6 above) ---
     "join_skew_salted": 6, "join_bucketed": 6, "join_null_safe": 6,
@@ -524,7 +532,7 @@ _VERIFIED_ROUND: dict[str, int] = {
     "join_scd2_asof": 7, "join_temporal_knn": 7, "join_spatial_grid": 7,
     "join_snowflake": 7, "join_asof_forward": 7, "join_full_outer": 7, "llm_ngram_novelty": 7,
     "llm_template_prefix": 7, "llm_odds_ratio_terms": 7, "llm_kn_bigram_lm": 7,
-    "llm_vocab_coverage": 7, "llm_lang_confusion": 7, "llm_burstiness": 7,
+    "llm_vocab_coverage": 7, "llm_lang_confusion": 14, "llm_burstiness": 7,
     "llm_compression_filter": 7, "llm_url_dedup": 7,
         # --- round 8 greens (CORRECTNESS_r08: 50/50 hash-green; canaries
         # scan_parquet/subquery_scalar re-tagged 8 above) ---
@@ -626,52 +634,37 @@ _VERIFIED_ROUND: dict[str, int] = {
     "source_text_lines": 12, "source_fixed_width": 12,
     "source_csv_multichar": 12, "source_json_multiline": 12,
     "ts_stream_sliding": 12, "source_rate_stream": 12, "sink_merge_into": 12,
-    "scan_iceberg_snapshot": 12, "scan_delta_log": 12,
-    "scan_delta_checkpoint": 12, "scan_delta_time_travel_ts": 12,
-    "fn_protobuf_wire": 12, "fn_avro_wire": 12, "fn_avro_container": 12,
+    "scan_iceberg_snapshot": 12, "scan_delta_log": 14,
+    "scan_delta_checkpoint": 14, "scan_delta_time_travel_ts": 14,
+    "fn_protobuf_wire": 14, "fn_avro_wire": 14, "fn_avro_container": 14,
         # --- round 13 greens (CORRECTNESS_r13: 50/50 hash-green — the 2
         # canaries dq_profile/source_csv re-tagged 13 above, 42 oldest-
         # checked round-1/2 keys re-tagged 13 in place, and the 6
         # first-touch keys below: the retired backlog + the two r13
         # additions — exactly the staged window) ---
-    "fn_avro_schema_evolution": 13,
-    "fn_avro_union_nullable": 13,
-    "scan_delta_partition_values": 13,
-    "fn_avro_array_blocks": 13,
+    "fn_avro_schema_evolution": 14,
+    "fn_avro_union_nullable": 14,
+    "scan_delta_partition_values": 14,
+    "fn_avro_array_blocks": 14,
     "scan_delta_deletion_vectors": 13,
-    "fn_avro_map_blocks": 13,
+    "fn_avro_map_blocks": 14,
 }
 
 DRIVER_VERIFIED: frozenset[str] = frozenset(_VERIFIED_ROUND)
 
 # Keys repaired this round that must re-hash before being trusted again.
-# Round 14 (optimization round 2): every key whose OPERATOR CODE changed
-# post-green this round — the 7 codec ops (decode moved from per-row
-# Python walks to numpy-vectorized batch walks, functions/avro_np.py),
-# llm_langid + llm_lang_confusion (scoring join pre-aggregated to
-# distinct (doc, gram) counts; rounded scores verified bit-identical at
-# 3 scales), join_fuzzy_blocked (SymDelete candidate generation +
-# file-metadata split probe), and the 4 Delta-fixture ops whose slice
-# writes now overlap (guide §2.6). All were re-verified against the oracle
-# at sf0.001/0.01 (and the semantics-sensitive ones at sf0.1) before
-# landing; the _REVERIFY slot puts the DRIVER's own hash back on them.
+# Round 15: the round-14 entries all came back hash-green in
+# CORRECTNESS_r14 and are cleared. The ML keys below share the churn
+# plan's per-user table, which is now materialized once
+# (plans/churn.labeled_users) and probed for its classes by one grouped
+# query; their operator code changed post-green, so the driver's own
+# hash goes back on them.
 _REVERIFY: tuple[str, ...] = (
-    "fn_protobuf_wire",
-    "fn_avro_wire",
-    "fn_avro_schema_evolution",
-    "fn_avro_union_nullable",
-    "fn_avro_container",
-    "fn_avro_array_blocks",
-    "fn_avro_map_blocks",
-    "llm_langid",
-    "llm_lang_confusion",
-    "join_fuzzy_blocked",
-    # Delta fixture writes overlapped via _overlap_writes (guide §2.6;
-    # byte-equivalent fixture, outputs unchanged, oracle re-verified).
-    "scan_delta_log",
-    "scan_delta_checkpoint",
-    "scan_delta_time_travel_ts",
-    "scan_delta_partition_values",
+    "ml_split",
+    "ml_train",
+    "ml_eval",
+    "ml_infer",
+    "ml_crossval",
 )
 
 # Regression canaries: a small rotating sample of already-verified keys kept
@@ -680,8 +673,8 @@ _REVERIFY: tuple[str, ...] = (
 # (56 never-checked keys compete for ~50 slots; every canary slot displaces a
 # first-touch verification — r4 verdict item 1).
 _CANARY: tuple[str, ...] = (
-    "fn_string",    # fn family (r6 green — 8 rounds untouched)
-    "ts_tumbling",  # ts family (r4 green — 10 rounds untouched)
+    "agg_pivot",  # agg family (r13 second touch)
+    "ml_train",   # ml family (r5 green; also in _REVERIFY this round)
 )
 
 # Round-5 window priority: the 13 round-4 llm/mm additions first (the

@@ -65,6 +65,55 @@ def test_infer_probabilities_valid(spark, sf_dir):
     assert row["prob_ok"] and row["n_users"] == scored.count()
 
 
+def test_scoring_reads_the_materialized_user_table(spark, sf_dir):
+    """The scored DataFrame is planned over the checkpointed per-user
+    table: its executed plan scans no events file, so scoring does not
+    re-run the events aggregate."""
+    scored = churn.run(spark, sf_dir)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert not [ln for ln in scans if "events" in ln], plan
+
+
+def _hand_labeled(spark, train_churned, test_churned):
+    """Tiny labeled table: one user per label in `train_churned` from the
+    train bucket and one per label in `test_churned` from the test bucket."""
+    ids = spark.range(1, 400).withColumnRenamed("id", "user_id")
+    train_ids, test_ids = (
+        [r.user_id for r in side.orderBy("user_id").collect()]
+        for side in churn.split_train_test(ids)
+    )
+    rows = []
+    for pool, labels in ((train_ids, train_churned), (test_ids, test_churned)):
+        for uid, label in zip(pool, labels):
+            feats = [float((uid * (k + 3)) % 17 + label * 5) for k in range(len(churn.FEATURE_COLS))]
+            rows.append((uid, label, *feats))
+    return spark.createDataFrame(rows, ["user_id", "churned", *churn.FEATURE_COLS])
+
+
+def test_fit_fallback_branches(spark):
+    """Single-class train bucket: fit on the whole table. Single-class
+    test bucket: evaluate on the whole table. Two classes on both
+    sides: keep the split."""
+    two = [0, 1, 0, 1, 0, 1]
+    one = [0, 0, 0, 0]
+
+    labeled = _hand_labeled(spark, one, two)
+    _, train, eval_set = churn.fit_with_fallback(labeled)
+    assert train is labeled
+    assert eval_set is not labeled and eval_set.count() == len(two)
+
+    labeled = _hand_labeled(spark, two, one)
+    _, train, eval_set = churn.fit_with_fallback(labeled)
+    assert train is not labeled and train.count() == len(two)
+    assert eval_set is labeled
+
+    labeled = _hand_labeled(spark, two, two)
+    _, train, eval_set = churn.fit_with_fallback(labeled)
+    assert train is not labeled and train.count() == len(two)
+    assert eval_set is not labeled and eval_set.count() == len(two)
+
+
 def test_approx_distinct_within_tolerance(spark, sf_dir):
     rows = _Q["agg_approx_distinct"](spark, sf_dir).collect()
     for r in rows:

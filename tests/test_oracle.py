@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from morphl_model_publishers_churning_users_spark import registry
 from morphl_model_publishers_churning_users_spark.registry import get_oracles, get_queries
 
 from .oracle_utils import compare
@@ -20,8 +21,11 @@ _ORACLES = get_oracles()
 # SPARK_GRAFT_TEST_SF_DIR=sf0.1 sweep the verify skill prescribes). The
 # default gate keeps a deterministic 1-in-8 sample (same 71 keys every
 # run — reproducible failures) so oracle parity still smoke-checks on
-# every fast run.
+# every fast run. Every _REVERIFY key with an oracle joins the sample: a
+# key whose code changed after it went green is parity-checked on every
+# fast run too (rows-only keys already run in test_rows_only_runs).
 _PARITY_KEYS = sorted(_ORACLES)
+_SAMPLED_KEYS = sorted(set(_PARITY_KEYS[::8]) | (set(registry._REVERIFY) & set(_ORACLES)))
 
 
 @pytest.mark.slow
@@ -30,7 +34,7 @@ def test_oracle_parity(spark, sf_dir, key):
     compare(_QUERIES[key](spark, sf_dir), _ORACLES[key], sf_dir)
 
 
-@pytest.mark.parametrize("key", _PARITY_KEYS[::8])
+@pytest.mark.parametrize("key", _SAMPLED_KEYS)
 def test_oracle_parity_sampled(spark, sf_dir, key):
     compare(_QUERIES[key](spark, sf_dir), _ORACLES[key], sf_dir)
 

@@ -20,6 +20,8 @@ argument; these tests make the arguments executable:
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pyspark.sql.functions as F
 
 from morphl_model_publishers_churning_users_spark.operators._shared import (
@@ -164,3 +166,22 @@ def test_scan_is_underparallel_probe(spark, sf_dir):
     # par > 1, never for par == 1
     assert scan_is_underparallel(c, 2)
     assert not scan_is_underparallel(c, 1)
+
+
+def test_scan_is_underparallel_widens_on_unparseable_conf(tmp_path):
+    """The gate is a performance decision only: a maxPartitionBytes it
+    cannot parse (garbage, a fractional size, zero) widens instead of
+    raising into the query."""
+    f = tmp_path / "part-0.parquet"
+    f.write_bytes(b"x" * 10)
+
+    def scan(raw):
+        conf = SimpleNamespace(get=lambda key, default: raw)
+        return SimpleNamespace(
+            inputFiles=lambda: [f"file://{f}"], sparkSession=SimpleNamespace(conf=conf)
+        )
+
+    # control: 10 bytes in 4-byte splits is 3 splits, enough for par 2
+    assert not scan_is_underparallel(scan("4b"), 2)
+    for raw in ("garbage", "0.5g", "m", "0"):
+        assert scan_is_underparallel(scan(raw), 2), raw

@@ -314,10 +314,39 @@ def test_malformed_varint_raises():
         vec._vec_uvarint(data, np.zeros(1, np.int64))
 
 
+class _OffsetlessColumn:
+    """A binary column shipped with its validity bitmap only, no offsets
+    or data buffer. pyarrow refuses to build that layout for a non-empty
+    array, so this proxies a regular array and hides the two buffers."""
+
+    def __init__(self, arr):
+        self._arr = arr
+
+    def __getattr__(self, name):
+        return getattr(self._arr, name)
+
+    def __len__(self):
+        return len(self._arr)
+
+    def buffers(self):
+        return [self._arr.buffers()[0], None, None]
+
+
+class _PayloadSwapBatch:
+    """A record batch whose ``payload`` column is replaced."""
+
+    def __init__(self, batch, payload):
+        self.schema, self._batch, self._payload = batch.schema, batch, payload
+
+    def column(self, i):
+        return self._payload if self.schema.names[i] == "payload" else self._batch.column(i)
+
+
 def test_decoders_tolerate_zero_row_batches():
     """mapInArrow contracts allow empty record batches (and a 0-row
     binary array carries no offsets buffer at all) — every decoder must
-    pass one through without touching a missing buffer."""
+    pass one through without touching a missing buffer. A non-empty
+    all-null payload without an offsets buffer must decode as nulls."""
     empty_wire = pa.record_batch(
         {
             "key_in": pa.array([], pa.int64()),
@@ -339,3 +368,16 @@ def test_decoders_tolerate_zero_row_batches():
     )
     (out,) = list(vec.decode_array_blocks(iter([empty_blocks])))
     assert out.num_rows == 0
+    all_null = pa.record_batch(
+        {
+            "key_in": pa.array([1, 2, 3], pa.int64()),
+            "pri_in": pa.array(["A", "B", "C"], pa.string()),
+            "cents_in": pa.array([4, 5, 6], pa.int64()),
+            "payload": pa.nulls(3, pa.binary()),
+        }
+    )
+    offsetless = _PayloadSwapBatch(all_null, _OffsetlessColumn(all_null.column(3)))
+    (want,) = list(ref.decode_protobuf_wire(iter([all_null])))
+    (out,) = list(vec.decode_protobuf_wire(iter([offsetless])))
+    assert out.to_pydict() == want.to_pydict()
+    assert all(v is None for col in out.to_pydict().values() for v in col)
