@@ -67,6 +67,13 @@ _RUNTIME_CONFS = {
     "spark.sql.codegen.hugeMethodLimit": "8000",
 }
 
+# Confs that change query results (a missed timeZone shifts every
+# timestamp): failing to set one raises. The rest only tune performance
+# and stay best-effort.
+_SEMANTIC_CONFS = frozenset(
+    {"spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone"}
+)
+
 
 # App ids that already had the package shipped to their Python workers.
 _pyfiles_shipped: set[str] = set()
@@ -124,16 +131,17 @@ def ensure_confs(spark: SparkSession) -> None:
     """Apply runtime-settable confs the engine depends on.
 
     Safe to call repeatedly; called by every table load so driver-owned
-    sessions get the right behavior too.
+    sessions get the right behavior too. Raises if a result-changing conf
+    (``_SEMANTIC_CONFS``) cannot be set.
     """
     _ship_package(spark)
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
-            # Conf not recognized/settable in this build — queries that
-            # depend on it will surface a clear error instead.
-            pass
+            if k in _SEMANTIC_CONFS:
+                raise
+            # Performance conf not settable in this build: run without it.
     try:
         # Streaming state stores and non-AQE paths take their task count
         # straight from shuffle.partitions (AQE never coalesces them). A

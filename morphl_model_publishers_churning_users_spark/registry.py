@@ -12,11 +12,32 @@ Oracle discipline (SURVEY.md §5.1):
   * money-style SUMs go through DECIMAL(38,6) so the result is exact and
     partition-order-independent (double summation order differs between
     engines and can flip the 6th decimal on ~1e9-magnitude totals).
+
+Driver-window order. The driver hash-checks only a bounded prefix of
+``queries()`` (about 50 keys per round), so iteration order decides which
+operators it verifies. ``get_queries()``/``get_oracles()`` yield:
+  1. pending ``_REVERIFY`` keys, in declared order — their code changed
+     after their last driver green;
+  2. keys never green in any driver artifact, in registration order;
+  3. verified keys, oldest latest-green round first (ties in registration
+     order), so spare window slots re-touch the keys that have gone
+     longest without a driver check.
+Each key's latest green round is derived from the committed
+``CORRECTNESS_r{N}.json`` artifacts at the repository root, so a new
+artifact needs no registry edit. The derivation runs on the first
+``get_queries()``/``get_oracles()`` call, never at import: executor
+workers import this module from the shipped package zip, which holds no
+artifacts. Without artifacts, keys keep registration order behind any
+``_REVERIFY`` keys.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Iterable
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +46,23 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+# {key: R}: the key's operator code changed after its driver green, when
+# round R was the newest artifact. Each key leads the window until an
+# artifact newer than R shows it green again, then expires by itself. Add
+# an entry when a driver-green key's code changes (a fix for a key the
+# driver turned red included). The ML keys share the churn plan's
+# per-user table, which is now materialized once (plans/churn.labeled_users).
+_REVERIFY: dict[str, int] = {
+    "ml_split": 14,
+    "ml_train": 14,
+    "ml_eval": 14,
+    "ml_infer": 14,
+    "ml_crossval": 14,
+}
 
 
 def register(key: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryFn]:
@@ -41,1094 +79,64 @@ def register(key: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Quer
     return deco
 
 
-# --- driver-window prioritization -----------------------------------------
-#
-# The driver's per-round correctness check covers a bounded prefix of
-# ``queries()`` in iteration order (round 1: the first ~50 keys). To convert
-# every operator from "self-graded" to "driver-verified" across rounds, we
-# order the dict so keys WITHOUT a green CORRECTNESS row yet come first:
-#   rank 0  keys that failed / had no oracle in the last driver run (fixed
-#           this round — must re-verify)
-#   rank 1+ driver-untested keys, cheapest/core families first (cheaper
-#           queries ⇒ the driver's budget covers more of them)
-#   last    keys already hash-verified by the driver (regression backstop)
-
-# ROUND MAINTENANCE (do this first each round): fold the new
-# CORRECTNESS_r{N}.json hash_match=true keys into DRIVER_VERIFIED, point
-# _REVERIFY at keys repaired this round, and rotate _CANARY to a fresh
-# sample of verified keys — otherwise the driver's bounded check prefix
-# re-verifies known greens and the round's verification yield collapses
-# (round-2 lesson: 49/50 slots would have been wasted).
-#
-# ROUND-5 MAINTENANCE APPLIED: CORRECTNESS_r04.json came back 50/50 green
-# (zero reds, all three _REVERIFY repairs re-confirmed, all 5 canaries
-# green), so the window's 42 never-verified keys are folded in below,
-# _REVERIFY is cleared, and _CANARY is trimmed to 2 so the round-5 window
-# maximizes never-checked coverage (56 unverified keys > ~48 usable slots).
-#
-# ROUND-5 WINDOW (what the driver should check this round, in order):
-#   2 canaries, then the 13 round-4 llm/mm additions, the 10-key ML tail,
-#   the 9 streaming keys, the 15-key ts/dq/scan tail, then join extensions.
-#   Pre-flighted 50/50 green in the driver simulator this round.
-# DELIBERATE ROUND-6 SPILL (~8 keys, lowest-risk last per r4 verdict item 5):
-#   join_interval_overlap join_asof_tolerance join_null_safe join_bucketed
-#   join_range_bucketed join_skew_salted join_hint_broadcast
-#   join_hint_shuffle_hash
-# ROUND-6 MAINTENANCE APPLIED: CORRECTNESS_r05.json came back 50/50
-# hash-green (zero reds), so the 48 never-before-verified keys of the
-# round-5 window are folded into DRIVER_VERIFIED below, _REVERIFY stays
-# empty, and _CANARY rotates to agg_group + fn_string per the staged
-# rotation table. The round-6 window then holds: 2 canaries + the 8-key
-# join spill + the 38 round-5 additions (rank 7: graph_* family, sketch
-# aggregates, ml feature/eval ops, llm selection ops, ts
-# holt_winters/periodogram/autocorr/changepoint, win_frame_interval,
-# sample_reservoir, dq_l_diversity) = 48 slots, ~2 spare for round-6
-# additions. All 38 were sim-verified at sf0.001/0.01/0.1 this round.
-# CANARY ROTATION (one per family, 2/round, family re-touched ≤ every
-# 6 rounds): r6 agg_group + fn_string; r7 win_running + ts_session;
-# r8 scan_parquet + subquery_scalar; r9 llm_dedup_exact + udf_pandas;
-# r10 join_inner_hash + set_union; r11 ml_label + mm_features;
-# r12 ts_watermark + graph_pagerank (streaming + graph families'
-# first re-touch); r13 dq_profile + source_csv; r14 agg_group +
-# fn_date (6-round cycle restarts).
-#
-# Keys the driver has hash-verified (CORRECTNESS_r01..r05: 44 + 47 + 46 +
-# 43 + 48 new greens), each tagged with the round of its MOST RECENT green
-# row — canary/reverify re-touches carry the re-check round, validated
-# against the artifacts. The backstop ordering sorts verified keys OLDEST
-# ROUND FIRST, so any spare window slots automatically re-touch the keys
-# that have gone longest without a driver look (r5 verdict item 7 —
-# second-touch breadth without hand-curating a rotation each round).
-# ROUND-7 MAINTENANCE APPLIED: CORRECTNESS_r06.json came back 50/50
-# hash-green (zero reds) — exactly the staged window (2 canaries
-# agg_group/fn_string re-tagged 6, the 8-key join spill, the 38 round-5
-# additions, dq_uniqueness + dq_freshness). All 48 never-before-verified
-# keys are folded into DRIVER_VERIFIED below with tag 6, _REVERIFY stays
-# empty, and _CANARY rotates to win_running + ts_session per the staged
-# rotation table. The r7 window then holds: 2 canaries + ~48 of the
-# rank-9 round-6 additions in dict-insertion order (the early-r6 wave:
-# join_bloom_pruned, graph_* x5, ts_cusum/theta/sax, ml_* x7, llm_* x7,
-# agg_ecdf/winsorized/bitwise/rate_ci_wilson, fn_regex/interval/
-# collation/string_extra/trig/surrogate_key, dq_observe_metrics/
-# schema_contract/row_checksum/fk_chain, scan_metadata_cols/
-# ignore_corrupt_files/path_glob_filter, win_rolling_corr,
-# mm_header_parse, source_tsv/json_multiline, sink_csv_quoted,
-# udf_pandas_struct, ts_gap_stats/max_drawdown/sessions_per_user/
-# days_to_return/attribution_linear/rank_mobility, ml_ece,
-# llm_burstiness/compression_filter/lang_confusion/vocab_coverage).
-# The late-r6 wave (the ~80 keys from llm_url_dedup through
-# llm_lsh_bucket_skew) queues right behind across rounds 8-9 — still
-# ahead of the verified backstop, followed by the wave-4 tail
-# (scan_rowgroup_stats, sink_clustered_write, agg_heavy_hitters,
-# udf_window_pandas, ts_intervention_its, ts_poisson_rate_ratio,
-# llm_retrieval_eval, llm_agreement_kappa — sim-verified at
-# sf0.001/0.01/0.1 plus an Asia/Kolkata probe, full 428-key
-# bare-session sim green after they landed) and the wave-5 tail
-# (join_asof_forward, ts_runs_test, ts_seasonality_strength,
-# dq_sequence_gaps, llm_code_detect — same three-scale + Kolkata
-# verification; full 433-key bare-session sim green after they
-# landed) and the wave-6 tail (ml_learning_curve, llm_split_leakage,
-# sink_bloom_filter_parquet — same three-scale + Kolkata
-# verification) and the wave-7 tail (scan_cdc_apply,
-# ts_bitemporal_asof, ts_croston_forecast — same verification) and
-# the wave-8 tail (udtf_arrow, win_event_pattern — same verification)
-# and the wave-9 tail (ts_lag_correlation, dq_quantile_sketch_audit —
-# same verification) and the wave-10 tail (ts_dtw_distance,
-# dq_rounding_contract_audit — same verification) and the wave-11
-# tail (ts_milestone_snapshot, ts_retention_curve_fit — same
-# verification) and the wave-12 tail (fn_penny_allocation,
-# ml_platt_scaling — same verification) and the wave-13 tail
-# (ts_mann_kendall, ts_theil_sen — same verification) and the
-# wave-14 tail (agg_beta_binomial_shrinkage — same verification) and
-# the wave-15 tail (ml_logrank_test — same verification) and the
-# wave-16 tail (dq_reconciliation, ml_bh_fdr — same verification)
-# and the wave-17 tail (ml_ab_srm_check, ts_ljung_box — same
-# verification) and the wave-18 tail (ts_spc_control_chart,
-# dq_duplicate_payments — same verification) and the wave-19+ tail
-# (the 24 continuation-session additions: ml_mcnemar_paired,
-# dq_key_discovery, graph_closeness, ts_kalman_level,
-# dq_dp_count_release, ts_bass_diffusion, ml_cox_score,
-# ml_poisson_glm, ts_granger_causality, ts_pot_gpd_tail,
-# source_fixed_width, ml_doubly_robust, ts_kendall_tau,
-# ml_bradley_terry, ts_cointegration_eg, ml_permutation_test,
-# ml_iv_wald, llm_greedy_coverage, ml_raking_ipf, ts_matrix_profile
-# onward — each verified at sf0.001 + sf0.01 + an Asia/Kolkata probe
-# + a targeted bare-session driver-sim window on the day it landed,
-# with the duplicate-scan sweep run and fixed per wave).
-# ROUND-6 CLOSED AT 554 registered keys (554 oracle twins, zero
-# rows-only); the definitive end-of-round bare-session simulator run was
-# 552/552 green (the 2 remaining keys landed right after and were
-# sim-verified individually), the r6 judge's own full-registry mirror run
-# was 554/554 green at sf0.001 (9m30s) plus a 31-key sample at sf0.01,
-# and the full pytest suite closed at ~880 tests green. End-of-round
-# bench, guest-idle: 6.818 s total (best recorded; r4 7.551, r5 8.779);
-# recorded BENCH_r06 7.283 s at loadavg 3.67 (pessimistic — host-level
-# variance band in SURVEY §6 bench-hygiene).
-# ROUND-7 STATE: 276/556 driver-verified after the fold below (554 at
-# fold time + the 2 rank-10 round-7 additions); the
-# r7 window = win_running + ts_session canaries + the first ~48 rank-9
-# round-6 additions in dict-insertion order (join_bloom_pruned,
-# graph_jaccard_linkpred/bfs_distance/modularity/assortativity,
-# ts_cusum/theta_forecast/sax, the ml/llm/fn/dq/scan early-r6 tails).
-# ROUND-8 MAINTENANCE APPLIED: CORRECTNESS_r07.json came back 50/50
-# hash-green (zero reds) — exactly the staged window (canaries
-# win_running + ts_session re-tagged 7, the _REVERIFY backstop
-# subquery_scalar re-tagged 7, and 47 first-touch greens: the
-# early-r6 agg_* stats wave, graph_* x12, join_* x8, llm_* x9).
-# All are folded in below with tag 7, _REVERIFY is cleared (the
-# 1.8x-threshold subquery_scalar re-hashed green), and _CANARY
-# rotates to scan_parquet + subquery_scalar per the rotation table.
-# The r8 window then picks up the next ~48 rank-9 keys in
-# dict-insertion order (the mid/late-r6 wave: ts_cusum/theta/sax
-# remainders, fn_regex/interval/collation/string_extra/trig/
-# surrogate_key, dq_observe_metrics/schema_contract/row_checksum/
-# fk_chain, scan_metadata_cols/ignore_corrupt_files/path_glob_filter,
-# win_rolling_corr, mm_header_parse, source_tsv/json_multiline,
-# sink_csv_quoted, udf_pandas_struct, the ts_* engagement tail,
-# ml_ece, and the ml/ts wave-tails behind them).
-# ROUND-9 MAINTENANCE APPLIED: CORRECTNESS_r08.json came back 50/50
-# hash-green — the staged window exactly (canaries scan_parquet +
-# subquery_scalar re-tagged 8, plus 48 first-touch greens: the llm_
-# rank-9 eval wave x23 and the ml_ stats/causal wave x25). All folded
-# below with tag 8; _CANARY rotates to llm_dedup_exact + udf_pandas
-# per the rotation table; graph_hits enters _REVERIFY (changed post-
-# green in r8 — ADVICE item 1), taking the window's front slot. The
-# r9 window = graph_hits + 2 canaries + the next ~47 rank-9 keys in
-# dict-insertion order (the ts_ forecasting/stats wave head, dq_
-# remainder, fn_ wire/codec tail).
-# ROUND-13 MAINTENANCE (APPLIED at r13 start — the fold below landed
-# exactly as pre-staged: CORRECTNESS_r12 came back 50/50 hash-green,
-# the 2 canaries + 48 predicted first-touch keys; tag-12 block added,
-# _CANARY rotated to dq_profile + source_csv, _REVERIFY empty per the
-# recorded r12-close determination): fold the CORRECTNESS_r12 greens in
-# with tag 12 (expect the 2 canaries ts_watermark/graph_pagerank
-# re-tagged + ~48 first-touch keys from the backlog head: the fn_
-# codec/wire extras, scan_delta_*/scan_iceberg_snapshot, source format
-# extras, win extras, udf/udtf extras and the ts stats tail), keep
-# _REVERIFY empty unless a green key changed post-green, rotate
-# _CANARY to dq_profile + source_csv per the rotation table (r14
-# next: fn_string + ts_tumbling). _REVERIFY determination for the
-# r12 fold, made at r12 close: every r12 product-code change touched
-# only never-driver-checked backlog keys (the fn_ codec family's
-# octet_length fix, the delta scans' schema hoist + probe asserts,
-# the two new rank-11 ops) or session infrastructure (the
-# SPARK_GRAFT_EXTRA_CONFS hook in build_session, the streaming
-# state-partition cap), and the FINAL committed tree re-passed the
-# full registry 566/566 at sf0.01 under defaults AND under the
-# 4-axis hostile combo — so no driver-GREEN key's operator code
-# changed post-green and _REVERIFY stays empty at the r13 fold. After that fold the
-# never-driver-checked backlog is ~4 (the r12 leftovers incl. the two
-# r12 stretch ops at rank 11) — the r13 window retires ALL of them
-# and cumulative driver coverage reaches 566/566; from r14 on, spare
-# window slots auto-rotate to oldest-checked keys (the _driver_rank
-# (99, round) tail), giving every key a second driver touch over
-# time. R13 stretch candidates (designs only, NOT registered):
-# (a) scan_delta_deletion_vectors — Delta deletion-vector emulation:
-# a remove-free DELETE writes a DV sidecar (bitmap of dead row
-# indices) referenced from the add action; the reader filters via
-# _metadata.row_index anti-join against the broadcast DV — the modern
-# Delta MERGE/DELETE fast path that avoids rewriting 100 TB of
-# parquet for a 0.1% delete. DE-RISKED at r12 close
-# (scripts/deletion_vector_prototype_r12.py, run at sf0.01 AND
-# sf0.1): (i) _metadata.row_index is stable across independent scans
-# with different projections (0/600k mismatches) — the property the
-# whole mechanism rests on; (ii) the fold-with-DV read path
-# (last-add-wins keeps the deletionVector descriptor, broadcast
-# left_anti on (file_path, row_index)) is EXACT vs a direct
-# filter(NOT pred) under decimal checksums; (iii) the asymmetry is in
-# bytes: sidecar O(deleted) 1.6->4.0 KiB vs rewrite O(table)
-# 0.6->5.9 MiB at 10x data, and the anti-join read overhead is
-# fixed-cost, not per-row (2.74s -> 2.19s at 10x). Build the r13
-# operator on this exact skeleton. (b) fn_avro_map_blocks — the map<string,
-# long> sibling of fn_avro_array_blocks (key-value pairs inside the
-# same block framing, sharing the fold decode), completing the Avro
-# composite story. DE-RISKED at r12 close
-# (scripts/map_blocks_fold_prototype_r12.py): the one genuinely new
-# mechanic — the decode fold's DATA-DEPENDENT cursor advance (zigzag
-# key-length read from the wire, skip vlen+klen bytes, then the
-# value varint) — decodes 500 variable-key wires (key lengths 5..15)
-# with zero desyncs, exact tiling onto the terminator, and
-# byte-for-byte agreement with an independent pure-Python spec
-# decoder. HARD CONSTRAINT found: the map fold MUST be
-# checkpoint-staged between the aggregate and its consumers — the
-# step's key-jump subtree re-substitutes into every value-ladder
-# limb, and un-staged consumers OOM the driver heap at analysis
-# (unlike the array fold, whose fixed-kind elements keep the tree
-# shallow). Build the r13 op with the encode checkpoint AND a
-# post-fold checkpoint.
-# ROUND-14 MAINTENANCE (APPLIED at r14 start): CORRECTNESS_r13 came
-# back 50/50 hash-green — exactly the staged window below (2 canaries
-# re-tagged 13, 6 first-touch keys folded in, 42 oldest-checked
-# round-1/2 keys re-tagged 13). _CANARY rotated to fn_string +
-# ts_tumbling per the rotation table (r15 next: agg_pivot + ml_train).
-# _REVERIFY set to the 14 keys whose operator code changed in THIS
-# optimization round (see the _REVERIFY block below) — they take the
-# front of the r14 driver window ahead of the canaries.
-# ROUND-15 PRE-STAGED MAINTENANCE: fold the CORRECTNESS_r14 greens in
-# with tag 14 — expect the 14 _REVERIFY keys re-hashed under their r14
-# code (clear _REVERIFY after confirming all 14 green), the 2 canaries
-# fn_string/ts_tumbling re-tagged, and ~34 SECOND-touch keys from the
-# oldest-checked tail (the remaining (99, 1)/(99, 2)-ranked round-1/2
-# greens in dict-insertion order). Rotate _CANARY to agg_pivot +
-# ml_train per the r13-close staging (r16 next: continue the
-# oldest-family rotation). _REVERIFY determination for the r15 fold:
-# set it to any key whose operator code changes post-green in r15;
-# the r14 changes are fully covered by the r14 window below.
-#
-# ROUND-15 MAINTENANCE (APPLIED): CORRECTNESS_r14 came back 50/50
-# hash-green — exactly the staged window: the 14 _REVERIFY keys under
-# their r14 code, the 2 canaries fn_string/ts_tumbling and 34
-# second-touch round-2 keys, all re-tagged 14 in place below.
-# _REVERIFY cleared, then set to the 5 ml_ keys whose code changed
-# post-green (see the _REVERIFY block); _CANARY rotated to agg_pivot +
-# ml_train (r16 next: continue the oldest-family rotation).
-#
-# The original r13-close pre-staged plan, kept verbatim:
-# ROUND-14 PRE-STAGED MAINTENANCE: fold the CORRECTNESS_r13 greens in
-# with tag 13 (expect the 2 canaries dq_profile/source_csv re-tagged +
-# 6 first-touch keys — the retired backlog fn_avro_schema_evolution/
-# fn_avro_union_nullable/scan_delta_partition_values/
-# fn_avro_array_blocks + the r13 additions scan_delta_deletion_vectors/
-# fn_avro_map_blocks — + ~42 SECOND-touch keys from the oldest-checked
-# tail: the (99, 1)-ranked round-1 greens in dict-insertion order, the
-# first time the auto-rotation re-verifies old greens). After that
-# fold, cumulative driver coverage is 568/568 and every spare window
-# slot keeps rotating through the oldest-checked tail. Rotate _CANARY
-# to fn_string + ts_tumbling per the rotation table (r15 next:
-# agg_pivot + ml_train). _REVERIFY determination for the r13 fold,
-# made at r13 close: the only post-green operator-code change this
-# round was scan_delta_partition_values' pruned_ok de-vacuuming (r12
-# advice) — that key was NOT yet driver-green when changed (it was
-# backlog, first driver touch lands in the r13 window with the new
-# code), so _REVERIFY stays empty unless a later r13 change touches a
-# green key. R14 stretch candidates (designs only, NOT registered;
-# keep additions at 2): (a) scan_delta_cdf — Change Data Feed in the
-# file-action fallback path: for a version window (v_from, v_to],
-# rows of window-added files are `insert` changes and rows of
-# window-removed files are `delete` changes, tagged
-# _change_type/_commit_version — the incremental-consumer contract
-# that reads O(changed files), never the table. DE-RISKED at r13
-# close (scripts/delta_cdf_prototype_r13.py): (i) CONSERVATION —
-# v0 state + inserts − deletes == direct v_to live-fold read, exact
-# under decimal checksums (6800+8200−1700 == 13300); (ii) BOUNDED
-# CHANGE SCAN — with every out-of-window add a phantom path that
-# would throw on open, the window read stays green at 16/64/256
-# commits with flat ~0.7 s timings (O(window actions) metadata +
-# O(changed files) data). (b) scan_iceberg_manifest_pruning — the
-# Iceberg TWO-LEVEL metadata tree: snapshot -> manifest LIST (one row
-# per manifest with partition-value ranges) -> manifest FILES (per-
-# file column min/max stats); a predicate prunes BOTH levels, keeping
-# planning O(manifests) where a flat log folds O(files) — what a 10M-
-# file table needs. DE-RISKED at r13 close
-# (scripts/iceberg_manifest_prototype_r13.py): two-level prune exact
-# vs direct filter at 8/64/512 PHANTOM manifests (plus 4 phantom file
-# entries inside the surviving manifest — both levels provably prune
-# by metadata alone), flat ~0.7-0.8 s planning+read.
-# ROUND-12 MAINTENANCE (APPLIED at r12 start): CORRECTNESS_r11 came
-# back 50/50 hash-green — exactly the staged window (canaries
-# ml_label/mm_features re-tagged 11 + 48 first-touch ts_ keys, listed
-# in the tag-11 block below). _REVERIFY stays empty (no green key was
-# changed post-green in r11); _CANARY rotated to ts_watermark +
-# graph_pagerank per the rotation table (r13 next: dq_profile +
-# source_csv). Post-fold never-driver-checked backlog = 50 (offsets
-# 2-51 of the post-fold order — the r7-r11 stretch ops, fn_ codec
-# extras, scan_delta/iceberg, source extras, win extras, udf/udtf
-# extras); the r12 window takes 48 of them, leaving ~2(+r12 adds) for
-# r13 — the backlog burns out by r13 if additions stay ≤2/round.
-# R12 stretch pair BOTH LANDED (scan_delta_partition_values at
-# operators/scans.py, fn_avro_array_blocks at functions/scalar.py;
-# exact oracles + pure-Python spec references in test_round12_ops.py,
-# verified at sf0.001/0.01/0.1 + bare driver-shaped session, rank 11,
-# registry now 566 keys). Original staged designs: (a)
-# scan_delta_partition_values — partition pruning THROUGH the commit
-# log: add actions carry partitionValues (Delta's on-disk shape), a
-# read with a partition predicate prunes files from the LOG FOLD
-# without opening any data file — the mechanism that makes a
-# 100 TB date-partitioned Delta table answer a one-day query with an
-# O(log) plan; prove by asserting the pruned read's
-# DISTINCT _metadata.file_path never touches the out-of-range files.
-# (b) fn_avro_array_blocks — Avro array/map BLOCK encoding (zigzag
-# count-prefixed blocks, 0-count terminator, negative count =
-# size-prefixed fast-skip form), the remaining composite-type piece
-# of the codec story; decode both the positive-count and
-# negative-count wire forms and oracle the element sums + block
-# arithmetic exactly.
-# ROUND-11 MAINTENANCE (APPLIED at r11 start): the 50 CORRECTNESS_r10
-# greens are folded in with tag 10 (48 first-touch + the 2 canary
-# re-touches join_inner_hash/set_union), _REVERIFY stays empty,
-# _CANARY rotated to ml_label + mm_features per the rotation table.
-# The never-driver-checked backlog is now 96 < 100, so the BACKLOG
-# FREEZE LIFTED at r11 start: new operators may land at normal module
-# ranks again (keep additions ≤ the per-round burn rate of ~48 so the
-# backlog still shrinks monotonically). R11 stretch pair landed this
-# round (see below): (a) scan_delta_time_travel_ts — timestamp-AS-OF
-# version resolution over the commit log (commitInfo timestamps ->
-# greatest version <= ts, then the scan_delta_checkpoint read path),
-# the query surface users actually touch; (b) fn_avro_union_nullable —
-# Avro's ["null", T] union encoding (branch index varint + value),
-# the most common real-world Avro shape and the last missing piece of
-# the resolution story. Horizon status at r10 close: offsets 50–230
-# of the post-r10-fold order pre-flighted green (r11+r12+r13 windows)
-# plus 230–290 (r14); REFRESHED against the post-r11-fold order at
-# r11 start as insertion order rotates.
-# ROUND-10 MAINTENANCE (APPLIED at r10 start): the 50 CORRECTNESS_r09
-# greens are folded in with tag 9 (47 first-touch + graph_hits reverify
-# + 2 canary re-touches), _REVERIFY is cleared, _CANARY rotated to
-# join_inner_hash + set_union per the rotation table; the r10 window
-# continues down the rank-9 wave in dict-insertion order (the mm_
-# tail, the dq_ wave, the scan/sink wave, the ts_ engagement head).
-# Pre-flighted late in round 9: offsets 50–110 of the get_queries()
-# order — exactly those families — ran 61/61 hash-green at sf0.01 in a
-# bare driver-shaped session (56 s). Canary rotation table ahead:
-# r11 ml_label + mm_features, r12 ts_watermark + graph_pagerank.
-# ROUND-9 STRETCH CANDIDATES — BOTH LANDED (scan_delta_log at
-# operators/scans.py, fn_avro_container at functions/scalar.py; exact
-# oracles, three-scale + codegen-off verification, rank 10, registry
-# now 560 keys).
-# ROUND-10 STRETCH CANDIDATES (design staged, NOT registered — freeze
-# lifts when never-driver-checked < 100, expected mid/late r10):
-# (a) scan_delta_checkpoint — Delta checkpoint compaction: a
-# checkpoint parquet at version N holds the FOLDED live-file state of
-# commits 0..N, `_last_checkpoint` names it, and a read at version
-# M>N = checkpoint rows + replay of only the JSON commits N+1..M —
-# the property that keeps log replay O(commits since checkpoint)
-# instead of O(table lifetime), i.e. what makes scan_delta_log's
-# model survive years of commits at 100 TB. (b)
-# fn_avro_schema_evolution — Avro reader/writer schema resolution
-# over fn_avro_wire's record encoding: decode writer-schema bytes
-# under an EVOLVED reader schema (added field takes its default,
-# dropped field is skipped via its length arithmetic, fields matched
-# by name not position), the resolution half of the interchange
-# story. Both follow the r7-r9 mold: exact oracles, pure-codegen or
-# O(files) bounded driver lists, rank 10.
-# The ENTIRE registry was driver-simulated at sf0.01 in round 7
-# (bare sessions, America/New_York, offsets 0 through 556 of
-# get_queries() order): 556/556 hash-green — every key rounds 8-12
-# will surface to the driver, and the whole verified backstop, already
-# hash-matches at driver scale in a driver-shaped session. Also green
-# this round: full registry at sf0.001 (360 s), at sf0.001 under
-# Pacific/Kiritimati UTC+14, and at sf0.1 via the pytest sweep
-# (555 passed / 1 skipped, 25m43s).
-_VERIFIED_ROUND: dict[str, int] = {
-        # --- round 1 greens ---
-    "agg_benford": 13, "agg_collect": 13, "agg_cooccurrence": 13, "agg_corr_matrix": 13,
-    "agg_count_if": 13, "agg_distinct": 13, "agg_entropy": 13, "agg_gini": 13,
-    "agg_global": 13, "agg_group": 6, "agg_grouping_sets": 13, "agg_having": 13,
-    "agg_hhi": 13, "agg_histogram": 13, "agg_listagg": 13, "agg_mad": 13,
-    "agg_minmax_by": 13, "agg_mode": 13, "agg_multi_distinct": 13, "agg_pareto_share": 13,
-    "agg_percentile_multi": 13, "agg_pivot": 13, "agg_product": 13, "agg_reaggregate": 13,
-    "agg_regr": 13, "agg_rollup": 4, "agg_stats": 13, "agg_trend": 13, "agg_unpivot": 13,
-    "agg_weighted": 13, "agg_weighted_median": 13, "join_anti": 13, "join_asof": 13,
-    "join_broadcast": 13, "join_cross": 13,
-    "join_inner_hash": 10,  # r10 canary re-touch
-    "join_left_outer": 13,
-    "join_range": 13, "join_semi": 13,
-    "join_star": 5,  # r5 canary re-touch
-    "ts_calendar_dim": 13,
-    "ts_decay_score": 13, "ts_markov_transitions": 13, "ts_rfm_segment": 13,
-        # --- round 2 greens ---
-    "agg_topn_array": 14, "agg_approx_distinct": 4, "agg_sketch_hll": 13,
-    "agg_hll_union": 13, "agg_percentile_approx": 14,
-    "scan_parquet": 8, "scan_projected": 14, "sink_parquet_part": 14, "sink_upsert": 14,
-    "scan_partition_pruned": 14, "scan_schema_evolution": 14, "scan_csv_malformed": 14,
-    "scan_binary_files": 14, "scan_recursive_glob": 14, "join_dpp": 4,
-    "scan_file_provenance": 14, "source_csv": 13, "sink_csv_gzip": 14,
-    "source_ga_json": 14, "source_json": 14, "sink_orc": 14, "source_python_ds": 2,
-    "source_python_ds_stream": 2, "project_derive": 14, "filter_pred": 14,
-    "cast_types": 14, "cond_expr": 14, "null_handling": 14, "dedup_exact": 14,
-    "subquery_scalar": 8, "subquery_correlated": 14, "subquery_lateral": 14,
-    "fn_try": 14, "cte_recursive": 14, "fn_format": 14, "source_range": 14,
-    "subquery_exists_in": 14, "fn_greatest_least": 14, "dq_orphan_audit": 14,
-    "dq_profile": 13, "win_rownum": 3, "win_lag": 4, "win_frame_rows": 14,
-    "win_frame_range": 14, "win_running": 7, "win_ntile": 14, "win_firstlast": 14,
-        # --- round 3 greens ---
-    "sample_rows": 3, "sample_stratified": 3, "ts_interval_merge": 3,
-    "fn_string": 14, "fn_date": 3, "fn_math": 3, "fn_json": 4, "fn_array": 3, "fn_map": 3,
-    "fn_hash": 3, "fn_struct": 3, "fn_url": 3, "fn_variant": 3, "fn_bitwise": 3,
-    "fn_string_distance": 3, "fn_mask": 3,
-    "sort_multi": 3, "topk": 3, "topk_nulls_last": 3, "limit_offset": 3,
-    "set_union": 10,  # r10 canary re-touch
-    "set_union_by_name": 3, "set_intersect": 3,
-    "set_intersect_all": 3, "set_except": 3, "set_except_all": 3,
-    "ts_tumbling": 14, "ts_sliding": 3, "ts_session": 7, "ts_gap_fill": 3,
-    "ts_resample_ohlc": 3, "ts_ewma": 4, "ts_funnel": 3, "ts_retention_cohorts": 3,
-    "ts_day_over_day": 3, "ts_session_attrs": 3, "ts_attribution_first_touch": 3,
-    "ts_active_users": 3, "ts_traffic_profile": 3,
-    "win_median": 3, "win_streak": 3, "win_rank_pct": 3, "win_nth_ignore_nulls": 3,
-    "win_distinct_running": 3, "win_ratio_to_report": 3, "win_moving_zscore": 3,
-        # --- round 4 greens ---
-    "fn_array_setops": 4,
-    "llm_dedup_exact": 9,  # r9 canary re-touch
-    "llm_dedup_fuzzy": 5,  # r5 canary re-touch
-    "llm_dedup_simhash": 4,
-    "llm_dedup_ngram": 4, "llm_simsearch": 4, "llm_dedup_cosine": 4,
-    "llm_simsearch_ann": 4, "llm_simsearch_ivf": 4, "llm_textstats": 4,
-    "llm_langfilter": 4, "llm_quality": 4, "llm_tokens": 4, "llm_langid": 14,
-    "llm_fingerprint": 4, "llm_tfidf": 4, "llm_embed_ops": 4, "llm_pii_scrub": 4,
-    "llm_contamination": 4, "llm_chunk": 4, "llm_pack": 4, "llm_tfidf_exact": 4,
-    "llm_dedup_cluster": 4, "llm_unigram_lm": 4, "llm_kmeans_embed": 4,
-    "llm_dedup_keep_best": 4, "llm_embed_centroid": 4, "llm_ngram_freq": 4,
-    "llm_vocab_growth": 4, "llm_repetition": 4, "llm_entropy_filter": 4,
-    "udf_python": 4,
-    "udf_pandas": 9,  # r9 canary re-touch
-    "udf_grouped_map": 4, "udf_grouped_agg": 4,
-    "udtf_python": 4, "udf_arrow": 4, "udf_cogrouped_map": 4, "udf_python_arrow": 4,
-    "mm_features": 11,  # r11 canary re-touch
-    "mm_framesample": 4, "mm_resize": 4,
-    "ml_label": 11,  # r11 canary re-touch
-        # --- round 5 greens (CORRECTNESS_r05: 50/50 hash-green; the 2
-        # canaries llm_dedup_fuzzy/join_star were already listed above) ---
-    "llm_mixture_balance": 5, "llm_winnow_fingerprint": 5, "llm_embed_quantize": 5,
-    "llm_dedup_minhash_sql": 5, "llm_semdedup": 5, "llm_perplexity_filter": 5,
-    "llm_cc_pipeline": 5, "llm_sample_weighted": 5, "llm_dedup_incremental": 5,
-    "llm_rank_fusion": 5, "llm_bm25": 5, "mm_phash_dedup": 5, "mm_caption_align": 5,
-    "ml_features": 5, "ml_split": 5, "ml_train": 5, "ml_eval": 5, "ml_infer": 5,
-    "ml_crossval": 5, "ml_kmeans_segment": 5, "ml_rf": 5, "ml_pca_embed": 5,
-    "ml_calibration_bins": 5, "source_stream": 5,
-    "ts_watermark": 12,  # r12 canary re-touch
-    "ts_dedup_stream": 5, "ts_stateful": 5, "ts_incremental": 5,
-    "ts_session_stream": 5, "ts_stream_join": 5, "sink_stream_upsert": 5,
-    "ts_stream_stream_join": 5, "agg_cube": 5, "dq_expectations": 5,
-    "dq_k_anonymity": 5, "scan_snapshot_diff": 5, "ts_user_ltv": 5,
-    "ts_peak_concurrency": 5, "ts_interpolate_linear": 5,
-    "ts_cohort_value_curve": 5, "ts_conversion_latency": 5,
-    "ts_survival_curve": 5, "ts_anomaly_robust": 5, "ts_scd2_history": 5,
-    "ts_forecast_linear": 5, "ts_holt_forecast": 5, "ts_seasonal_decompose": 5,
-    "join_fuzzy_blocked": 14,
-        # --- round 6 greens (CORRECTNESS_r06: 50/50 hash-green; the 2
-        # canaries agg_group/fn_string were re-tagged 6 above) ---
-    "join_skew_salted": 6, "join_bucketed": 6, "join_null_safe": 6,
-    "join_asof_tolerance": 6, "join_hint_broadcast": 6,
-    "join_range_bucketed": 6, "join_hint_shuffle_hash": 6,
-    "join_interval_overlap": 6, "agg_countmin": 6, "agg_bloom": 6,
-    "agg_skew_kurtosis": 6, "graph_degree": 6, "graph_triangles": 6,
-    "graph_cc": 6,
-    "graph_pagerank": 12,  # r12 canary re-touch
-    "graph_adamic_adar": 6,
-    "graph_clustering_coeff": 6, "graph_kcore": 6, "join_asof_nearest": 6,
-    "llm_dedup_substring": 6, "llm_knn_graph": 6, "llm_zipf_fit": 6,
-    "llm_keyword_extract": 6, "llm_token_budget_trim": 6,
-    "llm_importance_resample": 6, "llm_blocklist_filter": 6,
-    "ml_woe_iv": 6, "ml_psi": 6, "ml_target_encode": 6,
-    "ml_feature_hashing": 6, "ml_auc_exact": 6, "ml_confusion_matrix": 6,
-    "ml_ks_stat": 6, "ml_lift_gains": 6, "dq_l_diversity": 6,
-    "sample_reservoir": 6, "dq_fk_cardinality": 6, "ts_autocorr": 6,
-    "ts_changepoint": 6, "ts_holt_winters": 6, "ts_periodogram": 6,
-    "ts_backtest_metrics": 6, "ts_lag_features": 6, "udf_pandas_iter": 6,
-    "win_frame_interval": 6, "sink_json_lines": 6, "dq_uniqueness": 6,
-    "dq_freshness": 6,
-        # --- round 7 greens (CORRECTNESS_r07: 50/50 hash-green; canaries
-        # win_running/ts_session and reverify subquery_scalar re-tagged 7 above) ---
-    "agg_ecdf": 7, "agg_winsorized_stats": 7, "agg_bitwise": 7, "agg_rate_ci_wilson": 7,
-    "agg_log2_histogram": 7, "agg_ratio_delta_method": 7, "agg_qq_normal": 7,
-    "agg_bitmap_sets": 7, "agg_welch_ttest": 7, "agg_lorenz_points": 7, "agg_theil_decomposition": 7,
-    "agg_skyline_2d": 7, "agg_mann_whitney": 7, "agg_heavy_hitters": 7, "agg_beta_binomial_shrinkage": 7,
-    "agg_benford_chisq": 7, "agg_spearman": 7, "agg_robust_shape": 7, "graph_jaccard_linkpred": 7,
-    "graph_bfs_distance": 7, "graph_modularity": 7, "graph_assortativity": 7,
-    "graph_bipartite_projection": 7, "graph_label_propagation": 7,
-    "graph_hits": 9,  # r9 _REVERIFY re-hash (changed in r8 post-green; re-confirmed)
-    "graph_hash_walks": 7, "graph_ppr": 7, "graph_closeness": 7, "graph_rich_club": 7,
-    "graph_degree_gini": 7, "join_bloom_pruned": 7, "join_mark_exists": 7,
-    "join_scd2_asof": 7, "join_temporal_knn": 7, "join_spatial_grid": 7,
-    "join_snowflake": 7, "join_asof_forward": 7, "join_full_outer": 7, "llm_ngram_novelty": 7,
-    "llm_template_prefix": 7, "llm_odds_ratio_terms": 7, "llm_kn_bigram_lm": 7,
-    "llm_vocab_coverage": 7, "llm_lang_confusion": 14, "llm_burstiness": 7,
-    "llm_compression_filter": 7, "llm_url_dedup": 7,
-        # --- round 8 greens (CORRECTNESS_r08: 50/50 hash-green; canaries
-        # scan_parquet/subquery_scalar re-tagged 8 above) ---
-    "llm_boilerplate_ngrams": 8, "llm_dedup_containment": 8, "llm_kwic_spans": 8,
-    "llm_lsh_tuning_curve": 8, "llm_corpus_card": 8, "llm_hard_negatives": 8,
-    "llm_span_corruption": 8, "llm_preference_pairs": 8, "llm_bpe_first_merges": 8,
-    "llm_curriculum_order": 8, "llm_watermark_ztest": 8,
-    "llm_dedup_transitivity_audit": 8, "llm_lsh_bucket_skew": 8,
-    "llm_embed_norm_audit": 8, "llm_dedup_impact": 8, "llm_retrieval_eval": 8,
-    "llm_agreement_kappa": 8, "llm_code_detect": 8, "llm_split_leakage": 8,
-    "llm_readability": 8, "llm_mattr": 8, "llm_greedy_coverage": 8,
-    "llm_hill_tail_index": 8, "ml_mutual_info": 8, "ml_chi2": 8, "ml_brier_score": 8,
-    "ml_roc_points": 8, "ml_fairness_metrics": 8, "ml_pr_auc_decile": 8, "ml_ece": 8,
-    "ml_isotonic_pav": 8, "ml_bootstrap_metric_ci": 8, "ml_drift_jsd": 8,
-    "ml_pinball_loss": 8, "ml_auc_delong_se": 8, "ml_propensity_match": 8,
-    "ml_diff_in_diff": 8, "ml_km_greenwood": 8, "ml_cuped": 8, "ml_cost_threshold": 8,
-    "ml_logreg_gd": 8, "ml_power_mde": 8, "ml_ips_offpolicy": 8,
-    "ml_conformal_interval": 8, "ml_qini_curve": 8, "ml_hosmer_lemeshow": 8,
-    "ml_km_rmst": 8, "ml_gbm_stumps": 8,
-        # --- round 9 greens (CORRECTNESS_r09: 50/50 hash-green; canaries
-        # llm_dedup_exact/udf_pandas and the graph_hits reverify re-tagged
-        # 9 above) ---
-    "ml_shap_linear": 9, "ml_learning_curve": 9, "ml_platt_scaling": 9,
-    "ml_logrank_test": 9, "ml_bh_fdr": 9, "ml_ab_srm_check": 9,
-    "ml_price_elasticity": 9, "ml_cramers_v": 9, "ml_evalue_sequential": 9,
-    "ml_naive_bayes": 9, "ml_tost_equivalence": 9, "ml_mcnemar_paired": 9,
-    "ml_cox_score": 9, "ml_poisson_glm": 9, "ml_doubly_robust": 9,
-    "ml_bradley_terry": 9, "ml_permutation_test": 9, "ml_iv_wald": 9,
-    "ml_raking_ipf": 9, "ml_oaxaca_blinder": 9, "ml_knn_classify": 9,
-    "ml_ipw_ate": 9, "llm_uncertainty_sample": 9,
-    "ml_quantile_treatment_effect": 9, "ml_meta_analysis_dl": 9,
-    "ml_weibull_survival_grid": 9, "ml_silhouette_rfm": 9,
-    "ml_covariate_balance": 9, "ml_yuen_trimmed_t": 9, "ml_harrell_c": 9,
-    "ml_brier_decomposition": 9, "ml_kruskal_wallis": 9, "ml_icc_anova": 9,
-    "ml_friedman_test": 9, "ml_brown_forsythe": 9, "ml_tjur_r2": 9,
-    "ml_mcc": 9, "ml_cohen_d": 9, "ml_risk_reduction": 9, "ml_youden_j": 9,
-    "llm_doclen_lognormal": 9, "llm_pmi_collocations": 9,
-    "llm_burrows_delta": 9, "llm_dedup_by_source": 9,
-    "llm_source_diversity": 9, "llm_self_similarity": 9,
-    "mm_header_parse": 9,
-        # --- round 10 greens (CORRECTNESS_r10: 50/50 hash-green; canaries
-        # join_inner_hash/set_union re-tagged 10 above) ---
-    "mm_tile_grid": 10, "mm_activity_segments": 10, "mm_modality_balance": 10,
-    "mm_shot_boundaries": 10, "dq_observe_metrics": 10, "dq_schema_contract": 10,
-    "dq_row_checksum": 10, "dq_fk_chain": 10, "dq_outlier_iqr": 10,
-    "dq_drift_ks": 10, "dq_hll_error_audit": 10, "dq_sequence_gaps": 10,
-    "dq_quantile_sketch_audit": 10, "dq_rounding_contract_audit": 10,
-    "dq_reconciliation": 10, "dq_duplicate_payments": 10, "dq_key_discovery": 10,
-    "dq_dp_count_release": 10, "dq_arithmetic_contract": 10, "dq_fd_discovery": 10,
-    "dq_terminal_digit": 10, "subquery_quantified": 10, "dq_benford_mad": 10,
-    "scan_metadata_cols": 10, "scan_ignore_corrupt_files": 10,
-    "scan_path_glob_filter": 10, "sink_compact_small_files": 10,
-    "sink_dynamic_partition_overwrite": 10, "scan_orphan_files": 10,
-    "sink_compression_codecs": 10, "scan_rowgroup_stats": 10,
-    "sink_clustered_write": 10, "sink_bloom_filter_parquet": 10,
-    "scan_cdc_apply": 10, "sink_zorder_write": 10, "scan_partition_skew_audit": 10,
-    "ts_cusum": 10, "ts_theta_forecast": 10, "ts_sax": 10, "ts_gap_stats": 10,
-    "ts_max_drawdown": 10, "ts_sessions_per_user": 10, "ts_days_to_return": 10,
-    "ts_attribution_linear": 10, "ts_rank_mobility": 10, "ts_hurst_rs": 10,
-    "ts_cadence_break": 10, "ts_haar_energy": 10,
-        # --- round 11 greens (CORRECTNESS_r11: 50/50 hash-green — the 2
-        # canaries ml_label/mm_features re-tagged above + 48 first-touch
-        # ts_ keys, exactly the staged window) ---
-    "ts_weekday_anova": 11, "ts_out_of_order_audit": 11, "ts_session_adaptive": 11,
-    "ts_top_paths": 11, "ts_stickiness": 11, "ts_growth_accounting": 11,
-    "ts_markov_stationary": 11, "ts_gap_burstiness": 11, "ts_lateness_quantiles": 11,
-    "ts_event_study": 11, "ts_slo_burn_rate": 11, "ts_demand_classification": 11,
-    "ts_extreme_value_gumbel": 11, "ts_intervention_its": 11,
-    "ts_poisson_rate_ratio": 11, "ts_runs_test": 11, "ts_seasonality_strength": 11,
-    "ts_bitemporal_asof": 11, "ts_croston_forecast": 11, "ts_lag_correlation": 11,
-    "ts_dtw_distance": 11, "ts_milestone_snapshot": 11, "ts_retention_curve_fit": 11,
-    "ts_mann_kendall": 11, "ts_theil_sen": 11, "ts_ljung_box": 11,
-    "ts_spc_control_chart": 11, "ts_safety_stock": 11, "ts_var_cvar": 11,
-    "ts_kalman_level": 11, "ts_bass_diffusion": 11, "ts_granger_causality": 11,
-    "ts_pot_gpd_tail": 11, "ts_kendall_tau": 11, "ts_cointegration_eg": 11,
-    "ts_matrix_profile": 11, "ts_littles_law_audit": 11,
-    "ts_binseg_changepoints": 11, "ts_synth_control_1nn": 11,
-    "ts_peak_prominence": 11, "ts_haar_denoise": 11, "ts_pacf_durbin": 11,
-    "ts_ar2_yule_walker": 11, "ts_anderson_darling": 11, "ts_chain_ladder": 11,
-    "ts_absorbing_markov": 11, "ts_markov_entropy_rate": 11,
-    "ts_spectral_entropy": 11,
-        # --- round 12 greens (CORRECTNESS_r12: 50/50 hash-green — the 2
-        # canaries ts_watermark/graph_pagerank re-tagged above + 48
-        # first-touch keys, exactly the staged window: the ts stats tail,
-        # udf/udtf extras, win extras, fn codec/wire extras, source/sink
-        # format extras, and the scan_delta_*/scan_iceberg_snapshot wave) ---
-    "ts_extremal_index": 12, "ts_decompose_whiteness": 12, "ts_max_subarray": 12,
-    "ts_ar_residual_outliers": 12, "ts_price_index_fisher": 12,
-    "ts_revenue_beta": 12, "ts_durbin_watson": 12, "ts_seasonal_indices": 12,
-    "udf_pandas_struct": 12, "udf_window_pandas": 12, "udtf_arrow": 12,
-    "win_rolling_corr": 12, "win_expanding_slope": 12, "win_event_pattern": 12,
-    "win_hampel_filter": 12, "fn_regex": 12, "fn_interval": 12,
-    "fn_collation": 12, "fn_string_extra": 12, "fn_trig": 12,
-    "fn_surrogate_key": 12, "fn_xml": 12, "fn_ipv4_subnet": 12,
-    "fn_binary": 12, "fn_geohash_interleave": 12, "fn_luhn_check": 12,
-    "fn_hash_collision_audit": 12, "fn_uuidv7_roundtrip": 12,
-    "fn_penny_allocation": 12, "fn_haversine": 12, "fn_fiscal_445": 12,
-    "fn_business_days": 12, "sink_csv_quoted": 12, "source_tsv": 12,
-    "source_text_lines": 12, "source_fixed_width": 12,
-    "source_csv_multichar": 12, "source_json_multiline": 12,
-    "ts_stream_sliding": 12, "source_rate_stream": 12, "sink_merge_into": 12,
-    "scan_iceberg_snapshot": 12, "scan_delta_log": 14,
-    "scan_delta_checkpoint": 14, "scan_delta_time_travel_ts": 14,
-    "fn_protobuf_wire": 14, "fn_avro_wire": 14, "fn_avro_container": 14,
-        # --- round 13 greens (CORRECTNESS_r13: 50/50 hash-green — the 2
-        # canaries dq_profile/source_csv re-tagged 13 above, 42 oldest-
-        # checked round-1/2 keys re-tagged 13 in place, and the 6
-        # first-touch keys below: the retired backlog + the two r13
-        # additions — exactly the staged window) ---
-    "fn_avro_schema_evolution": 14,
-    "fn_avro_union_nullable": 14,
-    "scan_delta_partition_values": 14,
-    "fn_avro_array_blocks": 14,
-    "scan_delta_deletion_vectors": 13,
-    "fn_avro_map_blocks": 14,
-}
-
-DRIVER_VERIFIED: frozenset[str] = frozenset(_VERIFIED_ROUND)
-
-# Keys repaired this round that must re-hash before being trusted again.
-# Round 15: the round-14 entries all came back hash-green in
-# CORRECTNESS_r14 and are cleared. The ML keys below share the churn
-# plan's per-user table, which is now materialized once
-# (plans/churn.labeled_users) and probed for its classes by one grouped
-# query; their operator code changed post-green, so the driver's own
-# hash goes back on them.
-_REVERIFY: tuple[str, ...] = (
-    "ml_split",
-    "ml_train",
-    "ml_eval",
-    "ml_infer",
-    "ml_crossval",
-)
-
-# Regression canaries: a small rotating sample of already-verified keys kept
-# inside the driver's checked prefix so regressions in verified operators are
-# still detectable (ADVICE r2). Rotated each round. Trimmed to 2 for round 5
-# (56 never-checked keys compete for ~50 slots; every canary slot displaces a
-# first-touch verification — r4 verdict item 1).
-_CANARY: tuple[str, ...] = (
-    "agg_pivot",  # agg family (r13 second touch)
-    "ml_train",   # ml family (r5 green; also in _REVERIFY this round)
-)
-
-# Round-5 window priority: the 13 round-4 llm/mm additions first (the
-# north-star family, the only ones whose oracle parity is still
-# self-graded), then the 10-key ML tail (§2.I — the reference's reason to
-# exist, zero driver coverage beyond ml_label), then the 9 streaming keys
-# (rows-only contracts, environment-sensitive so don't bury them), then
-# the ts/dq/scan tail, then join extensions — the 8 lowest-risk join
-# variants deliberately spill to round 6 (r4 verdict item 5).
-_MODULE_RANK: dict[str, int] = {
-    "operators.ml": 2,
-    "sources.stream_source": 3,
-    "streaming.ops": 3,
-    "operators.timeseries": 4,
-    "operators.rowops": 4,      # dq_expectations, dq_k_anonymity
-    "operators.scans": 4,       # scan_snapshot_diff
-    "operators.aggregates": 4,  # agg_cube
-    "operators.joins": 5,
-    "operators.llm": 9,
-    "operators.udfs": 9,
-    "operators.multimodal": 9,
-    "sources.json_source": 9,
-    "sources.csv_source": 9,
-    "sources.orc_source": 9,
-    "sources.ga_source": 9,
-    "sources.python_ds": 9,
-    "operators.windows": 9,
-    "functions.scalar": 9,
-    "operators.setops": 9,
-    "operators.analytics": 9,
-}
+def _is_green(row: dict) -> bool:
+    """A driver row is green on a hash match, or for a rows-only contract
+    (no hash taken) on a row-count match."""
+    if row.get("hash_match") is True:
+        return True
+    return row.get("hash_match") is None and row.get("rows_match") is True
 
 
-# Key-level rank overrides (take precedence over _MODULE_RANK).
-_KEY_RANK: dict[str, int] = {
-    # The 13 round-4 llm/mm additions — first in the round-5 window.
-    "llm_dedup_minhash_sql": 1,
-    "llm_semdedup": 1,
-    "llm_bm25": 1,
-    "llm_perplexity_filter": 1,
-    "llm_cc_pipeline": 1,
-    "llm_sample_weighted": 1,
-    "llm_dedup_incremental": 1,
-    "llm_rank_fusion": 1,
-    "llm_winnow_fingerprint": 1,
-    "llm_embed_quantize": 1,
-    "llm_mixture_balance": 1,
-    "mm_phash_dedup": 1,
-    "mm_caption_align": 1,
-    # Deliberate round-6 spill: lowest-risk join variants go LAST among the
-    # unverified so the ~8-key window overflow lands on them, not on
-    # streaming or ML (r4 verdict item 5).
-    "join_fuzzy_blocked": 5,      # most novel join extension — keep in window
-    "join_interval_overlap": 6,
-    "join_asof_tolerance": 6,
-    "join_null_safe": 6,
-    "join_bucketed": 6,
-    "join_range_bucketed": 6,
-    "join_skew_salted": 6,
-    "join_hint_broadcast": 6,
-    "join_hint_shuffle_hash": 6,
-    # Round-5 additions: queue BEHIND the round-6 spill (rank 7) so they
-    # never displace keys the driver is about to check. Without these
-    # overrides their modules' ranks (2-4) would pull them into the
-    # round-5 window.
-    "graph_degree": 7,
-    "graph_triangles": 7,
-    "graph_cc": 7,
-    "graph_pagerank": 7,
-    "agg_countmin": 7,
-    "agg_bloom": 7,
-    "llm_dedup_substring": 7,
-    "llm_knn_graph": 7,
-    "llm_zipf_fit": 7,
-    "llm_keyword_extract": 7,
-    "ts_autocorr": 7,
-    "ts_changepoint": 7,
-    "dq_l_diversity": 7,
-    "ml_woe_iv": 7,
-    "ml_psi": 7,
-    "ml_target_encode": 7,
-    "ml_feature_hashing": 7,
-    "graph_adamic_adar": 7,
-    "sample_reservoir": 7,
-    "llm_token_budget_trim": 7,
-    "llm_importance_resample": 7,
-    "ml_auc_exact": 7,
-    "ml_confusion_matrix": 7,
-    "ml_ks_stat": 7,
-    "ml_lift_gains": 7,
-    "graph_clustering_coeff": 7,
-    "ts_holt_winters": 7,
-    "ts_periodogram": 7,
-    "win_frame_interval": 7,
-    "graph_kcore": 7,
-    "udf_pandas_iter": 7,
-    "agg_skew_kurtosis": 7,
-    "sink_json_lines": 7,
-    "llm_blocklist_filter": 7,
-    "ts_backtest_metrics": 7,
-    "join_asof_nearest": 7,
-    "ts_lag_features": 7,
-    "dq_fk_cardinality": 7,
-    # Round-6 additions. The two lowest-risk (pure integer-count SQL)
-    # take the round-6 window's ~2 spare slots (rank 8); the rest queue
-    # at rank 9 for the round-7 window, AHEAD of the verified backstop
-    # but BEHIND everything the driver is about to check. Without these
-    # overrides their modules' ranks (2-5) would displace staged keys.
-    "dq_uniqueness": 8,
-    "dq_freshness": 8,
-    "join_bloom_pruned": 9,
-    "graph_jaccard_linkpred": 9,
-    "graph_bfs_distance": 9,
-    "graph_modularity": 9,
-    "ts_cusum": 9,
-    "ts_theta_forecast": 9,
-    "ts_sax": 9,
-    "ml_mutual_info": 9,
-    "ml_chi2": 9,
-    "ml_brier_score": 9,
-    "llm_ngram_novelty": 9,
-    "llm_template_prefix": 9,
-    "agg_ecdf": 9,
-    "fn_regex": 9,
-    "ml_roc_points": 9,
-    "graph_assortativity": 9,
-    "llm_odds_ratio_terms": 9,
-    "dq_observe_metrics": 9,
-    "fn_interval": 9,
-    "scan_metadata_cols": 9,
-    "ml_fairness_metrics": 9,
-    "agg_winsorized_stats": 9,
-    "win_rolling_corr": 9,
-    "llm_kn_bigram_lm": 9,
-    "fn_collation": 9,
-    "dq_schema_contract": 9,
-    "mm_header_parse": 9,
-    "ml_pr_auc_decile": 9,
-    "agg_bitwise": 9,
-    "fn_string_extra": 9,
-    "llm_vocab_coverage": 9,
-    "graph_bipartite_projection": 9,
-    "dq_row_checksum": 9,
-    "sink_csv_quoted": 9,
-    "llm_lang_confusion": 9,
-    "udf_pandas_struct": 9,
-    "ts_gap_stats": 9,
-    "scan_ignore_corrupt_files": 9,
-    "agg_rate_ci_wilson": 9,
-    "ts_max_drawdown": 9,
-    "llm_burstiness": 9,
-    "dq_fk_chain": 9,
-    "fn_trig": 9,
-    "source_tsv": 9,
-    "ml_ece": 9,
-    "source_json_multiline": 9,
-    "ts_sessions_per_user": 9,
-    "ts_days_to_return": 9,
-    "llm_compression_filter": 9,
-    "scan_path_glob_filter": 9,
-    "fn_surrogate_key": 9,
-    "ts_attribution_linear": 9,
-    "ts_rank_mobility": 9,
-    "llm_url_dedup": 9,
-    "llm_boilerplate_ngrams": 9,
-    "ml_isotonic_pav": 9,
-    "graph_label_propagation": 9,
-    "fn_xml": 9,
-    "source_text_lines": 9,
-    "ts_hurst_rs": 9,
-    "mm_tile_grid": 9,
-    "join_mark_exists": 9,
-    "dq_outlier_iqr": 9,
-    "join_scd2_asof": 9,
-    "ml_bootstrap_metric_ci": 9,
-    "ts_cadence_break": 9,
-    "ts_haar_energy": 9,
-    "llm_dedup_containment": 9,
-    "mm_activity_segments": 9,
-    "agg_log2_histogram": 9,
-    "ml_drift_jsd": 9,
-    "llm_kwic_spans": 9,
-    "ts_weekday_anova": 9,
-    "join_temporal_knn": 9,
-    "graph_hits": 9,
-    "ml_pinball_loss": 9,
-    "fn_ipv4_subnet": 9,
-    "ts_out_of_order_audit": 9,
-    "fn_binary": 9,
-    "win_expanding_slope": 9,
-    "llm_lsh_tuning_curve": 9,
-    "agg_ratio_delta_method": 9,
-    "ts_session_adaptive": 9,
-    "llm_corpus_card": 9,
-    "ts_stream_sliding": 9,
-    "source_rate_stream": 9,
-    "ml_auc_delong_se": 9,
-    "agg_qq_normal": 9,
-    "graph_hash_walks": 9,
-    "ts_top_paths": 9,
-    "ml_propensity_match": 9,
-    "ml_diff_in_diff": 9,
-    "sink_compact_small_files": 9,
-    "sink_dynamic_partition_overwrite": 9,
-    "agg_bitmap_sets": 9,
-    "ml_km_greenwood": 9,
-    "ml_cuped": 9,
-    "mm_modality_balance": 9,
-    "agg_welch_ttest": 9,
-    "ml_cost_threshold": 9,
-    "llm_hard_negatives": 9,
-    "llm_span_corruption": 9,
-    "ts_stickiness": 9,
-    "llm_preference_pairs": 9,
-    "llm_bpe_first_merges": 9,
-    "ts_growth_accounting": 9,
-    "ts_markov_stationary": 9,
-    "ml_logreg_gd": 9,
-    "dq_drift_ks": 9,
-    "llm_curriculum_order": 9,
-    "fn_geohash_interleave": 9,
-    "join_spatial_grid": 9,
-    "ml_power_mde": 9,
-    "agg_lorenz_points": 9,
-    "fn_luhn_check": 9,
-    "ts_gap_burstiness": 9,
-    "scan_orphan_files": 9,
-    "agg_theil_decomposition": 9,
-    "ml_ips_offpolicy": 9,
-    "fn_hash_collision_audit": 9,
-    "ts_lateness_quantiles": 9,
-    "dq_hll_error_audit": 9,
-    "mm_shot_boundaries": 9,
-    "join_snowflake": 9,
-    "ml_conformal_interval": 9,
-    "llm_watermark_ztest": 9,
-    "ts_event_study": 9,
-    "llm_dedup_transitivity_audit": 9,
-    "ts_slo_burn_rate": 9,
-    "llm_lsh_bucket_skew": 9,
-    "agg_skyline_2d": 9,
-    "graph_ppr": 9,
-    "ml_qini_curve": 9,
-    "ts_demand_classification": 9,
-    "fn_uuidv7_roundtrip": 9,
-    "ml_hosmer_lemeshow": 9,
-    "ml_km_rmst": 9,
-    "ts_extreme_value_gumbel": 9,
-    "ml_gbm_stumps": 9,
-    "agg_mann_whitney": 9,
-    "sink_compression_codecs": 9,
-    "ml_shap_linear": 9,
-    "llm_embed_norm_audit": 9,
-    "llm_dedup_impact": 9,
-    "scan_rowgroup_stats": 9,
-    "sink_clustered_write": 9,
-    "agg_heavy_hitters": 9,
-    "udf_window_pandas": 9,
-    "ts_intervention_its": 9,
-    "ts_poisson_rate_ratio": 9,
-    "llm_retrieval_eval": 9,
-    "llm_agreement_kappa": 9,
-    "join_asof_forward": 9,
-    "ts_runs_test": 9,
-    "ts_seasonality_strength": 9,
-    "dq_sequence_gaps": 9,
-    "llm_code_detect": 9,
-    "ml_learning_curve": 9,
-    "llm_split_leakage": 9,
-    "sink_bloom_filter_parquet": 9,
-    "scan_cdc_apply": 9,
-    "ts_bitemporal_asof": 9,
-    "ts_croston_forecast": 9,
-    "udtf_arrow": 9,
-    "win_event_pattern": 9,
-    "ts_lag_correlation": 9,
-    "dq_quantile_sketch_audit": 9,
-    "ts_dtw_distance": 9,
-    "dq_rounding_contract_audit": 9,
-    "ts_milestone_snapshot": 9,
-    "ts_retention_curve_fit": 9,
-    "fn_penny_allocation": 9,
-    "ml_platt_scaling": 9,
-    "ts_mann_kendall": 9,
-    "ts_theil_sen": 9,
-    "agg_beta_binomial_shrinkage": 9,
-    "ml_logrank_test": 9,
-    "dq_reconciliation": 9,
-    "ml_bh_fdr": 9,
-    "ml_ab_srm_check": 9,
-    "ts_ljung_box": 9,
-    "ts_spc_control_chart": 9,
-    "dq_duplicate_payments": 9,
-    "ml_price_elasticity": 9,
-    "agg_benford_chisq": 9,
-    "agg_spearman": 9,
-    "ts_safety_stock": 9,
-    "ml_cramers_v": 9,
-    "llm_readability": 9,
-    "sink_zorder_write": 9,
-    "ml_evalue_sequential": 9,
-    "ml_naive_bayes": 9,
-    "ts_var_cvar": 9,
-    "ml_tost_equivalence": 9,
-    "llm_mattr": 9,
-    "ml_mcnemar_paired": 9,
-    "dq_key_discovery": 9,
-    "graph_closeness": 9,
-    "ts_kalman_level": 9,
-    "dq_dp_count_release": 9,
-    "ts_bass_diffusion": 9,
-    "ml_cox_score": 9,
-    "ml_poisson_glm": 9,
-    "ts_granger_causality": 9,
-    "ts_pot_gpd_tail": 9,
-    "source_fixed_width": 9,
-    "ml_doubly_robust": 9,
-    "ts_kendall_tau": 9,
-    "ml_bradley_terry": 9,
-    "ts_cointegration_eg": 9,
-    "ml_permutation_test": 9,
-    "ml_iv_wald": 9,
-    "llm_greedy_coverage": 9,
-    "ml_raking_ipf": 9,
-    "ts_matrix_profile": 9,
-    "ts_littles_law_audit": 9,
-    "ml_oaxaca_blinder": 9,
-    "scan_partition_skew_audit": 9,
-    "fn_haversine": 9,
-    "ml_knn_classify": 9,
-    "ts_binseg_changepoints": 9,
-    "ts_synth_control_1nn": 9,
-    "dq_arithmetic_contract": 9,
-    "ml_ipw_ate": 9,
-    "ts_peak_prominence": 9,
-    "llm_uncertainty_sample": 9,
-    "ml_quantile_treatment_effect": 9,
-    "fn_fiscal_445": 9,
-    "ml_meta_analysis_dl": 9,
-    "ts_haar_denoise": 9,
-    "fn_business_days": 9,
-    "ml_weibull_survival_grid": 9,
-    "dq_fd_discovery": 9,
-    "win_hampel_filter": 9,
-    "graph_rich_club": 9,
-    "ml_silhouette_rfm": 9,
-    "ts_pacf_durbin": 9,
-    "source_csv_multichar": 9,
-    "ts_ar2_yule_walker": 9,
-    "ts_anderson_darling": 9,
-    "ml_covariate_balance": 9,
-    "ts_chain_ladder": 9,
-    "ts_absorbing_markov": 9,
-    "ml_yuen_trimmed_t": 9,
-    "ml_harrell_c": 9,
-    "llm_hill_tail_index": 9,
-    "ml_brier_decomposition": 9,
-    "ts_markov_entropy_rate": 9,
-    "dq_terminal_digit": 9,
-    "llm_doclen_lognormal": 9,
-    "ts_spectral_entropy": 9,
-    "ts_extremal_index": 9,
-    "ts_decompose_whiteness": 9,
-    "subquery_quantified": 9,
-    "ts_max_subarray": 9,
-    "llm_pmi_collocations": 9,
-    "ml_kruskal_wallis": 9,
-    "ml_icc_anova": 9,
-    "ts_ar_residual_outliers": 9,
-    "llm_burrows_delta": 9,
-    "join_full_outer": 9,
-    "agg_robust_shape": 9,
-    "ml_friedman_test": 9,
-    "ts_price_index_fisher": 9,
-    "dq_benford_mad": 9,
-    "graph_degree_gini": 9,
-    "llm_dedup_by_source": 9,
-    "ml_brown_forsythe": 9,
-    "ts_revenue_beta": 9,
-    "ml_tjur_r2": 9,
-    "ts_durbin_watson": 9,
-    "llm_source_diversity": 9,
-    "ml_mcc": 9,
-    "ml_cohen_d": 9,
-    "ml_risk_reduction": 9,
-    "llm_self_similarity": 9,
-    "ts_seasonal_indices": 9,
-    "ml_youden_j": 9,
-    # Round-7 additions (r6 verdict item 9 stretch): rank 10 — behind
-    # the ENTIRE rank-9 driver-verification backlog, per the backlog
-    # freeze (r6 verdict item 2). Without the override scans.py's
-    # module rank (4) would displace staged keys from the r7 window.
-    "sink_merge_into": 10,
-    "fn_protobuf_wire": 10,
-    # Round-8 additions (r7 verdict item 8 stretch): rank 10, same
-    # backlog-freeze placement as the round-7 pair.
-    "fn_avro_wire": 10,
-    "scan_iceberg_snapshot": 10,
-    # Round-9 additions (r8 verdict item 8 stretch): rank 10, same
-    # backlog-freeze placement as the round-7/8 pairs.
-    "scan_delta_log": 10,
-    "fn_avro_container": 10,
-    # Round-10 additions (r9 verdict item 4 stretch): rank 10, same
-    # backlog-freeze placement — behind the 142-key driver backlog.
-    "scan_delta_checkpoint": 10,
-    "fn_avro_schema_evolution": 10,
-    # Round-11 additions (r10 verdict item 2 stretch): rank 10, behind
-    # the 96-key driver backlog — freeze lifted but additions stay
-    # under the ~48/round burn rate so the backlog shrinks.
-    "scan_delta_time_travel_ts": 10,
-    "fn_avro_union_nullable": 10,
-    # Round-12 additions (r11 verdict item 3 stretch): rank 11 — behind
-    # the remaining 50-key backlog AND the rank-10 stretch wave, so the
-    # r12 window burns first-touch keys before re-checking these.
-    "scan_delta_partition_values": 11,
-    "fn_avro_array_blocks": 11,
-    # Round-13 additions (r12 verdict item 3 stretch): rank 12 — behind
-    # the 4 remaining backlog keys, so the r13 window retires the whole
-    # backlog first and then first-touches these two.
-    "scan_delta_deletion_vectors": 12,
-    "fn_avro_map_blocks": 12,
-}
+def verified_rounds(root: str = _ROOT) -> dict[str, int]:
+    """Each key's latest driver-green round across ``root``'s artifacts."""
+    rounds: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = _ARTIFACT.fullmatch(os.path.basename(path))
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        with open(path) as f:
+            rows = json.load(f)
+        for key, row in rows.items():
+            if _is_green(row) and rnd > rounds.get(key, 0):
+                rounds[key] = rnd
+    return rounds
 
 
-def _driver_rank(key: str) -> tuple[int, int]:
-    if key in _REVERIFY:
-        return (0, _REVERIFY.index(key))
-    if key in _CANARY:
-        return (0, 50 + _CANARY.index(key))
-    if key in DRIVER_VERIFIED:
-        # Oldest driver check first: spare window slots become automatic
-        # second-touch re-verification of the longest-unchecked keys.
-        return (99, _VERIFIED_ROUND[key])
-    if key in _KEY_RANK:
-        return (_KEY_RANK[key], 0)
-    mod = QUERIES[key].__module__
-    short = mod.split("morphl_model_publishers_churning_users_spark.")[-1]
-    return (_MODULE_RANK.get(short, 50), 0)
+def pending_reverify(rounds: dict[str, int], reverify: dict[str, int] = _REVERIFY) -> list[str]:
+    """``reverify`` keys not yet green in an artifact newer than their round."""
+    return [k for k, r in reverify.items() if rounds.get(k, 0) <= r]
+
+
+def driver_order(
+    keys: Iterable[str], rounds: dict[str, int], reverify: dict[str, int] = _REVERIFY
+) -> list[str]:
+    """Order registration-ordered ``keys`` for the driver window (module doc)."""
+    keys = list(keys)
+    first = [k for k in pending_reverify(rounds, reverify) if k in keys]
+    rest = [k for k in keys if k not in first]
+    # Stable sort: never-green keys (round 0) lead in registration order,
+    # then verified keys oldest round first, ties in registration order.
+    return first + sorted(rest, key=lambda k: rounds.get(k, 0))
+
+
+_order: list[str] = []
 
 
 def _ordered_keys() -> list[str]:
-    keys = list(QUERIES)
-    return sorted(keys, key=lambda k: (_driver_rank(k), keys.index(k)))
-
-
-def get_queries() -> dict[str, QueryFn]:
+    global _order
     from . import load_all_operators
 
     load_all_operators()
+    # Registration only ever adds keys, so a length change means stale.
+    if len(_order) != len(QUERIES):
+        _order = driver_order(QUERIES, verified_rounds())
+    return _order
+
+
+def get_queries() -> dict[str, QueryFn]:
     return {k: QUERIES[k] for k in _ordered_keys()}
 
 
 def get_oracles() -> dict[str, str]:
-    from . import load_all_operators
-
-    load_all_operators()
     return {k: ORACLES[k] for k in _ordered_keys() if k in ORACLES}

@@ -1,7 +1,5 @@
 """Round-12 de-risk prototype for the STAGED round-13 stretch design
-`scan_delta_deletion_vectors` (registry.py "ROUND-13 PRE-STAGED
-MAINTENANCE", candidate (a)) — NOT a registered operator; additions
-stay at 2/round per the backlog-burn discipline.
+`scan_delta_deletion_vectors` (since built, in operators/scans.py).
 
 The design's claim: a DELETE of 0.1% of a 100 TB Delta table should
 write a tiny deletion-vector (DV) sidecar — a set of (file, row_index)
@@ -29,8 +27,7 @@ Run on an idle guest:
 
     python scripts/deletion_vector_prototype_r12.py [sf_dir]
 
-Record results in SURVEY §6 (round-12 log) and fold the findings into
-the r13 design comment in registry.py.
+Record results in SURVEY §6 (round-12 log).
 """
 
 import io

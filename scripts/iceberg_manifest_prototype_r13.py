@@ -1,7 +1,5 @@
 """Round-13 de-risk prototype for the STAGED round-14 stretch design
-`scan_iceberg_manifest_pruning` (registry.py "ROUND-14 PRE-STAGED
-MAINTENANCE", candidate (b)) — NOT a registered operator; additions
-stay at 2/round per the backlog-burn discipline.
+`scan_iceberg_manifest_pruning` — NOT a registered operator.
 
 The design's claim: Iceberg's TWO-LEVEL metadata tree — snapshot →
 manifest LIST (one row per manifest, carrying the partition-value
@@ -25,8 +23,9 @@ Run on an idle guest:
 
     python scripts/iceberg_manifest_prototype_r13.py [sf_dir]
 
-Record results in SURVEY §6 (round-13 log) and fold the findings into
-the r14 design comment in registry.py.
+Findings (round 13): the two-level prune is exact against a direct
+filter at 8/64/512 phantom manifests (plus 4 phantom file entries
+inside the surviving manifest), with flat ~0.7-0.8 s planning + read.
 """
 
 import json

@@ -1,6 +1,5 @@
 """Round-12 de-risk prototype for the STAGED round-13 stretch design
-`fn_avro_map_blocks` (registry.py "ROUND-13 PRE-STAGED MAINTENANCE",
-candidate (b)) — NOT a registered operator; additions stay at 2/round.
+`fn_avro_map_blocks` (since built, in functions/scalar.py).
 
 The design reuses two already-proven pieces: Avro block framing with
 both wire forms (fn_avro_array_blocks) and length-prefixed string

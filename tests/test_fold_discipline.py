@@ -1,131 +1,116 @@
-"""Meta-guard for the registry fold discipline (round 9).
+"""Driver-window order derived from the CORRECTNESS artifacts.
 
-`registry._VERIFIED_ROUND` tags every driver-verified key with the round
-of its MOST RECENT driver green. The fold is applied by hand each round
-(fold the new CORRECTNESS_r{N} greens, re-tag canaries/reverifies), and
-rounds 1-8 validated it by eye. This pins it mechanically against the
-committed driver artifacts, both directions:
-
-  * every (key -> round) tag must be backed by a hash_match=true (or,
-    for rows-only contracts, rows_match=true with hash never checked)
-    row in CORRECTNESS_r{round}.json — a tag pointing at a round where
-    the driver did NOT green the key is a fold error;
-  * every hash-green key in every CORRECTNESS artifact must be tagged
-    with SOME round >= that artifact's (a green the fold forgot would
-    silently waste future driver-window slots);
-  * _REVERIFY keys must already be driver-verified (reverify semantics:
-    re-hash a key whose tag refers to pre-change code — a never-green
-    key belongs in the unverified ranks, not _REVERIFY);
-  * _CANARY keys must be driver-verified (a canary slot exists to
-    re-touch a KNOWN green).
-
-No Spark session needed — pure JSON + registry introspection.
+`registry.verified_rounds` maps driver rows to each key's latest green
+round and `registry.driver_order` ranks keys from it (policy in the
+registry module docstring). Most tests run on synthetic artifacts in
+`tmp_path`; the last two read the committed ones. No Spark session
+needed — pure JSON + registry introspection.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+import shutil
 
 from morphl_model_publishers_churning_users_spark import registry
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-
-def _artifacts() -> dict[int, dict]:
-    out = {}
-    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        rnd = int(os.path.basename(path).removeprefix("CORRECTNESS_r").removesuffix(".json"))
-        with open(path) as f:
-            out[rnd] = json.load(f)
-    return out
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+ROWS_ONLY = {"rows_match": True, "schema_match": True, "hash_match": None, "err": None}
+RED = {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}
+NO_ORACLE = {"rows_match": None, "schema_match": None, "hash_match": None, "err": "no_oracle"}
 
 
-def _is_green(row: dict) -> bool:
-    # Full-oracle keys: hash_match true. Rows-only contracts (streaming
-    # etc.): the driver records rows_match with hash_match absent/None.
-    if row.get("hash_match") is True:
-        return True
-    return row.get("hash_match") is None and row.get("rows_match") is True
+def _write(root, rnd: int, rows: dict) -> None:
+    with open(os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json"), "w") as f:
+        json.dump(rows, f)
 
 
-def test_every_tag_is_backed_by_its_round_artifact():
-    arts = _artifacts()
-    assert arts, "no CORRECTNESS_r*.json artifacts found"
-    missing = {}
-    for key, rnd in registry._VERIFIED_ROUND.items():
-        row = arts.get(rnd, {}).get(key)
-        if row is None or not _is_green(row):
-            missing[key] = (rnd, row)
-    assert not missing, (
-        f"{len(missing)} _VERIFIED_ROUND tags not backed by a green row in "
-        f"their round's CORRECTNESS artifact: {dict(list(missing.items())[:8])}"
-    )
+def test_latest_green_round_wins(tmp_path):
+    _write(tmp_path, 1, {"a": GREEN, "b": GREEN})
+    _write(tmp_path, 3, {"a": GREEN})
+    _write(tmp_path, 4, {"a": RED, "b": GREEN})
+    assert registry.verified_rounds(tmp_path) == {"a": 3, "b": 4}
 
 
-def test_every_artifact_green_is_folded():
-    arts = _artifacts()
-    unfolded = {}
-    for rnd, rows in arts.items():
-        for key, row in rows.items():
-            if not _is_green(row):
-                continue
-            tag = registry._VERIFIED_ROUND.get(key)
-            if tag is None or tag < rnd:
-                unfolded[key] = (rnd, tag)
-    if unfolded:
-        top_tag = max(registry._VERIFIED_ROUND.values())
-        fresh_rounds = {rnd for rnd, _ in unfolded.values()}
-        if all(rnd > top_tag for rnd in fresh_rounds):
-            # Not an operator regression: the driver just landed a new
-            # artifact and the next round's fold hasn't been applied yet.
-            hint = (
-                f"new driver artifact (round {max(fresh_rounds)}) landed — "
-                f"apply the staged round-{max(fresh_rounds) + 1} fold "
-                f"(registry.py: fold the greens with tag {max(fresh_rounds)}, "
-                f"rotate _CANARY, clear _REVERIFY)"
-            )
-        else:
-            hint = "fold error: a green in an already-folded round is untagged"
-        raise AssertionError(
-            f"{len(unfolded)} driver-green keys missing from the fold (or "
-            f"tagged older than a later green) — {hint}: "
-            f"{dict(list(unfolded.items())[:8])}"
-        )
+def test_rows_only_green_counts(tmp_path):
+    _write(tmp_path, 2, {"stream": ROWS_ONLY})
+    assert registry.verified_rounds(tmp_path) == {"stream": 2}
 
 
-def test_no_artifact_red_is_trusted():
-    """A key that FAILED in round N must not carry tag >= N unless a
-    LATER artifact re-greened it (tag must equal that later round)."""
-    arts = _artifacts()
-    bad = {}
-    for rnd, rows in arts.items():
-        for key, row in rows.items():
-            if _is_green(row):
-                continue
-            tag = registry._VERIFIED_ROUND.get(key)
-            if tag is not None and tag >= rnd:
-                relegitimized = tag in arts and _is_green(arts[tag].get(key, {}))
-                if not relegitimized:
-                    bad[key] = (rnd, tag)
-    assert not bad, f"red keys trusted without a later green: {bad}"
+def test_red_and_no_oracle_rows_do_not_count(tmp_path):
+    _write(tmp_path, 1, {"red": RED, "missing": NO_ORACLE, "ok": GREEN})
+    _write(tmp_path, 2, {"ok": {**GREEN, "hash_match": False, "rows_match": False}})
+    assert registry.verified_rounds(tmp_path) == {"ok": 1}
 
 
-def test_reverify_and_canary_point_at_verified_keys():
-    # get_queries() loads every operator module, so membership is a real
-    # check (ADVICE r9: the old `in QUERIES or True` form was dead code).
+def test_no_artifacts_keeps_registration_order(tmp_path):
+    # Also the shipped-zip case: the artifact root is not a directory.
+    assert registry.verified_rounds(tmp_path / "pkg.zip") == {}
+    keys = ["c", "a", "b"]
+    assert registry.driver_order(keys, registry.verified_rounds(tmp_path), {}) == keys
+
+
+def test_pending_reverify_leads_then_expires(tmp_path):
+    keys = ["a", "b", "c", "d"]
+    reverify = {"d": 1, "b": 1}
+    _write(tmp_path, 1, {k: GREEN for k in keys})
+    order = registry.driver_order(keys, registry.verified_rounds(tmp_path), reverify)
+    assert order == ["d", "b", "a", "c"]
+    _write(tmp_path, 2, {"b": GREEN})
+    rounds = registry.verified_rounds(tmp_path)
+    assert registry.pending_reverify(rounds, reverify) == ["d"]
+    assert registry.driver_order(keys, rounds, reverify) == ["d", "a", "c", "b"]
+
+
+def test_never_green_before_verified(tmp_path):
+    keys = ["old", "new1", "red", "new2"]
+    _write(tmp_path, 1, {"old": GREEN, "red": RED})
+    order = registry.driver_order(keys, registry.verified_rounds(tmp_path), {})
+    assert order == ["new1", "red", "new2", "old"]
+
+
+def test_verified_oldest_first_ties_in_registration_order(tmp_path):
+    keys = ["a", "b", "c", "d", "e"]
+    _write(tmp_path, 1, {"b": GREEN, "d": GREEN, "e": GREEN})
+    _write(tmp_path, 2, {"a": GREEN, "c": GREEN, "e": GREEN})
+    order = registry.driver_order(keys, registry.verified_rounds(tmp_path), {})
+    assert order == ["b", "d", "a", "c", "e"]
+
+
+def test_new_artifact_needs_no_registry_edit(tmp_path):
+    """A new driver artifact greening every `_REVERIFY` key moves them
+    from the front of the window to its tail — no registry edit."""
+    for name in os.listdir(ROOT):
+        if name.startswith("CORRECTNESS_r"):
+            shutil.copy(os.path.join(ROOT, name), tmp_path)
+    registry.get_queries()  # loads every operator module
+    keys = list(registry.QUERIES)
+    before = registry.verified_rounds(tmp_path)
+    pending = registry.pending_reverify(before)
+    assert registry.driver_order(keys, before)[: len(pending)] == pending
+
+    _write(tmp_path, max(before.values()) + 1, {k: GREEN for k in registry._REVERIFY})
+    after = registry.verified_rounds(tmp_path)
+    assert registry.pending_reverify(after) == []
+    order = registry.driver_order(keys, after)
+    assert not set(registry._REVERIFY) & set(order[: len(registry._REVERIFY)])
+    assert set(order[-len(registry._REVERIFY):]) == set(registry._REVERIFY)
+    assert sorted(order) == sorted(keys)
+
+
+def test_reverify_keys_are_registered_and_were_green():
     live = registry.get_queries()
-    for key in registry._REVERIFY:
-        assert key in registry.DRIVER_VERIFIED, f"_REVERIFY key never driver-green: {key}"
+    rounds = registry.verified_rounds()
+    for key, rnd in registry._REVERIFY.items():
         assert key in live, f"_REVERIFY key not registered: {key}"
-    for key in registry._CANARY:
-        assert key in registry.DRIVER_VERIFIED, f"_CANARY key never driver-green: {key}"
-        assert key in live, f"_CANARY key not registered: {key}"
+        assert key in rounds, f"_REVERIFY key never driver-green: {key}"
+        assert rnd <= max(rounds.values()), f"_REVERIFY {key} names a future round"
 
 
-def test_tags_within_known_rounds():
-    arts = _artifacts()
-    top = max(arts)
-    for key, rnd in registry._VERIFIED_ROUND.items():
-        assert 1 <= rnd <= top, f"{key} tagged round {rnd}, artifacts go up to {top}"
+def test_public_order_is_the_derived_order():
+    order = registry.driver_order(registry.QUERIES, registry.verified_rounds())
+    assert list(registry.get_queries()) == order
+    assert list(registry.get_oracles()) == [k for k in order if k in registry.ORACLES]

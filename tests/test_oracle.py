@@ -21,11 +21,13 @@ _ORACLES = get_oracles()
 # SPARK_GRAFT_TEST_SF_DIR=sf0.1 sweep the verify skill prescribes). The
 # default gate keeps a deterministic 1-in-8 sample (same 71 keys every
 # run — reproducible failures) so oracle parity still smoke-checks on
-# every fast run. Every _REVERIFY key with an oracle joins the sample: a
-# key whose code changed after it went green is parity-checked on every
-# fast run too (rows-only keys already run in test_rows_only_runs).
+# every fast run. Every pending reverify key with an oracle joins the
+# sample: a key whose code changed after its last driver green is
+# parity-checked on every fast run until the driver re-greens it
+# (rows-only keys already run in test_rows_only_runs).
 _PARITY_KEYS = sorted(_ORACLES)
-_SAMPLED_KEYS = sorted(set(_PARITY_KEYS[::8]) | (set(registry._REVERIFY) & set(_ORACLES)))
+_PENDING = set(registry.pending_reverify(registry.verified_rounds()))
+_SAMPLED_KEYS = sorted(set(_PARITY_KEYS[::8]) | (_PENDING & set(_ORACLES)))
 
 
 @pytest.mark.slow
