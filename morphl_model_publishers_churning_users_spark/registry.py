@@ -18,11 +18,13 @@ Driver-window order. The driver hash-checks only a bounded prefix of
 operators it verifies. ``get_queries()``/``get_oracles()`` yield:
   1. pending ``_REVERIFY`` keys, in declared order — their code changed
      after their last driver green;
-  2. keys never green in any driver artifact, in registration order;
+  2. keys never green in any driver artifact, and keys whose newest red
+     row is newer than their latest green one (red after green), in
+     registration order;
   3. verified keys, oldest latest-green round first (ties in registration
      order), so spare window slots re-touch the keys that have gone
      longest without a driver check.
-Each key's latest green round is derived from the committed
+Each key's latest green and red rounds are derived from the committed
 ``CORRECTNESS_r{N}.json`` artifacts at the repository root, so a new
 artifact needs no registry edit. The derivation runs on the first
 ``get_queries()``/``get_oracles()`` call, never at import: executor
@@ -53,15 +55,18 @@ _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 # {key: R}: the key's operator code changed after its driver green, when
 # round R was the newest artifact. Each key leads the window until an
 # artifact newer than R shows it green again, then expires by itself. Add
-# an entry when a driver-green key's code changes (a fix for a key the
-# driver turned red included). The ML keys share the churn plan's
-# per-user table, which is now materialized once (plans/churn.labeled_users).
+# an entry when a driver-green key's code changes; a key the driver turned
+# red needs none, as it already sorts with the never-green keys. The ML
+# keys share the churn plan's per-user table, which is now materialized
+# once (plans/churn.labeled_users); llm_dedup_fuzzy builds its recall
+# anchor as one lazy plan over one shingled corpus.
 _REVERIFY: dict[str, int] = {
     "ml_split": 14,
     "ml_train": 14,
     "ml_eval": 14,
     "ml_infer": 14,
     "ml_crossval": 14,
+    "llm_dedup_fuzzy": 14,
 }
 
 
@@ -87,9 +92,16 @@ def _is_green(row: dict) -> bool:
     return row.get("hash_match") is None and row.get("rows_match") is True
 
 
-def verified_rounds(root: str = _ROOT) -> dict[str, int]:
-    """Each key's latest driver-green round across ``root``'s artifacts."""
-    rounds: dict[str, int] = {}
+def _is_red(row: dict) -> bool:
+    """A driver row is red when its hash or its row count mismatched."""
+    return row.get("hash_match") is False or row.get("rows_match") is False
+
+
+def _latest_rounds(root: str) -> tuple[dict[str, int], dict[str, int]]:
+    """Each key's latest green and latest red round across ``root``'s
+    artifacts. Rows that are neither (no oracle, errors) count for neither."""
+    green: dict[str, int] = {}
+    red: dict[str, int] = {}
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = _ARTIFACT.fullmatch(os.path.basename(path))
         if m is None:
@@ -98,9 +110,22 @@ def verified_rounds(root: str = _ROOT) -> dict[str, int]:
         with open(path) as f:
             rows = json.load(f)
         for key, row in rows.items():
-            if _is_green(row) and rnd > rounds.get(key, 0):
-                rounds[key] = rnd
-    return rounds
+            latest = green if _is_green(row) else red if _is_red(row) else None
+            if latest is not None and rnd > latest.get(key, 0):
+                latest[key] = rnd
+    return green, red
+
+
+def verified_rounds(root: str = _ROOT) -> dict[str, int]:
+    """Each key's latest driver-green round across ``root``'s artifacts."""
+    return _latest_rounds(root)[0]
+
+
+def trusted_rounds(root: str = _ROOT) -> dict[str, int]:
+    """``verified_rounds`` without the keys red after their latest green:
+    the rounds the driver window ranks by."""
+    green, red = _latest_rounds(root)
+    return {k: r for k, r in green.items() if red.get(k, 0) < r}
 
 
 def pending_reverify(rounds: dict[str, int], reverify: dict[str, int] = _REVERIFY) -> list[str]:
@@ -130,7 +155,7 @@ def _ordered_keys() -> list[str]:
     load_all_operators()
     # Registration only ever adds keys, so a length change means stale.
     if len(_order) != len(QUERIES):
-        _order = driver_order(QUERIES, verified_rounds())
+        _order = driver_order(QUERIES, trusted_rounds())
     return _order
 
 

@@ -3,8 +3,12 @@
 Used by our own tests/bench. The driver creates its own session and calls
 ``queries()`` callables with it; anything the engine *requires* must
 therefore also be applied as a runtime conf in ``catalog.ensure_confs``
-(which every query path calls) — builder-time configs here are only the
-ones that cannot be set at runtime (none currently critical).
+(which every query path calls). Builder-time configs here are only the
+ones that cannot be set at runtime. None is needed for correct results;
+one matters for speed: ``spark.sql.codegen.cache.maxEntries``, the size
+of the JVM-wide cache of compiled generated classes. It is static, so a
+driver-owned session keeps Spark's default of 100 unless the driver sets
+it at launch; ``ensure_confs`` cannot apply it.
 """
 
 from __future__ import annotations
@@ -34,6 +38,14 @@ def build_session(app_name: str = "mpcu-spark", cpus: int | None = None) -> Spar
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Compiled-class cache (LRU), sized to the engine's repeated working
+        # set. A pass of perfbench's engine_mix (bench.py's 17 headline keys
+        # plus the LLM-corpus and ETL ops; sf 0.01, local[3] on a 4-core
+        # host) needs 390-480 generated classes. That cycle is longer than
+        # the default 100 entries, so each class was evicted before its
+        # reuse and a warm pass recompiled 417-447 of them (~8 ms each in
+        # Janino); at 1000 a warm pass compiles 0-4.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Optional config-axis overrides for test/diagnostic sessions (r12):
     # SPARK_GRAFT_EXTRA_CONFS="k1=v1;k2=v2" lets the engine-conf'd

@@ -3,7 +3,7 @@
 The sf fixtures contain only ASCII docs with >2 words, which masked three
 latent divergences under Spark 4's default ANSI mode:
   * llm_repetition: out-of-bounds element_at threw on <3-word docs;
-  * _exact_shingle_jaccard_pairs (llm_dedup_fuzzy's anchor): same class;
+  * llm_dedup_fuzzy's shingling (its recall anchor): same class;
   * llm_entropy_filter: DuckDB strlen (bytes) vs Spark length (chars)
     diverged on non-ASCII docs, and empty text emitted phantom rows
     (Spark sequence(1,0) == [1,0]).

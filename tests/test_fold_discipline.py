@@ -1,8 +1,9 @@
 """Driver-window order derived from the CORRECTNESS artifacts.
 
 `registry.verified_rounds` maps driver rows to each key's latest green
-round and `registry.driver_order` ranks keys from it (policy in the
-registry module docstring). Most tests run on synthetic artifacts in
+round, `registry.trusted_rounds` drops the keys red after it, and
+`registry.driver_order` ranks keys from that (policy in the registry
+module docstring). Most tests run on synthetic artifacts in
 `tmp_path`; the last two read the committed ones. No Spark session
 needed — pure JSON + registry introspection.
 """
@@ -72,6 +73,25 @@ def test_never_green_before_verified(tmp_path):
     assert order == ["new1", "red", "new2", "old"]
 
 
+def test_red_after_green_sorts_with_never_green(tmp_path):
+    """A key whose newest red row is newer than its latest green one
+    leads the window with the never-green keys, with no `_REVERIFY`
+    entry; a later green restores it, and a red row older than the
+    latest green changes nothing."""
+    keys = ["old", "new", "regressed", "recovered", "rows_red"]
+    _write(tmp_path, 1, {k: GREEN for k in ("old", "regressed", "recovered", "rows_red")})
+    _write(tmp_path, 2, {"old": GREEN, "regressed": RED, "recovered": RED,
+                         "rows_red": {**ROWS_ONLY, "rows_match": False}})
+    _write(tmp_path, 3, {"recovered": GREEN, "regressed": NO_ORACLE})
+    assert registry.verified_rounds(tmp_path) == {
+        "old": 2, "regressed": 1, "recovered": 3, "rows_red": 1
+    }
+    rounds = registry.trusted_rounds(tmp_path)
+    assert rounds == {"old": 2, "recovered": 3}
+    order = registry.driver_order(keys, rounds, {})
+    assert order == ["new", "regressed", "rows_red", "old", "recovered"]
+
+
 def test_verified_oldest_first_ties_in_registration_order(tmp_path):
     keys = ["a", "b", "c", "d", "e"]
     _write(tmp_path, 1, {"b": GREEN, "d": GREEN, "e": GREEN})
@@ -111,6 +131,6 @@ def test_reverify_keys_are_registered_and_were_green():
 
 
 def test_public_order_is_the_derived_order():
-    order = registry.driver_order(registry.QUERIES, registry.verified_rounds())
+    order = registry.driver_order(registry.QUERIES, registry.trusted_rounds())
     assert list(registry.get_queries()) == order
     assert list(registry.get_oracles()) == [k for k in order if k in registry.ORACLES]

@@ -779,7 +779,28 @@ def test_fuzzy_recall_anchor_is_cluster_side():
 
     src = inspect.getsource(llm_dedup_fuzzy)
     assert ".collect()" not in src
-    assert "left_semi" in src  # the join+count recall pattern
+    assert '"left")' in src and ".agg(" in src  # the join+count recall pattern
+
+
+def test_fuzzy_recall_anchor_is_one_lazy_plan(spark, sf_dir):
+    """llm_dedup_fuzzy shingles the corpus once, into the checkpointed
+    signed corpus, and returns its recall anchor as one lazy plan over
+    the stored shingle sets: building the op runs only the checkpoint's
+    jobs (no ground-truth checkpoint, no driver counts), and no shingle
+    lambda is left in the plan it returns."""
+    sc = spark.sparkContext
+    group = "test_fuzzy_recall_anchor_is_one_lazy_plan"
+    sc.setJobGroup(group, group)
+    try:
+        df = _Q["llm_dedup_fuzzy"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    build_jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(build_jobs) <= 3, build_jobs
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    assert "concat_ws" not in buf.getvalue()
 
 
 def test_no_count_based_broadcast_guards():
