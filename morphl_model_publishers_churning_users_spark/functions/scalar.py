@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from ..operators._shared import t
+from ..operators._shared import qdec, qround, t
 from ..registry import register
 
 
@@ -621,17 +621,15 @@ def fn_trig(spark, sf_dir):
     exp over integer-derived arguments, quantized half-up at 1e-9
     (libm ulp differences are not contractual across engines — the same
     discipline ts_periodogram established). One codegen projection."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     p = t(spark, sf_dir, "part")
     at2 = F.atan2(F.col("p_size").cast("double"), F.lit(10.0))
     return p.select(
         "p_partkey",
-        q9(F.sin(F.col("p_size") * 0.1)).alias("sin_v"),
-        q9(F.cos(F.col("p_size") * 0.1)).alias("cos_v"),
-        q9(at2).alias("at2"),
-        q6(F.degrees(at2)).alias("at2_deg"),
-        q9(F.exp(F.col("p_size") * -0.05)).alias("decay"),
+        qround(F.sin(F.col("p_size") * 0.1), 9).alias("sin_v"),
+        qround(F.cos(F.col("p_size") * 0.1), 9).alias("cos_v"),
+        qround(at2, 9).alias("at2"),
+        qround(F.degrees(at2)).alias("at2_deg"),
+        qround(F.exp(F.col("p_size") * -0.05), 9).alias("decay"),
     )
 
 
@@ -1204,7 +1202,6 @@ def fn_haversine(spark, sf_dir):
     correctly-rounded and needs none. The all-pairs join is over the
     25-row nation dim (broadcast); output is the 20 nearest pairs,
     rank-deterministic."""
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
     h = lambda salt: (
         F.conv(F.substring(F.md5(F.concat(F.lit(salt), F.col("n_name"))), 1, 6), 16, 10)
         .cast("bigint")
@@ -1225,18 +1222,17 @@ def fn_haversine(spark, sf_dir):
         ((F.col("lb") - F.col("la")) * rad).alias("dphi"),
         ((F.col("lo_b") - F.col("lo_a")) * rad).alias("dlam"),
     )
-    sp = q12(F.sin(F.col("dphi") / F.lit(2.0)))
-    sl = q12(F.sin(F.col("dlam") / F.lit(2.0)))
-    av = sp * sp + q12(F.cos(F.col("p1"))) * q12(F.cos(F.col("p2"))) * sl * sl
+    sp = qround(F.sin(F.col("dphi") / F.lit(2.0)), 12)
+    sl = qround(F.sin(F.col("dlam") / F.lit(2.0)), 12)
+    av = sp * sp + qround(F.cos(F.col("p1")), 12) * qround(F.cos(F.col("p2")), 12) * sl * sl
     dist = pairs.select(
         "na",
         "nb",
-        (F.lit(12742.0) * q12(F.asin(F.sqrt(F.least(av, F.lit(1.0)))))).alias("d_km"),
+        (F.lit(12742.0) * qround(F.asin(F.sqrt(F.least(av, F.lit(1.0)))), 12)).alias("d_km"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     w = Window.orderBy(F.asc("d_km"), F.asc("na"), F.asc("nb"))
     return (
-        dist.select("na", "nb", q6(F.col("d_km")).alias("d_km"))
+        dist.select("na", "nb", qround(F.col("d_km")).alias("d_km"))
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= 20)
         .orderBy("rank")
@@ -1294,8 +1290,7 @@ def fn_fiscal_445(spark, sf_dir):
     )
     mapped = o.crossJoin(F.broadcast(anchor)).select(
         F.floor(F.datediff("d", "a") / 7).cast("bigint").alias("wk"),
-        F.floor(F.col("o_totalprice") * F.lit(1e6) + F.lit(0.5))
-        .cast("decimal(38,6)")
+        qdec(F.col("o_totalprice"))
         .alias("pq"),
     )
     wiy = F.col("wk") % 52
@@ -1377,13 +1372,12 @@ def fn_business_days(spark, sf_dir):
         F.col("o_orderpriority").alias("priority"),
         (W(F.col("d2")) - W(F.col("d1"))).cast("bigint").alias("bd"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return lagd.groupBy("priority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines"),
         F.min("bd").cast("bigint").alias("min_bd"),
         F.max("bd").cast("bigint").alias("max_bd"),
-        q6(F.sum("bd").cast("double") / F.count(F.lit(1))).alias("avg_bd"),
-        q6(
+        qround(F.sum("bd").cast("double") / F.count(F.lit(1))).alias("avg_bd"),
+        qround(
             F.sum(F.when(F.col("bd") <= 5, 1).otherwise(0)).cast("double")
             / F.count(F.lit(1))
         ).alias("within_5bd"),

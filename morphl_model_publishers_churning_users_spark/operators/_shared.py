@@ -5,6 +5,15 @@ order differs from DuckDB's, and on ~1e9-magnitude totals the drift can
 exceed the 1e-6 rounding grain the driver hashes at. Summing through
 DECIMAL(38,6) is exact and order-independent, then one cast back to
 DOUBLE yields bit-identical values on both engines.
+
+The parity rule is "half-up quantize to 1e-k, and sum exactly through
+DECIMAL", and :func:`qround`, :func:`qdec`, :func:`qsum` and :func:`dsum`
+are its one spelling; operators call them instead of re-deriving the
+arithmetic. ``k`` is the number of decimal digits kept (3, 6, 9 or 12);
+6 is the driver's hash grain. Each helper builds exactly the Catalyst
+expression its docstring shows, with ``10.0 ** k`` as the literal (the
+same double as ``1e6``), so the plans match the DuckDB twins term for
+term.
 """
 
 from __future__ import annotations
@@ -24,9 +33,33 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return table(spark, sf_dir, name)
 
 
-def dsum(col: Column) -> Column:
-    """Exact, order-independent sum of a double column (→ double)."""
-    return F.sum(col.cast("decimal(38,6)")).cast("double")
+def qround(col: Column, k: int = 6) -> Column:
+    """Half-up-quantize a double to 1e-k, as a double:
+    ``floor(col * 1e{k} + 0.5) / 1e{k}``. DuckDB twin:
+    ``FLOOR(x * 1e{k} + 0.5) / 1e{k}``."""
+    g = F.lit(10.0**k)
+    return F.floor(col * g + F.lit(0.5)) / g
+
+
+def qdec(col: Column, k: int = 6) -> Column:
+    """Half-up-quantize a double to 1e-k INTO decimal(38,k): the count of
+    1e-k units, which accumulates in DECIMAL exactly and in any order,
+    dodging both engines' float re-association. DuckDB twin:
+    ``CAST(FLOOR(x * 1e{k} + 0.5) AS DECIMAL(38,{k}))`` (then /1e{k} at the
+    consumer)."""
+    return F.floor(col * F.lit(10.0**k) + F.lit(0.5)).cast(f"decimal(38,{k})")
+
+
+def qsum(col: Column, k: int = 6) -> Column:
+    """Exact sum of the 1e-k-quantized terms of a double column (→ double):
+    ``CAST(SUM(qdec(col, k)) AS DOUBLE) / 1e{k}``."""
+    return F.sum(qdec(col, k)).cast("double") / F.lit(10.0**k)
+
+
+def dsum(col: Column, k: int = 6) -> Column:
+    """Exact, order-independent sum of a double column through
+    decimal(38,k) (→ double)."""
+    return F.sum(col.cast(f"decimal(38,{k})")).cast("double")
 
 
 def DSUM(expr: str) -> str:
@@ -162,8 +195,10 @@ def scan_is_underparallel(df: DataFrame, par: int) -> bool:
 
 
 def ckpt(df: DataFrame) -> DataFrame:
-    """Lineage-cutting checkpoint for iterative loops (pagerank, k-core,
-    connected components, label propagation).
+    """Eager, lineage-cutting materialization: the one checkpoint every
+    operator uses, for iterative loops (pagerank, k-core, connected
+    components, label propagation) and for tables that feed several
+    consumers alike.
 
     Default is ``localCheckpoint(eager=True)``: executor-local block
     storage, no DFS round-trip — the fast path, and correct on a healthy
@@ -171,7 +206,7 @@ def ckpt(df: DataFrame) -> DataFrame:
     1000-executor 100 TB run an executor loss mid-iteration would fail
     the whole job because the truncated lineage cannot be recomputed.
     Set ``SPARK_GRAFT_CHECKPOINT_DIR`` to a fault-tolerant path
-    (HDFS/S3/NFS) to switch every iterative loop to reliable
+    (HDFS/S3/NFS) to switch every materialization to reliable
     ``checkpoint()`` — slower per round, survivable at scale.
     """
     d = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
@@ -181,18 +216,3 @@ def ckpt(df: DataFrame) -> DataFrame:
             sc.setCheckpointDir(d)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
-
-
-def q6dec(col: Column) -> Column:
-    """Half-up-quantize a double to 1e-6 INTO decimal(38,6) — the repo's
-    core cross-engine parity mechanism: quantized terms accumulate in
-    DECIMAL (exact, order-independent), dodging both engines' float
-    re-association. DuckDB twin:
-    ``CAST(FLOOR(x * 1e6 + 0.5) AS DECIMAL(38,6))`` (then /1e6 at the
-    consumer)."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")
-
-
-def q12dec(col: Column) -> Column:
-    """1e-12 variant of :func:`q6dec` (iterative/variance paths)."""
-    return F.floor(col * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")

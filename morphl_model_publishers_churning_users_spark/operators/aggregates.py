@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, q6dec, q12dec, t
+from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, t
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -555,10 +555,10 @@ def agg_weighted(spark, sf_dir):
     wsum = F.sum(
         F.col("l_extendedprice").cast("decimal(19,6)") * F.col("l_quantity").cast("decimal(8,6)")
     ).cast("double")
-    qsum = F.sum(F.col("l_quantity").cast("decimal(38,6)")).cast("double")
+    qty = dsum(F.col("l_quantity"))
     return li.groupBy("l_returnflag").agg(
-        F.round(wsum / qsum, 6).alias("wavg_price"),
-        qsum.alias("total_qty"),
+        F.round(wsum / qty, 6).alias("wavg_price"),
+        qty.alias("total_qty"),
     )
 
 
@@ -1205,10 +1205,9 @@ def agg_countmin(spark, sf_dir):
     # exact_n over keys hashing to b — identical arithmetic, but the
     # fact table is never re-scanned for counters or probes). The exact
     # table is the checkpointed artifact, bounded by key cardinality.
-    exact = (
+    exact = ckpt(
         ev.groupBy("k")
         .agg(F.count(F.lit(1)).alias("exact_n"))
-        .localCheckpoint(eager=True)
     )
     rows = F.explode(F.sequence(F.lit(0), F.lit(3))).alias("row_i")
     hashed = exact.select("k", "exact_n", rows).select(
@@ -1285,11 +1284,10 @@ def agg_bloom(spark, sf_dir):
     itself, not just its intent."""
     # The member set feeds three branches (bit positions, cardinality,
     # membership flags) — materialize the one event-scale distinct once.
-    members = (
+    members = ckpt(
         t(spark, sf_dir, "events")
         .select("user_id")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     js = F.explode(F.sequence(F.lit(0), F.lit(2))).alias("j")
     pos = lambda key: (
@@ -1380,16 +1378,14 @@ def agg_skew_kurtosis(spark, sf_dir):
     sums and identical double algebra."""
     ev = t(spark, sf_dir, "events")
     v = F.col("value")
-    d6 = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")
     q = lambda c, g: F.floor(c * F.lit(g) + F.lit(0.5)) / F.lit(g)
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        d6(v).alias("s1"),
-        d6(q(v * v, 1e3)).alias("s2"),
-        d6(q(v * v * v, 1e-3)).alias("s3"),
-        d6(q(v * v * v * v, 1e-6)).alias("s4"),
+        dsum(v).alias("s1"),
+        dsum(q(v * v, 1e3)).alias("s2"),
+        dsum(q(v * v * v, 1e-3)).alias("s3"),
+        dsum(q(v * v * v * v, 1e-6)).alias("s4"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     mean = F.col("s1") / F.col("n")
     m2 = F.col("s2") / F.col("n") - mean * mean
     m3 = F.col("s3") / F.col("n") - 3 * mean * (F.col("s2") / F.col("n")) + 2 * mean * mean * mean
@@ -1403,9 +1399,9 @@ def agg_skew_kurtosis(spark, sf_dir):
     return m.select(
         "event_type",
         F.col("n").cast("bigint").alias("n_events"),
-        q6(m2).alias("variance_pop"),
-        q6(m3 / F.pow(var_safe, 1.5)).alias("skewness_pop"),
-        q6(m4 / F.pow(var_safe, 2.0) - 3.0).alias("kurtosis_excess"),
+        qround(m2).alias("variance_pop"),
+        qround(m3 / F.pow(var_safe, 1.5)).alias("skewness_pop"),
+        qround(m4 / F.pow(var_safe, 2.0) - 3.0).alias("kurtosis_excess"),
     )
 
 
@@ -1437,7 +1433,6 @@ def agg_ecdf(spark, sf_dir):
     same cell table, so the fact scans once. The CDF value is a ratio
     of integers quantized half-up at 1e-6. At 100 TB the output stays
     O(segments × probes) regardless of row count."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     spark_probes = spark.createDataFrame(
         [(0.0,), (2500.0,), (5000.0,), (7500.0,)], "probe double"
     )
@@ -1459,7 +1454,7 @@ def agg_ecdf(spark, sf_dir):
         "probe",
         "n_le",
         "n",
-        q6(F.col("n_le").cast("double") / F.col("n")).alias("ecdf"),
+        qround(F.col("n_le").cast("double") / F.col("n")).alias("ecdf"),
     )
 
 
@@ -1492,13 +1487,12 @@ def agg_winsorized_stats(spark, sf_dir):
     with the cut table broadcast back — which is the scalable shape:
     exact percentiles at 100 TB are a known sort-based cost paid on the
     FIRST aggregate only; swap in approx_percentile for one-pass."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("segment"), "c_acctbal"
     )
     cuts = cust.groupBy("segment").agg(
-        q6(F.expr("percentile(c_acctbal, 0.05)")).alias("lo"),
-        q6(F.expr("percentile(c_acctbal, 0.95)")).alias("hi"),
+        qround(F.expr("percentile(c_acctbal, 0.05)")).alias("lo"),
+        qround(F.expr("percentile(c_acctbal, 0.95)")).alias("hi"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     clipped = F.greatest(F.col("lo"), F.least(F.col("hi"), F.col("c_acctbal")))
@@ -1513,8 +1507,8 @@ def agg_winsorized_stats(spark, sf_dir):
             )
             .cast("bigint")
             .alias("n_clipped"),
-            q6(
-                F.sum(clipped.cast("decimal(38,6)")).cast("double") / F.col("n")
+            qround(
+                dsum(clipped) / F.col("n")
             ).alias("winsorized_mean"),
         )
     )
@@ -1585,7 +1579,6 @@ def agg_rate_ci_wilson(spark, sf_dir):
     z²/4) so both engines evaluate identical expression trees; IEEE
     sqrt is exact; bounds quantized half-up at 1e-6. One distinct-user
     aggregate per segment — O(segments) out."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -1614,9 +1607,9 @@ def agg_rate_ci_wilson(spark, sf_dir):
         "segment",
         "n_users",
         "n_converted",
-        q6(p).alias("rate"),
-        q6(center - half).alias("ci_lo"),
-        q6(center + half).alias("ci_hi"),
+        qround(p).alias("rate"),
+        qround(center - half).alias("ci_lo"),
+        qround(center + half).alias("ci_hi"),
     )
 
 
@@ -1712,17 +1705,16 @@ def agg_ratio_delta_method(spark, sf_dir):
     bit-identical parts."""
     e = t(spark, sf_dir, "events")
     per_user = e.groupBy("event_type", "user_id").agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("x"),
+        dsum(F.col("value")).alias("x"),
         F.count(F.lit(1)).cast("double").alias("y"),
     )
-    q6d = q6dec  # shared parity helper (operators/_shared.py)
     m = per_user.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("x").cast("decimal(38,6)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(38,6)")).cast("double").alias("sy"),
-        (F.sum(q6d(F.col("x") * F.col("x"))).cast("double") / F.lit(1e6)).alias("sxx"),
-        (F.sum(q6d(F.col("y") * F.col("y"))).cast("double") / F.lit(1e6)).alias("syy"),
-        (F.sum(q6d(F.col("x") * F.col("y"))).cast("double") / F.lit(1e6)).alias("sxy"),
+        dsum(F.col("x")).alias("sx"),
+        dsum(F.col("y")).alias("sy"),
+        qsum(F.col("x") * F.col("x")).alias("sxx"),
+        qsum(F.col("y") * F.col("y")).alias("syy"),
+        qsum(F.col("x") * F.col("y")).alias("sxy"),
     )
     R = F.col("sx") / F.col("sy")
     ybar2 = (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))
@@ -1806,14 +1798,13 @@ def agg_qq_normal(spark, sf_dir):
     curvature ⇒ heavy tails ⇒ prefer the robust ops
     (ts_anomaly_robust, agg_mad)."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
+    daily = ckpt(e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
         dsum(F.col("value")).alias("v")
-    ).localCheckpoint(eager=True)  # feeds moments AND every quantile probe
-    q6d = q6dec  # shared parity helper (operators/_shared.py)
+    ))  # feeds moments AND every quantile probe
     mom = daily.agg(
         (dsum(F.col("v")) / F.count(F.lit(1))).alias("mu"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (F.sum(q6d(F.col("v") * F.col("v"))).cast("double") / F.lit(1e6)).alias("svv"),
+        qsum(F.col("v") * F.col("v")).alias("svv"),
     )
     sd = mom.select(
         "mu",
@@ -1943,11 +1934,10 @@ def agg_welch_ttest(spark, sf_dir):
         F.when(F.col("event_type") == "purchase", "a").otherwise("b").alias("g"),
         F.col("value").alias("v"),
     )
-    q6d = q6dec  # shared parity helper (operators/_shared.py)
     mom = grp.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("v").cast("decimal(38,6)")).cast("double").alias("sv"),
-        (F.sum(q6d(F.col("v") * F.col("v"))).cast("double") / F.lit(1e6)).alias("svv"),
+        dsum(F.col("v")).alias("sv"),
+        qsum(F.col("v") * F.col("v")).alias("svv"),
     )
     stats = mom.select(
         "g",
@@ -2023,24 +2013,24 @@ def agg_lorenz_points(spark, sf_dir):
     10 rows."""
     e = t(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("v")
+        dsum(F.col("value")).alias("v")
     )
     ranked = per_user.select(
         "v",
         F.ntile(10).over(Window.orderBy(F.asc("v"), F.asc("user_id"))).alias("decile"),
     )
-    per_dec = ranked.groupBy("decile").agg(
+    per_dec = ckpt(ranked.groupBy("decile").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (F.sum(q6dec(F.col("v"))).cast("double") / F.lit(1e6)).alias("s"),
-    ).localCheckpoint(eager=True)  # feeds totals AND the cumulative window
+        qsum(F.col("v")).alias("s"),
+    ))  # feeds totals AND the cumulative window
     tot = per_dec.agg(
-        F.sum(F.col("n").cast("decimal(38,6)")).cast("double").alias("nt"),
-        (F.sum(q6dec(F.col("s"))).cast("double") / F.lit(1e6)).alias("st"),
+        dsum(F.col("n")).alias("nt"),
+        qsum(F.col("s")).alias("st"),
     )
     w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
     cum = per_dec.select(
         "decile",
-        F.sum(q6dec(F.col("s"))).over(w).alias("cs_q"),
+        F.sum(qdec(F.col("s"))).over(w).alias("cs_q"),
         F.sum("n").over(w).alias("cn"),
     )
     return cum.crossJoin(F.broadcast(tot)).select(
@@ -2103,25 +2093,24 @@ def agg_theil_decomposition(spark, sf_dir):
     reductions; zero-value users excluded (ln(0) undefined on any
     engine)."""
     e = t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
+    per_user = ckpt(e.groupBy("user_id").agg(
         F.min("event_type").alias("seg"),
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("v"),
-    ).filter(F.col("v") > 0).localCheckpoint(eager=True)  # feeds totals + both term passes
+        dsum(F.col("value")).alias("v"),
+    ).filter(F.col("v") > 0))  # feeds totals + both term passes
     tot = per_user.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("v").cast("decimal(38,6)")).cast("double").alias("vt"),
+        dsum(F.col("v")).alias("vt"),
     )
-    q12f = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)") / F.lit(1e12)
-    d12s = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")
+    q12f = lambda c: qdec(c, 12) / F.lit(1e12)
     within = per_user.crossJoin(F.broadcast(tot)).select(
         q12f(
             F.col("v") / F.col("vt") * F.log(F.col("v") / (F.col("vt") / F.col("n")))
         ).alias("term")
     )
-    theil_total = within.agg(d12s(F.col("term")).alias("theil_total"))
+    theil_total = within.agg(dsum(F.col("term"), 12).alias("theil_total"))
     seg_mom = per_user.groupBy("seg").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_g"),
-        F.sum(F.col("v").cast("decimal(38,6)")).cast("double").alias("v_g"),
+        dsum(F.col("v")).alias("v_g"),
     )
     between = seg_mom.crossJoin(F.broadcast(tot)).select(
         q12f(
@@ -2130,7 +2119,7 @@ def agg_theil_decomposition(spark, sf_dir):
             * F.log((F.col("v_g") / F.col("n_g")) / (F.col("vt") / F.col("n")))
         ).alias("term")
     )
-    theil_between = between.agg(d12s(F.col("term")).alias("theil_between"))
+    theil_between = between.agg(dsum(F.col("term"), 12).alias("theil_between"))
     return (
         theil_total.crossJoin(F.broadcast(theil_between))
         .select(
@@ -2184,7 +2173,7 @@ def agg_skyline_2d(spark, sf_dir):
     e = t(spark, sf_dir, "events")
     pts = e.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("activity"),
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("spend"),
+        dsum(F.col("value")).alias("spend"),
     )
     w = Window.orderBy(
         F.desc("activity"), F.desc("spend"), F.asc("user_id")
@@ -2407,12 +2396,9 @@ def agg_beta_binomial_shrinkage(spark, sf_dir):
             "user_id", "n", "k", (F.col("k").cast("double") / F.col("n")).alias("p")
         )
     )
-    q12 = lambda c: F.sum(
-        F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
-    ).cast("double") / F.lit(1e12)
     mom = rates.filter(F.col("n") >= 5).agg(
-        (q12(F.col("p")) / F.count(F.lit(1))).alias("m"),
-        (q12(F.col("p") * F.col("p")) / F.count(F.lit(1))).alias("m2"),
+        (qsum(F.col("p"), 12) / F.count(F.lit(1))).alias("m"),
+        (qsum(F.col("p") * F.col("p"), 12) / F.count(F.lit(1))).alias("m2"),
         F.count(F.lit(1)).cast("double").alias("nu"),
     )
     v = (F.col("m2") - F.col("m") * F.col("m")) * F.col("nu") / (F.col("nu") - 1.0)
@@ -2503,17 +2489,8 @@ def agg_benford_chisq(spark, sf_dir):
     )
     chi = terms.agg(
         F.max("n").alias("n"),
-        (
-            F.sum(
-                F.floor(
-                    (F.col("o") - F.col("e"))
-                    * (F.col("o") - F.col("e"))
-                    / F.col("e")
-                    * F.lit(1e6)
-                    + F.lit(0.5)
-                ).cast("decimal(38,6)")
-            ).cast("double")
-            / F.lit(1e6)
+        qsum(
+            (F.col("o") - F.col("e")) * (F.col("o") - F.col("e")) / F.col("e")
         ).alias("chi2"),
     )
     h = F.col("chi2") / 2.0
@@ -2570,7 +2547,7 @@ def agg_spearman(spark, sf_dir):
     (2·min_rank + tie_count − 1), and Pearson is scale-invariant, so
     the whole computation runs on exact integer doubled-ranks summed
     in DECIMAL — zero float quantization anywhere until the single
-    final closed-form division. Per-user value sums ride the q6dec
+    final closed-form division. Per-user value sums ride the qdec
     micro-unit DECIMAL path (COALESCE 0 so engine NULL-ordering
     divergence can't bite). At 100 TB the two global rank windows are
     range-partitioned sorts over the USER table (events already
@@ -2579,7 +2556,7 @@ def agg_spearman(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("x"),
-        F.sum(q6dec(F.coalesce(F.col("value"), F.lit(0.0)))).alias("y"),
+        F.sum(qdec(F.coalesce(F.col("value"), F.lit(0.0)))).alias("y"),
     )
 
     def dbl_rank(c):
@@ -2684,15 +2661,14 @@ def agg_robust_shape(spark, sf_dir):
         F.col("6").alias("q3"),
         F.col("7").alias("e7"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return w.select(
-        q6(F.col("med") / F.lit(1e6)).alias("median"),
-        q6((F.col("q3") - F.col("q1")) / F.lit(1e6)).alias("iqr"),
-        q6(
+        qround(F.col("med") / F.lit(1e6)).alias("median"),
+        qround((F.col("q3") - F.col("q1")) / F.lit(1e6)).alias("iqr"),
+        qround(
             (F.col("q3") + F.col("q1") - 2 * F.col("med")).cast("double")
             / (F.col("q3") - F.col("q1"))
         ).alias("bowley_skew"),
-        q6(
+        qround(
             ((F.col("e3") - F.col("e1")) + (F.col("e7") - F.col("e5"))).cast("double")
             / (F.col("q3") - F.col("q1"))
         ).alias("moors_kurtosis"),

@@ -42,7 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import ckpt, t
+from ._shared import ckpt, dsum, qdec, qround, qsum, t
 
 # Shared DuckDB edge CTEs (kept textually identical across oracles).
 _EDGES_DUCK = """
@@ -319,8 +319,6 @@ def _pagerank_full(spark, sf_dir):
     returned DataFrame recomputes round 10 from the round-9 checkpoint.
     A consumer issuing multiple actions should ckpt() the result itself.
     """
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
 
     sym = ckpt(_sym(_copurchase_edges(spark, sf_dir)))
     deg = ckpt(sym.groupBy(F.col("src").alias("node")).agg(
@@ -341,7 +339,7 @@ def _pagerank_full(spark, sf_dir):
         # chain from O(|E|) to O(|V|) per round.
         src_c = pr.select(
             F.col("node").alias("src"),
-            q12(F.col("r") / F.col("outdeg")).cast("decimal(38,12)").alias("c"),
+            qround(F.col("r") / F.col("outdeg"), 12).cast("decimal(38,12)").alias("c"),
         )
         insum = (
             src_c.join(sym, "src")
@@ -354,9 +352,10 @@ def _pagerank_full(spark, sf_dir):
             .select(
                 "node",
                 "outdeg",
-                q9(
+                qround(
                     F.lit(0.15) / F.col("n")
-                    + F.lit(0.85) * F.coalesce("insum", F.lit(0.0))
+                    + F.lit(0.85) * F.coalesce("insum", F.lit(0.0)),
+                    9,
                 ).alias("r"),
             )
         )
@@ -387,11 +386,10 @@ def graph_pagerank(spark, sf_dir):
     to 1e-12 and summed in DECIMAL(38,12); each round's rank quantizes
     to 1e-9 — both engines iterate on bit-identical values. Output is
     the top-20 nodes (rank ties break on node id)."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     pr = _pagerank_full(spark, sf_dir)
     w = Window.orderBy(F.desc("pr_rank"), F.asc("node"))
     return (
-        pr.select("node", q6(F.col("r")).alias("pr_rank"))
+        pr.select("node", qround(F.col("r")).alias("pr_rank"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 20)
     )
@@ -445,8 +443,6 @@ def graph_adamic_adar(spark, sf_dir):
     DECIMAL(38,12) so scores are bit-identical cross-engine. Common
     neighbors always have degree ≥ 2, so ln(d) is never 0. Output:
     global top-20 predicted links (ties break on brand, a, b)."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     edges = _brand_edges(spark, sf_dir)
     sym = _sym(edges, "brand")
     deg = sym.groupBy("brand", F.col("src").alias("node")).agg(
@@ -468,10 +464,8 @@ def graph_adamic_adar(spark, sf_dir):
         .groupBy("brand", "a", "b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_common"),
-            q6(
-                F.sum(q9(F.lit(1.0) / q9(F.log("d"))).cast("decimal(38,12)")).cast(
-                    "double"
-                )
+            qround(
+                dsum(qround(F.lit(1.0) / qround(F.log("d"), 9), 9), 12)
             ).alias("aa_score"),
         )
     )
@@ -522,8 +516,6 @@ def graph_clustering_coeff(spark, sf_dir):
     node coefficients quantize at 1e-9 and average through
     DECIMAL(38,12), so the per-brand mean is bit-identical across
     engines. Output is one row per brand at any scale."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     e = _brand_edges(spark, sf_dir)
     sym = _sym(e, "brand")
     deg = sym.groupBy("brand", F.col("src").alias("node")).agg(
@@ -544,15 +536,16 @@ def graph_clustering_coeff(spark, sf_dir):
         .join(tri, ["brand", "node"], "left")
         .select(
             "brand",
-            q9(
-                F.coalesce("tri2", F.lit(0)) / (F.col("d") * (F.col("d") - 1.0) / 2.0)
+            qround(
+                F.coalesce("tri2", F.lit(0)) / (F.col("d") * (F.col("d") - 1.0) / 2.0),
+                9,
             ).alias("cc"),
         )
     )
     return percc.groupBy("brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
-        q6(
-            F.sum(F.col("cc").cast("decimal(38,12)")).cast("double") / F.count(F.lit(1))
+        qround(
+            dsum(F.col("cc"), 12) / F.count(F.lit(1))
         ).alias("mean_cc"),
     )
 
@@ -691,7 +684,6 @@ def graph_jaccard_linkpred(spark, sf_dir):
     size), so the only float op is one final division, quantized half-up
     at 1e-6 — no decimal-sum machinery needed. Output: global top-20
     predicted links (ties break on brand, a, b)."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     edges = _brand_edges(spark, sf_dir)
     sym = _sym(edges, "brand")
     deg = sym.groupBy("brand", F.col("src").alias("node")).agg(
@@ -715,7 +707,7 @@ def graph_jaccard_linkpred(spark, sf_dir):
         .join(deg.select("brand", F.col("node").alias("b"), F.col("d").alias("db")), ["brand", "b"])
         .select(
             "brand", "a", "b", "n_common",
-            q6(
+            qround(
                 F.col("n_common").cast("double")
                 / (F.col("da") + F.col("db") - F.col("n_common"))
             ).alias("jaccard"),
@@ -853,7 +845,6 @@ def graph_modularity(spark, sf_dir):
     edges). Everything is integer counts until the final Q expression,
     quantized half-up at 1e-6. Output is O(brands) rows regardless of
     graph size — the 100 TB shape."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     bedges = ckpt(
         _copurchase_edges(spark, sf_dir)
@@ -887,7 +878,7 @@ def graph_modularity(spark, sf_dir):
             "brand",
             F.coalesce("n_intra", F.lit(0)).cast("bigint").alias("n_intra"),
             "deg_sum",
-            q6(
+            qround(
                 F.coalesce("n_intra", F.lit(0)) / F.col("m") - half * half
             ).alias("q_contrib"),
         )
@@ -928,7 +919,6 @@ def graph_assortativity(spark, sf_dir):
     degree-tagged edges (two keyed joins onto the bounded degree
     table); the final correlation is one quantized expression. IEEE
     sqrt is correctly rounded, so both engines emit identical bits."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     sym = _sym(_copurchase_edges(spark, sf_dir))
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -950,7 +940,7 @@ def graph_assortativity(spark, sf_dir):
     )
     return sums.select(
         F.col("m").cast("bigint").alias("n_directed_edges"),
-        q6(num / den).alias("assortativity"),
+        qround(num / den).alias("assortativity"),
     )
 
 
@@ -1185,8 +1175,6 @@ def graph_hits(spark, sf_dir):
     isolated min on an idle guest. The per-round checkpoint is
     load-bearing for driver memory, not just lineage. Output: top-20
     authorities (×1000 for 6-decimal readability), ties on part key."""
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
-    d12 = lambda c: (F.sum(q12(c)).cast("double") / F.lit(1e12))
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
@@ -1199,13 +1187,13 @@ def graph_hits(spark, sf_dir):
                 edges.groupBy("p").agg(F.count(F.lit(1)).cast("double").alias("s"))
             )
         else:
-            ar = ckpt(edges.join(h, "o").groupBy("p").agg(d12(F.col("h")).alias("s")))
-        at = ar.agg(d12(F.col("s")).alias("t"))
+            ar = ckpt(edges.join(h, "o").groupBy("p").agg(qsum(F.col("h"), 12).alias("s")))
+        at = ar.agg(qsum(F.col("s"), 12).alias("t"))
         a = ar.crossJoin(F.broadcast(at)).select(
             "p", (F.col("s") / F.col("t")).alias("a")
         )
-        hr = edges.join(a, "p").groupBy("o").agg(d12(F.col("a")).alias("s"))  # lazy
-        ht = hr.agg(d12(F.col("s")).alias("t"))
+        hr = edges.join(a, "p").groupBy("o").agg(qsum(F.col("a"), 12).alias("s"))  # lazy
+        ht = hr.agg(qsum(F.col("s"), 12).alias("t"))
         h = hr.crossJoin(F.broadcast(ht)).select(
             "o", (F.col("s") / F.col("t")).alias("h")
         )
@@ -1363,8 +1351,6 @@ def graph_ppr(spark, sf_dir):
     round, per-round checkpoint — with the teleport term conditional
     on seed membership instead of uniform. Top-20 by PPR mass (zero-
     mass nodes excluded: unreachable from the seeds)."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
     sym = ckpt(_sym(_copurchase_edges(spark, sf_dir)))
     deg = ckpt(
         sym.groupBy(F.col("src").alias("node")).agg(
@@ -1401,7 +1387,7 @@ def graph_ppr(spark, sf_dir):
         # O(|E_frontier|) to O(|frontier|) per round.
         frontier = p.filter(F.col("r") > 0).select(
             F.col("node").alias("src"),
-            q12(F.col("r") / F.col("outdeg")).alias("c"),
+            qdec(F.col("r") / F.col("outdeg"), 12).alias("c"),
         )
         contrib = (
             frontier.join(sym, "src")
@@ -1414,9 +1400,10 @@ def graph_ppr(spark, sf_dir):
             .select(
                 "node",
                 "outdeg",
-                q9(
+                qround(
                     F.when(F.col("is_seed") == 1, F.lit(0.15) / k).otherwise(0.0)
-                    + F.lit(0.85) * F.coalesce("insum", F.lit(0.0))
+                    + F.lit(0.85) * F.coalesce("insum", F.lit(0.0)),
+                    9,
                 ).alias("r"),
             )
         )
@@ -1548,15 +1535,9 @@ def graph_closeness(spark, sf_dir):
             for d in (1, 2, 3)
         ]
     )
-    harmonic = F.floor(
-        (
-            F.col("n_hop1").cast("double")
-            + 0.5 * F.col("n_hop2")
-            + F.col("n_hop3") / F.lit(3.0)
-        )
-        * F.lit(1e6)
-        + F.lit(0.5)
-    ) / F.lit(1e6)
+    harmonic = qround(
+        F.col("n_hop1").cast("double") + 0.5 * F.col("n_hop2") + F.col("n_hop3") / F.lit(3.0)
+    )
     w = Window.orderBy(F.desc("harmonic"), F.asc("brand"), F.asc("part"))
     return (
         counts.withColumn("harmonic", harmonic)
@@ -1629,7 +1610,6 @@ def graph_rich_club(spark, sf_dir):
         .groupBy("k")
         .agg(F.count(F.lit(1)).cast("bigint").alias("e_k"))
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         club.join(club_edges, "k", "left")
         .filter(F.col("n_k") >= 2)
@@ -1637,7 +1617,7 @@ def graph_rich_club(spark, sf_dir):
             "k",
             "n_k",
             F.coalesce("e_k", F.lit(0)).cast("bigint").alias("e_k"),
-            q6(
+            qround(
                 F.lit(2.0)
                 * F.coalesce("e_k", F.lit(0))
                 / (F.col("n_k").cast("double") * (F.col("n_k") - 1))
@@ -1695,7 +1675,6 @@ def graph_degree_gini(spark, sf_dir):
         F.count(F.lit(1)).over(Window.partitionBy()).cast("bigint").alias("n"),
         F.sum("d").over(Window.partitionBy()).cast("bigint").alias("sd"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     terms = ranked.select(
         "n",
         "sd",
@@ -1704,8 +1683,8 @@ def graph_degree_gini(spark, sf_dir):
     return terms.agg(
         F.any_value("n").cast("bigint").alias("n_nodes"),
         (F.any_value("sd") / 2).cast("bigint").alias("n_edges"),
-        q6(F.any_value("sd").cast("double") / F.any_value("n")).alias("mean_degree"),
-        q6(
+        qround(F.any_value("sd").cast("double") / F.any_value("n")).alias("mean_degree"),
+        qround(
             F.sum("term").cast("double")
             / (F.any_value("n").cast("double") * F.any_value("sd"))
         ).alias("degree_gini"),

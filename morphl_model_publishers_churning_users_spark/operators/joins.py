@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, scan_is_underparallel, t
+from ._shared import DSUM, ckpt, dsum, scan_is_underparallel, t
 
 
 @register(
@@ -221,7 +221,7 @@ def join_star(spark, sf_dir):
     return (
         joined.groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.round(F.sum(rev.cast("decimal(38,6)")).cast("double"), 4).alias("revenue"),
+            F.round(dsum(rev), 4).alias("revenue"),
             F.count("*").alias("n_lineitems"),
         )
     )
@@ -312,7 +312,7 @@ def join_bucketed(spark, sf_dir):
         .groupBy("o_orderkey", "o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double"), 6).alias(
+            F.round(dsum(F.col("l_extendedprice")), 6).alias(
                 "order_revenue"
             ),
         )
@@ -813,8 +813,6 @@ def join_bloom_pruned(spark, sf_dir):
     materialized (plans resolve at action time, so the checkpoint pins
     the bloom-shaped physical plan while the rest of the session keeps
     its defaults)."""
-    from ._shared import ckpt, dsum
-
     keys = {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -1113,13 +1111,13 @@ def join_spatial_grid(spark, sf_dir):
         ).cast("bigint")
         % 4096
     )
-    cells = e.select(
+    cells = ckpt(e.select(
         "user_id", h(":lat").alias("x"), h(":lon").alias("y")
     ).select(
         "user_id", "x", "y",
         F.floor(F.col("x") / 64).alias("cx"),
         F.floor(F.col("y") / 64).alias("cy"),
-    ).localCheckpoint(eager=True)  # feeds the probe explode AND the build side
+    ))  # feeds the probe explode AND the build side
     deltas = spark.createDataFrame([(-1,), (0,), (1,)], "d bigint")
     probes = (
         cells.crossJoin(F.broadcast(deltas.select(F.col("d").alias("dx"))))
@@ -1200,7 +1198,7 @@ def join_snowflake(spark, sf_dir):
     )
     return joined.groupBy("region").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-        F.sum(F.col("rev").cast("decimal(38,6)")).cast("double").alias("revenue"),
+        dsum(F.col("rev")).alias("revenue"),
     )
 
 

@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, scan_is_underparallel, t
+from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, scan_is_underparallel, t
 
 # ---------------------------------------------------------------- dedup
 
@@ -103,7 +103,7 @@ def _signed_corpus(spark, sf_dir):
     # compute once, in parallel, and the join reads stored rows — the
     # same shape as production, where the signed corpus is a persisted
     # artifact that many queries probe.
-    return lsh, lsh.transform(vecs).localCheckpoint(eager=True)
+    return lsh, ckpt(lsh.transform(vecs))
 
 
 def _lsh_pairs(lsh, signed):
@@ -569,7 +569,7 @@ def raw_simsearch_ann(spark, sf_dir):
     # array_to_vector + projection chain inlined, recomputed per side
     # inside the single input split. The hashed corpus is the index
     # artifact a production ANN service persists anyway.
-    signed = lsh.transform(e).localCheckpoint(eager=True)
+    signed = ckpt(lsh.transform(e))
     q = signed.filter(F.col("vec_id") < 5)
     pairs = lsh.approxSimilarityJoin(q, signed, threshold=20.0, distCol="l2_dist")
     pairs = pairs.filter(F.col("datasetA.vec_id") != F.col("datasetB.vec_id")).select(
@@ -1654,12 +1654,11 @@ def llm_repetition(spark, sf_dir):
     # floor(x·1e6+0.5)/1e6: pure IEEE double ops, bit-identical across
     # engines (Spark HALF_UP on shortest-decimal vs DuckDB binary-double
     # ROUND diverge on half-points — the win_rank_pct lesson).
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return per_doc.select(
         "doc_id",
         "n_trigrams",
-        half_up6(dup_frac).alias("dup_trigram_frac"),
-        half_up6(top_share).alias("top_bigram_share"),
+        qround(dup_frac).alias("dup_trigram_frac"),
+        qround(top_share).alias("top_bigram_share"),
         ((dup_frac <= 0.2) & (top_share <= 0.18)).alias("pass_repetition"),
     )
 
@@ -1708,10 +1707,9 @@ def llm_entropy_filter(spark, sf_dir):
         )
     )
     counts = chars.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("c"))
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     per_doc = counts.groupBy("doc_id").agg(
         F.sum("c").cast("bigint").alias("n_chars_total"),
-        half_up6(
+        qround(
             F.log2(F.sum("c").cast("double"))
             - F.sum(F.col("c") * F.log2(F.col("c").cast("double"))) / F.sum("c")
         ).alias("h_char"),
@@ -1762,15 +1760,14 @@ def llm_mixture_balance(spark, sf_dir):
     # corpus-total scalar and the final share projection, and without
     # this the corpus tokenize+aggregate pass runs once per consumer
     # (caught by the duplicate-scan plan sweep).
-    g = d.groupBy("source", "lang").agg(
+    g = ckpt(d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("n_tokens"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = g.agg(
         F.sum("n_tokens").cast("double").alias("tot_tokens"),
         F.count(F.lit(1)).cast("double").alias("n_groups"),
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     actual = F.col("n_tokens") / F.col("tot_tokens")
     target = F.lit(1.0) / F.col("n_groups")
     return g.crossJoin(F.broadcast(tot)).select(
@@ -1778,9 +1775,9 @@ def llm_mixture_balance(spark, sf_dir):
         "lang",
         "n_docs",
         "n_tokens",
-        half_up6(actual).alias("actual_share"),
-        half_up6(target).alias("target_share"),
-        half_up6(F.least(target / actual, F.lit(4.0))).alias("sample_weight"),
+        qround(actual).alias("actual_share"),
+        qround(target).alias("target_share"),
+        qround(F.least(target / actual, F.lit(4.0))).alias("sample_weight"),
     )
 
 
@@ -1907,13 +1904,12 @@ def llm_embed_quantize(spark, sf_dir):
         "scale",
         F.expr("transform(emb, x -> floor(x / scale + 0.5))").alias("codes"),
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return q.select(
         "vec_id",
         F.size("emb").cast("bigint").alias("n_dims"),
-        half_up6(F.col("scale")).alias("scale_q"),
+        qround(F.col("scale")).alias("scale_q"),
         F.expr("aggregate(codes, 0L, (a, x) -> a + cast(x as long))").alias("q_checksum"),
-        half_up6(
+        qround(
             F.expr(
                 "aggregate(zip_with(emb, codes, (x, c) -> (x - c * scale) * (x - c * scale)),"
                 " 0D, (a, x) -> a + x)"
@@ -2012,7 +2008,7 @@ def llm_dedup_minhash_sql(spark, sf_dir):
     # per shingle, materialized once (this is the persisted index
     # artifact in production — same rationale as the MinHashLSH
     # signature checkpoint in raw_dedup_fuzzy).
-    doc_sh = d.select(
+    doc_sh = ckpt(d.select(
         "doc_id",
         F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("sarr"),
     ).select(
@@ -2024,7 +2020,7 @@ def llm_dedup_minhash_sql(spark, sf_dir):
             " 'x1', cast(conv(substr(md5(s), 1, 13), 16, 10) as bigint),"
             " 'x2', cast(conv(substr(md5(s), 17, 13), 16, 10) as bigint) | 1L))"
         ).alias("xs"),
-    ).localCheckpoint(eager=True)
+    ))
     sig = doc_sh.select(
         "doc_id",
         "sarr",
@@ -2063,14 +2059,13 @@ def llm_dedup_minhash_sql(spark, sf_dir):
     )
     n_common = F.size(F.array_intersect("s_a", "s_b")).cast("double")
     jac = n_common / (F.col("sz_a") + F.col("sz_b") - n_common)
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
             "doc_a",
             "doc_b",
-            half_up6(jac).alias("jaccard"),
+            qround(jac).alias("jaccard"),
             (jac >= 0.4).alias("is_dup"),
         )
     )
@@ -2193,16 +2188,14 @@ def llm_perplexity_filter(spark, sf_dir):
     # it feeds both the corpus-total scalar and the scoring join, and
     # without this the tokenize→explode→count pass over the corpus runs
     # twice (caught by the duplicate-scan plan sweep).
-    vocab = (
+    vocab = ckpt(
         words.groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     corpus = vocab.agg(
         F.sum("c").alias("n"), F.count(F.lit(1)).alias("v")
     )
     nll_word = -F.log2((F.col("c") + F.lit(1.0)) / (F.col("n") + F.col("v")))
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     h = F.sum(nll_word) / F.count(F.lit(1))
     # Open-vocab sizing (ADVICE r4 → r6 verdict item 5): no forced
     # broadcast hint and no count() pre-job to pick one — AQE's runtime
@@ -2215,7 +2208,7 @@ def llm_perplexity_filter(spark, sf_dir):
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),
-            half_up6(h).alias("cross_entropy"),
+            qround(h).alias("cross_entropy"),
             (h <= 9.0).alias("is_kept"),
         )
     )
@@ -2327,10 +2320,9 @@ def llm_sample_weighted(spark, sf_dir):
     # Materialize the per-source totals (tiny): they feed both the
     # corpus-total scalar and the weight table — without this the
     # corpus tokenize+aggregate pass re-runs per consumer.
-    src = (
+    src = ckpt(
         tok.groupBy("source")
         .agg(F.sum("n_tokens").alias("src_tokens"))
-        .localCheckpoint(eager=True)
     )
     tot = src.agg(
         F.sum("src_tokens").cast("double").alias("all_tokens"),
@@ -2349,11 +2341,10 @@ def llm_sample_weighted(spark, sf_dir):
         .cast("bigint")
         / F.lit(4503599627370496.0)  # 2^52: 13 hex chars, exactly double-representable
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return tok.join(F.broadcast(w), "source").select(
         "doc_id",
         "source",
-        half_up6(F.col("keep_w")).alias("keep_w"),
+        qround(F.col("keep_w")).alias("keep_w"),
         (u < F.col("keep_w")).alias("is_sampled"),
     )
 
@@ -2510,7 +2501,6 @@ def llm_rank_fusion(spark, sf_dir):
         F.lit(60) + F.col("rank_l2")
     )
     w_f = Window.partitionBy("query_id").orderBy(F.desc("rrf_raw"), F.asc("neighbor_id"))
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return (
         ranked.withColumn("rrf_raw", rrf)
         .withColumn("fused_rank", F.row_number().over(w_f))
@@ -2520,7 +2510,7 @@ def llm_rank_fusion(spark, sf_dir):
             "neighbor_id",
             "rank_cos",
             "rank_l2",
-            half_up6(F.col("rrf_raw")).alias("rrf"),
+            qround(F.col("rrf_raw")).alias("rrf"),
             "fused_rank",
         )
     )
@@ -2602,7 +2592,6 @@ def llm_bm25(spark, sf_dir):
     df = tf.groupBy("term").agg(
         F.count(F.when(F.col("f") > 0, 1)).cast("double").alias("df")
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     term_score = idf * F.col("f") * 2.2 / (
         F.col("f") + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl"))
@@ -2616,7 +2605,7 @@ def llm_bm25(spark, sf_dir):
     )
     w_r = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
     return (
-        scored.select("doc_id", half_up6(F.col("score")).alias("bm25"))
+        scored.select("doc_id", qround(F.col("score")).alias("bm25"))
         .withColumn("rank", F.row_number().over(w_r))
         .filter(F.col("rank") <= 10)
     )
@@ -2667,7 +2656,7 @@ def llm_dedup_substring(spark, sf_dir):
     # sides) — materialize the tokenize→window pass once instead of
     # re-deriving the corpus explode per consumer. At production scale
     # this is the suffix-table artifact you'd persist to disk.
-    wins = (
+    wins = ckpt(
         docs.select(
             "doc_id",
             F.explode(
@@ -2678,7 +2667,6 @@ def llm_dedup_substring(spark, sf_dir):
             ).alias("win"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     freq = (
         wins.groupBy("win")
@@ -2807,8 +2795,6 @@ def llm_zipf_fit(spark, sf_dir):
     both engines fit on bit-identical points. The top-100 restriction
     keeps the fit o(1) regardless of vocabulary size — at 100 TB the
     word count is the only corpus-sized pass."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     words = (
         t(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
@@ -2818,24 +2804,23 @@ def llm_zipf_fit(spark, sf_dir):
     w = Window.orderBy(F.desc("c"), F.asc("word"))
     top = freq.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 100)
     pts = top.select(
-        q9(F.log(F.col("rnk").cast("double"))).alias("x"),
-        q9(F.log(F.col("c").cast("double"))).alias("y"),
+        qround(F.log(F.col("rnk").cast("double")), 9).alias("x"),
+        qround(F.log(F.col("c").cast("double")), 9).alias("y"),
     )
-    d12 = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")
     sums = pts.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        d12(F.col("x")).alias("sx"),
-        d12(F.col("y")).alias("sy"),
-        d12(q9(F.col("x") * F.col("y"))).alias("sxy"),
-        d12(q9(F.col("x") * F.col("x"))).alias("sxx"),
+        dsum(F.col("x"), 12).alias("sx"),
+        dsum(F.col("y"), 12).alias("sy"),
+        dsum(qround(F.col("x") * F.col("y"), 9), 12).alias("sxy"),
+        dsum(qround(F.col("x") * F.col("x"), 9), 12).alias("sxx"),
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
     return sums.select(
         F.col("n").cast("bigint").alias("n_terms"),
-        q6(slope).alias("zipf_slope"),
-        q6((F.col("sy") - slope * F.col("sx")) / F.col("n")).alias("zipf_intercept"),
+        qround(slope).alias("zipf_slope"),
+        qround((F.col("sy") - slope * F.col("sx")) / F.col("n")).alias("zipf_intercept"),
     )
 
 
@@ -2879,8 +2864,6 @@ def llm_keyword_extract(spark, sf_dir):
     the driver hash). The idf ln() is quantized at 1e-9 and the score
     at 1e-6 before ranking so cross-engine ties are impossible by
     construction; remaining equal-score ties break lexically."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
@@ -2889,18 +2872,16 @@ def llm_keyword_extract(spark, sf_dir):
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
     # TF feeds both the DF aggregate and the scoring join — materialize
     # the explode→count pass once (duplicate-scan sweep discipline).
-    tfc = (
+    tfc = ckpt(
         docs.select("doc_id", F.explode("w").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .localCheckpoint(eager=True)
     )
-    df = (
+    df = ckpt(
         tfc.groupBy("term")
         .agg(F.count(F.lit(1)).cast("double").alias("df"))
-        .localCheckpoint(eager=True)
     )
-    idf = q9(F.log((F.col("n") + 1.0) / (F.col("df") + 1.0)))
+    idf = qround(F.log((F.col("n") + 1.0) / (F.col("df") + 1.0)), 9)
     # Same open-vocab sizing as llm_perplexity_filter (r6 verdict item
     # 5): the DF table is full-vocabulary-sized, so no forced broadcast
     # hint and no count() pre-job — AQE's runtime shuffle stats convert
@@ -2909,7 +2890,7 @@ def llm_keyword_extract(spark, sf_dir):
     scored = (
         tfc.join(df, "term")
         .crossJoin(F.broadcast(n_docs))
-        .select("doc_id", "term", q6(F.col("tf") * idf).alias("score"))
+        .select("doc_id", "term", qround(F.col("tf") * idf).alias("score"))
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
@@ -3034,19 +3015,15 @@ def llm_importance_resample(spark, sf_dir):
     selection shape: LM build = two hash aggs, scoring = one join +
     one keyed agg over the token stream, no model server in the
     loop."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
         .select("doc_id", "lang", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
     )
-    words = docs.select("doc_id", "lang", F.explode("w").alias("word")).localCheckpoint(
-        eager=True
-    )
-    corpus_lm = words.groupBy("word").agg(
+    words = ckpt(docs.select("doc_id", "lang", F.explode("w").alias("word")))
+    corpus_lm = ckpt(words.groupBy("word").agg(
         F.count(F.lit(1)).cast("double").alias("cc")
-    ).localCheckpoint(eager=True)
+    ))
     target_lm = (
         words.filter(F.col("lang") == "en")
         .groupBy("word")
@@ -3057,9 +3034,10 @@ def llm_importance_resample(spark, sf_dir):
     ).crossJoin(
         target_lm.agg(F.coalesce(F.sum("ct"), F.lit(0.0)).alias("nt"))
     )
-    lr = q9(
-        F.log((F.coalesce("ct", F.lit(0.0)) + 1.0) / (F.col("nt") + F.col("v")))
-    ) - q9(F.log((F.col("cc") + 1.0) / (F.col("nc") + F.col("v"))))
+    lr = qround(
+        F.log((F.coalesce("ct", F.lit(0.0)) + 1.0) / (F.col("nt") + F.col("v"))),
+        9,
+    ) - qround(F.log((F.col("cc") + 1.0) / (F.col("nc") + F.col("v"))), 9)
     scored = (
         words.join(corpus_lm, "word")
         .join(target_lm, "word", "left")
@@ -3067,14 +3045,14 @@ def llm_importance_resample(spark, sf_dir):
         .groupBy("doc_id", "lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.sum(lr.cast("decimal(38,12)")).cast("double").alias("lr_sum"),
+            dsum(lr, 12).alias("lr_sum"),
         )
     )
     return scored.select(
         "doc_id",
         "lang",
         "n_words",
-        q6(F.col("lr_sum") / F.col("n_words")).alias("importance"),
+        qround(F.col("lr_sum") / F.col("n_words")).alias("importance"),
         (F.col("lr_sum") / F.col("n_words") >= 0.0).alias("is_selected"),
     )
 
@@ -3118,12 +3096,11 @@ def llm_blocklist_filter(spark, sf_dir):
     )
     inlist = ", ".join(f"'{x}'" for x in _BLOCKLIST)
     hits = F.expr(f"size(filter(w, x -> x IN ({inlist})))")
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return docs.select(
         "doc_id",
         hits.cast("bigint").alias("n_hits"),
         F.size("w").cast("bigint").alias("n_words"),
-        q6(hits.cast("double") / F.size("w")).alias("hit_rate"),
+        qround(hits.cast("double") / F.size("w")).alias("hit_rate"),
         (hits == 0).alias("is_kept"),
     )
 
@@ -3158,15 +3135,13 @@ def llm_ngram_novelty(spark, sf_dir):
     score is a ratio of integers, quantized half-up at 1e-6. Docs with
     < 3 words have no trigrams and are excluded on the cheap word-count
     guard, matching the oracle's empty-list behavior."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    grams = (
+    grams = ckpt(
         t(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
         .select("doc_id", F.split(F.trim("text"), r"\s+").alias("w"))
         .filter(F.size("w") >= 3)
         .select("doc_id", F.explode(F.expr(_NGRAM_SH_SPARK)).alias("g"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     return (
@@ -3177,7 +3152,7 @@ def llm_ngram_novelty(spark, sf_dir):
             F.sum((F.col("first_doc") == F.col("doc_id")).cast("long"))
             .cast("bigint")
             .alias("n_novel"),
-            q6(
+            qround(
                 F.sum((F.col("first_doc") == F.col("doc_id")).cast("long")).cast(
                     "double"
                 )
@@ -3272,26 +3247,24 @@ def llm_odds_ratio_terms(spark, sf_dir):
     computed per vocab row and top-15 ranked (ties break on the word).
     The corpus-scale work is exactly one explode + one hash aggregate —
     the same shape at 100 TB, with the vocab table as the only state."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     words = (
         t(spark, sf_dir, "documents")
         .filter((F.length(F.trim("text")) > 0) & F.col("lang").isin("en", "de"))
         .select("lang", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
     )
-    counts = (
+    counts = ckpt(
         words.groupBy("word")
         .agg(
             F.sum((F.col("lang") == "en").cast("long")).cast("bigint").alias("n_en"),
             F.sum((F.col("lang") == "de").cast("long")).cast("bigint").alias("n_de"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = counts.agg(
         F.sum("n_en").cast("double").alias("t_en"),
         F.sum("n_de").cast("double").alias("t_de"),
         F.count(F.lit(1)).cast("double").alias("v"),
     )
-    lo = q6(
+    lo = qround(
         F.log((F.col("n_en") + 0.5) / (F.col("t_en") - F.col("n_en") + 0.5 * F.col("v")))
         - F.log((F.col("n_de") + 0.5) / (F.col("t_de") - F.col("n_de") + 0.5 * F.col("v")))
     )
@@ -3353,8 +3326,6 @@ def llm_kn_bigram_lm(spark, sf_dir):
     (the probability expression is written with one parenthesization).
     Docs with < 2 words have no bigrams and drop out on the cheap
     word-count guard."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     toks = (
         t(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
@@ -3396,12 +3367,12 @@ def llm_kn_bigram_lm(spark, sf_dir):
         .join(ctx, "w1")
         .join(cont, "w2")
         .crossJoin(F.broadcast(tt))
-        .select("doc_id", q9(F.log2(p)).alias("lp"))
+        .select("doc_id", qround(F.log2(p), 9).alias("lp"))
     )
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-        q6(
-            F.sum(F.col("lp").cast("decimal(38,12)")).cast("double")
+        qround(
+            dsum(F.col("lp"), 12)
             / F.count(F.lit(1))
         ).alias("mean_log2p"),
     )
@@ -3437,7 +3408,6 @@ def llm_vocab_coverage(spark, sf_dir):
     onto the same token stream for a membership flag; O(docs) output.
     The rank cut is on the BOUNDED vocab table, so the corpus never
     sorts globally."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     words = ckpt(
         t(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
@@ -3457,7 +3427,7 @@ def llm_vocab_coverage(spark, sf_dir):
         F.sum(F.coalesce(F.col("in_vocab"), F.lit(False)).cast("long"))
         .cast("bigint")
         .alias("n_in_vocab"),
-        q6(
+        qround(
             (
                 F.count(F.lit(1))
                 - F.sum(F.coalesce(F.col("in_vocab"), F.lit(False)).cast("long"))
@@ -3506,7 +3476,6 @@ def llm_lang_confusion(spark, sf_dir):
     profiles, same argmax tiebreak); this op adds only one bounded
     aggregate + one window over the ≤|langs|² cell table. The audit a
     corpus pipeline runs before trusting langid-based filtering."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     pairs = llm_langid(spark, sf_dir).select("true_lang", "pred_lang")
     cells = pairs.groupBy("true_lang", "pred_lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
@@ -3516,7 +3485,7 @@ def llm_lang_confusion(spark, sf_dir):
         "true_lang",
         "pred_lang",
         "n_docs",
-        q6(F.col("n_docs") / F.sum("n_docs").over(wt)).alias("recall_share"),
+        qround(F.col("n_docs") / F.sum("n_docs").over(wt)).alias("recall_share"),
     )
 
 
@@ -3559,7 +3528,6 @@ def llm_burstiness(spark, sf_dir):
     densification, which is what makes this computable at 100 TB. One
     integer-ratio division per word, quantized at 1e-6; ties on the
     total-count ranking break lexically."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     words = ckpt(
         t(spark, sf_dir, "documents")
         .filter(F.length(F.trim("text")) > 0)
@@ -3592,7 +3560,13 @@ def llm_burstiness(spark, sf_dir):
     return (
         stats.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 50)
-        .select("word", "total", "n_docs", q6(F.col("var") / F.col("mu")).alias("burstiness"), "rnk")
+        .select(
+            "word",
+            "total",
+            "n_docs",
+            qround(F.col("var") / F.col("mu")).alias("burstiness"),
+            "rnk",
+        )
     )
 
 
@@ -3973,7 +3947,7 @@ def llm_lsh_tuning_curve(spark, sf_dir):
         .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
         .filter(F.size("w") >= 3)
     )
-    doc_sh = (
+    doc_sh = ckpt(  # feeds signatures AND exact truth
         d.select("doc_id", F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("sarr"))
         .select(
             "doc_id",
@@ -3985,15 +3959,14 @@ def llm_lsh_tuning_curve(spark, sf_dir):
                 " 'x2', cast(conv(substr(md5(s), 17, 13), 16, 10) as bigint) | 1L))"
             ).alias("xs"),
         )
-        .localCheckpoint(eager=True)  # feeds signatures AND exact truth
     )
-    sig = doc_sh.select(
+    sig = ckpt(doc_sh.select(
         "doc_id",
         F.expr(
             f"transform(sequence(0, 7), i -> "
             f"array_min(transform(xs, p -> (p.x1 + i * p.x2) % {M}L)))"
         ).alias("h"),
-    ).localCheckpoint(eager=True)  # feeds all four banding layouts
+    ))  # feeds all four banding layouts
     # exact ground truth via the blocked shingle join
     grams = doc_sh.select("doc_id", "sz", F.explode("sarr").alias("g"))
     ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"), "g")
@@ -4004,14 +3977,13 @@ def llm_lsh_tuning_curve(spark, sf_dir):
         .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
         .agg(F.count(F.lit(1)).alias("nc"))
     )
-    truth = (
+    truth = ckpt(  # feeds the per-config join AND the total
         inter.filter(
             F.col("nc").cast("double")
             / (F.col("sz_a") + F.col("sz_b") - F.col("nc"))
             >= 0.4
         )
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)  # feeds the per-config join AND the total
     )
     cfg = spark.createDataFrame([(1,), (2,), (4,), (8,)], "r int")
     bands = (
@@ -4096,13 +4068,13 @@ def llm_corpus_card(spark, sf_dir):
     and diffs the card; at 100 TB it is two map-side-combinable
     aggregates and one broadcast scalar."""
     d = t(spark, sf_dir, "documents")
-    toks = d.select(
+    toks = ckpt(d.select(
         "lang",
         "source",
         "n_chars",
         F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens"),
         F.md5(F.lower(F.trim("text"))).alias("chash"),
-    ).localCheckpoint(eager=True)  # feeds the dup scalar AND the main rollup
+    ))  # feeds the dup scalar AND the main rollup
     dup = toks.agg(
         (F.count(F.lit(1)) - F.countDistinct("chash")).cast("bigint").alias("n_exact_dups")
     )
@@ -4559,12 +4531,11 @@ def llm_dedup_transitivity_audit(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     jac = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
-    near = (
+    near = ckpt(  # feeds sym, the closure probe, AND the count
         inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
         .filter(jac >= 0.2)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)  # feeds sym, the closure probe, AND the count
     )
     sym = near.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
         near.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
@@ -5404,13 +5375,7 @@ def llm_greedy_coverage(spark, sf_dir):
             "doc_id",
             "gain",
             F.sum("gain").over(w).cast("bigint").alias("covered"),
-            (
-                F.floor(
-                    F.sum("gain").over(w).cast("double") / F.col("u") * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6)
-            ).alias("coverage_pct"),
+            qround(F.sum("gain").over(w).cast("double") / F.col("u")).alias("coverage_pct"),
         )
     )
 
@@ -5482,7 +5447,6 @@ def llm_hill_tail_index(spark, sf_dir):
         .filter(F.col("rn") == F.col("k") + 1)
         .select(F.col("f").alias("fk1"))
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     hill = (
         ranked.crossJoin(F.broadcast(k))
         .crossJoin(F.broadcast(fk1))
@@ -5491,25 +5455,15 @@ def llm_hill_tail_index(spark, sf_dir):
             F.any_value("k").alias("k"),
             F.any_value("v").alias("v"),
             F.any_value("fk1").alias("fk1"),
-            (
-                F.sum(
-                    F.floor(
-                        q9(F.log(F.col("f").cast("double") / F.col("fk1")))
-                        * F.lit(1e9)
-                        + F.lit(0.5)
-                    ).cast("decimal(38,9)")
-                ).cast("double")
-                / F.lit(1e9)
-            ).alias("slogs"),
+            qsum(qround(F.log(F.col("f").cast("double") / F.col("fk1")), 9), 9).alias("slogs"),
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return hill.select(
         F.col("v").alias("vocab_size"),
         F.col("k").alias("k_top"),
         F.col("fk1").alias("threshold_freq"),
-        q6(F.col("k").cast("double") / F.col("slogs")).alias("hill_alpha"),
-        q6(F.col("slogs") / F.col("k")).alias("mean_log_excess"),
+        qround(F.col("k").cast("double") / F.col("slogs")).alias("hill_alpha"),
+        qround(F.col("slogs") / F.col("k")).alias("mean_log_excess"),
     )
 
 
@@ -5571,21 +5525,16 @@ def llm_doclen_lognormal(spark, sf_dir):
     sigma^2/2) reported for the practitioner."""
     from .ml import _ERFC_AS
 
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     lens = (
         t(spark, sf_dir, "documents")
         .filter(F.col("n_chars") > 0)
-        .select(q9(F.log(F.col("n_chars").cast("double"))).alias("l"))
+        .select(qround(F.log(F.col("n_chars").cast("double")), 9).alias("l"))
     )
-    lens = lens.localCheckpoint(eager=True)
-    q9sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")).cast("double")
-        / F.lit(1e9)
-    )
+    lens = ckpt(lens)
     mom = lens.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q9sum(F.col("l")).alias("sl"),
-        q9sum(F.col("l") * F.col("l")).alias("sll"),
+        qsum(F.col("l"), 9).alias("sl"),
+        qsum(F.col("l") * F.col("l"), 9).alias("sll"),
     )
     par = mom.select(
         "n",
@@ -5596,12 +5545,13 @@ def llm_doclen_lognormal(spark, sf_dir):
         ).alias("sigma"),
     )
     zs = lens.crossJoin(F.broadcast(par)).select(
-        q9((F.col("l") - F.col("mu")) / F.col("sigma")).alias("z"),
+        qround((F.col("l") - F.col("mu")) / F.col("sigma"), 9).alias("z"),
         F.row_number().over(Window.orderBy("l")).cast("bigint").alias("i"),
         "n",
     )
-    phi = q9(
-        F.expr("0.5 * (1.0 + " + _ERFC_AS.format(x="(z) / sqrt(2.0)") + ")")
+    phi = qround(
+        F.expr("0.5 * (1.0 + " + _ERFC_AS.format(x="(z) / sqrt(2.0)") + ")"),
+        9,
     )
     ks = zs.agg(
         F.max(
@@ -5611,15 +5561,14 @@ def llm_doclen_lognormal(spark, sf_dir):
             )
         ).alias("d")
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return par.crossJoin(F.broadcast(ks)).select(
         F.col("n").cast("bigint").alias("n_docs"),
-        q6(F.col("mu")).alias("mu_log"),
-        q6(F.col("sigma")).alias("sigma_log"),
-        q6(
-            F.exp(q9(F.col("mu") + F.col("sigma") * F.col("sigma") / F.lit(2.0)))
+        qround(F.col("mu")).alias("mu_log"),
+        qround(F.col("sigma")).alias("sigma_log"),
+        qround(
+            F.exp(qround(F.col("mu") + F.col("sigma") * F.col("sigma") / F.lit(2.0), 9))
         ).alias("implied_mean_chars"),
-        q6(F.col("d")).alias("ks_distance"),
+        qround(F.col("d")).alias("ks_distance"),
         (F.col("d") > F.lit(1.358) / F.sqrt("n")).alias("reject_lognormal"),
     )
 
@@ -5697,7 +5646,6 @@ def llm_pmi_collocations(spark, sf_dir):
         F.sum("n").cast("double").alias("nt"),
         (F.sum("n") - F.lit(n_docs)).cast("double").alias("nbg"),
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     ua = uc.select(F.col("word").alias("a"), F.col("n").alias("na"))
     ub = uc.select(F.col("word").alias("b"), F.col("n").alias("nb"))
     pmi = (
@@ -5709,18 +5657,18 @@ def llm_pmi_collocations(spark, sf_dir):
             "a",
             "b",
             "nab",
-            q9(
+            qround(
                 F.log(
                     (F.col("nab") / F.col("nbg"))
                     / ((F.col("na") / F.col("nt")) * (F.col("nb") / F.col("nt")))
-                )
+                ),
+                9,
             ).alias("pmi"),
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     w = Window.orderBy(F.desc("pmi"), F.asc("a"), F.asc("b"))
     return (
-        pmi.select("a", "b", "nab", q6(F.col("pmi")).alias("pmi"),
+        pmi.select("a", "b", "nab", qround(F.col("pmi")).alias("pmi"),
                    F.row_number().over(w).cast("bigint").alias("rank"))
         .filter(F.col("rank") <= 20)
         .orderBy("rank")
@@ -5808,7 +5756,6 @@ def llm_burrows_delta(spark, sf_dir):
     counts = toks.join(F.broadcast(top_words), "word").groupBy("lang", "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     lwf = (
         top_words.crossJoin(F.broadcast(lang_tot))
         .join(counts, ["lang", "word"], "left")
@@ -5816,21 +5763,22 @@ def llm_burrows_delta(spark, sf_dir):
             "lang",
             "word",
             F.coalesce(
-                q9(F.col("c").cast("double") / F.col("nt")), F.lit(0.0)
+                qround(F.col("c").cast("double") / F.col("nt"), 9), F.lit(0.0)
             ).alias("f"),
         )
     )
     lwf = ckpt(lwf)
     wstats = lwf.groupBy("word").agg(
-        q9(F.avg("f")).alias("m"),
-        q9(
-            F.sqrt(F.avg(F.col("f") * F.col("f")) - F.avg("f") * F.avg("f"))
+        qround(F.avg("f"), 9).alias("m"),
+        qround(
+            F.sqrt(F.avg(F.col("f") * F.col("f")) - F.avg("f") * F.avg("f")),
+            9,
         ).alias("s"),
     )
     z = (
         lwf.join(F.broadcast(wstats), "word")
         .filter(F.col("s") > 0)
-        .select("lang", "word", q9((F.col("f") - F.col("m")) / F.col("s")).alias("z"))
+        .select("lang", "word", qround((F.col("f") - F.col("m")) / F.col("s"), 9).alias("z"))
     )
     a = z.select(F.col("lang").alias("l1"), "word", F.col("z").alias("z1"))
     b = z.select(F.col("lang").alias("l2"), "word", F.col("z").alias("z2"))
@@ -5841,20 +5789,14 @@ def llm_burrows_delta(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_words"),
             (
-                F.sum(
-                    F.floor(F.abs(F.col("z1") - F.col("z2")) * F.lit(1e9) + F.lit(0.5)).cast(
-                        "decimal(38,9)"
-                    )
-                ).cast("double")
-                / F.lit(1e9)
+                qsum(F.abs(F.col("z1") - F.col("z2")), 9)
                 / F.count(F.lit(1))
             ).alias("delta"),
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     w = Window.orderBy(F.asc("delta"), F.asc("l1"), F.asc("l2"))
     return pairs.select(
-        "l1", "l2", "n_words", q6(F.col("delta")).alias("delta"),
+        "l1", "l2", "n_words", qround(F.col("delta")).alias("delta"),
         F.row_number().over(w).cast("bigint").alias("rank"),
     ).orderBy("rank")
 
@@ -5981,26 +5923,23 @@ def llm_source_diversity(spark, sf_dir):
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
     tot = counts.agg(F.sum("n").cast("double").alias("t"))
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q12dec_ = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
     terms = counts.crossJoin(F.broadcast(tot)).select(
         (F.col("n") / F.col("t")).alias("p")
     ).select(
-        q12dec_(F.col("p") * q9(F.log("p"))).alias("plogp"),
-        q12dec_(F.col("p") * F.col("p")).alias("p2"),
+        qdec(F.col("p") * qround(F.log("p"), 9), 12).alias("plogp"),
+        qdec(F.col("p") * F.col("p"), 12).alias("p2"),
     )
     k = counts.count()  # bounded source-domain scalar
     agg = terms.agg(
         (-F.sum("plogp").cast("double") / F.lit(1e12)).alias("h"),
         (F.sum("p2").cast("double") / F.lit(1e12)).alias("simpson"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return agg.select(
         F.lit(k).cast("bigint").alias("n_sources"),
-        q6(F.col("h")).alias("shannon_nats"),
-        q6(F.exp(q9(F.col("h")))).alias("effective_sources_shannon"),
-        q6(F.lit(1.0) / F.col("simpson")).alias("effective_sources_simpson"),
-        q6(F.col("h") / q9(F.log(F.lit(float(k))))).alias("evenness"),
+        qround(F.col("h")).alias("shannon_nats"),
+        qround(F.exp(qround(F.col("h"), 9))).alias("effective_sources_shannon"),
+        qround(F.lit(1.0) / F.col("simpson")).alias("effective_sources_simpson"),
+        qround(F.col("h") / qround(F.log(F.lit(float(k))), 9)).alias("evenness"),
     )
 
 
@@ -6067,20 +6006,16 @@ def llm_self_similarity(spark, sf_dir):
     b = grams.select(F.col("rn").alias("rb"), F.col("bg").alias("bb"))
     inter = F.size(F.array_intersect("ba", "bb")).cast("bigint")
     uni = (F.size("ba") + F.size("bb")).cast("bigint") - inter
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     pairs = a.join(
         b, F.col("rb") == F.col("rn") + (F.col("n") / 2).cast("bigint")
-    ).select(q9(inter.cast("double") / uni).alias("j"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    ).select(qround(inter.cast("double") / uni, 9).alias("j"))
     return pairs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        q6(
-            F.sum(F.floor(F.col("j") * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)"))
-            .cast("double")
-            / F.lit(1e9)
+        qround(
+            qsum(F.col("j"), 9)
             / F.count(F.lit(1))
         ).alias("mean_jaccard"),
-        q6(
+        qround(
             F.sum(F.when(F.col("j") > 0.5, 1).otherwise(0)).cast("double")
             / F.count(F.lit(1))
         ).alias("share_near_dup"),

@@ -20,7 +20,7 @@ from pyspark.sql import Window
 
 from ..plans import churn
 from ..registry import register
-from ._shared import ckpt, q6dec, q12dec, t
+from ._shared import ckpt, dsum, qdec, qround, qsum, t
 
 # Exact anchor shared by most ML oracles: the feature matrix has one row
 # per user with ≥1 event, so COUNT(DISTINCT user_id) over events is the
@@ -456,39 +456,17 @@ def ml_calibration_bins(spark, sf_dir):
     arithmetic: microsecond recencies divided as int64 ratios, so both
     engines bin identically. Two aggregations and two broadcast scalars
     — no per-model state, scales as a pure groupBy."""
-    e = t(spark, sf_dir, "events")
-    # Materialize the per-user aggregate once — it feeds the corpus-max
-    # scalar, the recency projection, AND (transitively) the max-recency
-    # scalar; without this Catalyst re-derives the full event scan +
-    # user aggregate once per consumer (observed: 4 scans in the plan).
-    u = e.groupBy("user_id").agg(F.max("ts").alias("last_ts")).localCheckpoint(
-        eager=True
-    )
-    m = u.agg(F.max("last_ts").alias("cmax"))
-    # timestampdiff, not unix_micros: events.ts is TIMESTAMP_NTZ (catalog
-    # nanos conversion) and the diff must be timezone-free so it matches
-    # DuckDB's naive epoch_us subtraction even across DST boundaries.
-    s = u.crossJoin(F.broadcast(m)).select(
-        "user_id",
-        "last_ts",
-        F.expr("timestampdiff(MICROSECOND, last_ts, cmax)").alias("rec"),
-    )
+    s = _recency(spark, sf_dir).select("user_id", "last_ts", _rec())
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
     scored = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"),
-        F.when(
-            F.col("last_ts") < F.to_timestamp(F.lit("2024-01-29 20:00:00")), 1
-        )
-        .otherwise(0)
-        .alias("churned"),
+        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"), _churned()
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return scored.groupBy(
         F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("bigint").alias("bin")
     ).agg(
         F.count(F.lit(1)).alias("n_users"),
-        half_up6(F.avg("score")).alias("mean_score"),
-        half_up6(F.avg("churned")).alias("churn_rate"),
+        qround(F.avg("score")).alias("mean_score"),
+        qround(F.avg("churned")).alias("churn_rate"),
     )
 
 
@@ -544,7 +522,7 @@ def ml_woe_iv(spark, sf_dir):
     u = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.when(
-            F.max("ts") < F.lit("2024-01-29 20:00:00").cast("timestamp"), 1
+            F.max("ts") < F.lit(churn.CHURN_CUTOFF).cast("timestamp"), 1
         )
         .otherwise(0)
         .alias("churned"),
@@ -553,27 +531,25 @@ def ml_woe_iv(spark, sf_dir):
     binned = u.select("churned", F.ntile(5).over(w).alias("bucket"))
     # The 5-row bucket table feeds both the totals and the output row
     # set — materialize it so the event-scale user aggregate runs once.
-    per = binned.groupBy("bucket").agg(
+    per = ckpt(binned.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum("churned").alias("n_bad"),
         (F.count(F.lit(1)) - F.sum("churned")).alias("n_good"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = per.agg(
         F.sum("n_bad").cast("double").alias("bad_t"),
         F.sum("n_good").cast("double").alias("good_t"),
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     bs = (F.col("n_bad") + 0.5) / (F.col("bad_t") + 2.5)
     gs = (F.col("n_good") + 0.5) / (F.col("good_t") + 2.5)
-    woe = q9(F.log(bs)) - q9(F.log(gs))
+    woe = qround(F.log(bs), 9) - qround(F.log(gs), 9)
     return per.crossJoin(F.broadcast(tot)).select(
         "bucket",
         F.col("n_users").cast("bigint").alias("n_users"),
         F.col("n_bad").cast("bigint").alias("n_bad"),
         F.col("n_good").cast("bigint").alias("n_good"),
-        q6(woe).alias("woe"),
-        q6((bs - gs) * woe).alias("iv_term"),
+        qround(woe).alias("woe"),
+        qround((bs - gs) * woe).alias("iv_term"),
     )
 
 
@@ -631,25 +607,22 @@ def ml_psi(spark, sf_dir):
     types = (
         w1.select("event_type").unionByName(w2.select("event_type")).distinct()
     )
-    joined = (
+    joined = ckpt(
         types.join(w1, "event_type", "left")
         .join(w2, "event_type", "left")
-        .localCheckpoint(eager=True)
     )
     tot = joined.agg(
         F.sum(F.coalesce("c1", F.lit(0))).cast("double").alias("t1"),
         F.sum(F.coalesce("c2", F.lit(0))).cast("double").alias("t2"),
         F.count(F.lit(1)).cast("double").alias("k"),
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     p1 = (F.coalesce("c1", F.lit(0)) + 0.5) / (F.col("t1") + 0.5 * F.col("k"))
     p2 = (F.coalesce("c2", F.lit(0)) + 0.5) / (F.col("t2") + 0.5 * F.col("k"))
     return joined.crossJoin(F.broadcast(tot)).select(
         "event_type",
-        q6(p1).alias("p1"),
-        q6(p2).alias("p2"),
-        q6((p2 - p1) * q9(F.log(p2 / p1))).alias("psi_term"),
+        qround(p1).alias("p1"),
+        qround(p2).alias("p2"),
+        qround((p2 - p1) * qround(F.log(p2 / p1), 9)).alias("psi_term"),
     )
 
 
@@ -692,11 +665,11 @@ def ml_target_encode(spark, sf_dir):
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     lab = ev.groupBy("user_id").agg(
-        F.when(F.max("ts") < F.lit("2024-01-29 20:00:00").cast("timestamp"), 1)
+        F.when(F.max("ts") < F.lit(churn.CHURN_CUTOFF).cast("timestamp"), 1)
         .otherwise(0)
         .alias("churned")
     )
-    joined = lab.join(F.broadcast(cust), "user_id").localCheckpoint(eager=True)
+    joined = ckpt(lab.join(F.broadcast(cust), "user_id"))
     seg = joined.groupBy("segment").agg(
         F.sum("churned").cast("double").alias("seg_sum"),
         F.count(F.lit(1)).cast("double").alias("seg_n"),
@@ -704,7 +677,6 @@ def ml_target_encode(spark, sf_dir):
     prior = joined.agg(
         (F.sum("churned").cast("double") / F.count(F.lit(1))).alias("prior")
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     enc = (F.col("seg_sum") - F.col("churned") + F.col("prior") * 10.0) / (
         F.col("seg_n") - 1.0 + 10.0
     )
@@ -715,7 +687,7 @@ def ml_target_encode(spark, sf_dir):
             "user_id",
             "segment",
             F.col("churned").cast("bigint").alias("churned"),
-            q6(enc).alias("segment_enc"),
+            qround(enc).alias("segment_enc"),
         )
     )
 
@@ -776,22 +748,38 @@ u AS (
 )"""
 
 
+def _recency(spark, sf_dir, *aggs):
+    """The churn recency spine: per-user ``last_ts`` (plus ``aggs``)
+    crossJoined with the corpus max ``cmax``. The per-user aggregate is
+    materialized once: it feeds the corpus-max scalar AND the recency
+    projection, and without the checkpoint Catalyst re-derives the full
+    event scan + user aggregate once per consumer."""
+    e = t(spark, sf_dir, "events")
+    u = ckpt(e.groupBy("user_id").agg(F.max("ts").alias("last_ts"), *aggs))
+    m = u.agg(F.max("last_ts").alias("cmax"))
+    return u.crossJoin(F.broadcast(m))
+
+
+def _rec():
+    """int64 microseconds from ``last_ts`` to ``cmax``. timestampdiff, not
+    unix_micros: events.ts is TIMESTAMP_NTZ (catalog nanos conversion) and
+    the diff must be timezone-free so it matches DuckDB's naive epoch_us
+    subtraction even across DST boundaries."""
+    return F.expr("timestampdiff(MICROSECOND, last_ts, cmax)").alias("rec")
+
+
+def _churned(name="churned"):
+    """1 when the user's last event precedes the churn cutoff, else 0."""
+    return (
+        F.when(F.col("last_ts") < F.to_timestamp(F.lit(churn.CHURN_CUTOFF)), 1)
+        .otherwise(0)
+        .alias(name)
+    )
+
+
 def _rec_scored(spark, sf_dir):
     """(user_id, rec, churned) — int64 recency + label, one event pass."""
-    e = t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(F.max("ts").alias("last_ts")).localCheckpoint(
-        eager=True
-    )
-    m = u.agg(F.max("last_ts").alias("cmax"))
-    return u.crossJoin(F.broadcast(m)).select(
-        "user_id",
-        F.expr("timestampdiff(MICROSECOND, last_ts, cmax)").alias("rec"),
-        F.when(
-            F.col("last_ts") < F.to_timestamp(F.lit("2024-01-29 20:00:00")), 1
-        )
-        .otherwise(0)
-        .alias("churned"),
-    )
+    return _recency(spark, sf_dir).select("user_id", _rec(), _churned())
 
 
 _REC2_SQL = """
@@ -810,20 +798,8 @@ u2 AS (
 
 def _rec_scored2(spark, sf_dir):
     """(user_id, rec, ne, churned) — recency + activity + label."""
-    e = t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.max("ts").alias("last_ts"), F.count(F.lit(1)).alias("ne")
-    ).localCheckpoint(eager=True)
-    m = u.agg(F.max("last_ts").alias("cmax"))
-    return u.crossJoin(F.broadcast(m)).select(
-        "user_id",
-        F.expr("timestampdiff(MICROSECOND, last_ts, cmax)").alias("rec"),
-        "ne",
-        F.when(
-            F.col("last_ts") < F.to_timestamp(F.lit("2024-01-29 20:00:00")), 1
-        )
-        .otherwise(0)
-        .alias("churned"),
+    return _recency(spark, sf_dir, F.count(F.lit(1)).alias("ne")).select(
+        "user_id", _rec(), "ne", _churned()
     )
 
 
@@ -871,7 +847,6 @@ def ml_auc_exact(spark, sf_dir):
         "pos",
         F.coalesce(F.sum("n").over(w), F.lit(0)).alias("cum_before"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     sums = ranked.agg(
         F.sum("pos").cast("double").alias("n_pos"),
         F.sum(F.col("n") - F.col("pos")).cast("double").alias("n_neg"),
@@ -882,7 +857,7 @@ def ml_auc_exact(spark, sf_dir):
     return sums.select(
         F.col("n_pos").cast("bigint").alias("n_pos"),
         F.col("n_neg").cast("bigint").alias("n_neg"),
-        q6(
+        qround(
             (F.col("rank_sum") - F.col("n_pos") * (F.col("n_pos") + 1.0) / 2.0)
             / (F.col("n_pos") * F.col("n_neg"))
         ).alias("auc"),
@@ -928,7 +903,6 @@ def ml_confusion_matrix(spark, sf_dir):
     cnt = lambda p, c: F.count(
         F.when((F.col("predicted") == p) & (F.col("churned") == c), 1)
     ).cast("double")
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cm = pred.agg(
         cnt(1, 1).alias("tp"), cnt(1, 0).alias("fp"),
         cnt(0, 1).alias("fn"), cnt(0, 0).alias("tn"),
@@ -938,9 +912,9 @@ def ml_confusion_matrix(spark, sf_dir):
         F.col("fp").cast("bigint").alias("fp"),
         F.col("fn").cast("bigint").alias("fn"),
         F.col("tn").cast("bigint").alias("tn"),
-        q6(F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"),
-        q6(F.col("tp") / (F.col("tp") + F.col("fn"))).alias("recall"),
-        q6(2.0 * F.col("tp") / (2.0 * F.col("tp") + F.col("fp") + F.col("fn"))).alias(
+        qround(F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"),
+        qround(F.col("tp") / (F.col("tp") + F.col("fn"))).alias("recall"),
+        qround(2.0 * F.col("tp") / (2.0 * F.col("tp") + F.col("fp") + F.col("fn"))).alias(
             "f1"
         ),
     )
@@ -978,19 +952,18 @@ def ml_ks_stat(spark, sf_dir):
     argmax is max-then-filter with a MIN(rec) tiebreak — the quantized
     gap makes the equality filter exact on both engines."""
     s = _rec_scored(spark, sf_dir)
-    per = s.groupBy("rec").agg(
+    per = ckpt(s.groupBy("rec").agg(
         F.sum("churned").cast("double").alias("pos"),
         (F.count(F.lit(1)) - F.sum("churned")).cast("double").alias("neg"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = per.agg(F.sum("pos").alias("np"), F.sum("neg").alias("nn"))
     w = Window.orderBy("rec").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cdf = per.crossJoin(F.broadcast(tot)).select(
         "rec",
         (F.sum("pos").over(w) / F.col("np")).alias("cp"),
         (F.sum("neg").over(w) / F.col("nn")).alias("cn"),
     )
-    scored = cdf.select("rec", q6(F.abs(F.col("cp") - F.col("cn"))).alias("d"))
+    scored = cdf.select("rec", qround(F.abs(F.col("cp") - F.col("cn"))).alias("d"))
     mx = scored.agg(F.max("d").alias("mxks"))
     return (
         scored.crossJoin(F.broadcast(mx))
@@ -1030,20 +1003,19 @@ def ml_lift_gains(spark, sf_dir):
     s = _rec_scored(spark, sf_dir)
     w = Window.orderBy(F.desc("rec"), F.asc("user_id"))
     deciled = s.select("churned", F.ntile(10).over(w).alias("decile"))
-    per = deciled.groupBy("decile").agg(
+    per = ckpt(deciled.groupBy("decile").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("churned").cast("double").alias("pos"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = per.agg(F.sum("n").alias("nt"), F.sum("pos").alias("post"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     wc = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return per.crossJoin(F.broadcast(tot)).select(
         F.col("decile").cast("bigint").alias("decile"),
         F.col("n").cast("bigint").alias("n_users"),
         F.col("pos").cast("bigint").alias("n_churned"),
-        q6(F.col("pos") / F.col("n")).alias("churn_rate"),
-        q6((F.col("pos") / F.col("n")) / (F.col("post") / F.col("nt"))).alias("lift"),
-        q6(F.sum("pos").over(wc) / F.col("post")).alias("cum_gain"),
+        qround(F.col("pos") / F.col("n")).alias("churn_rate"),
+        qround((F.col("pos") / F.col("n")) / (F.col("post") / F.col("nt"))).alias("lift"),
+        qround(F.sum("pos").over(wc) / F.col("post")).alias("cum_gain"),
     )
 
 
@@ -1083,16 +1055,13 @@ def ml_mutual_info(spark, sf_dir):
     argument is a ratio of exact integer products, the log is quantized
     at 1e-9 and each contribution at 1e-6 — cross-engine bit-stable.
     Output: one row per (segment, label) cell; Σ mi_contrib is the MI."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     lab = _rec_scored(spark, sf_dir).join(F.broadcast(cust), "user_id")
-    cells = (
+    cells = ckpt(
         lab.groupBy("segment", "churned")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_cell"))
-        .localCheckpoint(eager=True)
     )
     n = cells.agg(F.sum("n_cell").cast("double").alias("n"))
     seg = cells.groupBy("segment").agg(F.sum("n_cell").cast("double").alias("n_seg"))
@@ -1105,13 +1074,14 @@ def ml_mutual_info(spark, sf_dir):
             "segment",
             "churned",
             "n_cell",
-            q6(
+            qround(
                 F.col("n_cell")
                 / F.col("n")
-                * q9(
+                * qround(
                     F.log(
                         F.col("n_cell") * F.col("n") / (F.col("n_seg") * F.col("n_cls"))
-                    )
+                    ),
+                    9,
                 )
             ).alias("mi_contrib"),
         )
@@ -1152,15 +1122,13 @@ def ml_chi2(spark, sf_dir):
     Σ chi2_cell against a χ²((S−1)(L−1)) table is the screening
     decision; emitting cells keeps the oracle exact and lets the caller
     pick the correction."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     lab = _rec_scored(spark, sf_dir).join(F.broadcast(cust), "user_id")
-    cells = (
+    cells = ckpt(
         lab.groupBy("segment", "churned")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
-        .localCheckpoint(eager=True)
     )
     n = cells.agg(F.sum("n_obs").cast("double").alias("n"))
     seg = cells.groupBy("segment").agg(F.sum("n_obs").cast("double").alias("n_seg"))
@@ -1181,8 +1149,8 @@ def ml_chi2(spark, sf_dir):
         "segment",
         "churned",
         "n_obs",
-        q6(expected).alias("expected"),
-        q6((F.col("n_obs") - expected) * (F.col("n_obs") - expected) / expected).alias(
+        qround(expected).alias("expected"),
+        qround((F.col("n_obs") - expected) * (F.col("n_obs") - expected) / expected).alias(
             "chi2_cell"
         ),
     )
@@ -1216,21 +1184,19 @@ def ml_brier_score(spark, sf_dir):
     sum is order-independent; the reported score and base rate are
     1e-6-rounded. One event pass (shared _rec_scored aggregate), one
     1-row max broadcast, one global aggregate."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     s = _rec_scored(spark, sf_dir)
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
     p = s.crossJoin(F.broadcast(mx)).select(
-        "churned", q9(F.col("rec") / F.col("maxrec")).alias("phat")
+        "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
     )
-    sqerr = q9((F.col("phat") - F.col("churned")) * (F.col("phat") - F.col("churned")))
+    sqerr = qround((F.col("phat") - F.col("churned")) * (F.col("phat") - F.col("churned")), 9)
     return p.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        q6(
-            F.sum(sqerr.cast("decimal(38,12)")).cast("double") / F.count(F.lit(1))
+        qround(
+            dsum(sqerr, 12) / F.count(F.lit(1))
         ).alias("brier"),
-        q6(
-            F.sum(F.col("churned").cast("decimal(38,6)")).cast("double")
+        qround(
+            dsum(F.col("churned"))
             / F.count(F.lit(1))
         ).alias("base_rate"),
     )
@@ -1268,17 +1234,15 @@ def ml_roc_points(spark, sf_dir):
     ml_lift_gains uses (user_id tiebreak makes NTILE deterministic);
     counts stay integers until the two final quantized divisions. 10
     rows out at any scale."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     s = _rec_scored(spark, sf_dir)
     wd = Window.orderBy(F.desc("rec"), F.asc("user_id"))
     deciles = s.select("churned", F.ntile(10).over(wd).alias("decile"))
-    per = (
+    per = ckpt(
         deciles.groupBy("decile")
         .agg(
             F.sum("churned").cast("bigint").alias("pos"),
             (F.count(F.lit(1)) - F.sum("churned")).cast("bigint").alias("neg"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = per.agg(
         F.sum("pos").cast("double").alias("n_pos"),
@@ -1289,8 +1253,8 @@ def ml_roc_points(spark, sf_dir):
         per.crossJoin(F.broadcast(tot))
         .select(
             "decile",
-            q6(F.sum("pos").over(wc) / F.col("n_pos")).alias("tpr"),
-            q6(F.sum("neg").over(wc) / F.col("n_neg")).alias("fpr"),
+            qround(F.sum("pos").over(wc) / F.col("n_pos")).alias("tpr"),
+            qround(F.sum("neg").over(wc) / F.col("n_neg")).alias("fpr"),
         )
     )
 
@@ -1333,7 +1297,6 @@ def ml_fairness_metrics(spark, sf_dir):
     (customer dim broadcast) + one bounded per-segment aggregate; all
     rates are integer ratios quantized half-up at 1e-6. O(segments)
     rows at any scale."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     s = _rec_scored(spark, sf_dir)
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
     cust = t(spark, sf_dir, "customer").select(
@@ -1348,7 +1311,7 @@ def ml_fairness_metrics(spark, sf_dir):
             F.when(2 * F.col("rec") >= F.col("maxrec"), 1).otherwise(0).alias("predicted"),
         )
     )
-    seg = (
+    seg = ckpt(
         pred.groupBy("segment")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1358,7 +1321,6 @@ def ml_fairness_metrics(spark, sf_dir):
             .alias("tp"),
             F.sum("churned").cast("bigint").alias("pos"),
         )
-        .localCheckpoint(eager=True)
     )
     g = seg.agg(
         (F.sum("n_flagged").cast("double") / F.sum("n")).alias("g_rate")
@@ -1367,11 +1329,11 @@ def ml_fairness_metrics(spark, sf_dir):
         "segment",
         "n",
         "n_flagged",
-        q6(F.col("n_flagged").cast("double") / F.col("n")).alias("flag_rate"),
-        q6(F.col("n_flagged").cast("double") / F.col("n") - F.col("g_rate")).alias(
+        qround(F.col("n_flagged").cast("double") / F.col("n")).alias("flag_rate"),
+        qround(F.col("n_flagged").cast("double") / F.col("n") - F.col("g_rate")).alias(
             "parity_gap"
         ),
-        q6(
+        qround(
             F.when(F.col("pos") > 0, F.col("tp").cast("double") / F.col("pos")).otherwise(
                 0.0
             )
@@ -1413,8 +1375,6 @@ def ml_pr_auc_decile(spark, sf_dir):
     deterministic NTILE as ml_lift_gains/ml_roc_points). Integer
     cumulative counts, per-step terms quantized at 1e-9 and DECIMAL-
     summed, result at 1e-6. O(1) output at any scale."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     s = _rec_scored(spark, sf_dir)
     wd = Window.orderBy(F.desc("rec"), F.asc("user_id"))
     per = (
@@ -1433,14 +1393,15 @@ def ml_pr_auc_decile(spark, sf_dir):
         F.sum("n").over(wc).cast("double").alias("cn"),
         F.sum("pos").over(wall).cast("double").alias("npos"),
     )
-    term = q9(
+    term = qround(
         (F.col("cpos") - F.coalesce(F.lag("cpos").over(wc), F.lit(0.0)))
         / F.col("npos")
-        * (F.col("cpos") / F.col("cn"))
+        * (F.col("cpos") / F.col("cn")),
+        9,
     )
     return cum.select(term.alias("term"), "npos").agg(
         F.max("npos").cast("bigint").alias("n_pos"),
-        q6(F.sum(F.col("term").cast("decimal(38,12)")).cast("double")).alias("pr_auc"),
+        qround(dsum(F.col("term"), 12)).alias("pr_auc"),
     )
 
 
@@ -1479,18 +1440,14 @@ def ml_ece(spark, sf_dir):
     1e-6-quantized bin means as the bins op (so the two readouts can
     never disagree), weighted in DECIMAL for order-independence. One
     number at any scale; the threshold a serving gate alarms on."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     bins = ml_calibration_bins(spark, sf_dir)
     return bins.agg(
         F.sum("n_users").cast("bigint").alias("n_total"),
         F.count(F.lit(1)).cast("bigint").alias("n_bins"),
-        q6(
-            F.sum(
-                (
-                    F.col("n_users")
-                    * F.abs(F.col("churn_rate") - F.col("mean_score"))
-                ).cast("decimal(38,12)")
-            ).cast("double")
+        qround(
+            dsum(
+                F.col("n_users") * F.abs(F.col("churn_rate") - F.col("mean_score")), 12
+            )
             / F.sum("n_users")
         ).alias("ece"),
     )
@@ -1553,25 +1510,12 @@ def ml_isotonic_pav(spark, sf_dir):
     int64/int64 divisions and min/max over them, identical in both
     engines. The score is the same deterministic recency score as
     ml_calibration_bins (integer microsecond arithmetic)."""
-    e = t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(F.max("ts").alias("last_ts")).localCheckpoint(
-        eager=True
-    )
-    m = u.agg(F.max("last_ts").alias("cmax"))
-    s = u.crossJoin(F.broadcast(m)).select(
-        "last_ts",
-        F.expr("timestampdiff(MICROSECOND, last_ts, cmax)").alias("rec"),
-    )
+    s = _recency(spark, sf_dir).select("last_ts", _rec())
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
     scored = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"),
-        F.when(
-            F.col("last_ts") < F.to_timestamp(F.lit("2024-01-29 20:00:00")), 1
-        )
-        .otherwise(0)
-        .alias("churned"),
+        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"), _churned()
     )
-    bins = (
+    bins = ckpt(
         scored.groupBy(
             F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("bigint").alias("bin")
         )
@@ -1579,10 +1523,6 @@ def ml_isotonic_pav(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("churned").cast("bigint").alias("c"),
         )
-        # The bin summary (<= 10 rows) feeds the cumulative window, BOTH
-        # sides of the segment self-join, and the final readout — cut the
-        # lineage once instead of re-running the event scan per consumer.
-        .localCheckpoint(eager=True)
     )
     # Global-order window over the bounded bin summary: <= 10 rows, so the
     # single-partition sort is a non-issue (never applied to row-level data).
@@ -1700,18 +1640,10 @@ def ml_bootstrap_metric_ci(spark, sf_dir):
     final ±1.96·sd interval. At 100 TB the per-user label table is the
     only state and replica count scales the fan-out linearly."""
     e = t(spark, sf_dir, "events")
-    lab = (
+    lab = ckpt(  # feeds the point estimate AND 16 replicas
         e.groupBy("user_id")
         .agg(F.max("ts").alias("last_ts"))
-        .select(
-            "user_id",
-            F.when(
-                F.col("last_ts") < F.to_timestamp(F.lit("2024-01-29 20:00:00")), 1
-            )
-            .otherwise(0)
-            .alias("churned"),
-        )
-        .localCheckpoint(eager=True)  # feeds the point estimate AND 16 replicas
+        .select("user_id", _churned())
     )
     reps = spark.range(0, 16).select(F.col("id").cast("bigint").alias("b"))
     uv = (
@@ -1746,25 +1678,22 @@ def ml_bootstrap_metric_ci(spark, sf_dir):
             F.sum(F.col("wt") * F.col("churned")).cast("double") / F.sum("wt")
         ).alias("rate")
     )
-    rq = rates.select(
+    rq = ckpt(rates.select(
         "b",
         (
-            F.floor(F.col("rate") * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
+            qdec(F.col("rate"), 12)
             / F.lit(1e12)
         ).alias("r"),
-    ).localCheckpoint(eager=True)  # feeds mean AND variance passes
+    ))  # feeds mean AND variance passes
     m = rq.agg(
-        (F.sum(F.col("r").cast("decimal(38,12)")).cast("double") / F.lit(16)).alias("m")
+        (dsum(F.col("r"), 12) / F.lit(16)).alias("m")
     )
     dev = rq.crossJoin(F.broadcast(m)).select(
         "m",
-        (
-            F.floor(
-                (F.col("r").cast("double") - F.col("m"))
-                * (F.col("r").cast("double") - F.col("m"))
-                * F.lit(1e12)
-                + F.lit(0.5)
-            ).cast("decimal(38,12)")
+        qdec(
+            (F.col("r").cast("double") - F.col("m"))
+            * (F.col("r").cast("double") - F.col("m")),
+            12,
         ).alias("sq"),
     )
     var = dev.groupBy("m").agg(
@@ -1827,14 +1756,14 @@ def ml_drift_jsd(spark, sf_dir):
     fact table + a broadcast 2-scalar total; category cardinality
     bounds everything downstream."""
     e = t(spark, sf_dir, "events")
-    counts = e.groupBy("event_type").agg(
+    counts = ckpt(e.groupBy("event_type").agg(
         F.sum(
             (F.col("ts") < F.to_timestamp(F.lit("2024-01-16 00:00:00"))).cast("long")
         ).alias("n_p"),
         F.sum(
             (F.col("ts") >= F.to_timestamp(F.lit("2024-01-16 00:00:00"))).cast("long")
         ).alias("n_q"),
-    ).localCheckpoint(eager=True)  # feeds the totals scalar AND the terms
+    ))  # feeds the totals scalar AND the terms
     tot = counts.agg(F.sum("n_p").alias("tp"), F.sum("n_q").alias("tq"))
     probs = counts.crossJoin(F.broadcast(tot)).select(
         (F.col("n_p").cast("double") / F.col("tp")).alias("p"),
@@ -1847,11 +1776,11 @@ def ml_drift_jsd(spark, sf_dir):
     )
     terms = probs.select(
         (
-            F.floor(term_raw * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)") / F.lit(1e9)
+            qdec(term_raw, 9) / F.lit(1e9)
         ).alias("term")
     )
     return terms.agg(
-        F.round(F.sum(F.col("term").cast("decimal(38,9)")).cast("double"), 6).alias("jsd"),
+        F.round(dsum(F.col("term"), 9), 6).alias("jsd"),
         F.count(F.lit(1)).cast("bigint").alias("n_categories"),
     )
 
@@ -1895,7 +1824,7 @@ def ml_pinball_loss(spark, sf_dir):
     e = t(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
-    ).agg(F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("y"))
+    ).agg(dsum(F.col("value")).alias("y"))
     w = Window.partitionBy("event_type").orderBy("d")
     paired = daily.withColumn("yhat", F.lag("y", 7).over(w)).filter(
         F.col("yhat").isNotNull()
@@ -1914,9 +1843,7 @@ def ml_pinball_loss(spark, sf_dir):
     )
     return losses.groupBy("event_type", "tau").agg(
         F.round(
-            F.sum(F.floor(F.col("l") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("double")
-            / F.lit(1e6)
+            qsum(F.col("l"))
             / F.count(F.lit(1)),
             6,
         ).alias("pinball"),
@@ -1986,28 +1913,26 @@ def ml_auc_delong_se(spark, sf_dir):
     )
     wb = Window.orderBy("rec").rowsBetween(Window.unboundedPreceding, -1)
     wa = Window.orderBy("rec").rowsBetween(1, Window.unboundedFollowing)
-    ranked = per.select(
+    ranked = ckpt(per.select(
         "pos",
         "neg",
         F.coalesce(F.sum("neg").over(wb), F.lit(0)).alias("cumneg_before"),
         F.coalesce(F.sum("pos").over(wa), F.lit(0)).alias("cumpos_after"),
-    ).localCheckpoint(eager=True)  # feeds totals, AUC, and both variance passes
+    ))  # feeds totals, AUC, and both variance passes
     tot = ranked.agg(
         F.sum("pos").cast("double").alias("m"), F.sum("neg").cast("double").alias("nn")
     )
-    placed = ranked.crossJoin(F.broadcast(tot)).select(
+    placed = ckpt(ranked.crossJoin(F.broadcast(tot)).select(
         "pos",
         "neg",
         ((F.col("cumneg_before") + 0.5 * F.col("neg")) / F.col("nn")).alias("v10"),
         ((F.col("cumpos_after") + 0.5 * F.col("pos")) / F.col("m")).alias("v01"),
         "m",
         "nn",
-    ).localCheckpoint(eager=True)
-    q12d = q12dec  # shared parity helper (operators/_shared.py)
+    ))
     auc = placed.agg(
         (
-            F.sum(q12d(F.col("pos") * F.col("v10"))).cast("double")
-            / F.lit(1e12)
+            qsum(F.col("pos") * F.col("v10"), 12)
             / F.max("m")
         ).alias("a"),
         F.max("m").alias("m"),
@@ -2020,25 +1945,17 @@ def ml_auc_delong_se(spark, sf_dir):
             F.max("m").alias("m"),
             F.max("nn").alias("nn"),
             (
-                F.sum(
-                    q12d(
-                        F.col("pos")
-                        * (F.col("v10") - F.col("a"))
-                        * (F.col("v10") - F.col("a"))
-                    )
-                ).cast("double")
-                / F.lit(1e12)
+                qsum(
+                    F.col("pos") * (F.col("v10") - F.col("a")) * (F.col("v10") - F.col("a")),
+                    12,
+                )
                 / F.nullif((F.max("m") - 1).cast("double"), F.lit(0.0))
             ).alias("s10"),
             (
-                F.sum(
-                    q12d(
-                        F.col("neg")
-                        * (F.col("v01") - F.col("a"))
-                        * (F.col("v01") - F.col("a"))
-                    )
-                ).cast("double")
-                / F.lit(1e12)
+                qsum(
+                    F.col("neg") * (F.col("v01") - F.col("a")) * (F.col("v01") - F.col("a")),
+                    12,
+                )
                 / F.nullif((F.max("nn") - 1).cast("double"), F.lit(0.0))
             ).alias("s01"),
         )
@@ -2101,18 +2018,14 @@ def ml_propensity_match(spark, sf_dir):
     u = e.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.max("ts").alias("last_ts"),
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("outcome"),
+        dsum(F.col("value")).alias("outcome"),
     )
-    lab = u.select(
+    lab = ckpt(u.select(
         "user_id",
         "n_events",
         "outcome",
-        F.when(
-            F.col("last_ts") < F.to_timestamp(F.lit("2024-01-29 20:00:00")), 1
-        )
-        .otherwise(0)
-        .alias("treated"),
-    ).localCheckpoint(eager=True)  # feeds both sides of the match join
+        _churned("treated"),
+    ))  # feeds both sides of the match join
     tr = lab.filter(F.col("treated") == 1).select(
         F.col("user_id").alias("treated_id"),
         F.col("n_events").alias("ne_t"),
@@ -2142,12 +2055,7 @@ def ml_propensity_match(spark, sf_dir):
     return matched.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_matched"),
         F.round(
-            F.sum(
-                F.floor((F.col("y_t") - F.col("y_c")) * F.lit(1e6) + F.lit(0.5)).cast(
-                    "decimal(38,6)"
-                )
-            ).cast("double")
-            / F.lit(1e6)
+            qsum(F.col("y_t") - F.col("y_c"))
             / F.count(F.lit(1)),
             6,
         ).alias("att"),
@@ -2203,7 +2111,7 @@ def ml_diff_in_diff(spark, sf_dir):
             F.sum((F.col("event_type") == "purchase").cast("int")) >= 14
         ).cast("int").alias("treated")
     )
-    cells = (
+    cells = ckpt(  # feeds all four cell lookups
         e.join(firsts, "user_id")
         .groupBy(
             "treated",
@@ -2213,11 +2121,10 @@ def ml_diff_in_diff(spark, sf_dir):
         )
         .agg(
             (
-                F.sum(F.col("value").cast("decimal(38,6)")).cast("double")
+                dsum(F.col("value"))
                 / F.count(F.lit(1))
             ).alias("m")
         )
-        .localCheckpoint(eager=True)  # feeds all four cell lookups
     )
     pick = lambda tr, po: cells.filter(
         (F.col("treated") == tr) & (F.col("post") == po)
@@ -2292,9 +2199,9 @@ def ml_km_greenwood(spark, sf_dir):
     One user-grain aggregate is the only fact-scale pass; the whole
     estimator runs on the tenure histogram."""
     e = t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
+    per_user = ckpt(e.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-    ).localCheckpoint(eager=True)  # feeds the horizon scalar AND the tenure rows
+    ))  # feeds the horizon scalar AND the tenure rows
     # Corpus horizon = max of the per-user maxima — NOT a second scan of
     # the fact table (duplicate-scan discipline).
     horizon = per_user.agg(F.max("last_ts").alias("h"))
@@ -2310,10 +2217,10 @@ def ml_km_greenwood(spark, sf_dir):
             .alias("churned"),
         )
     )
-    daily = users.groupBy(F.col("t_days").alias("day_n")).agg(
+    daily = ckpt(users.groupBy(F.col("t_days").alias("day_n")).agg(
         F.sum("churned").alias("d"),
         (F.count(F.lit(1)) - F.sum("churned")).alias("c"),
-    ).localCheckpoint(eager=True)  # feeds the total AND the risk window
+    ))  # feeds the total AND the risk window
     tot = daily.agg(F.sum(F.col("d") + F.col("c")).alias("n0"))
     wb = Window.orderBy("day_n").rowsBetween(Window.unboundedPreceding, -1)
     risk = daily.crossJoin(F.broadcast(tot)).select(
@@ -2324,7 +2231,7 @@ def ml_km_greenwood(spark, sf_dir):
         ),
     )
     q12 = lambda c: (
-        F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)") / F.lit(1e12)
+        qdec(c, 12) / F.lit(1e12)
     )
     steps = risk.filter(F.col("d") < F.col("n_risk")).select(
         "day_n",
@@ -2408,14 +2315,13 @@ def ml_cuped(spark, sf_dir):
         .cast("double")
         .alias("y"),
     )
-    q6d = q6dec  # shared parity helper (operators/_shared.py)
     mom = per_user.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("x").cast("decimal(38,6)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(38,6)")).cast("double").alias("sy"),
-        (F.sum(q6d(F.col("x") * F.col("x"))).cast("double") / F.lit(1e6)).alias("sxx"),
-        (F.sum(q6d(F.col("y") * F.col("y"))).cast("double") / F.lit(1e6)).alias("syy"),
-        (F.sum(q6d(F.col("x") * F.col("y"))).cast("double") / F.lit(1e6)).alias("sxy"),
+        dsum(F.col("x")).alias("sx"),
+        dsum(F.col("y")).alias("sy"),
+        qsum(F.col("x") * F.col("x")).alias("sxx"),
+        qsum(F.col("y") * F.col("y")).alias("syy"),
+        qsum(F.col("x") * F.col("y")).alias("sxy"),
     )
     var_x = (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")) / (F.col("n") - 1)
     var_y = (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")) / (F.col("n") - 1)
@@ -2471,10 +2377,10 @@ def ml_cost_threshold(spark, sf_dir):
     the histogram. Integer-exact end to end; deterministic ties
     (lowest threshold)."""
     s = _rec_scored(spark, sf_dir)
-    per = s.groupBy("rec").agg(
+    per = ckpt(s.groupBy("rec").agg(
         F.sum("churned").alias("pos"),
         (F.count(F.lit(1)) - F.sum("churned")).alias("neg"),
-    ).localCheckpoint(eager=True)  # feeds the cumulative window AND the total
+    ))  # feeds the cumulative window AND the total
     wd = Window.orderBy(F.desc("rec")).rowsBetween(Window.unboundedPreceding, 0)
     cums = per.select(
         F.col("rec").alias("threshold"),
@@ -2571,33 +2477,7 @@ def ml_logreg_gd(spark, sf_dir):
     (10 steps from zero init is early training — the bias still
     dominates on an imbalanced label; the op's contract is the exact
     optimization trajectory, not a converged fit.)"""
-    s = _rec_scored2(spark, sf_dir)
-    mx = s.agg(
-        F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"),
-        F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),
-    )
-    feats = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("x1"),
-        (F.col("ne").cast("double") / F.col("maxne")).alias("x2"),
-        F.col("churned").cast("double").alias("y"),
-    ).localCheckpoint(eager=True)  # the feature table feeds every GD step
-    n_ex = feats.count()  # bounded driver scalar (the 1/n in the update)
-    q12 = q12dec  # shared parity helper (operators/_shared.py)
-    d12 = lambda c: (F.sum(q12(c)).cast("double") / F.lit(1e12))
-    w = (0.0, 0.0, 0.0)
-    for _ in range(10):
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        resid = 1.0 / (1.0 + F.exp(-z)) - F.col("y")
-        g = feats.agg(
-            d12(resid).alias("g0"),
-            d12(resid * F.col("x1")).alias("g1"),
-            d12(resid * F.col("x2")).alias("g2"),
-        ).collect()[0]
-        w = (
-            w[0] - 0.5 * g["g0"] / n_ex,
-            w[1] - 0.5 * g["g1"] / n_ex,
-            w[2] - 0.5 * g["g2"] / n_ex,
-        )
+    w, _ = _gd_fit(_gd_features(spark, sf_dir), ("x1", "x2"), 10)
     return spark.createDataFrame(
         [(float(w[0]), float(w[1]), float(w[2]))], "w_bias double, w_recency double, w_events double"
     ).select(
@@ -2605,6 +2485,43 @@ def ml_logreg_gd(spark, sf_dir):
         F.round("w_recency", 6).alias("w_recency"),
         F.round("w_events", 6).alias("w_events"),
     )
+
+
+def _gd_features(spark, sf_dir):
+    """(x1, x2, y): scaled recency, scaled activity and the churn label,
+    materialized once because the table feeds every GD step."""
+    s = _rec_scored2(spark, sf_dir)
+    mx = s.agg(
+        F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"),
+        F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),
+    )
+    return ckpt(s.crossJoin(F.broadcast(mx)).select(
+        (F.col("rec").cast("double") / F.col("maxrec")).alias("x1"),
+        (F.col("ne").cast("double") / F.col("maxne")).alias("x2"),
+        F.col("churned").cast("double").alias("y"),
+    ))
+
+
+def _gd_fit(feats, cols, iters):
+    """Full-batch logistic-regression GD on ``feats`` (label ``y``) from
+    zero weights: ``iters`` steps of w -= 0.5·g/n, each gradient ONE
+    aggregate of 1e-12-quantized DECIMAL sums, so every step's weights
+    are bit-identical to the oracle's unrolled CTEs. Returns (weights —
+    bias first, then one per column of ``cols`` — and n, the example
+    count: a bounded driver scalar, the 1/n in the update)."""
+    n = feats.count()
+    w = (0.0,) * (len(cols) + 1)
+    for _ in range(iters):
+        z = F.lit(w[0])
+        for wi, c in zip(w[1:], cols):
+            z = z + F.lit(wi) * F.col(c)
+        resid = 1.0 / (1.0 + F.exp(-z)) - F.col("y")
+        g = feats.agg(
+            qsum(resid, 12).alias("g0"),
+            *[qsum(resid * F.col(c), 12).alias(f"g{i}") for i, c in enumerate(cols, 1)],
+        ).collect()[0]
+        w = tuple(wi - 0.5 * gi / n for wi, gi in zip(w, g))
+    return w, n
 
 
 @register(
@@ -2646,12 +2563,12 @@ def ml_power_mde(spark, sf_dir):
     analysis is arithmetic on 3 numbers per group."""
     e = t(spark, sf_dir, "events")
     per_user = e.groupBy("event_type", "user_id").agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("y")
+        dsum(F.col("value")).alias("y")
     )
     mom = per_user.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("y").cast("decimal(38,6)")).cast("double").alias("sy"),
-        (F.sum(q6dec(F.col("y") * F.col("y"))).cast("double") / F.lit(1e6)).alias("syy"),
+        dsum(F.col("y")).alias("sy"),
+        qsum(F.col("y") * F.col("y")).alias("syy"),
     )
     m = F.col("sy") / F.col("n")
     var = (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")) / (F.col("n") - 1)
@@ -2748,10 +2665,10 @@ def ml_ips_offpolicy(spark, sf_dir):
     weighted = policy.select(w.alias("w"), "reward")
     sums = weighted.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (F.sum(q6dec(F.col("w") * F.col("reward"))).cast("double") / F.lit(1e6)).alias(
+        qsum(F.col("w") * F.col("reward")).alias(
             "swr"
         ),
-        (F.sum(q6dec(F.col("w"))).cast("double") / F.lit(1e6)).alias("sw"),
+        qsum(F.col("w")).alias("sw"),
     )
     return sums.select(
         F.col("n").alias("n_users"),
@@ -2808,17 +2725,16 @@ def ml_conformal_interval(spark, sf_dir):
     O(series × days)."""
     e = t(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("d")).agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("y")
+        dsum(F.col("value")).alias("y")
     )
     w = Window.partitionBy("event_type").orderBy("d")
-    paired = (
+    paired = ckpt(  # feeds the calibration quantile AND the test join
         daily.withColumn("yhat", F.lag("y", 7).over(w))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("yhat").isNotNull())
         .withColumn(
             "part", F.when(F.col("rn") <= 19, "cal").otherwise("test")
         )
-        .localCheckpoint(eager=True)  # feeds the calibration quantile AND the test join
     )
     qhat = (
         paired.filter(F.col("part") == "cal")
@@ -2987,49 +2903,33 @@ def ml_hosmer_lemeshow(spark, sf_dir):
     decimal sums of the scores; each bin's term is 1e-9-quantized into
     the decimal total. One user aggregate + one decile aggregate —
     the same two-pass spine as the calibration family."""
-    e = t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(F.max("ts").alias("last_ts")).localCheckpoint(
-        eager=True
-    )
-    m = u.agg(F.max("last_ts").alias("cmax"))
-    s = u.crossJoin(F.broadcast(m)).select(
-        "last_ts",
-        F.expr("timestampdiff(MICROSECOND, last_ts, cmax)").alias("rec"),
-    )
+    s = _recency(spark, sf_dir).select("last_ts", _rec())
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
     scored = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("p"),
-        F.when(
-            F.col("last_ts") < F.to_timestamp(F.lit("2024-01-29 20:00:00")), 1
-        )
-        .otherwise(0)
-        .alias("y"),
+        (F.col("rec").cast("double") / F.col("maxrec")).alias("p"), _churned("y")
     )
     binned = scored.groupBy(
         F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("bigint").alias("bin")
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("obs"),
-        (F.sum(q6dec(F.col("p"))).cast("double") / F.lit(1e6)).alias("exp_sum"),
+        qsum(F.col("p")).alias("exp_sum"),
     )
     hl_term = (
-        F.floor(
+        qdec(
             (F.col("obs") - F.col("exp_sum"))
             * (F.col("obs") - F.col("exp_sum"))
             / F.nullif(
                 F.col("exp_sum") * (1 - F.col("exp_sum") / F.col("n")), F.lit(0.0)
-            )
-            * F.lit(1e9)
-            + F.lit(0.5)
-        ).cast("decimal(38,9)")
+            ),
+            9,
+        )
         / F.lit(1e9)
     )
     terms = binned.select(hl_term.alias("hl_term"))
     return terms.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bins"),
-        F.round(F.sum(F.col("hl_term").cast("decimal(38,9)")).cast("double"), 6).alias(
-            "hl_stat"
-        ),
+        F.round(dsum(F.col("hl_term"), 9), 6).alias("hl_stat"),
         (F.count(F.lit(1)) - 2).cast("bigint").alias("df"),
     )
 
@@ -3089,9 +2989,9 @@ def ml_km_rmst(spark, sf_dir):
     single fact-scale pass as ml_km_greenwood; the integral runs on
     the ≤30-row step table."""
     e = t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
+    per_user = ckpt(e.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-    ).localCheckpoint(eager=True)
+    ))
     horizon = per_user.agg(F.max("last_ts").alias("h"))
     users = per_user.crossJoin(F.broadcast(horizon)).select(
         F.datediff(F.to_date("last_ts"), F.to_date("first_ts")).alias("t_days"),
@@ -3099,10 +2999,10 @@ def ml_km_rmst(spark, sf_dir):
         .otherwise(0)
         .alias("churned"),
     )
-    daily = users.groupBy(F.col("t_days").alias("day_n")).agg(
+    daily = ckpt(users.groupBy(F.col("t_days").alias("day_n")).agg(
         F.sum("churned").alias("d"),
         (F.count(F.lit(1)) - F.sum("churned")).alias("c"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = daily.agg(F.sum(F.col("d") + F.col("c")).alias("n0"))
     wb = Window.orderBy("day_n").rowsBetween(Window.unboundedPreceding, -1)
     risk = daily.crossJoin(F.broadcast(tot)).select(
@@ -3114,12 +3014,12 @@ def ml_km_rmst(spark, sf_dir):
     )
     steps = risk.filter(F.col("d") < F.col("n_risk")).select(
         "day_n",
-        q12dec(F.log(1.0 - F.col("d").cast("double") / F.col("n_risk"))).alias(
+        qdec(F.log(1.0 - F.col("d").cast("double") / F.col("n_risk")), 12).alias(
             "lt_q"
         ),
     ).select("day_n", (F.col("lt_q") / F.lit(1e12)).alias("lterm"))
     wc = Window.orderBy("day_n").rowsBetween(Window.unboundedPreceding, 0)
-    surv = steps.select(
+    surv = ckpt(steps.select(
         "day_n",
         F.exp(
             F.sum(F.col("lterm").cast("decimal(38,12)")).over(wc).cast("double")
@@ -3127,8 +3027,8 @@ def ml_km_rmst(spark, sf_dir):
         F.coalesce(F.lead("day_n").over(Window.orderBy("day_n")), F.lit(30)).alias(
             "next_day"
         ),
-    ).localCheckpoint(eager=True)  # feeds the area sum AND the t0 scalar
-    q9d = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)") / F.lit(1e9)
+    ))  # feeds the area sum AND the t0 scalar
+    q9d = lambda c: qdec(c, 9) / F.lit(1e9)
     segs = surv.filter(F.col("day_n") < 30).select(
         (
             q9d(F.col("s") * F.least(F.col("next_day"), F.lit(30)))
@@ -3142,7 +3042,7 @@ def ml_km_rmst(spark, sf_dir):
         .agg(
             F.round(
                 F.col("t0")
-                + F.sum(F.col("area").cast("decimal(38,9)")).cast("double"),
+                + dsum(F.col("area"), 9),
                 6,
             ).alias("rmst_30d")
         )
@@ -3235,14 +3135,13 @@ def ml_gbm_stumps(spark, sf_dir):
         F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"),
         F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),
     )
-    feats = s.crossJoin(F.broadcast(mx)).select(
+    feats = ckpt(s.crossJoin(F.broadcast(mx)).select(
         (F.col("rec").cast("double") / F.col("maxrec")).alias("x1"),
         (F.col("ne").cast("double") / F.col("maxne")).alias("x2"),
         F.col("churned").cast("double").alias("y"),
         F.lit(0.5).alias("pred"),
-    ).localCheckpoint(eager=True)
+    ))
     cand = [(f, t / 10.0) for f in (1, 2) for t in range(1, 10)]
-    q12i = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
     p = feats
     for _ in range(4):
         xcol = lambda f: F.col("x1") if f == 1 else F.col("x2")
@@ -3250,11 +3149,11 @@ def ml_gbm_stumps(spark, sf_dir):
         for f, thr in cand:
             left = xcol(f) < thr
             aggs += [
-                (F.sum(F.when(left, q12i(F.col("y") - F.col("pred"))).otherwise(
+                (F.sum(F.when(left, qdec(F.col("y") - F.col("pred"), 12)).otherwise(
                     F.lit(0).cast("decimal(38,12)"))).cast("double") / F.lit(1e12)
                  ).alias(f"sl_{f}_{int(thr*10)}"),
                 F.sum(left.cast("long")).alias(f"nl_{f}_{int(thr*10)}"),
-                (F.sum(F.when(~left, q12i(F.col("y") - F.col("pred"))).otherwise(
+                (F.sum(F.when(~left, qdec(F.col("y") - F.col("pred"), 12)).otherwise(
                     F.lit(0).cast("decimal(38,12)"))).cast("double") / F.lit(1e12)
                  ).alias(f"sr_{f}_{int(thr*10)}"),
                 F.sum((~left).cast("long")).alias(f"nr_{f}_{int(thr*10)}"),
@@ -3288,27 +3187,21 @@ def ml_gbm_stumps(spark, sf_dir):
         # the four example-scale materializations saved (isolated noop
         # min-of-3 at sf0.1: 4.48 s shipped vs 5.08 s without the
         # checkpoints; oracle green both ways).
-        p = p.select(
+        p = ckpt(p.select(
             "x1",
             "x2",
             "y",
-            (
-                F.floor((F.col("pred") + 0.5 * stump) * F.lit(1e9) + F.lit(0.5))
-                / F.lit(1e9)
-            ).alias("pred"),
-        ).localCheckpoint(eager=True)
-    q9d = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")
+            qround(F.col("pred") + 0.5 * stump, 9).alias("pred"),
+        ))
     return p.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_examples"),
         F.round(
-            F.sum(q9d((F.col("y") - F.col("pred")) * (F.col("y") - F.col("pred"))))
-            .cast("double")
-            / F.lit(1e9)
+            qsum((F.col("y") - F.col("pred")) * (F.col("y") - F.col("pred")), 9)
             / F.count(F.lit(1)),
             6,
         ).alias("mse"),
         F.round(
-            F.sum(q9d(F.col("pred"))).cast("double") / F.lit(1e9) / F.count(F.lit(1)),
+            qsum(F.col("pred"), 9) / F.count(F.lit(1)),
             6,
         ).alias("mean_pred"),
     )
@@ -3352,38 +3245,12 @@ def ml_shap_linear(spark, sf_dir):
     be ~0 by the efficiency axiom — the oracle hash checks it). One
     extra pass over the feature table after training: attribution at
     100 TB costs one aggregate, not a SHAP-sampler fleet."""
-    s = _rec_scored2(spark, sf_dir)
-    mx = s.agg(
-        F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"),
-        F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),
-    )
-    feats = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("x1"),
-        (F.col("ne").cast("double") / F.col("maxne")).alias("x2"),
-        F.col("churned").cast("double").alias("y"),
-    ).localCheckpoint(eager=True)
-    n_ex = feats.count()
-    q12i = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
-    d12 = lambda c: (F.sum(q12i(c)).cast("double") / F.lit(1e12))
-    w = (0.0, 0.0, 0.0)
-    for _ in range(10):
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        resid = 1.0 / (1.0 + F.exp(-z)) - F.col("y")
-        g = feats.agg(
-            d12(resid).alias("g0"),
-            d12(resid * F.col("x1")).alias("g1"),
-            d12(resid * F.col("x2")).alias("g2"),
-        ).collect()[0]
-        w = (
-            w[0] - 0.5 * g["g0"] / n_ex,
-            w[1] - 0.5 * g["g1"] / n_ex,
-            w[2] - 0.5 * g["g2"] / n_ex,
-        )
+    feats = _gd_features(spark, sf_dir)
+    w, _ = _gd_fit(feats, ("x1", "x2"), 10)
     centers = feats.agg(
-        (d12(F.col("x1")) / F.count(F.lit(1))).alias("mx1"),
-        (d12(F.col("x2")) / F.count(F.lit(1))).alias("mx2"),
+        (qsum(F.col("x1"), 12) / F.count(F.lit(1))).alias("mx1"),
+        (qsum(F.col("x2"), 12) / F.count(F.lit(1))).alias("mx2"),
     )
-    q9i = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")
     phis = feats.crossJoin(F.broadcast(centers)).select(
         (F.lit(w[1]) * (F.col("x1") - F.col("mx1"))).alias("phi1"),
         (F.lit(w[2]) * (F.col("x2") - F.col("mx2"))).alias("phi2"),
@@ -3391,16 +3258,15 @@ def ml_shap_linear(spark, sf_dir):
     return phis.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_examples"),
         F.round(
-            F.sum(q9i(F.abs(F.col("phi1")))).cast("double") / F.lit(1e9) / F.count(F.lit(1)),
+            qsum(F.abs(F.col("phi1")), 9) / F.count(F.lit(1)),
             6,
         ).alias("mean_abs_shap_recency"),
         F.round(
-            F.sum(q9i(F.abs(F.col("phi2")))).cast("double") / F.lit(1e9) / F.count(F.lit(1)),
+            qsum(F.abs(F.col("phi2")), 9) / F.count(F.lit(1)),
             6,
         ).alias("mean_abs_shap_events"),
         F.round(
-            F.sum(q9i(F.col("phi1") + F.col("phi2"))).cast("double")
-            / F.lit(1e9)
+            qsum(F.col("phi1") + F.col("phi2"), 9)
             / F.count(F.lit(1)),
             6,
         ).alias("mean_total_attribution"),
@@ -3491,7 +3357,7 @@ def ml_learning_curve(spark, sf_dir, iters: int = 5):
         F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"),
         F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),
     )
-    feats = (
+    feats = ckpt(  # feeds every GD step of every slice
         s.crossJoin(F.broadcast(mx))
         .select(
             "b",
@@ -3499,32 +3365,15 @@ def ml_learning_curve(spark, sf_dir, iters: int = 5):
             (F.col("ne").cast("double") / F.col("maxne")).alias("x2"),
             F.col("churned").cast("double").alias("y"),
         )
-        .localCheckpoint(eager=True)  # feeds every GD step of every slice
     )
-    d12 = lambda c: (F.sum(q12dec(c)).cast("double") / F.lit(1e12))
     out = []
     for nb in (2, 4, 6, 8):
-        train = feats.filter(F.col("b") < nb)
-        n_tr = train.count()  # bounded driver scalar (the 1/n in the update)
-        w = (0.0, 0.0, 0.0)
-        for _ in range(iters):
-            z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-            resid = 1.0 / (1.0 + F.exp(-z)) - F.col("y")
-            g = train.agg(
-                d12(resid).alias("g0"),
-                d12(resid * F.col("x1")).alias("g1"),
-                d12(resid * F.col("x2")).alias("g2"),
-            ).collect()[0]
-            w = (
-                w[0] - 0.5 * g["g0"] / n_tr,
-                w[1] - 0.5 * g["g1"] / n_tr,
-                w[2] - 0.5 * g["g2"] / n_tr,
-            )
+        w, n_tr = _gd_fit(feats.filter(F.col("b") < nb), ("x1", "x2"), iters)
         zh = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
         p = 1.0 / (1.0 + F.exp(-zh))
         ll = feats.filter(F.col("b") >= 8).agg(
             F.round(
-                d12(-(F.col("y") * F.log(p) + (1.0 - F.col("y")) * F.log(1.0 - p)))
+                qsum(-(F.col("y") * F.log(p) + (1.0 - F.col("y")) * F.log(1.0 - p)), 12)
                 / F.count(F.lit(1)),
                 6,
             ).alias("holdout_logloss")
@@ -3601,28 +3450,19 @@ def ml_platt_scaling(spark, sf_dir, iters: int = 5):
     one combinable aggregate + a 2-double broadcast."""
     s2 = _rec_scored2(spark, sf_dir)
     mx = s2.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
-    feats = (
+    feats = ckpt(
         s2.crossJoin(F.broadcast(mx))
         .select(
             (F.col("rec").cast("double") / F.col("maxrec")).alias("s"),
             F.col("churned").cast("double").alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
-    n = feats.count()
-    d12 = lambda c: (F.sum(q12dec(c)).cast("double") / F.lit(1e12))
-    w = (0.0, 0.0)
-    for _ in range(iters):
-        z = F.lit(w[0]) + F.lit(w[1]) * F.col("s")
-        resid = 1.0 / (1.0 + F.exp(-z)) - F.col("y")
-        g = feats.agg(
-            d12(resid).alias("g0"), d12(resid * F.col("s")).alias("g1")
-        ).collect()[0]
-        w = (w[0] - 0.5 * g["g0"] / n, w[1] - 0.5 * g["g1"] / n)
+    w, n = _gd_fit(feats, ("s",), iters)
     clip = F.greatest(F.least(F.col("s"), F.lit(0.999999)), F.lit(0.000001))
     p = 1.0 / (1.0 + F.exp(-(F.lit(w[0]) + F.lit(w[1]) * F.col("s"))))
-    ll = lambda prob: d12(
-        -(F.col("y") * F.log(prob) + (1.0 - F.col("y")) * F.log(1.0 - prob))
+    ll = lambda prob: qsum(
+        -(F.col("y") * F.log(prob) + (1.0 - F.col("y")) * F.log(1.0 - prob)),
+        12,
     ) / F.lit(float(n))
     out = feats.agg(
         F.round(ll(clip), 6).alias("logloss_raw"),
@@ -3739,9 +3579,6 @@ def ml_logrank_test(spark, sf_dir):
             .alias("d"),
         )
     )
-    q12 = lambda c: F.sum(
-        F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)")
-    ).cast("double") / F.lit(1e12)
     vterm = F.when(
         F.col("n") > 1,
         F.col("d")
@@ -3752,8 +3589,8 @@ def ml_logrank_test(spark, sf_dir):
     ).otherwise(0.0)
     sums = ar.agg(
         F.sum(F.col("d1").cast("bigint")).cast("bigint").alias("o1"),
-        q12(F.col("d") * F.col("n1") / F.col("n")).alias("e1"),
-        q12(vterm).alias("v"),
+        qsum(F.col("d") * F.col("n1") / F.col("n"), 12).alias("e1"),
+        qsum(vterm, 12).alias("v"),
     )
     diff = F.col("o1") - F.col("e1")
     return sums.select(
@@ -3873,7 +3710,7 @@ def ml_bh_fdr(spark, sf_dir):
     ps = zs.select(
         "event_type",
         "z",
-        (F.floor(F.least(F.lit(1.0), 1.0 - erf) * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)).alias(
+        qround(F.least(F.lit(1.0), 1.0 - erf), 9).alias(
             "p"
         ),
     )
@@ -4012,7 +3849,7 @@ def ml_price_elasticity(spark, sf_dir):
     MLlib, no second pass; the closed form (nΣxy − ΣxΣy)/(nΣx² − (Σx)²)
     runs on the 25-row brand table. At 100 TB the single shuffle on
     brand is the whole cost. ln() terms quantize at 1e-6 into DECIMAL
-    before summation (q6dec discipline, DECIMAL(38,12) for the
+    before summation (qdec discipline, DECIMAL(38,12) for the
     products) so both engines see identical sums."""
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_quantity") > 0) & (F.col("l_extendedprice") > 0)
@@ -4025,7 +3862,7 @@ def ml_price_elasticity(spark, sf_dir):
     )
     lq = F.log(F.col("l_quantity").cast("double"))
 
-    def qsum(c, scale):
+    def qsum_at(c, scale):
         return F.sum(
             F.floor(c * F.lit(1e6) + F.lit(0.5)).cast(f"decimal(38,{scale})")
         ).cast("double") / F.lit(1e6)
@@ -4036,10 +3873,10 @@ def ml_price_elasticity(spark, sf_dir):
         .groupBy("brand")
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            qsum(F.col("lp"), 6).alias("sx"),
-            qsum(F.col("lq"), 6).alias("sy"),
-            qsum(F.col("lp") * F.col("lp"), 12).alias("sxx"),
-            qsum(F.col("lp") * F.col("lq"), 12).alias("sxy"),
+            qsum_at(F.col("lp"), 6).alias("sx"),
+            qsum_at(F.col("lq"), 6).alias("sy"),
+            qsum_at(F.col("lp") * F.col("lp"), 12).alias("sxx"),
+            qsum_at(F.col("lp") * F.col("lq"), 12).alias("sxy"),
         )
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -4136,17 +3973,8 @@ def ml_cramers_v(spark, sf_dir):
         F.max("n").alias("n"),
         F.max("r").alias("r"),
         F.max("k").alias("k"),
-        (
-            F.sum(
-                F.floor(
-                    (F.col("c") - F.col("e"))
-                    * (F.col("c") - F.col("e"))
-                    / F.col("e")
-                    * F.lit(1e6)
-                    + F.lit(0.5)
-                ).cast("decimal(38,6)")
-            ).cast("double")
-            / F.lit(1e6)
+        qsum(
+            (F.col("c") - F.col("e")) * (F.col("c") - F.col("e")) / F.col("e")
         ).alias("chi2"),
     )
     n, r, k = F.col("n"), F.col("r"), F.col("k")
@@ -4249,8 +4077,7 @@ def ml_evalue_sequential(spark, sf_dir):
     wday = Window.orderBy("day")
     cm = (
         F.sum(
-            F.floor((F.lit(0.25) * F.col("zd") - F.lit(0.03125)) * F.lit(1e6) + F.lit(0.5))
-            .cast("decimal(38,6)")
+            qdec(F.lit(0.25) * F.col("zd") - F.lit(0.03125))
         ).over(wday)
     )
     e = z.select("day", "zd", (cm.cast("double") / F.lit(1e6)).alias("lec"))
@@ -4386,7 +4213,6 @@ def _nb_scored(spark, sf_dir):
     n_wc = train.groupBy(F.col("lang").alias("c"), "word").agg(
         F.sum("n_dw").cast("double").alias("n_wc")
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")
     cw = (
         classes.crossJoin(vocab)
         .crossJoin(F.broadcast(v_size))
@@ -4394,7 +4220,7 @@ def _nb_scored(spark, sf_dir):
         .select(
             "c",
             "word",
-            q6(
+            qdec(
                 F.log(
                     (F.coalesce(F.col("n_wc"), F.lit(0.0)) + 1.0)
                     / (F.col("tot_c") + F.col("v"))
@@ -4403,7 +4229,7 @@ def _nb_scored(spark, sf_dir):
         )
     )
     priors = classes.crossJoin(F.broadcast(n_train)).select(
-        "c", q6(F.log(F.col("n_docs") / F.col("n"))).alias("pr_q")
+        "c", qdec(F.log(F.col("n_docs") / F.col("n"))).alias("pr_q")
     )
     return (
         test.join(cw, "word")
@@ -4739,25 +4565,19 @@ def ml_cox_score(spark, sf_dir):
             * (F.col("rsx2").cast("double") / F.col("n_r").cast("double") - xbar * xbar)
         ).alias("v_j"),
     )
-    q12sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)"))
-        .cast("double")
-        / F.lit(1e12)
-    )
     sums = terms.agg(
-        q12sum(F.col("u_j")).alias("u"),
-        q12sum(F.col("v_j")).alias("v"),
+        qsum(F.col("u_j"), 12).alias("u"),
+        qsum(F.col("v_j"), 12).alias("v"),
         F.count(F.lit(1)).cast("bigint").alias("n_event_times"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     chi2 = F.col("u") * F.col("u") / F.col("v")
     return sums.select(
         "n_event_times",
-        q6(F.col("u")).alias("u"),
-        q6(F.col("v")).alias("v"),
-        q6(chi2).alias("chi2"),
-        q6(F.col("u") / F.sqrt("v")).alias("z_stat"),
-        q6(
+        qround(F.col("u")).alias("u"),
+        qround(F.col("v")).alias("v"),
+        qround(chi2).alias("chi2"),
+        qround(F.col("u") / F.sqrt("v")).alias("z_stat"),
+        qround(
             F.lit(1.0) - F.expr(_ERFC_AS.format(x="sqrt(u * u / v / 2.0)"))
         ).alias("p_value"),
     )
@@ -4852,36 +4672,24 @@ def ml_poisson_glm(spark, sf_dir):
             (F.col("c_acctbal").cast("double") / F.lit(1000.0)).alias("z"),
         )
     )
-    q12sum = lambda col: (
-        F.sum(F.floor(col * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)"))
-        .cast("double")
-        / F.lit(1e12)
-    )
-    q12 = lambda col: F.floor(col * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
     params = data.agg(
-        (
-            F.floor(
-                F.log(
-                    F.sum(F.col("y").cast("bigint")).cast("double") / F.count(F.lit(1))
-                )
-                * F.lit(1e9)
-                + F.lit(0.5)
-            )
-            / F.lit(1e9)
+        qround(
+            F.log(F.sum(F.col("y").cast("bigint")).cast("double") / F.count(F.lit(1))),
+            9,
         ).alias("b0"),
         F.lit(0.0).alias("b1"),
     )
     for _ in range(4):
-        mu = q12(F.exp(F.col("b0") + F.col("b1") * F.col("z")))
+        mu = qround(F.exp(F.col("b0") + F.col("b1") * F.col("z")), 12)
         s = (
             data.crossJoin(F.broadcast(params))
             .groupBy("b0", "b1")
             .agg(
-                q12sum(F.col("y") - mu).alias("g0"),
-                q12sum(F.col("z") * (F.col("y") - mu)).alias("g1"),
-                q12sum(mu).alias("h00"),
-                q12sum(F.col("z") * mu).alias("h01"),
-                q12sum(F.col("z") * F.col("z") * mu).alias("h11"),
+                qsum(F.col("y") - mu, 12).alias("g0"),
+                qsum(F.col("z") * (F.col("y") - mu), 12).alias("g1"),
+                qsum(mu, 12).alias("h00"),
+                qsum(F.col("z") * mu, 12).alias("h01"),
+                qsum(F.col("z") * F.col("z") * mu, 12).alias("h11"),
             )
         )
         det = F.col("h00") * F.col("h11") - F.col("h01") * F.col("h01")
@@ -4889,29 +4697,28 @@ def ml_poisson_glm(spark, sf_dir):
             (F.col("b0") + (F.col("h11") * F.col("g0") - F.col("h01") * F.col("g1")) / det).alias("b0"),
             (F.col("b1") + (F.col("h00") * F.col("g1") - F.col("h01") * F.col("g0")) / det).alias("b1"),
         )
-    mu = q12(F.exp(F.col("b0") + F.col("b1") * F.col("z")))
+    mu = qround(F.exp(F.col("b0") + F.col("b1") * F.col("z")), 12)
     dev_term = F.lit(2.0) * (
         F.when(
             F.col("y") > 0,
             F.col("y")
-            * (F.floor(F.log(F.col("y") / mu) * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)),
+            * qround(F.log(F.col("y") / mu), 9),
         ).otherwise(F.lit(0.0))
         - (F.col("y") - mu)
     )
-    q6 = lambda col: F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         data.crossJoin(F.broadcast(params))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_customers"),
             F.any_value("b0").alias("_b0"),
             F.any_value("b1").alias("_b1"),
-            q12sum(dev_term).alias("_dev"),
+            qsum(dev_term, 12).alias("_dev"),
         )
         .select(
             "n_customers",
-            q6(F.col("_b0")).alias("b0"),
-            q6(F.col("_b1")).alias("b1"),
-            q6(F.col("_dev")).alias("deviance"),
+            qround(F.col("_b0")).alias("b0"),
+            qround(F.col("_b1")).alias("b1"),
+            qround(F.col("_dev")).alias("deviance"),
             F.lit(4).cast("bigint").alias("iterations"),
         )
     )
@@ -5013,7 +4820,7 @@ def ml_doubly_robust(spark, sf_dir):
     cells = policy.groupBy(
         F.col("logged_action").alias("action"), F.col("bucket").alias("cbucket")
     ).agg(
-        (F.sum(F.col("reward").cast("decimal(38,6)")).cast("double") / F.count(F.lit(1))).alias("qhat")
+        (dsum(F.col("reward")) / F.count(F.lit(1))).alias("qhat")
     )
     qp = cells.select(
         F.col("action").alias("pi_action"),
@@ -5037,15 +4844,11 @@ def ml_doubly_robust(spark, sf_dir):
             .alias("w"),
         )
     )
-    q6sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
-    )
     sums = terms.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        q6sum(F.col("q_pi")).alias("sdm"),
-        q6sum(F.col("w") * F.col("reward")).alias("sips"),
-        q6sum(F.col("q_pi") + F.col("w") * (F.col("reward") - F.col("q_a"))).alias("sdr"),
+        qsum(F.col("q_pi")).alias("sdm"),
+        qsum(F.col("w") * F.col("reward")).alias("sips"),
+        qsum(F.col("q_pi") + F.col("w") * (F.col("reward") - F.col("q_a"))).alias("sdr"),
     )
     return sums.select(
         F.col("n").alias("n_users"),
@@ -5190,9 +4993,7 @@ def ml_bradley_terry(spark, sf_dir):
         )
     )
     ratings = wtot.select("brand", F.lit(1.0).alias("r"))
-    q12sum = lambda c: (
-        F.sum(c.cast("decimal(38,12)")).cast("double") / F.lit(1e12)
-    )
+    q12sum = lambda c: dsum(c, 12) / F.lit(1e12)
     for _ in range(4):
         ra = ratings.select(F.col("brand").alias("ba"), F.col("r").alias("r_a"))
         rb = ratings.select(F.col("brand").alias("bb"), F.col("r").alias("r_b"))
@@ -5218,22 +5019,14 @@ def ml_bradley_terry(spark, sf_dir):
             "brand", (F.col("w_s") / F.col("denom")).alias("raw")
         )
         s = raw.agg(
-            (
-                F.sum(F.floor(F.col("raw") * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)"))
-                .cast("double")
-                / F.lit(1e12)
-            ).alias("s")
+            qsum(F.col("raw"), 12).alias("s")
         )
         ratings = ckpt(
             raw.crossJoin(F.broadcast(s)).select(
                 "brand",
-                (
-                    F.floor(F.col("raw") / F.col("s") * F.lit(1e12) + F.lit(0.5))
-                    / F.lit(1e12)
-                ).alias("r"),
+                qround(F.col("raw") / F.col("s"), 12).alias("r"),
             )
         )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     w = Window.orderBy(F.desc("r"), F.asc("brand"))
     return (
         wtot.select("brand", "games", "wins")
@@ -5242,7 +5035,7 @@ def ml_bradley_terry(spark, sf_dir):
             "brand",
             "games",
             "wins",
-            q6(F.col("r")).alias("rating"),
+            qround(F.col("r")).alias("rating"),
             F.row_number().over(w).cast("bigint").alias("rank"),
         )
     )
@@ -5329,7 +5122,7 @@ def ml_permutation_test(spark, sf_dir):
         .alias("y"),
     ).select("user_id", "y", (F.col("user_id") % 2).alias("g"))
     per_user = ckpt(per_user)
-    yq = F.floor(F.col("y") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")
+    yq = qdec(F.col("y"))
     zero = F.lit(0).cast("decimal(38,6)")
     mean_side = lambda cond: (
         F.sum(F.when(cond, yq).otherwise(zero)).cast("double")
@@ -5372,21 +5165,20 @@ def ml_permutation_test(spark, sf_dir):
         / F.nullif(F.sum(F.when(F.col("side") == s, 1).otherwise(0)), F.lit(0))
     )
     per_perm = perms.groupBy("p").agg((mean_p(1) - mean_p(0)).alias("d_p"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     tally = per_perm.crossJoin(F.broadcast(obs)).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_perms"),
         F.sum(
-            F.when(F.abs(q6(F.col("d_p"))) >= F.abs(q6(F.col("d_obs"))), 1).otherwise(0)
+            F.when(F.abs(qround(F.col("d_p"))) >= F.abs(qround(F.col("d_obs"))), 1).otherwise(0)
         )
         .cast("bigint")
         .alias("n_extreme"),
     )
     return obs.crossJoin(F.broadcast(tally)).select(
         "n_users",
-        q6(F.col("d_obs")).alias("obs_diff"),
+        qround(F.col("d_obs")).alias("obs_diff"),
         "n_perms",
         "n_extreme",
-        q6(
+        qround(
             (F.col("n_extreme") + F.lit(1.0)) / (F.col("n_perms") + F.lit(1.0))
         ).alias("p_value"),
     )
@@ -5470,11 +5262,7 @@ def ml_iv_wald(spark, sf_dir):
     g = ckpt(
         per_user.groupBy("z").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            (
-                F.sum(F.floor(F.col("y") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-                .cast("double")
-                / F.lit(1e6)
-            ).alias("sy"),
+            qsum(F.col("y")).alias("sy"),
             F.sum("x").cast("bigint").alias("sx"),
             F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
         )
@@ -5498,14 +5286,13 @@ def ml_iv_wald(spark, sf_dir):
         (F.col("mx1") - F.col("mx0")).alias("itt_x"),
         (F.col("v1") + F.col("v0")).alias("var_itt_x"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     fstat = F.col("itt_x") * F.col("itt_x") / F.col("var_itt_x")
     return w.select(
         "n_users",
-        q6(F.col("itt_y")).alias("itt_y"),
-        q6(F.col("itt_x")).alias("itt_x"),
-        q6(fstat).alias("first_stage_f"),
-        q6(F.col("itt_y") / F.col("itt_x")).alias("beta_iv"),
+        qround(F.col("itt_y")).alias("itt_y"),
+        qround(F.col("itt_x")).alias("itt_x"),
+        qround(fstat).alias("first_stage_f"),
+        qround(F.col("itt_y") / F.col("itt_x")).alias("beta_iv"),
         (fstat < F.lit(10.0)).alias("weak_instrument"),
     )
 
@@ -5628,38 +5415,32 @@ def ml_raking_ipf(spark, sf_dir):
         .crossJoin(F.broadcast(treg.agg(F.sum("k").cast("double").alias("sk"))))
         .select("region", (F.col("k") * F.col("t") / F.col("sk")).alias("target"))
     )
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
-    q9sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")).cast("double")
-        / F.lit(1e9)
-    )
     w = cells.select("seg", "region", "n", F.col("n").cast("double").alias("w"))
     for _ in range(4):
-        rs = w.groupBy("seg").agg(q9sum(F.col("w")).alias("s"))
+        rs = w.groupBy("seg").agg(qsum(F.col("w"), 9).alias("s"))
         w = (
             w.join(F.broadcast(rs), "seg")
             .join(F.broadcast(mseg), "seg")
             .select(
                 "seg", "region", "n",
-                q12(F.col("w") * F.col("target") / F.col("s")).alias("w"),
+                qround(F.col("w") * F.col("target") / F.col("s"), 12).alias("w"),
             )
         )
-        cs = w.groupBy("region").agg(q9sum(F.col("w")).alias("s"))
+        cs = w.groupBy("region").agg(qsum(F.col("w"), 9).alias("s"))
         w = ckpt(
             w.join(F.broadcast(cs), "region")
             .join(F.broadcast(mreg), "region")
             .select(
                 "seg", "region", "n",
-                q12(F.col("w") * F.col("target") / F.col("s")).alias("w"),
+                qround(F.col("w") * F.col("target") / F.col("s"), 12).alias("w"),
             )
         )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return w.select(
         "seg",
         "region",
         "n",
-        q6(F.col("w")).alias("weight"),
-        q6(F.col("w") / F.col("n")).alias("raking_factor"),
+        qround(F.col("w")).alias("weight"),
+        qround(F.col("w") / F.col("n")).alias("raking_factor"),
     )
 
 
@@ -5725,7 +5506,7 @@ def ml_oaxaca_blinder(spark, sf_dir):
     no second pass, no iteration. 100 TB shape: one star-free
     left-join + one 2-group aggregate."""
     spend = t(spark, sf_dir, "orders").groupBy("o_custkey").agg(
-        F.sum(q6dec(F.col("o_totalprice"))).alias("sq")
+        F.sum(qdec(F.col("o_totalprice"))).alias("sq")
     )
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal")
     frame = (
@@ -5737,21 +5518,13 @@ def ml_oaxaca_blinder(spark, sf_dir):
             (F.col("c_acctbal").cast("double") / F.lit(1000.0)).alias("x"),
         )
     )
-    q9s = lambda c: (
-        F.sum(F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")).cast("double")
-        / F.lit(1e9)
-    )
-    q6s = lambda c: (
-        F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
-    )
     m = ckpt(
         frame.groupBy("seg").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            q9s(F.col("x")).alias("sx"),
-            q6s(F.col("y")).alias("sy"),
-            q9s(F.col("x") * F.col("x")).alias("sxx"),
-            q6s(F.col("x") * F.col("y")).alias("sxy"),
+            qsum(F.col("x"), 9).alias("sx"),
+            qsum(F.col("y")).alias("sy"),
+            qsum(F.col("x") * F.col("x"), 9).alias("sxx"),
+            qsum(F.col("x") * F.col("y")).alias("sxy"),
         )
     )
     b = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -5776,15 +5549,14 @@ def ml_oaxaca_blinder(spark, sf_dir):
             F.col("b").alias("bb"), F.col("a").alias("abb"),
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     endow = F.col("bb") * (F.col("mxa") - F.col("mxb"))
     coeff = F.col("mxa") * (F.col("ba") - F.col("bb")) + (F.col("aa") - F.col("abb"))
     return fa.crossJoin(fb).select(
         (F.col("na") + F.col("nb")).cast("bigint").alias("n_customers"),
-        q6(F.col("mya") - F.col("myb")).alias("gap"),
-        q6(endow).alias("endowments"),
-        q6(coeff).alias("coefficients"),
-        q6(endow + coeff).alias("decomposition_total"),
+        qround(F.col("mya") - F.col("myb")).alias("gap"),
+        qround(endow).alias("endowments"),
+        qround(coeff).alias("coefficients"),
+        qround(endow + coeff).alias("decomposition_total"),
     )
 
 
@@ -5887,7 +5659,6 @@ def ml_knn_classify(spark, sf_dir):
         .filter(F.col("pr") == 1)
         .select("query_id", "true_label", F.col("n_label").alias("pred_label"))
     )
-    q6 = lambda col: F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return pred.groupBy(F.col("true_label").alias("label")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_queries"),
         F.sum(F.when(F.col("pred_label") == F.col("true_label"), 1).otherwise(0))
@@ -5897,7 +5668,7 @@ def ml_knn_classify(spark, sf_dir):
         "label",
         "n_queries",
         "n_correct",
-        q6(F.col("n_correct").cast("double") / F.col("n_queries")).alias("accuracy"),
+        qround(F.col("n_correct").cast("double") / F.col("n_queries")).alias("accuracy"),
     )
 
 
@@ -5938,7 +5709,6 @@ def _ipw_weighted_frame(spark, sf_dir):
     pbar = strata.agg(
         (F.sum("treated").cast("double") / F.count(F.lit(1))).alias("pt")
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     return (
         strata.join(F.broadcast(prop), "s")
         .crossJoin(F.broadcast(pbar))
@@ -5948,8 +5718,8 @@ def _ipw_weighted_frame(spark, sf_dir):
             "ne",
             "n_view",
             "n_error",
-            F.when(F.col("treated") == 1, q9(F.col("pt") / F.col("e")))
-            .otherwise(q9((F.lit(1.0) - F.col("pt")) / (F.lit(1.0) - F.col("e"))))
+            F.when(F.col("treated") == 1, qround(F.col("pt") / F.col("e"), 9))
+            .otherwise(qround((F.lit(1.0) - F.col("pt")) / (F.lit(1.0) - F.col("e")), 9))
             .alias("w"),
         )
     )
@@ -6022,15 +5792,11 @@ def ml_ipw_ate(spark, sf_dir):
     weights q9-quantized at the division and every weighted sum in q6
     DECIMAL. One user aggregate + one 3-row propensity join."""
     wtd = _ipw_weighted_frame(spark, sf_dir).select("treated", "y", "w")
-    q6sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
-    )
     sums = ckpt(
         wtd.groupBy("treated").agg(
-            q6sum(F.col("w")).alias("sw"),
-            q6sum(F.col("w") * F.col("w")).alias("sww"),
-            q6sum(F.col("w") * F.col("y")).alias("swy"),
+            qsum(F.col("w")).alias("sw"),
+            qsum(F.col("w") * F.col("w")).alias("sww"),
+            qsum(F.col("w") * F.col("y")).alias("swy"),
             F.count(F.lit(1)).cast("bigint").alias("n"),
         )
     )
@@ -6041,14 +5807,13 @@ def ml_ipw_ate(spark, sf_dir):
             F.col("n").alias(f"n_{prefix}"),
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return side(1, "treated").crossJoin(side(0, "control")).select(
         (F.col("n_treated") + F.col("n_control")).cast("bigint").alias("n_users"),
-        q6(F.col("mu_treated")).alias("mu_treated"),
-        q6(F.col("mu_control")).alias("mu_control"),
-        q6(F.col("mu_treated") - F.col("mu_control")).alias("ate_ipw"),
-        q6(F.col("ess_treated")).alias("ess_treated"),
-        q6(F.col("ess_control")).alias("ess_control"),
+        qround(F.col("mu_treated")).alias("mu_treated"),
+        qround(F.col("mu_control")).alias("mu_control"),
+        qround(F.col("mu_treated") - F.col("mu_control")).alias("ate_ipw"),
+        qround(F.col("ess_treated")).alias("ess_treated"),
+        qround(F.col("ess_control")).alias("ess_control"),
     )
 
 
@@ -6161,7 +5926,7 @@ def ml_quantile_treatment_effect(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"),
+                qdec(F.col("value")),
             ).otherwise(F.lit(0).cast("decimal(38,6)"))
         )
         .cast("bigint")
@@ -6180,7 +5945,7 @@ def ml_quantile_treatment_effect(spark, sf_dir):
         F.broadcast(deciles),
         F.col("rn") == ((F.col("decile") * F.col("n") + 9) / 10).cast("bigint"),
     )
-    q6 = lambda c: F.floor(c / F.lit(1e6) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    q6 = lambda c: qround(c / F.lit(1e6))
     return picks.groupBy("decile").agg(
         q6(F.max(F.when(F.col("arm") == 1, F.col("yq")))).alias("q_treated"),
         q6(F.max(F.when(F.col("arm") == 0, F.col("yq")))).alias("q_control"),
@@ -6283,11 +6048,7 @@ def ml_meta_analysis_dl(spark, sf_dir):
     )
     m = frame.groupBy("region", "arm").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (
-            F.sum(F.floor(F.col("y") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("double")
-            / F.lit(1e6)
-        ).alias("sy"),
+        qsum(F.col("y")).alias("sy"),
         (
             F.sum(
                 F.floor(F.col("y") * F.col("y") * F.lit(1e2) + F.lit(0.5)).cast(
@@ -6312,24 +6073,21 @@ def ml_meta_analysis_dl(spark, sf_dir):
             ).alias("v"),
         )
     )
-    q9sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")).cast("double")
-        / F.lit(1e9)
-    )
     fixed = strata.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        q9sum(F.lit(1.0) / F.col("v")).alias("sw"),
-        q9sum(F.col("e") / F.col("v")).alias("swe"),
-        q9sum(F.lit(1.0) / (F.col("v") * F.col("v"))).alias("sww"),
+        qsum(F.lit(1.0) / F.col("v"), 9).alias("sw"),
+        qsum(F.col("e") / F.col("v"), 9).alias("swe"),
+        qsum(F.lit(1.0) / (F.col("v") * F.col("v")), 9).alias("sww"),
     )
     qstat = (
         strata.crossJoin(F.broadcast(fixed))
         .groupBy("k", "sw", "swe", "sww")
         .agg(
-            q9sum(
+            qsum(
                 (F.col("e") - F.col("swe") / F.col("sw"))
                 * (F.col("e") - F.col("swe") / F.col("sw"))
-                / F.col("v")
+                / F.col("v"),
+                9,
             ).alias("q")
         )
         .select(
@@ -6355,19 +6113,18 @@ def ml_meta_analysis_dl(spark, sf_dir):
         .groupBy("k", "ef", "q", "tau2")
         .agg(
             (
-                q9sum(F.col("e") / (F.col("v") + F.col("tau2")))
-                / q9sum(F.lit(1.0) / (F.col("v") + F.col("tau2")))
+                qsum(F.col("e") / (F.col("v") + F.col("tau2")), 9)
+                / qsum(F.lit(1.0) / (F.col("v") + F.col("tau2")), 9)
             ).alias("er")
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return rand.select(
         F.col("k").alias("k_strata"),
-        q6(F.col("ef")).alias("effect_fixed"),
-        q6(F.col("er")).alias("effect_random"),
-        q6(F.col("q")).alias("q_stat"),
-        q6(F.col("tau2")).alias("tau2"),
-        q6(
+        qround(F.col("ef")).alias("effect_fixed"),
+        qround(F.col("er")).alias("effect_random"),
+        qround(F.col("q")).alias("q_stat"),
+        qround(F.col("tau2")).alias("tau2"),
+        qround(
             F.greatest(
                 F.lit(0.0),
                 (F.col("q") - (F.col("k") - F.lit(1.0)))
@@ -6458,10 +6215,8 @@ def ml_weibull_survival_grid(spark, sf_dir):
         )
     )
     grid = spark.range(0, 21).select((F.lit(0.5) + F.lit(0.125) * F.col("id")).alias("k"))
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    lnt = q9(F.log(F.col("th")))
-    tk = q6(F.exp(F.col("k") * lnt))
+    lnt = qround(F.log(F.col("th")), 9)
+    tk = qround(F.exp(F.col("k") * lnt))
     moments = (
         users.crossJoin(F.broadcast(grid))
         .groupBy("k")
@@ -6475,7 +6230,7 @@ def ml_weibull_survival_grid(spark, sf_dir):
                 F.sum(
                     F.when(
                         F.col("churned") == 1,
-                        F.floor(lnt * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)"),
+                        qdec(lnt, 9),
                     ).otherwise(F.lit(0).cast("decimal(38,9)"))
                 ).cast("double")
                 / F.lit(1e9)
@@ -6484,22 +6239,22 @@ def ml_weibull_survival_grid(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_u"),
         )
     )
-    loglik = q6(
-        F.col("n_c") * q9(F.log(F.col("k")))
-        - F.col("n_c") * q9(F.log(F.col("sk") / F.col("n_c")))
+    loglik = qround(
+        F.col("n_c") * qround(F.log(F.col("k")), 9)
+        - F.col("n_c") * qround(F.log(F.col("sk") / F.col("n_c")), 9)
         + (F.col("k") - F.lit(1.0)) * F.col("sl")
         - F.col("n_c")
     )
     ll = moments.withColumn("loglik", loglik)
     w = Window.orderBy(F.desc("loglik"), F.asc("k"))
-    lam = q6(F.exp(q9(F.log(F.col("sk") / F.col("n_c"))) / F.col("k")))
+    lam = qround(F.exp(qround(F.log(F.col("sk") / F.col("n_c")), 9) / F.col("k")))
     return (
         ll.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select(
-            q6(F.col("k")).alias("k_shape"),
-            q6(lam).alias("lambda_hours"),
-            q6(F.col("loglik")).alias("loglik"),
+            qround(F.col("k")).alias("k_shape"),
+            qround(lam).alias("lambda_hours"),
+            qround(F.col("loglik")).alias("loglik"),
             F.col("n_u").alias("n_users"),
             F.col("n_c").alias("n_churned"),
         )
@@ -6602,31 +6357,27 @@ def ml_silhouette_rfm(spark, sf_dir):
         F.stddev_pop("v2").alias("s2"),
         F.stddev_pop("v3").alias("s3"),
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     z = ckpt(
         feats.crossJoin(F.broadcast(mom)).select(
             "user_id",
             "seg",
-            q9((F.col("v1") - F.col("m1")) / F.col("s1")).alias("z1"),
-            q9((F.col("v2") - F.col("m2")) / F.col("s2")).alias("z2"),
-            q9((F.col("v3") - F.col("m3")) / F.col("s3")).alias("z3"),
+            qround((F.col("v1") - F.col("m1")) / F.col("s1"), 9).alias("z1"),
+            qround((F.col("v2") - F.col("m2")) / F.col("s2"), 9).alias("z2"),
+            qround((F.col("v3") - F.col("m3")) / F.col("s3"), 9).alias("z3"),
         )
     )
-    q9sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")).cast("double")
-        / F.lit(1e9)
-    )
     cent = z.groupBy(F.col("seg").alias("cseg")).agg(
-        (q9sum(F.col("z1")) / F.count(F.lit(1))).alias("c1"),
-        (q9sum(F.col("z2")) / F.count(F.lit(1))).alias("c2"),
-        (q9sum(F.col("z3")) / F.count(F.lit(1))).alias("c3"),
+        (qsum(F.col("z1"), 9) / F.count(F.lit(1))).alias("c1"),
+        (qsum(F.col("z2"), 9) / F.count(F.lit(1))).alias("c2"),
+        (qsum(F.col("z3"), 9) / F.count(F.lit(1))).alias("c3"),
     )
-    d = q9(
+    d = qround(
         F.sqrt(
             (F.col("z1") - F.col("c1")) * (F.col("z1") - F.col("c1"))
             + (F.col("z2") - F.col("c2")) * (F.col("z2") - F.col("c2"))
             + (F.col("z3") - F.col("c3")) * (F.col("z3") - F.col("c3"))
-        )
+        ),
+        9,
     )
     dists = z.crossJoin(F.broadcast(cent)).select("user_id", "seg", "cseg", d.alias("d"))
     ab = dists.groupBy("user_id", "seg").agg(
@@ -6635,15 +6386,14 @@ def ml_silhouette_rfm(spark, sf_dir):
     )
     s = F.when(
         F.greatest("a", "b") > 0,
-        q9((F.col("b") - F.col("a")) / F.greatest("a", "b")),
+        qround((F.col("b") - F.col("a")) / F.greatest("a", "b"), 9),
     ).otherwise(F.lit(0.0))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         ab.select("seg", s.alias("s"))
         .groupBy("seg")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
-            q6(q9sum(F.col("s")) / F.count(F.lit(1))).alias("mean_silhouette"),
+            qround(qsum(F.col("s"), 9) / F.count(F.lit(1))).alias("mean_silhouette"),
         )
     )
 
@@ -6736,16 +6486,12 @@ def ml_covariate_balance(spark, sf_dir):
             F.col(cov).cast("double").alias("x"),
         )
         long = part if long is None else long.unionByName(part)
-    q6sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
-    )
     m = long.groupBy("covariate", "treated").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum(F.col("x").cast("bigint")).cast("bigint").alias("sx"),
         F.sum((F.col("x") * F.col("x")).cast("bigint")).cast("bigint").alias("sxx"),
-        q6sum(F.col("w")).alias("sw"),
-        q6sum(F.col("w") * F.col("x")).alias("swx"),
+        qsum(F.col("w")).alias("sw"),
+        qsum(F.col("w") * F.col("x")).alias("swx"),
     )
     var_term = (
         F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col("sx") / F.col("n")
@@ -6759,11 +6505,10 @@ def ml_covariate_balance(spark, sf_dir):
         F.max(F.when(F.col("treated") == 0, F.col("swx") / F.col("sw"))).alias("mwc"),
     )
     pooled = F.sqrt((F.col("vt") + F.col("vc")) / F.lit(2.0))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return sides.select(
         "covariate",
-        q6((F.col("mt") - F.col("mc")) / pooled).alias("smd_raw"),
-        q6((F.col("mwt") - F.col("mwc")) / pooled).alias("smd_weighted"),
+        qround((F.col("mt") - F.col("mc")) / pooled).alias("smd_raw"),
+        qround((F.col("mwt") - F.col("mwc")) / pooled).alias("smd_weighted"),
         (F.abs((F.col("mwt") - F.col("mwc")) / pooled) < 0.1).alias("balanced"),
     )
 
@@ -6840,7 +6585,7 @@ def ml_yuen_trimmed_t(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"),
+                qdec(F.col("value")),
             ).otherwise(F.lit(0).cast("decimal(38,6)"))
         )
         .cast("bigint")
@@ -6913,14 +6658,13 @@ def ml_yuen_trimmed_t(spark, sf_dir):
         (F.col("n1") + F.col("n0")).cast("bigint").alias("n_users"),
         F.col("g1").cast("bigint").alias("trimmed_per_side"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     tstat = F.col("diff") / F.sqrt("d")
     return stat.select(
         "n_users",
         "trimmed_per_side",
-        q6(F.col("diff")).alias("trimmed_diff"),
-        q6(tstat).alias("t_stat"),
-        q6(
+        qround(F.col("diff")).alias("trimmed_diff"),
+        qround(tstat).alias("t_stat"),
+        qround(
             F.lit(1.0)
             - F.expr(_ERFC_AS.format(x="abs(diff / sqrt(d)) / sqrt(2.0)"))
         ).alias("p_value"),
@@ -7003,12 +6747,11 @@ def ml_harrell_c(spark, sf_dir):
         .cast("bigint")
         .alias("tied"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return pairs.select(
         "comparable",
         "concordant",
         "tied",
-        q6(
+        qround(
             (F.lit(2) * F.col("concordant") + F.col("tied")).cast("double")
             / (F.lit(2) * F.col("comparable"))
         ).alias("c_index"),
@@ -7086,12 +6829,10 @@ def ml_brier_decomposition(spark, sf_dir):
     sum. Turns the single Brier number into the WHY — calibration
     problem vs discrimination problem — for the cost of one extra
     10-row aggregate."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     s = _rec_scored(spark, sf_dir)
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
     p = s.crossJoin(F.broadcast(mx)).select(
-        "churned", q9(F.col("rec") / F.col("maxrec")).alias("phat")
+        "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
     )
     binned = p.select(
         F.least(F.floor(F.col("phat") * 10).cast("bigint"), F.lit(9).cast("bigint")).alias("b"),
@@ -7101,19 +6842,8 @@ def ml_brier_decomposition(spark, sf_dir):
     per_bin = ckpt(
         binned.groupBy("b").agg(
             F.count(F.lit(1)).cast("bigint").alias("nb"),
-            (
-                F.sum(F.floor(F.col("phat") * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)"))
-                .cast("double")
-                / F.lit(1e9)
-            ).alias("sp"),
-            (
-                F.sum(
-                    F.floor(F.col("phat") * F.col("phat") * F.lit(1e12) + F.lit(0.5)).cast(
-                        "decimal(38,12)"
-                    )
-                ).cast("double")
-                / F.lit(1e12)
-            ).alias("spp"),
+            qsum(F.col("phat"), 9).alias("sp"),
+            qsum(F.col("phat") * F.col("phat"), 12).alias("spp"),
             F.sum("churned").cast("bigint").alias("so"),
         )
     )
@@ -7121,23 +6851,19 @@ def ml_brier_decomposition(spark, sf_dir):
         F.sum("nb").cast("bigint").alias("n"),
         (F.sum("so").cast("double") / F.sum("nb")).alias("obar"),
     )
-    q9sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")).cast("double")
-        / F.lit(1e9)
-    )
     pbar = F.col("sp") / F.col("nb")
     obin = F.col("so").cast("double") / F.col("nb")
     parts = (
         per_bin.crossJoin(F.broadcast(tot))
         .groupBy("obar", "n")
         .agg(
-            (q9sum(F.col("nb") * (pbar - obin) * (pbar - obin)) / F.first("n")).alias("rel"),
+            (qsum(F.col("nb") * (pbar - obin) * (pbar - obin), 9) / F.first("n")).alias("rel"),
             (
-                q9sum(F.col("nb") * (obin - F.col("obar")) * (obin - F.col("obar")))
+                qsum(F.col("nb") * (obin - F.col("obar")) * (obin - F.col("obar")), 9)
                 / F.first("n")
             ).alias("res"),
             (
-                q9sum(F.col("spp") - F.col("sp") * F.col("sp") / F.col("nb"))
+                qsum(F.col("spp") - F.col("sp") * F.col("sp") / F.col("nb"), 9)
                 / F.first("n")
             ).alias("wbv"),
         )
@@ -7151,11 +6877,11 @@ def ml_brier_decomposition(spark, sf_dir):
     )
     return parts.select(
         F.col("n").alias("n_users"),
-        q6(F.col("rel")).alias("reliability"),
-        q6(F.col("res")).alias("resolution"),
-        q6(F.col("unc")).alias("uncertainty"),
-        q6(F.col("wbv")).alias("within_bin_var"),
-        q6(F.col("rel") - F.col("res") + F.col("unc") + F.col("wbv")).alias(
+        qround(F.col("rel")).alias("reliability"),
+        qround(F.col("res")).alias("resolution"),
+        qround(F.col("unc")).alias("uncertainty"),
+        qround(F.col("wbv")).alias("within_bin_var"),
+        qround(F.col("rel") - F.col("res") + F.col("unc") + F.col("wbv")).alias(
             "brier_reconstructed"
         ),
     )
@@ -7234,11 +6960,7 @@ def ml_kruskal_wallis(spark, sf_dir):
     )
     stats = ranked.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (
-            F.sum(F.floor(F.col("mid_rank") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("double")
-            / F.lit(1e6)
-        ).alias("sr"),
+        qsum(F.col("mid_rank")).alias("sr"),
     )
     tot = stats.agg(
         F.sum("n").cast("bigint").alias("nt"), F.count(F.lit(1)).cast("bigint").alias("k")
@@ -7278,15 +7000,14 @@ def ml_kruskal_wallis(spark, sf_dir):
         )
         .crossJoin(F.broadcast(ties))
     )
-    q6 = lambda cc: F.floor(cc * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     corr = F.lit(1.0) - F.col("tsum").cast("double") / (
         F.col("nt").cast("double") * F.col("nt") * F.col("nt") - F.col("nt")
     )
     return h.select(
         F.col("nt").cast("bigint").alias("n_rows"),
         F.col("k").cast("bigint").alias("k_groups"),
-        q6(F.col("h_raw")).alias("h_raw"),
-        q6(F.col("h_raw") / corr).alias("h_stat"),
+        qround(F.col("h_raw")).alias("h_raw"),
+        qround(F.col("h_raw") / corr).alias("h_stat"),
         (F.col("h_raw") / corr > F.lit(9.487729)).alias("reject_equal_medians"),
     )
 
@@ -7369,29 +7090,14 @@ def ml_icc_anova(spark, sf_dir):
     m = ckpt(
         frame.groupBy("g").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            (
-                F.sum(F.floor(F.col("y") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-                .cast("double")
-                / F.lit(1e6)
-            ).alias("sy"),
-            (
-                F.sum(
-                    F.floor(F.col("y") * F.col("y") * F.lit(1e6) + F.lit(0.5)).cast(
-                        "decimal(38,6)"
-                    )
-                ).cast("double")
-                / F.lit(1e6)
-            ).alias("syy"),
+            qsum(F.col("y")).alias("sy"),
+            qsum(F.col("y") * F.col("y")).alias("syy"),
         )
     )
     tot = m.agg(
         F.sum("n").cast("double").alias("nt"),
         F.count(F.lit(1)).cast("double").alias("k"),
-        (
-            F.sum(F.floor(F.col("sy") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("double")
-            / F.lit(1e6)
-        ).alias("gs"),
+        qsum(F.col("sy")).alias("gs"),
         F.sum(
             F.floor(F.col("n") * F.col("n") * F.lit(1) + F.lit(0.5)).cast("decimal(38,0)")
         )
@@ -7402,19 +7108,8 @@ def ml_icc_anova(spark, sf_dir):
         m.crossJoin(F.broadcast(tot))
         .groupBy("nt", "k", "gs", "snn")
         .agg(
-            (
-                F.sum(
-                    F.floor(
-                        F.col("sy") * F.col("sy") / F.col("n") * F.lit(1e6) + F.lit(0.5)
-                    ).cast("decimal(38,6)")
-                ).cast("double")
-                / F.lit(1e6)
-            ).alias("sqq"),
-            (
-                F.sum(F.floor(F.col("syy") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-                .cast("double")
-                / F.lit(1e6)
-            ).alias("syys"),
+            qsum(F.col("sy") * F.col("sy") / F.col("n")).alias("sqq"),
+            qsum(F.col("syy")).alias("syys"),
         )
         .select(
             "nt",
@@ -7431,16 +7126,15 @@ def ml_icc_anova(spark, sf_dir):
         (F.col("ssb") / (F.col("k") - F.lit(1.0))).alias("msb"),
         (F.col("ssw") / (F.col("nt") - F.col("k"))).alias("msw"),
     )
-    q6 = lambda cc: F.floor(cc * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     icc = (F.col("msb") - F.col("msw")) / (
         F.col("msb") + (F.col("k0") - F.lit(1.0)) * F.col("msw")
     )
     return msq.select(
         F.col("nt").cast("bigint").alias("n_rows"),
         F.col("k").cast("bigint").alias("k_groups"),
-        q6(F.col("msb")).alias("ms_between"),
-        q6(F.col("msw")).alias("ms_within"),
-        q6(icc).alias("icc1"),
+        qround(F.col("msb")).alias("ms_between"),
+        qround(F.col("msw")).alias("ms_within"),
+        qround(icc).alias("icc1"),
         (icc > F.lit(0.05)).alias("clustering_matters"),
     )
 
@@ -7496,18 +7190,16 @@ def ml_friedman_test(spark, sf_dir):
     frame."""
     o = t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice", "o_orderpriority")
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    q6f = lambda cc: F.floor(cc * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cells = (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy(F.col("o_orderpriority").alias("blk"), F.col("c_mktsegment").alias("trt"))
         .agg(
             (
-                F.sum(q6dec(F.col("o_totalprice"))).cast("double")
-                / F.lit(1e6)
+                qsum(F.col("o_totalprice"))
                 / F.count(F.lit(1))
             ).alias("m")
         )
-        .select("blk", "trt", q6f(F.col("m")).alias("mq"))
+        .select("blk", "trt", qround(F.col("m")).alias("mq"))
     )
     ranked = cells.select(
         "blk",
@@ -7521,18 +7213,14 @@ def ml_friedman_test(spark, sf_dir):
         .over(Window.partitionBy("blk", "mq"))
         .alias("r"),
     )
-    q6sum = lambda cc: (
-        F.sum(F.floor(cc * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
-    )
     sums = ranked.groupBy("trt").agg(
-        q6sum(F.col("r")).alias("rj"),
+        qsum(F.col("r")).alias("rj"),
         F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
     )
     stat = sums.agg(
         F.any_value("n_blocks").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        q6sum(F.col("rj") * F.col("rj")).alias("srr"),
+        qsum(F.col("rj") * F.col("rj")).alias("srr"),
     )
     qq = (
         F.lit(12.0) / (F.col("n") * F.col("k") * (F.col("k") + F.lit(1.0))) * F.col("srr")
@@ -7541,7 +7229,7 @@ def ml_friedman_test(spark, sf_dir):
     return stat.select(
         F.col("n").cast("bigint").alias("n_blocks"),
         F.col("k").cast("bigint").alias("k_treatments"),
-        q6f(qq).alias("friedman_q"),
+        qround(qq).alias("friedman_q"),
         (qq > F.lit(9.487729)).alias("reject_equal_treatments"),
     )
 
@@ -7614,8 +7302,7 @@ def ml_brown_forsythe(spark, sf_dir):
         )
         .agg(
             (
-                F.sum(q6dec(F.col("o_totalprice"))).cast("double")
-                / F.lit(1e6)
+                qsum(F.col("o_totalprice"))
                 / F.lit(1000.0)
             ).alias("rev")
         )
@@ -7640,28 +7327,24 @@ def ml_brown_forsythe(spark, sf_dir):
     z = daily.join(F.broadcast(gmed), "dow").select(
         "dow", F.abs(F.col("rev") - F.col("m")).alias("z")
     )
-    q6sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
-    )
     gm = ckpt(
         z.groupBy("dow").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            q6sum(F.col("z")).alias("sz"),
-            q6sum(F.col("z") * F.col("z")).alias("szz"),
+            qsum(F.col("z")).alias("sz"),
+            qsum(F.col("z") * F.col("z")).alias("szz"),
         )
     )
     tot = gm.agg(
         F.sum("n").cast("double").alias("nt"),
         F.count(F.lit(1)).cast("double").alias("k"),
-        q6sum(F.col("sz")).alias("gs"),
+        qsum(F.col("sz")).alias("gs"),
     )
     ss = (
         gm.crossJoin(F.broadcast(tot))
         .groupBy("nt", "k", "gs")
         .agg(
-            q6sum(F.col("sz") * F.col("sz") / F.col("n")).alias("sqq"),
-            q6sum(F.col("szz")).alias("szzs"),
+            qsum(F.col("sz") * F.col("sz") / F.col("n")).alias("sqq"),
+            qsum(F.col("szz")).alias("szzs"),
         )
         .select(
             "nt",
@@ -7670,14 +7353,13 @@ def ml_brown_forsythe(spark, sf_dir):
             (F.col("szzs") - F.col("sqq")).alias("ssw"),
         )
     )
-    q6f = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     fstat = (F.col("ssb") / (F.col("k") - F.lit(1.0))) / (
         F.col("ssw") / (F.col("nt") - F.col("k"))
     )
     return ss.select(
         F.col("nt").cast("bigint").alias("n_days"),
         F.col("k").cast("bigint").alias("k_groups"),
-        q6f(fstat).alias("bf_stat"),
+        qround(fstat).alias("bf_stat"),
         (fstat > F.lit(2.1)).alias("reject_equal_variances"),
     )
 
@@ -7727,21 +7409,15 @@ def ml_tjur_r2(spark, sf_dir):
     separate in LEVEL. Same (phat, churned) frame as the Brier pair
     (shared _rec_scored helper / mirrored CTEs); the whole statistic
     is one 2-group DECIMAL mean."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     s = _rec_scored(spark, sf_dir)
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
     p = s.crossJoin(F.broadcast(mx)).select(
-        "churned", q9(F.col("rec") / F.col("maxrec")).alias("phat")
+        "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
     )
     sides = ckpt(
         p.groupBy("churned").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            (
-                F.sum(F.floor(F.col("phat") * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)"))
-                .cast("double")
-                / F.lit(1e9)
-            ).alias("sp"),
+            qsum(F.col("phat"), 9).alias("sp"),
         )
     )
     side = lambda v, pre: F.broadcast(
@@ -7751,9 +7427,9 @@ def ml_tjur_r2(spark, sf_dir):
     )
     return side(1, "1").crossJoin(side(0, "0")).select(
         (F.col("n1") + F.col("n0")).cast("bigint").alias("n_users"),
-        q6(F.col("m1")).alias("mean_p_churned"),
-        q6(F.col("m0")).alias("mean_p_retained"),
-        q6(F.col("m1") - F.col("m0")).alias("tjur_r2"),
+        qround(F.col("m1")).alias("mean_p_churned"),
+        qround(F.col("m0")).alias("mean_p_retained"),
+        qround(F.col("m1") - F.col("m0")).alias("tjur_r2"),
     )
 
 
@@ -7800,12 +7476,11 @@ def ml_mcc(spark, sf_dir):
     float expression at the end. Completes the eval family's scalar
     tier: AUC (ranking), Brier (calibration), Tjur (separation),
     MCC (thresholded decision quality)."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     s = _rec_scored(spark, sf_dir)
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
     pred = s.crossJoin(F.broadcast(mx)).select(
         "churned",
-        (q9(F.col("rec") / F.col("maxrec")) >= 0.5).cast("int").alias("yhat"),
+        (qround(F.col("rec") / F.col("maxrec"), 9) >= 0.5).cast("int").alias("yhat"),
     )
     cm = pred.agg(
         F.sum(F.when((F.col("churned") == 1) & (F.col("yhat") == 1), 1).otherwise(0))
@@ -7821,7 +7496,6 @@ def ml_mcc(spark, sf_dir):
         .cast("bigint")
         .alias("tn"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     mcc = (
         F.col("tp").cast("double") * F.col("tn")
         - F.col("fp").cast("double") * F.col("fn")
@@ -7831,7 +7505,7 @@ def ml_mcc(spark, sf_dir):
         * (F.col("tn") + F.col("fp"))
         * (F.col("tn") + F.col("fn"))
     )
-    return cm.select("tp", "fp", "fn", "tn", q6(mcc).alias("mcc"))
+    return cm.select("tp", "fp", "fn", "tn", qround(mcc).alias("mcc"))
 
 
 @register(
@@ -7897,11 +7571,7 @@ def ml_cohen_d(spark, sf_dir):
     m = ckpt(
         per_user.groupBy("arm").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            (
-                F.sum(F.floor(F.col("y") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-                .cast("double")
-                / F.lit(1e6)
-            ).alias("sy"),
+            qsum(F.col("y")).alias("sy"),
             (
                 F.sum(
                     F.floor(F.col("y") * F.col("y") * F.lit(1e2) + F.lit(0.5)).cast(
@@ -7931,16 +7601,15 @@ def ml_cohen_d(spark, sf_dir):
         "diff",
         (F.col("diff") / F.sqrt(F.col("ss") / (F.col("n1") + F.col("n0") - F.lit(2.0)))).alias("cohen_d"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     nn = F.col("n1") + F.col("n0")
     return d.select(
         nn.cast("bigint").alias("n_users"),
-        q6(F.col("diff")).alias("mean_diff"),
-        q6(F.col("cohen_d")).alias("cohen_d"),
-        q6(
+        qround(F.col("diff")).alias("mean_diff"),
+        qround(F.col("cohen_d")).alias("cohen_d"),
+        qround(
             F.col("cohen_d") * (F.lit(1.0) - F.lit(3.0) / (F.lit(4.0) * nn - F.lit(9.0)))
         ).alias("hedges_g"),
-        q6(
+        qround(
             F.sqrt(
                 nn / (F.col("n1") * F.col("n0"))
                 + F.col("cohen_d") * F.col("cohen_d") / (F.lit(2.0) * nn)
@@ -8007,16 +7676,15 @@ def ml_risk_reduction(spark, sf_dir):
         )
     )
     w = side(0, "0").crossJoin(side(1, "1"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     arr = F.col("p0") - F.col("p1")
     return w.select(
         (F.col("n0") + F.col("n1")).cast("bigint").alias("n_users"),
-        q6(F.col("p0")).alias("risk_control"),
-        q6(F.col("p1")).alias("risk_treated"),
-        q6(arr).alias("arr"),
-        q6(arr / F.col("p0")).alias("rrr"),
-        q6(F.lit(1.0) / F.abs(arr)).alias("nnt"),
-        q6(
+        qround(F.col("p0")).alias("risk_control"),
+        qround(F.col("p1")).alias("risk_treated"),
+        qround(arr).alias("arr"),
+        qround(arr / F.col("p0")).alias("rrr"),
+        qround(F.lit(1.0) / F.abs(arr)).alias("nnt"),
+        qround(
             (F.col("p1") / (F.lit(1.0) - F.col("p1")))
             / (F.col("p0") / (F.lit(1.0) - F.col("p0")))
         ).alias("odds_ratio"),
@@ -8079,12 +7747,11 @@ def ml_youden_j(spark, sf_dir):
     frame, exact integer cells, J q9-quantized before the
     deterministic argmax (thr tiebreak). Same churn-score frame as
     the rest of the eval family."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     s = _rec_scored(spark, sf_dir)
     mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
     p = ckpt(
         s.crossJoin(F.broadcast(mx)).select(
-            "churned", q9(F.col("rec") / F.col("maxrec")).alias("phat")
+            "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
         )
     )
     tot = p.agg(
@@ -8105,22 +7772,22 @@ def ml_youden_j(spark, sf_dir):
     )
     scored = cand.crossJoin(F.broadcast(tot)).select(
         "thr",
-        q9(
+        qround(
             F.col("tp").cast("double") / F.col("np")
-            - F.col("fp").cast("double") / F.col("nn")
+            - F.col("fp").cast("double") / F.col("nn"),
+            9,
         ).alias("j"),
         (F.col("tp").cast("double") / F.col("np")).alias("sens"),
         (F.lit(1.0) - F.col("fp").cast("double") / F.col("nn")).alias("spec"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     w = Window.orderBy(F.desc("j"), F.asc("thr"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select(
-            q6(F.col("thr")).alias("best_threshold"),
-            q6(F.col("j")).alias("youden_j"),
-            q6(F.col("sens")).alias("sensitivity"),
-            q6(F.col("spec")).alias("specificity"),
+            qround(F.col("thr")).alias("best_threshold"),
+            qround(F.col("j")).alias("youden_j"),
+            qround(F.col("sens")).alias("sensitivity"),
+            qround(F.col("spec")).alias("specificity"),
         )
     )

@@ -31,7 +31,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 
 from ..registry import register
-from ._shared import t
+from ._shared import qround, t
 
 _MAGIC = b"SY1"
 _A1, _A2 = 2654435761, 40503  # affine sample-stream multipliers
@@ -399,11 +399,10 @@ def mm_caption_align(spark, sf_dir):
             F.first("enorm").alias("enorm"),
         )
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     cos = F.col("dot") / (F.col("tnorm") * F.col("enorm"))
     return dots.select(
         "doc_id",
-        half_up6(cos).alias("align_score"),
+        qround(cos).alias("align_score"),
         (cos > 0.05).alias("is_aligned"),
     )
 

@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import ckpt, q6dec, t
+from ._shared import ckpt, dsum, qdec, qround, qsum, t
 
 
 @register(
@@ -836,13 +836,12 @@ def dq_fk_cardinality(spark, sf_dir):
         .groupBy("fk_edge", "parent")
         .agg(F.count(F.lit(1)).alias("n_children"))
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return per.groupBy("fk_edge").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_parents"),
         F.sum("n_children").cast("bigint").alias("n_children"),
         F.min("n_children").cast("bigint").alias("min_fanout"),
         F.max("n_children").cast("bigint").alias("max_fanout"),
-        q6(F.sum("n_children").cast("double") / F.count(F.lit(1))).alias("avg_fanout"),
+        qround(F.sum("n_children").cast("double") / F.count(F.lit(1))).alias("avg_fanout"),
     )
 
 
@@ -942,14 +941,13 @@ def dq_freshness(spark, sf_dir):
     fact table twice. is_stale flags streams more than 24 h behind."""
     # One event pass: the per-type table feeds both the global max and
     # the final projection (duplicate-scan sweep discipline).
-    per = (
+    per = ckpt(
         t(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.max("ts").alias("last_ts"),
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
-        .localCheckpoint(eager=True)
     )
     g = per.agg(F.max("last_ts").alias("gmax"))
     lag_us = F.expr("timestampdiff(MICROSECOND, last_ts, gmax)")
@@ -1332,9 +1330,9 @@ def dq_drift_ks(spark, sf_dir):
         .cast("long")
         .alias("is_a"),
     )
-    per_v = tagged.groupBy("v").agg(
+    per_v = ckpt(tagged.groupBy("v").agg(
         F.sum("is_a").alias("na"), F.sum(1 - F.col("is_a")).alias("nb")
-    ).localCheckpoint(eager=True)  # feeds the totals AND the ECDF window
+    ))  # feeds the totals AND the ECDF window
     tot = per_v.agg(
         F.sum("na").cast("double").alias("ta"), F.sum("nb").cast("double").alias("tb")
     )
@@ -1624,15 +1622,9 @@ def dq_reconciliation(spark, sf_dir):
         t(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(
-            F.sum(
-                (
-                    F.col("l_extendedprice")
-                    * (1.0 - F.col("l_discount"))
-                    * (1.0 + F.col("l_tax"))
-                ).cast("decimal(38,6)")
-            )
-            .cast("double")
-            .alias("li_total")
+            dsum(
+                F.col("l_extendedprice") * (1.0 - F.col("l_discount")) * (1.0 + F.col("l_tax"))
+            ).alias("li_total")
         )
     )
     o = t(spark, sf_dir, "orders").select(
@@ -1660,7 +1652,7 @@ def dq_reconciliation(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
             F.round(F.max("adiff"), 6).alias("max_abs_diff"),
             F.round(
-                F.sum(F.col("adiff").cast("decimal(38,6)")).cast("double"), 6
+                dsum(F.col("adiff")), 6
             ).alias("total_abs_diff"),
         )
         .orderBy("recon_class")
@@ -1897,22 +1889,21 @@ def dq_dp_count_release(spark, sf_dir):
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("true_n"))
     )
-    q9 = lambda col: F.floor(col * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda col: F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     v = (
         F.conv(F.substring(F.md5(F.concat(F.lit("dp:"), F.col("nation"))), 1, 13), 16, 10)
         .cast("bigint")
         / F.lit(4503599627370496.0)
         - F.lit(0.5)
     )
-    noise = -F.when(v < 0, F.lit(-1.0)).otherwise(F.lit(1.0)) * q9(
-        F.log(F.lit(1.0) - F.lit(2.0) * F.abs(v))
+    noise = -F.when(v < 0, F.lit(-1.0)).otherwise(F.lit(1.0)) * qround(
+        F.log(F.lit(1.0) - F.lit(2.0) * F.abs(v)),
+        9,
     )
     return per_nation.select(
         "nation",
         "true_n",
         F.lit(1.0).alias("epsilon"),
-        q6(noise).alias("noise"),
+        qround(noise).alias("noise"),
         F.greatest(
             F.lit(0).cast("bigint"),
             F.floor(F.col("true_n") + noise + F.lit(0.5)).cast("bigint"),
@@ -1957,7 +1948,7 @@ def dq_arithmetic_contract(spark, sf_dir):
     micro-unit totals here makes later reconciliation (cf.
     dq_reconciliation) a constant-time diff instead of a re-scan. Each
     derived term is half-up micro-quantized BEFORE the sum (the
-    rounding contract money must obey, same grain as q6dec), so the
+    rounding contract money must obey, same grain as qdec), so the
     totals are exact BIGINTs. One scan, one map-side-combinable
     aggregate, O(flags) output."""
     li = t(spark, sf_dir, "lineitem")
@@ -2126,13 +2117,12 @@ def dq_terminal_digit(spark, sf_dir):
         .select("d", F.coalesce("n", F.lit(0)).cast("bigint").alias("n"))
     )
     tot = counts.agg(F.sum("n").cast("bigint").alias("t"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     exp = F.col("t") / F.lit(10.0)
     return counts.crossJoin(F.broadcast(tot)).select(
         F.col("d").alias("digit"),
         "n",
-        q6(F.col("n").cast("double") / F.col("t")).alias("share"),
-        q6((F.col("n").cast("double") - exp) * (F.col("n") - exp) / exp).alias(
+        qround(F.col("n").cast("double") / F.col("t")).alias("share"),
+        qround((F.col("n").cast("double") - exp) * (F.col("n") - exp) / exp).alias(
             "chi2_term"
         ),
     )
@@ -2175,8 +2165,7 @@ def subquery_quantified(spark, sf_dir):
         .groupBy("c_mktsegment")
         .agg(
             (
-                F.sum(q6dec(F.col("o_totalprice"))).cast("double")
-                / F.lit(1e6)
+                qsum(F.col("o_totalprice"))
                 / F.count(F.lit(1))
             ).alias("avg_price")
         )
@@ -2273,24 +2262,21 @@ def dq_benford_mad(spark, sf_dir):
         ).select("d", F.coalesce("n", F.lit(0)).cast("bigint").alias("n"))
     )
     tot = counts.agg(F.sum("n").cast("double").alias("t"))
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    expected = q9(
+    expected = qround(
         (F.log((F.col("d") + 1).cast("double")) - F.log(F.col("d").cast("double")))
-        / F.log(F.lit(10.0))
+        / F.log(F.lit(10.0)),
+        9,
     )
     devs = counts.crossJoin(F.broadcast(tot)).select(
         "t", F.abs(F.col("n") / F.col("t") - expected).alias("dev")
     )
     mad = (
-        F.sum(F.floor(F.col("dev") * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)"))
-        .cast("double")
-        / F.lit(1e9)
+        qsum(F.col("dev"), 9)
         / F.lit(9.0)
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return devs.agg(
         F.first("t").cast("bigint").alias("n_values"),
-        q6(mad).alias("mad"),
+        qround(mad).alias("mad"),
         F.when(mad < 0.006, "close")
         .when(mad < 0.012, "acceptable")
         .when(mad < 0.015, "marginal")

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import ckpt, scratch_dir, t
+from ._shared import ckpt, dsum, qround, qsum, scratch_dir, t
 
 
 def _overlap_writes(*thunks):
@@ -164,7 +164,7 @@ def sink_upsert(spark, sf_dir):
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("sum_total"),
+            dsum(F.col("o_totalprice")).alias("sum_total"),
         )
     )
 
@@ -203,7 +203,7 @@ def scan_partition_pruned(spark, sf_dir):
     )
     return df.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
+        dsum(F.col("value")).alias("sum_value"),
     )
 
 
@@ -245,7 +245,7 @@ def scan_schema_evolution(spark, sf_dir):
         F.coalesce("o_orderpriority", F.lit("MISSING")).alias("priority")
     ).agg(
         F.count("*").alias("n_rows"),
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("sum_total"),
+        dsum(F.col("o_totalprice")).alias("sum_total"),
     )
 
 
@@ -399,7 +399,7 @@ def join_dpp(spark, sf_dir):
         .groupBy("report_day")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
+            dsum(F.col("value")).alias("sum_value"),
         )
     )
 
@@ -695,10 +695,7 @@ def sink_dynamic_partition_overwrite(spark, sf_dir):
     return back.groupBy("day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.round(
-            F.sum(
-                F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")
-            ).cast("double")
-            / F.lit(1e6),
+            qsum(F.col("value")),
             6,
         ).alias("sum_value"),
     )
@@ -1254,16 +1251,15 @@ def scan_partition_skew_audit(spark, sf_dir):
             ).alias("g")
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return stats.crossJoin(F.broadcast(gini)).select(
         "n_parts",
         "total_rows",
-        q6(
+        qround(
             F.col("max_rows").cast("double")
             / (F.col("total_rows").cast("double") / F.col("n_parts"))
         ).alias("max_over_avg"),
-        q6(F.col("max_rows").cast("double") / F.col("min_rows")).alias("max_over_min"),
-        q6(F.col("g")).alias("gini_rows"),
+        qround(F.col("max_rows").cast("double") / F.col("min_rows")).alias("max_over_min"),
+        qround(F.col("g")).alias("gini_rows"),
         (F.col("max_files") == 1).alias("one_file_per_partition"),
     )
 
@@ -1280,12 +1276,11 @@ def _cow_merge(spark, tbl, src_upd, src_del, src_ins):
     # (bounded), so it broadcasts; the target side is a column-pruned
     # scan of (o_orderkey, ym) only.
     src_keys = src_upd.select("o_orderkey").unionByName(src_del.select("o_orderkey"))
-    touched = (
+    touched = ckpt(  # bounded (months); read twice below
         stored.join(F.broadcast(src_keys), "o_orderkey", "left_semi")
         .select("ym")
         .unionByName(src_ins.select("ym"))
         .distinct()
-        .localCheckpoint(eager=True)  # bounded (months); read twice below
     )
     # COW rewrite of ONLY the touched months: update via left join,
     # delete via anti join, insert via union — one keyed pass over the
@@ -1428,7 +1423,7 @@ def sink_merge_into(spark, sf_dir):
         back.groupBy(F.col("ym").cast("string").alias("ym"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("price").cast("decimal(38,6)")).cast("double").alias("sum_total"),
+            dsum(F.col("price")).alias("sum_total"),
         )
         .join(F.broadcast(touched.withColumn("was_rewritten", F.lit(True))), "ym", "left")
         .select(
@@ -1538,7 +1533,7 @@ def scan_iceberg_snapshot(spark, sf_dir):
         agg = snap_df.agg(
             F.count_distinct(F.col("_metadata.file_path")).cast("bigint").alias("n_files"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("price").cast("decimal(38,6)")).cast("double").alias("sum_total"),
+            dsum(F.col("price")).alias("sum_total"),
         ).select(F.lit(snap).alias("snapshot"), "n_files", "n_rows", "sum_total")
         out = agg if out is None else out.unionByName(agg)
     return out
@@ -1719,8 +1714,7 @@ def scan_delta_log(spark, sf_dir):
         .agg(
             F.count_distinct("fp").cast("bigint").alias("n_files"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("price").cast("decimal(38,6)"))
-            .cast("double")
+            dsum(F.col("price"))
             .alias("sum_total"),
         )
         .select("version", "n_files", "n_rows", "sum_total")
@@ -1973,8 +1967,7 @@ def scan_delta_checkpoint(spark, sf_dir):
         .agg(
             F.count_distinct("fp").cast("bigint").alias("n_files"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("price").cast("decimal(38,6)"))
-            .cast("double")
+            dsum(F.col("price"))
             .alias("sum_total"),
         )
         .select(
@@ -2294,8 +2287,7 @@ def scan_delta_time_travel_ts(spark, sf_dir):
         .agg(
             F.count_distinct("fp").cast("bigint").alias("n_files"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.col("price").cast("decimal(38,6)"))
-            .cast("double")
+            dsum(F.col("price"))
             .alias("sum_total"),
         )
         .join(F.broadcast(consts), "probe")
@@ -2499,7 +2491,7 @@ def scan_delta_partition_values(spark, sf_dir):
     return scanned.groupBy("o_year").agg(
         F.count_distinct("fp").cast("bigint").alias("n_files"),
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("price").cast("decimal(38,6)")).cast("double").alias("sum_total"),
+        dsum(F.col("price")).alias("sum_total"),
         F.lit(n_live_total).cast("bigint").alias("n_live_total"),
         F.lit(n_pruned).cast("bigint").alias("n_files_pruned"),
         (
@@ -2714,7 +2706,7 @@ def scan_delta_deletion_vectors(spark, sf_dir):
     )
     return surviving.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("price").cast("decimal(38,6)")).cast("double").alias("sum_price"),
+        dsum(F.col("price")).alias("sum_price"),
         F.lit(len(live)).cast("bigint").alias("n_live_files"),
         F.lit(card_total).cast("bigint").alias("dv_cardinality"),
         (

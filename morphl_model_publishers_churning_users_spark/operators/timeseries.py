@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, q6dec, q12dec, t
+from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, t
 
 
 @register(
@@ -587,7 +587,7 @@ def ts_user_ltv(spark, sf_dir):
     combinable; the derived ratios are post-aggregate projections, so
     the whole feature block costs a single shuffle on user_id."""
     ev = t(spark, sf_dir, "events")
-    total = F.sum(F.col("value").cast("decimal(38,6)")).cast("double")
+    total = dsum(F.col("value"))
     tenure = F.datediff(F.to_date(F.max("ts")), F.to_date(F.min("ts"))).cast("bigint")
     return ev.groupBy("user_id").agg(
         F.min("ts").alias("first_seen"),
@@ -631,9 +631,9 @@ def ts_peak_concurrency(spark, sf_dir):
     (localCheckpoint) instead of letting Catalyst inline the event scan
     + aggregate into each leg."""
     ev = t(spark, sf_dir, "events")
-    iv = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+    iv = ckpt(ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
-    ).localCheckpoint(eager=True)
+    ))
     pts = iv.select("day", F.col("s").alias("t"), F.lit(1).alias("delta")).unionByName(
         iv.select("day", F.col("e").alias("t"), F.lit(-1).alias("delta"))
     )
@@ -699,9 +699,9 @@ def ts_interpolate_linear(spark, sf_dir):
     (localCheckpoint) instead of re-deriving the event scan + aggregate
     per consumer."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.round(F.sum(F.col("value").cast("decimal(38,6)")).cast("double"), 6).alias("v")
-    ).localCheckpoint(eager=True)
+    daily = ckpt(ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+        F.round(dsum(F.col("value")), 6).alias("v")
+    ))
     spans = daily.groupBy("user_id").agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     cal = spans.select("user_id", F.explode(F.sequence("d0", "d1")).alias("day"))
     g = cal.join(daily, ["user_id", "day"], "left")
@@ -919,15 +919,14 @@ def ts_anomaly_robust(spark, sf_dir):
     med = F.percentile(nd, F.lit(0.5)).over(w)
     p25 = F.percentile(nd, F.lit(0.25)).over(w)
     p75 = F.percentile(nd, F.lit(0.75)).over(w)
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     rz = (nd - med) / F.greatest(p75 - p25, F.lit(1.0))
     return daily.select(
         "event_type",
         "day",
         "n",
-        half_up6(med).alias("med7"),
-        half_up6(p75 - p25).alias("iqr7"),
-        half_up6(rz).alias("robust_z"),
+        qround(med).alias("med7"),
+        qround(p75 - p25).alias("iqr7"),
+        qround(rz).alias("robust_z"),
         (F.abs(rz) > 2.0).alias("is_anomaly"),
     )
 
@@ -1058,13 +1057,12 @@ def ts_forecast_linear(spark, sf_dir):
         F.max("x").alias("x_max"),
     )
     horizon = F.explode(F.sequence(F.lit(1), F.lit(7))).alias("h")
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return (
         fit.select("event_type", "slope", "icept", "x_max", horizon)
         .select(
             "event_type",
             (F.col("x_max") + F.col("h")).cast("bigint").alias("x"),
-            half_up6(F.col("icept") + F.col("slope") * (F.col("x_max") + F.col("h"))).alias(
+            qround(F.col("icept") + F.col("slope") * (F.col("x_max") + F.col("h"))).alias(
                 "forecast_n"
             ),
         )
@@ -1136,7 +1134,6 @@ def ts_holt_forecast(spark, sf_dir):
         "   'b', 0.3D * (0.5D * x.n + 0.5D * (acc.l + acc.b) - acc.l)"
         "        + 0.7D * acc.b))"
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return (
         daily.groupBy("event_type")
         .agg(F.expr(days_expr).alias("days"))
@@ -1148,9 +1145,9 @@ def ts_holt_forecast(spark, sf_dir):
         .select(
             "event_type",
             "n_days",
-            half_up6(F.col("st.l")).alias("level"),
-            half_up6(F.col("st.b")).alias("trend"),
-            half_up6(F.col("st.l") + 7 * F.col("st.b")).alias("forecast_7d"),
+            qround(F.col("st.l")).alias("level"),
+            qround(F.col("st.b")).alias("trend"),
+            qround(F.col("st.l") + 7 * F.col("st.b")).alias("forecast_7d"),
         )
     )
 
@@ -1201,7 +1198,7 @@ def ts_seasonal_decompose(spark, sf_dir):
     # re-derives the raw-event scan + aggregate once per consumer: the
     # expensive part of the op would run TWICE at 100 TB (caught by the
     # single-scan plan test).
-    trended = daily.select(
+    trended = ckpt(daily.select(
         "event_type",
         "day",
         "n",
@@ -1209,18 +1206,17 @@ def ts_seasonal_decompose(spark, sf_dir):
         (F.datediff("day", F.lit("1970-01-05").cast("date")) % 7)
         .cast("bigint")
         .alias("dow"),
-    ).localCheckpoint(eager=True)
+    ))
     seasonal = trended.groupBy("event_type", "dow").agg(
         F.avg(F.col("n") - F.col("trend")).alias("s")
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return trended.join(F.broadcast(seasonal), ["event_type", "dow"]).select(
         "event_type",
         "day",
         "n",
-        half_up6(F.col("trend")).alias("trend"),
-        half_up6(F.col("s")).alias("seasonal"),
-        half_up6(F.col("n") - F.col("trend") - F.col("s")).alias("residual"),
+        qround(F.col("trend")).alias("trend"),
+        qround(F.col("s")).alias("seasonal"),
+        qround(F.col("n") - F.col("trend") - F.col("s")).alias("residual"),
     )
 
 
@@ -1270,35 +1266,32 @@ def ts_autocorr(spark, sf_dir):
     chosen so quantized products stay exactly representable), and the
     final ratio quantizes at 1e-6."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("r")
-    ).localCheckpoint(eager=True)
-    q3 = lambda c: F.floor(c * F.lit(1e3) + F.lit(0.5)) / F.lit(1e3)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    d6 = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")
+    daily = ckpt(ev.groupBy(F.to_date("ts").alias("day")).agg(
+        dsum(F.col("value")).alias("r")
+    ))
     mu = daily.agg(
-        (d6(F.col("r")) / F.count(F.lit(1))).alias("mu")
+        (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
     )
     dev = daily.crossJoin(F.broadcast(mu)).select(
         "day", "r", (F.col("r") - F.col("mu")).alias("dev")
     )
-    den = dev.agg(d6(q3(F.col("dev") * F.col("dev"))).alias("den"))
+    den = dev.agg(dsum(qround(F.col("dev") * F.col("dev"), 3)).alias("den"))
     lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag_k"))
     a = dev.select("day", F.col("dev").alias("dev_a"))
     b = dev.select(F.col("day").alias("day_b"), F.col("dev").alias("dev_b"))
     pairs = (
         a.crossJoin(F.broadcast(lags))
         .join(b, F.expr("day_b = date_add(day, lag_k)"))
-        .select("lag_k", q3(F.col("dev_a") * F.col("dev_b")).alias("p"))
+        .select("lag_k", qround(F.col("dev_a") * F.col("dev_b"), 3).alias("p"))
     )
     return (
         pairs.groupBy("lag_k")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            d6(F.col("p")).alias("num"),
+            dsum(F.col("p")).alias("num"),
         )
         .crossJoin(F.broadcast(den))
-        .select("lag_k", "n_pairs", q6(F.col("num") / F.col("den")).alias("acf"))
+        .select("lag_k", "n_pairs", qround(F.col("num") / F.col("den")).alias("acf"))
     )
 
 
@@ -1332,19 +1325,18 @@ def ts_changepoint(spark, sf_dir):
     engines (a float cusum could flip the argmax between two near-tied
     peaks). Flags every day whose |cusum| equals the maximum."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("r")
-    ).localCheckpoint(eager=True)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    daily = ckpt(ev.groupBy(F.to_date("ts").alias("day")).agg(
+        dsum(F.col("value")).alias("r")
+    ))
     mu = daily.agg(
-        (F.sum(F.col("r").cast("decimal(38,6)")).cast("double") / F.count(F.lit(1))).alias("mu")
+        (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cs = (
         daily.crossJoin(F.broadcast(mu))
         .select(
             "day",
-            F.sum(q6(F.col("r") - F.col("mu")).cast("decimal(38,6)"))
+            F.sum(qround(F.col("r") - F.col("mu")).cast("decimal(38,6)"))
             .over(w)
             .cast("double")
             .alias("cusum"),
@@ -1353,7 +1345,7 @@ def ts_changepoint(spark, sf_dir):
     mx = cs.agg(F.max(F.abs("cusum")).alias("peak"))
     return cs.crossJoin(F.broadcast(mx)).select(
         "day",
-        q6(F.col("cusum")).alias("cusum"),
+        qround(F.col("cusum")).alias("cusum"),
         (F.abs("cusum") == F.col("peak")).alias("is_changepoint"),
     )
 
@@ -1502,7 +1494,6 @@ def ts_holt_winters(spark, sf_dir):
         f" 's4', {supd(4, 3)}, 's5', {supd(5, 4)}, 's6', {supd(6, 5)},"
         f" 's7', {supd(7, 6)}))"
     )
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     snext = (
         "(CASE pmod(st.i, 7) WHEN 0 THEN st.s1 WHEN 1 THEN st.s2"
         " WHEN 2 THEN st.s3 WHEN 3 THEN st.s4 WHEN 4 THEN st.s5"
@@ -1525,13 +1516,13 @@ def ts_holt_winters(spark, sf_dir):
     return base.select(
         "event_type",
         F.size("xs").cast("bigint").alias("n_days"),
-        half_up6(F.col("st.l")).alias("level"),
-        half_up6(F.col("st.b")).alias("trend"),
-        half_up6(
+        qround(F.col("st.l")).alias("level"),
+        qround(F.col("st.b")).alias("trend"),
+        qround(
             F.col("st.s1") + F.col("st.s2") + F.col("st.s3") + F.col("st.s4")
             + F.col("st.s5") + F.col("st.s6") + F.col("st.s7")
         ).alias("seasonal_sum"),
-        half_up6(F.col("st.l") + F.col("st.b") + F.expr(snext)).alias("forecast_next"),
+        qround(F.col("st.l") + F.col("st.b") + F.expr(snext)).alias("forecast_next"),
     )
 
 
@@ -1584,18 +1575,15 @@ def ts_periodogram(spark, sf_dir):
     1e-9, sums run in DECIMAL(38,12), and the final power is an exact
     integer floor of products of identical doubles."""
     ev = t(spark, sf_dir, "events")
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q3 = lambda c: F.floor(c * F.lit(1e3) + F.lit(0.5)) / F.lit(1e3)
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("r")
-    ).localCheckpoint(eager=True)
+    daily = ckpt(ev.groupBy(F.to_date("ts").alias("day")).agg(
+        dsum(F.col("value")).alias("r")
+    ))
     mu = daily.agg(
-        (F.sum(F.col("r").cast("decimal(38,6)")).cast("double") / F.count(F.lit(1))).alias("mu")
+        (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
     )
     w = Window.orderBy("day")
     idx = daily.crossJoin(F.broadcast(mu)).select(
-        F.row_number().over(w).alias("d"), q6(F.col("r") - F.col("mu")).alias("rd")
+        F.row_number().over(w).alias("d"), qround(F.col("r") - F.col("mu")).alias("rd")
     )
     periods = spark.range(2, 15).select(F.col("id").cast("int").alias("period"))
     phase = (
@@ -1606,12 +1594,11 @@ def ts_periodogram(spark, sf_dir):
     )
     terms = idx.crossJoin(F.broadcast(periods)).select(
         "period",
-        q9(F.col("rd") * q9(F.cos(phase))).alias("ct"),
-        q9(F.col("rd") * q9(F.sin(phase))).alias("st"),
+        qround(F.col("rd") * qround(F.cos(phase), 9), 9).alias("ct"),
+        qround(F.col("rd") * qround(F.sin(phase), 9), 9).alias("st"),
     )
-    d12 = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")
     sums = terms.groupBy("period").agg(
-        q3(d12(F.col("ct"))).alias("c3"), q3(d12(F.col("st"))).alias("s3")
+        qround(dsum(F.col("ct"), 12), 3).alias("c3"), qround(dsum(F.col("st"), 12), 3).alias("s3")
     )
     return sums.select(
         F.col("period").cast("bigint").alias("period"),
@@ -1672,9 +1659,6 @@ def ts_backtest_metrics(spark, sf_dir):
         F.lag("x", 1).over(w).alias("naive1"),
         F.lag("x", 7).over(w).alias("snaive7"),
     ).filter(F.col("snaive7").isNotNull())
-    d6 = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")
-    d12 = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     smape_term = (
         F.floor(
             F.abs(F.col("x") - F.col("snaive7"))
@@ -1686,13 +1670,13 @@ def ts_backtest_metrics(spark, sf_dir):
     )
     return lagged.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        q6(d6(F.abs(F.col("x") - F.col("naive1"))) / d6(F.col("x"))).alias(
+        qround(dsum(F.abs(F.col("x") - F.col("naive1"))) / dsum(F.col("x"))).alias(
             "wape_naive1"
         ),
-        q6(d6(F.abs(F.col("x") - F.col("snaive7"))) / d6(F.col("x"))).alias(
+        qround(dsum(F.abs(F.col("x") - F.col("snaive7"))) / dsum(F.col("x"))).alias(
             "wape_snaive7"
         ),
-        q6(d12(smape_term) / F.count(F.lit(1))).alias("smape_snaive7"),
+        qround(dsum(smape_term, 12) / F.count(F.lit(1))).alias("smape_snaive7"),
     )
 
 
@@ -1728,18 +1712,17 @@ def ts_lag_features(spark, sf_dir):
     exact reindexing."""
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("r")
+        dsum(F.col("value")).alias("r")
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     w = Window.partitionBy("user_id").orderBy("day")
     wf = w.rowsBetween(-6, Window.currentRow)
     return daily.select(
         "user_id",
         "day",
-        q6(F.col("r")).alias("r"),
-        q6(F.coalesce(F.lag("r", 1).over(w), F.lit(0.0))).alias("lag_1"),
-        q6(F.coalesce(F.lag("r", 7).over(w), F.lit(0.0))).alias("lag_7"),
-        q6(
+        qround(F.col("r")).alias("r"),
+        qround(F.coalesce(F.lag("r", 1).over(w), F.lit(0.0))).alias("lag_1"),
+        qround(F.coalesce(F.lag("r", 7).over(w), F.lit(0.0))).alias("lag_7"),
+        qround(
             F.sum(F.col("r").cast("decimal(38,6)")).over(wf).cast("double")
             / F.count(F.lit(1)).over(wf)
         ).alias("mean_7"),
@@ -1782,19 +1765,16 @@ def ts_cusum(spark, sf_dir):
     quantized once at 1e-9 and each S_t at 1e-6 so the argmax is
     cross-engine stable; ties break to the earliest day. O(types)
     output regardless of event volume."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     # The daily rollup (the only event-scale pass) feeds both the μ
     # aggregate and the cumulative window — materialize it once
     # (duplicate-scan sweep discipline; it is bounded at types×days).
-    daily = (
+    daily = ckpt(
         t(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     stats = daily.groupBy("event_type").agg(
-        q9(F.sum("n").cast("double") / F.count(F.lit(1))).alias("mu"),
+        qround(F.sum("n").cast("double") / F.count(F.lit(1)), 9).alias("mu"),
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
     )
     wc = Window.partitionBy("event_type").orderBy("day")
@@ -1804,7 +1784,7 @@ def ts_cusum(spark, sf_dir):
             "event_type",
             "day",
             "n_days",
-            q6(
+            qround(
                 F.sum("n").over(wc) - F.row_number().over(wc) * F.col("mu")
             ).alias("s_t"),
         )
@@ -1865,8 +1845,6 @@ def ts_theta_forecast(spark, sf_dir):
     quantization needed until output. The trend leg is OLS-on-index from
     integer power sums (slope quantized 1e-9). One daily aggregate + one
     per-type aggregate: O(types) rows out."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     daily = (
         t(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
@@ -1890,9 +1868,10 @@ def ts_theta_forecast(spark, sf_dir):
         F.sum(F.col("tix") * F.col("n")).cast("double").alias("stx"),
         F.sum(F.col("tix") * F.col("tix")).cast("double").alias("stt"),
     )
-    slope = q9(
+    slope = qround(
         (F.col("tn") * F.col("stx") - F.col("st") * F.col("sx"))
-        / (F.col("tn") * F.col("stt") - F.col("st") * F.col("st"))
+        / (F.col("tn") * F.col("stt") - F.col("st") * F.col("st")),
+        9,
     )
     fit = agg.select(
         "event_type",
@@ -1907,9 +1886,9 @@ def ts_theta_forecast(spark, sf_dir):
     return fit.select(
         "event_type",
         "n_days",
-        q6(F.col("level")).alias("ses_level"),
+        qround(F.col("level")).alias("ses_level"),
         "trend_slope",
-        q6(
+        qround(
             F.lit(0.5) * F.col("level")
             + F.lit(0.5) * (intercept + F.col("trend_slope") * (F.col("tn") + 1))
         ).alias("forecast_next"),
@@ -1964,15 +1943,12 @@ def ts_sax(spark, sf_dir):
     quantized at 1e-9 (IEEE sqrt is correctly rounded, so identical on
     both engines), each PAA z at 1e-6, and the letter comparison uses
     half-open intervals so a boundary value maps identically."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     # Materialized once: the daily rollup feeds both the μ/σ aggregate
     # and the PAA branch (duplicate-scan sweep discipline).
-    daily = (
+    daily = ckpt(
         t(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     wt = Window.partitionBy("event_type").orderBy("day")
     idx = daily.select(
@@ -1983,22 +1959,23 @@ def ts_sax(spark, sf_dir):
         # shifts every segment boundary differently per engine.
         F.floor((F.row_number().over(wt) - 1) / 5).cast("bigint").alias("seg"),
     )
-    mu = q9(F.sum("n").cast("double") / F.count(F.lit(1)))
-    var = q9(
+    mu = qround(F.sum("n").cast("double") / F.count(F.lit(1)), 9)
+    var = qround(
         F.sum(F.col("n") * F.col("n")).cast("double") / F.count(F.lit(1))
         - (F.sum("n").cast("double") / F.count(F.lit(1)))
-        * (F.sum("n").cast("double") / F.count(F.lit(1)))
+        * (F.sum("n").cast("double") / F.count(F.lit(1))),
+        9,
     )
     stats = daily.groupBy("event_type").agg(
         mu.alias("mu"),
-        q9(F.sqrt(var)).alias("sigma"),
+        qround(F.sqrt(var), 9).alias("sigma"),
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
     )
     paa = (
         idx.join(stats, "event_type")
         .groupBy("event_type", "seg", "n_days", "mu", "sigma")
         .agg(
-            q6(
+            qround(
                 (F.sum("n").cast("double") / F.count(F.lit(1)) - F.first("mu"))
                 / F.first("sigma")
             ).alias("z")
@@ -2231,8 +2208,6 @@ def ts_attribution_linear(spark, sf_dir):
     first-touch, one per-purchase window for n, per-touch shares
     quantized at 1e-9 and DECIMAL-summed per click (order-independent),
     credit at 1e-6."""
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     ev = t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
@@ -2251,11 +2226,11 @@ def ts_attribution_linear(spark, sf_dir):
     wp = Window.partitionBy("purchase_id")
     sized = touches.withColumn("n_touch", F.count(F.lit(1)).over(wp))
     return (
-        sized.select("click_id", q9(F.lit(1.0) / F.col("n_touch")).alias("share"))
+        sized.select("click_id", qround(F.lit(1.0) / F.col("n_touch"), 9).alias("share"))
         .groupBy("click_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_conversions"),
-            q6(F.sum(F.col("share").cast("decimal(38,12)")).cast("double")).alias(
+            qround(dsum(F.col("share"), 12)).alias(
                 "credit"
             ),
         )
@@ -2291,7 +2266,6 @@ def ts_rank_mobility(spark, sf_dir):
     BEFORE anyone fully lapses. Deterministic NTILE (count-desc,
     user_id tiebreak) on both engines; one user aggregate + two
     windows over the user table + one bounded cell aggregate."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cut = F.lit("2024-01-16 00:00:00").cast("timestamp_ntz")
     halves = (
         t(spark, sf_dir, "events")
@@ -2312,7 +2286,7 @@ def ts_rank_mobility(spark, sf_dir):
     wr = Window.partitionBy("q1")
     return cells.select(
         "q1", "q2", "n_users",
-        q6(F.col("n_users") / F.sum("n_users").over(wr)).alias("row_share"),
+        qround(F.col("n_users") / F.sum("n_users").over(wr)).alias("row_share"),
     )
 
 
@@ -2401,7 +2375,7 @@ def ts_hurst_rs(spark, sf_dir):
     )
     # The chunk table feeds full-chunk filtering, per-chunk means, and the
     # deviation join — one eager materialization of the (tiny) summary.
-    chunks = chunks.localCheckpoint(eager=True)
+    chunks = ckpt(chunks)
     full = chunks.groupBy("n", "chunk").agg(F.count(F.lit(1)).alias("cnt")).filter(
         F.col("cnt") == F.col("n")
     ).select("n", "chunk")
@@ -2431,23 +2405,24 @@ def ts_hurst_rs(spark, sf_dir):
         (F.max("cd") - F.min("cd")).cast("double").alias("r")
     )
     avg_r = rng.groupBy("n").agg((dsum(F.col("r")) / F.count(F.lit(1))).alias("ar"))
-    pts = avg_r.select(
+    pts = ckpt(avg_r.select(
         "n", "ar", F.log2(F.col("n").cast("double")).alias("x"), F.log2("ar").alias("y")
-    ).localCheckpoint(eager=True)
+    ))
     # Quantize-into-decimal for the centering means AND the slope sums —
     # a raw double SUM over the pts rows is engine-order-dependent
     # (review catch: the only place this op skipped the discipline).
-    q12t = q12dec  # shared parity helper (operators/_shared.py)
     centers = pts.agg(
-        (F.sum(q12t(F.col("x"))).cast("double") / F.lit(1e12) / F.count(F.lit(1))).alias("ax"),
-        (F.sum(q12t(F.col("y"))).cast("double") / F.lit(1e12) / F.count(F.lit(1))).alias("ay"),
+        (qsum(F.col("x"), 12) / F.count(F.lit(1))).alias("ax"),
+        (qsum(F.col("y"), 12) / F.count(F.lit(1))).alias("ay"),
     )
     fit = (
         pts.crossJoin(F.broadcast(centers))
         .agg(
             (
-                F.sum(q12t((F.col("x") - F.col("ax")) * (F.col("y") - F.col("ay")))).cast("double")
-                / F.sum(q12t((F.col("x") - F.col("ax")) * (F.col("x") - F.col("ax")))).cast("double")
+                F.sum(qdec((F.col("x") - F.col("ax")) * (F.col("y") - F.col("ay")), 12))
+                .cast("double")
+                / F.sum(qdec((F.col("x") - F.col("ax")) * (F.col("x") - F.col("ax")), 12))
+                .cast("double")
             ).alias("slope")
         )
     )
@@ -2507,11 +2482,11 @@ def ts_cadence_break(spark, sf_dir):
             "(partition by user_id order by ts, event_id), ts)"
         ).alias("gap_us"),
     )
-    stats = gaps.groupBy("user_id").agg(
+    stats = ckpt(gaps.groupBy("user_id").agg(
         F.expr("percentile(gap_us, 0.5D)").alias("med_gap"),
         F.count("gap_us").alias("n_gaps"),
         F.max("ts").alias("last_ts"),
-    ).localCheckpoint(eager=True)  # feeds the horizon scalar AND the readout
+    ))  # feeds the horizon scalar AND the readout
     # Corpus horizon = max over the per-user maxima — an aggregate of the
     # (small) stats table, NOT a second scan of the fact table
     # (duplicate-scan sweep, late round 6).
@@ -2583,10 +2558,9 @@ def ts_haar_energy(spark, sf_dir):
     daily = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
         dsum(F.col("value")).alias("v")
     )
-    series = (
+    series = ckpt(
         daily.select("v", (F.row_number().over(Window.orderBy("d")) - 1).alias("rn"))
         .filter(F.col("rn") < 24)
-        .localCheckpoint(eager=True)
     )
 
     def level(df, col):
@@ -2595,16 +2569,16 @@ def ts_haar_energy(spark, sf_dir):
             F.max(F.when(F.col("rn") % 2 == 1, F.col(col))).alias("x1"),
             F.count(F.lit(1)).alias("cnt"),
         ).filter(F.col("cnt") == 2)
-        return pair.select(
+        return ckpt(pair.select(
             "rn",
             ((F.col("x0") + F.col("x1")) / 2).alias("a"),
             ((F.col("x0") - F.col("x1")) / 2).alias("dd"),
-        ).localCheckpoint(eager=True)
+        ))
 
     l1 = level(series, "v")
     l2 = level(l1, "a")
     l3 = level(l2, "a")
-    q6sq = lambda c: F.floor(c * c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")
+    q6sq = lambda c: qdec(c * c)
 
     def energy(df, lvl):
         return df.agg(
@@ -2667,34 +2641,24 @@ def ts_weekday_anova(spark, sf_dir):
     daily = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
         dsum(F.col("value")).alias("v")
     )
-    tagged = daily.select(F.dayofweek("d").alias("wd"), "v").localCheckpoint(
-        eager=True
-    )  # feeds grand mean, group means, AND the within-group join
+    # feeds grand mean, group means, AND the within-group join
+    tagged = ckpt(daily.select(F.dayofweek("d").alias("wd"), "v"))
     grand = tagged.agg(
         (dsum(F.col("v")) / F.count(F.lit(1))).alias("gm"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
-    grp = tagged.groupBy("wd").agg(
+    grp = ckpt(tagged.groupBy("wd").agg(
         (dsum(F.col("v")) / F.count(F.lit(1))).alias("m"),
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
-    ).localCheckpoint(eager=True)  # feeds SSB and the SSW join
-    q6d = q6dec  # shared parity helper (operators/_shared.py)
+    ))  # feeds SSB and the SSW join
     ssb = grp.crossJoin(F.broadcast(grand)).agg(
-        (
-            F.sum(q6d(F.col("cnt") * (F.col("m") - F.col("gm")) * (F.col("m") - F.col("gm"))))
-            .cast("double")
-            / F.lit(1e6)
-        ).alias("ssb_v"),
+        qsum(F.col("cnt") * (F.col("m") - F.col("gm")) * (F.col("m") - F.col("gm"))).alias("ssb_v"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
     )
     ssw = (
         tagged.join(grp.select("wd", "m"), "wd")
         .agg(
-            (
-                F.sum(q6d((F.col("v") - F.col("m")) * (F.col("v") - F.col("m"))))
-                .cast("double")
-                / F.lit(1e6)
-            ).alias("ssw_v")
+            qsum((F.col("v") - F.col("m")) * (F.col("v") - F.col("m"))).alias("ssw_v")
         )
     )
     return (
@@ -3030,9 +2994,8 @@ def ts_stickiness(spark, sf_dir):
     contributions for open windows. Pure integers + one exact
     division."""
     e = t(spark, sf_dir, "events")
-    user_days = e.select("user_id", F.to_date("ts").alias("day")).distinct().localCheckpoint(
-        eager=True
-    )  # feeds DAU, the spine, and both window contributions
+    # feeds DAU, the spine, and both window contributions
+    user_days = ckpt(e.select("user_id", F.to_date("ts").alias("day")).distinct())
     spine = user_days.select("day").distinct()
     dau = user_days.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
 
@@ -3102,9 +3065,9 @@ def ts_growth_accounting(spark, sf_dir):
     ordered weeks (the EXISTS self-probe relationalized as a window —
     no second shuffle). Pure integer/date logic — exact twin."""
     e = t(spark, sf_dir, "events")
-    uw = e.select(
+    uw = ckpt(e.select(
         "user_id", F.date_trunc("week", "ts").alias("wk")
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     w = Window.partitionBy("user_id").orderBy("wk")
     tagged = uw.select(
         "user_id",
@@ -3183,12 +3146,11 @@ def ts_markov_stationary(spark, sf_dir):
     k×k table, k = event types. Fixed rounds, zero driver scalars."""
     e = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
+    trans = ckpt(  # the k×k matrix feeds rowsum AND p
         e.select("event_type", F.lag("event_type").over(w).alias("prev"))
         .filter(F.col("prev").isNotNull())
         .groupBy("prev", F.col("event_type").alias("nxt"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)  # the k×k matrix feeds rowsum AND p
     )
     rowsum = trans.groupBy("prev").agg(F.sum("n").alias("tot"))
     p = trans.join(rowsum, "prev").select(
@@ -3326,11 +3288,8 @@ def ts_gap_burstiness(spark, sf_dir):
     ).filter(F.col("g").isNotNull())
     mom = gaps.groupBy("user_id").agg(
         F.count("g").cast("bigint").alias("n"),
-        F.sum(F.col("g").cast("decimal(38,6)")).cast("double").alias("sg"),
-        (
-            F.sum(q6dec((F.col("g") / 1e6) * (F.col("g") / 1e6))).cast("double")
-            / F.lit(1e6)
-        ).alias("sgg"),
+        dsum(F.col("g")).alias("sg"),
+        qsum((F.col("g") / 1e6) * (F.col("g") / 1e6)).alias("sgg"),
     ).filter(F.col("n") >= 5)
     mu = F.col("sg") / F.col("n")
     sigma = (
@@ -3445,7 +3404,7 @@ def ts_event_study(spark, sf_dir):
         .agg(F.min(F.to_date("ts")).alias("a_day"))
     )
     daily = e.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("v")
+        dsum(F.col("value")).alias("v")
     )
     aligned = (
         daily.join(anchors, "user_id")
@@ -3460,7 +3419,7 @@ def ts_event_study(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("n_user_days"),
         F.countDistinct("user_id").cast("bigint").alias("n_users"),
         F.round(
-            F.sum(q6dec(F.col("v"))).cast("double") / F.lit(1e6) / F.count(F.lit(1)), 6
+            qsum(F.col("v")) / F.count(F.lit(1)), 6
         ).alias("mean_value"),
     )
 
@@ -3587,10 +3546,9 @@ def ts_demand_classification(spark, sf_dir):
             F.datediff(F.max("day"), F.min("day")).cast("double")
             / F.nullif((F.count(F.lit(1)) - 1).cast("double"), F.lit(0.0))
         ).alias("adi"),
-        (F.sum(F.col("dem").cast("decimal(38,6)")).cast("double") / F.count(F.lit(1))).alias("mu"),
+        (dsum(F.col("dem")) / F.count(F.lit(1))).alias("mu"),
         (
-            F.sum(q6dec(F.col("dem") * F.col("dem"))).cast("double")
-            / F.lit(1e6)
+            qsum(F.col("dem") * F.col("dem"))
             / F.count(F.lit(1))
         ).alias("m2"),
     ).filter(F.col("n_demands") >= 4)
@@ -3608,7 +3566,7 @@ def ts_demand_classification(spark, sf_dir):
     return classified.groupBy(demand_class.alias("demand_class")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
         F.round(
-            F.sum(q6dec(F.col("adi"))).cast("double") / F.lit(1e6) / F.count(F.lit(1)),
+            qsum(F.col("adi")) / F.count(F.lit(1)),
             6,
         ).alias("mean_adi"),
     )
@@ -3668,8 +3626,8 @@ def ts_extreme_value_gumbel(spark, sf_dir):
     )
     mom = daily_max.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(F.col("mx").cast("decimal(38,6)")).cast("double").alias("sm"),
-        (F.sum(q6dec(F.col("mx") * F.col("mx"))).cast("double") / F.lit(1e6)).alias(
+        dsum(F.col("mx")).alias("sm"),
+        qsum(F.col("mx") * F.col("mx")).alias(
             "smm"
         ),
     )
@@ -4030,7 +3988,6 @@ def ts_seasonality_strength(spark, sf_dir):
         .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     w7 = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     # pin the trended table: it feeds the seasonal window AND the
     # component projection (single-scan discipline)
@@ -4040,7 +3997,7 @@ def ts_seasonality_strength(spark, sf_dir):
             "day",
             F.datediff("day", F.lit("2024-01-01").cast("date")).alias("dd"),
             "n",
-            q6(F.avg("n").over(w7)).alias("trend"),
+            qround(F.avg("n").over(w7)).alias("trend"),
             F.count(F.lit(1)).over(w7).alias("wcnt"),
         ).filter(F.col("wcnt") == 7)
     )
@@ -4051,15 +4008,15 @@ def ts_seasonality_strength(spark, sf_dir):
         "event_type",
         "n",
         "trend",
-        q6(F.avg(F.col("n") - F.col("trend")).over(wdow)).alias("seasonal"),
+        qround(F.avg(F.col("n") - F.col("trend")).over(wdow)).alias("seasonal"),
     )
     comps = seasoned.select(
         "event_type",
-        q6(F.col("n") - F.col("trend") - F.col("seasonal")).alias("resid"),
-        q6(F.col("n") - F.col("trend")).alias("detr"),
-        q6(F.col("n") - F.col("seasonal")).alias("deseas"),
+        qround(F.col("n") - F.col("trend") - F.col("seasonal")).alias("resid"),
+        qround(F.col("n") - F.col("trend")).alias("detr"),
+        qround(F.col("n") - F.col("seasonal")).alias("deseas"),
     )
-    d6 = lambda c: F.sum(F.col(c).cast("decimal(38,6)")).cast("double")
+    d6 = lambda c: dsum(F.col(c))
     # decimal(18,6)^2 -> (37,12): exact and within precision 38 on BOTH
     # engines (a (38,12) square would force Spark's silent scale truncation)
     d12 = lambda c: F.sum(
@@ -4181,7 +4138,7 @@ def ts_bitemporal_asof(spark, sf_dir):
         .cast("bigint")
         .alias("n_corrected_versions"),
         F.round(
-            F.sum(F.col("price").cast("decimal(38,6)")).cast("double"), 6
+            dsum(F.col("price")), 6
         ).alias("total_price"),
     )
 
@@ -4244,7 +4201,7 @@ def ts_croston_forecast(spark, sf_dir):
             F.col("l_partkey").alias("part"),
             F.date_trunc("day", "l_shipdate").cast("date").alias("day"),
         )
-        .agg(F.sum(F.col("l_quantity").cast("decimal(38,6)")).cast("double").alias("q"))
+        .agg(dsum(F.col("l_quantity")).alias("q"))
     )
     wp = Window.partitionBy("part").orderBy("day")
     seq = dem.select(
@@ -4274,14 +4231,13 @@ def ts_croston_forecast(spark, sf_dir):
         "   'z', 0.3D * x.q + 0.7D * acc.z,"
         "   'p', CASE WHEN x.i = 2 THEN x.gap ELSE 0.3D * x.gap + 0.7D * acc.p END))"
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     st = arrs.select("part", "n_demands", F.expr(fold).alias("st"))
     return st.select(
         "part",
         "n_demands",
-        q6(F.col("st.z")).alias("size_level"),
-        q6(F.col("st.p")).alias("interval_level"),
-        q6(F.col("st.z") / F.col("st.p")).alias("croston_rate"),
+        qround(F.col("st.z")).alias("size_level"),
+        qround(F.col("st.p")).alias("interval_level"),
+        qround(F.col("st.z") / F.col("st.p")).alias("croston_rate"),
     ).orderBy("part")
 
 
@@ -4451,15 +4407,14 @@ aggregate(va,
     pairs = a.join(F.broadcast(b), F.col("type_a") < F.col("type_b")).select(
         "type_a", "type_b", "n_a", "n_b", F.expr(dp).alias("final_row")
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     dtw = F.element_at("final_row", (F.col("n_b") + 1).cast("int"))
     return pairs.select(
         "type_a",
         "type_b",
         "n_a",
         "n_b",
-        q6(dtw).alias("dtw_l1"),
-        q6(dtw / (F.col("n_a") + F.col("n_b"))).alias("dtw_per_step"),
+        qround(dtw).alias("dtw_l1"),
+        qround(dtw / (F.col("n_a") + F.col("n_b"))).alias("dtw_per_step"),
     ).orderBy("type_a", "type_b")
 
 
@@ -4506,8 +4461,7 @@ def ts_milestone_snapshot(spark, sf_dir):
             "t_purchase"
         ),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    hrs = lambda a, b: q6(
+    hrs = lambda a, b: qround(
         F.expr(f"timestampdiff(MICROSECOND, {a}, {b})").cast("double") / F.lit(3600e6)
     )
     in_order = (
@@ -4856,15 +4810,7 @@ def ts_ljung_box(spark, sf_dir):
         .select("k", (F.col("num") / F.col("c0")).alias("rho"), "n")
     )
     s = rhos.agg(
-        (
-            F.sum(
-                F.floor(
-                    F.col("rho") * F.col("rho") / (F.col("n") - F.col("k")) * F.lit(1e12)
-                    + F.lit(0.5)
-                ).cast("decimal(38,12)")
-            ).cast("double")
-            / F.lit(1e12)
-        ).alias("s"),
+        qsum(F.col("rho") * F.col("rho") / (F.col("n") - F.col("k")), 12).alias("s"),
         F.max("n").alias("n"),
     )
     qstat = F.col("n") * (F.col("n") + 2.0) * F.col("s")
@@ -4939,13 +4885,10 @@ def ts_spc_control_chart(spark, sf_dir):
             "day", "y", F.abs(F.col("y") - F.lag("y").over(wd)).alias("moving_range")
         )
     )
-    q6sum = lambda c: F.sum(
-        F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")
-    ).cast("double") / F.lit(1e6)
     lims = mr.agg(
-        (q6sum(F.col("y")) / F.count(F.lit(1))).alias("xbar"),
+        (qsum(F.col("y")) / F.count(F.lit(1))).alias("xbar"),
         (
-            q6sum(F.coalesce("moving_range", F.lit(0.0)))
+            qsum(F.coalesce("moving_range", F.lit(0.0)))
             / (F.count(F.lit(1)) - 1)
         ).alias("mrbar"),
     )
@@ -5019,7 +4962,7 @@ def ts_safety_stock(spark, sf_dir):
     LEFT-joining demand (both sides of the cross are tiny and
     broadcast; the only data-sized work is the one brand×week hash
     aggregate). Demand stays in exact micro-unit DECIMAL until one
-    identical-in-both-engines cast to double; moments ride the q6dec
+    identical-in-both-engines cast to double; moments ride the qdec
     path. SURVEY §2.M inventory-ops family."""
     li = t(spark, sf_dir, "lineitem")
     brand_dim = F.broadcast(
@@ -5028,7 +4971,7 @@ def ts_safety_stock(spark, sf_dir):
     bw = (
         li.join(brand_dim, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("brand", F.date_trunc("week", "l_shipdate").alias("wk"))
-        .agg(F.sum(q6dec(F.col("l_quantity"))).alias("qm"))
+        .agg(F.sum(qdec(F.col("l_quantity"))).alias("qm"))
     )
     wks = li.select(F.date_trunc("week", "l_shipdate").alias("wk")).distinct()
     brands = (
@@ -5043,15 +4986,15 @@ def ts_safety_stock(spark, sf_dir):
         )
     )
 
-    def qsum(c, scale):
+    def qsum_at(c, scale):
         return F.sum(
             F.floor(c * F.lit(1e6) + F.lit(0.5)).cast(f"decimal(38,{scale})")
         ).cast("double") / F.lit(1e6)
 
     s = spine.groupBy("brand").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        qsum(F.col("x"), 6).alias("sx"),
-        qsum(F.col("x") * F.col("x"), 12).alias("sxx"),
+        qsum_at(F.col("x"), 6).alias("sx"),
+        qsum_at(F.col("x") * F.col("x"), 12).alias("sxx"),
     )
     sd = F.sqrt(
         (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
@@ -5111,7 +5054,7 @@ def ts_var_cvar(spark, sf_dir):
     daily = (
         t(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(q6dec(F.col("o_totalprice"))).alias("revq"))
+        .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     nn = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -5210,12 +5153,11 @@ def ts_kalman_level(spark, sf_dir):
         "event_type",
         F.explode(F.arrays_zip(F.col("days"), F.col("st.lv").alias("lv"))).alias("z"),
     )
-    half_up6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return zipped.select(
         "event_type",
         F.col("z.days.day").alias("day"),
         F.col("z.days.n").cast("bigint").alias("n_obs"),
-        half_up6(F.col("z.lv")).alias("level"),
+        qround(F.col("z.lv")).alias("level"),
     )
 
 
@@ -5302,20 +5244,14 @@ def ts_bass_diffusion(spark, sf_dir):
         .select((F.col("id") * F.lit(0.0025)).alias("p"))
         .crossJoin(spark.range(1, 21).select((F.col("id") * F.lit(0.025)).alias("q")))
     )
-    q12 = lambda col: F.floor(col * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
-    q6 = lambda col: F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    e = q12(F.exp(-(F.col("p") + F.col("q")) * F.col("tm")))
+    e = qround(F.exp(-(F.col("p") + F.col("q")) * F.col("tm")), 12)
     f_model = (F.lit(1.0) - e) / (F.lit(1.0) + (F.col("q") / F.col("p")) * e)
     resid = F.col("f_obs") - f_model
     scored = (
         cum.crossJoin(F.broadcast(grid))
         .groupBy("p", "q")
         .agg(
-            (
-                F.sum(F.floor(resid * resid * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)"))
-                .cast("double")
-                / F.lit(1e12)
-            ).alias("sse"),
+            qsum(resid * resid, 12).alias("sse"),
             F.count(F.lit(1)).cast("bigint").alias("n_points"),
         )
     )
@@ -5327,10 +5263,10 @@ def ts_bass_diffusion(spark, sf_dir):
         .select(
             "p",
             "q",
-            q6(F.col("sse")).alias("sse"),
+            qround(F.col("sse")).alias("sse"),
             "n_points",
             "total_adopters",
-            q6(F.log(F.col("q") / F.col("p")) / (F.col("p") + F.col("q"))).alias(
+            qround(F.log(F.col("q") / F.col("p")) / (F.col("p") + F.col("q"))).alias(
                 "peak_t_months"
             ),
         )
@@ -5499,15 +5435,14 @@ def ts_granger_causality(spark, sf_dir):
             - F.col("b2") * F.col("sx1y")
         ).alias("sse_u"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     fstat = (F.col("sse_r") - F.col("sse_u")) / (F.col("sse_u") / (F.col("n") - F.lit(3.0)))
     return s.select(
         F.col("n").cast("bigint").alias("n_obs"),
-        q6(F.col("b1")).alias("b_lag_y"),
-        q6(F.col("b2")).alias("b_lag_x"),
-        q6(F.col("sse_r")).alias("sse_r"),
-        q6(F.col("sse_u")).alias("sse_u"),
-        q6(fstat).alias("f_stat"),
+        qround(F.col("b1")).alias("b_lag_y"),
+        qround(F.col("b2")).alias("b_lag_x"),
+        qround(F.col("sse_r")).alias("sse_r"),
+        qround(F.col("sse_u")).alias("sse_u"),
+        qround(fstat).alias("f_stat"),
         (
             fstat
             > F.lit(3.841458820694124) * (F.lit(1.0) + F.lit(20.0) / (F.col("n") - F.lit(3.0)))
@@ -5589,7 +5524,7 @@ def ts_pot_gpd_tail(spark, sf_dir):
     daily = ckpt(
         t(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(q6dec(F.col("o_totalprice"))).alias("revq"))
+        .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     nn = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -5649,18 +5584,16 @@ def ts_pot_gpd_tail(spark, sf_dir):
         ((F.lit(2.0) * F.col("b0") * F.col("b1")) / denom).alias("sigma"),
         (F.col("ne").cast("double") / F.col("n")).alias("zeta"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     rl = F.col("u_d") + (F.col("sigma") / F.col("xi")) * (
-        q9(F.pow(F.lit(100.0) * F.col("zeta"), F.col("xi"))) - F.lit(1.0)
+        qround(F.pow(F.lit(100.0) * F.col("zeta"), F.col("xi")), 9) - F.lit(1.0)
     )
     return gpd.select(
         F.col("n").alias("n_days"),
         F.col("ne").alias("n_exceed"),
-        q6(F.col("u_d")).alias("threshold"),
-        q6(F.col("xi")).alias("xi"),
-        q6(F.col("sigma")).alias("sigma"),
-        q6(rl).alias("return_level_100d"),
+        qround(F.col("u_d")).alias("threshold"),
+        qround(F.col("xi")).alias("xi"),
+        qround(F.col("sigma")).alias("sigma"),
+        qround(rl).alias("return_level_100d"),
     )
 
 
@@ -5739,7 +5672,6 @@ def ts_kendall_tau(spark, sf_dir):
         F.sum("ty").cast("bigint").alias("n2"),
         F.count(F.lit(1)).cast("bigint").alias("n0"),
     ).crossJoin(F.broadcast(nn))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     cd = F.col("c") - F.col("d")
     return s.select(
         F.col("n").alias("n_days"),
@@ -5747,14 +5679,14 @@ def ts_kendall_tau(spark, sf_dir):
         F.col("d").alias("discordant"),
         F.col("n1").alias("tied_x_pairs"),
         F.col("n2").alias("tied_y_pairs"),
-        q6(
+        qround(
             cd.cast("double")
             / F.sqrt(
                 (F.col("n0") - F.col("n1")).cast("double")
                 * (F.col("n0") - F.col("n2")).cast("double")
             )
         ).alias("tau_b"),
-        q6(
+        qround(
             F.lit(3.0)
             * cd
             / F.sqrt(
@@ -5854,7 +5786,7 @@ def ts_cointegration_eg(spark, sf_dir):
             F.col("o_orderdate").cast("date").alias("day"),
             F.col("c_mktsegment").alias("seg"),
         )
-        .agg(F.sum(q6dec(F.col("o_totalprice"))).alias("revq"))
+        .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     zero = F.lit(0).cast("decimal(38,6)")
     spine = seg.groupBy("day").agg(
@@ -5871,17 +5803,12 @@ def ts_cointegration_eg(spark, sf_dir):
             (F.sum("by").over(wc).cast("double") / F.lit(1e15)).alias("y"),
         )
     )
-    q12sum = lambda col: (
-        F.sum(F.floor(col * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)"))
-        .cast("double")
-        / F.lit(1e12)
-    )
     m = cum.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q12sum(F.col("x")).alias("sx"),
-        q12sum(F.col("y")).alias("sy"),
-        q12sum(F.col("x") * F.col("x")).alias("sxx"),
-        q12sum(F.col("x") * F.col("y")).alias("sxy"),
+        qsum(F.col("x"), 12).alias("sx"),
+        qsum(F.col("y"), 12).alias("sy"),
+        qsum(F.col("x") * F.col("x"), 12).alias("sxx"),
+        qsum(F.col("x") * F.col("y"), 12).alias("sxy"),
     )
     beta = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -5899,9 +5826,9 @@ def ts_cointegration_eg(spark, sf_dir):
     ).filter(F.col("e1").isNotNull())
     adf = lagged.agg(
         F.count(F.lit(1)).cast("double").alias("m"),
-        q12sum(F.col("e1") * (F.col("e") - F.col("e1"))).alias("sed"),
-        q12sum(F.col("e1") * F.col("e1")).alias("see"),
-        q12sum((F.col("e") - F.col("e1")) * (F.col("e") - F.col("e1"))).alias("sdd"),
+        qsum(F.col("e1") * (F.col("e") - F.col("e1")), 12).alias("sed"),
+        qsum(F.col("e1") * F.col("e1"), 12).alias("see"),
+        qsum((F.col("e") - F.col("e1")) * (F.col("e") - F.col("e1")), 12).alias("sdd"),
     )
     rho = F.col("sed") / F.col("see")
     stat = adf.select(
@@ -5910,16 +5837,15 @@ def ts_cointegration_eg(spark, sf_dir):
         ((F.col("sdd") - rho * F.col("sed")) / (F.col("m") - F.lit(1.0))).alias("s2"),
         "see",
     )
-    q6 = lambda col: F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     tstat = F.col("rho") / F.sqrt(F.col("s2") / F.col("see"))
     return (
         stat.crossJoin(F.broadcast(ols.select("beta", "alpha")))
         .select(
             (F.col("m") + F.lit(1.0)).cast("bigint").alias("n_days"),
-            q6(F.col("beta")).alias("beta"),
-            q6(F.col("alpha")).alias("alpha"),
-            q6(F.col("rho")).alias("rho"),
-            q6(tstat).alias("adf_t"),
+            qround(F.col("beta")).alias("beta"),
+            qround(F.col("alpha")).alias("alpha"),
+            qround(F.col("rho")).alias("rho"),
+            qround(tstat).alias("adf_t"),
             (tstat < F.lit(-3.34)).alias("cointegrated"),
         )
     )
@@ -6014,14 +5940,9 @@ def ts_matrix_profile(spark, sf_dir):
         (F.lit(7) * F.col("qa") - F.col("sa") * F.col("sa")).cast("double")
         * (F.lit(7) * F.col("qb") - F.col("sb") * F.col("sb")).cast("double")
     )
-    d9 = F.floor(
-        F.sqrt(F.greatest(F.lit(2.0) * F.lit(7.0) * (F.lit(1.0) - ncc), F.lit(0.0)))
-        * F.lit(1e9)
-        + F.lit(0.5)
-    ) / F.lit(1e9)
+    d9 = qround(F.sqrt(F.greatest(F.lit(2.0) * F.lit(7.0) * (F.lit(1.0) - ncc), F.lit(0.0))), 9)
     dists = pairs.select("ia", "ib", d9.alias("d"))
     wn = Window.partitionBy("ia").orderBy(F.asc("d"), F.asc("ib"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     wm = Window.orderBy(F.asc("d"), F.asc("ia"))
     return (
         dists.withColumn("rk", F.row_number().over(wn))
@@ -6029,7 +5950,7 @@ def ts_matrix_profile(spark, sf_dir):
         .select(
             F.col("ia").alias("idx"),
             F.col("ib").alias("nn_idx"),
-            q6(F.col("d")).alias("nn_dist"),
+            qround(F.col("d")).alias("nn_dist"),
             F.row_number().over(wm).cast("bigint").alias("motif_rank"),
         )
     )
@@ -6161,22 +6082,21 @@ def ts_littles_law_audit(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("n_ticks"),
         F.sum("c").cast("bigint").alias("covered"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     span = (F.col("hi") - F.col("lo")).cast("double")
     l_exact = F.col("busy_us").cast("double") / span
     l_sampled = F.col("covered").cast("double") / F.col("n_ticks")
     return horizon.crossJoin(F.broadcast(sampled)).select(
         "n_sessions",
-        q6(F.col("n_sessions").cast("double") / (span / F.lit(3600000000.0))).alias(
+        qround(F.col("n_sessions").cast("double") / (span / F.lit(3600000000.0))).alias(
             "lambda_per_hr"
         ),
-        q6(F.col("busy_us").cast("double") / F.col("n_sessions") / F.lit(1000000.0)).alias(
+        qround(F.col("busy_us").cast("double") / F.col("n_sessions") / F.lit(1000000.0)).alias(
             "w_mean_s"
         ),
-        q6(l_exact).alias("l_exact"),
+        qround(l_exact).alias("l_exact"),
         "n_ticks",
-        q6(l_sampled).alias("l_sampled"),
-        q6(l_sampled - l_exact).alias("sampling_bias"),
+        qround(l_sampled).alias("l_sampled"),
+        qround(l_sampled - l_exact).alias("sampling_bias"),
     )
 
 
@@ -6278,8 +6198,6 @@ def ts_binseg_changepoints(spark, sf_dir):
     nn = series.agg(
         F.max("i").alias("n"), F.max("p").alias("pn"), F.max("q").alias("qn")
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
     def sse(qb, qa, pb, pa, ib, ia):
         ln = (ib - ia).cast("double")
@@ -6292,10 +6210,11 @@ def ts_binseg_changepoints(spark, sf_dir):
         .select(
             F.col("i").alias("k"),
             "day",
-            q9(
+            qround(
                 sse(F.col("qn"), F.lit(0), F.col("pn"), F.lit(0), F.col("n"), F.lit(0))
                 - sse(F.col("q"), F.lit(0), F.col("p"), F.lit(0), F.col("i"), F.lit(0))
-                - sse(F.col("qn"), F.col("q"), F.col("pn"), F.col("p"), F.col("n"), F.col("i"))
+                - sse(F.col("qn"), F.col("q"), F.col("pn"), F.col("p"), F.col("n"), F.col("i")),
+                9,
             ).alias("gain"),
             (F.col("p").cast("double") / F.col("i")).alias("mean_l"),
             ((F.col("pn") - F.col("p")).cast("double") / (F.col("n") - F.col("i"))).alias("mean_r"),
@@ -6327,10 +6246,11 @@ def ts_binseg_changepoints(spark, sf_dir):
             "side",
             F.col("i").alias("k"),
             "day",
-            q9(
+            qround(
                 sse(F.col("b_q"), F.col("a_q"), F.col("b_p"), F.col("a_p"), F.col("b_i"), F.col("a_i"))
                 - sse(F.col("q"), F.col("a_q"), F.col("p"), F.col("a_p"), F.col("i"), F.col("a_i"))
-                - sse(F.col("b_q"), F.col("q"), F.col("b_p"), F.col("p"), F.col("b_i"), F.col("i"))
+                - sse(F.col("b_q"), F.col("q"), F.col("b_p"), F.col("p"), F.col("b_i"), F.col("i")),
+                9,
             ).alias("gain"),
             ((F.col("p") - F.col("a_p")).cast("double") / (F.col("i") - F.col("a_i"))).alias("mean_l"),
             ((F.col("b_p") - F.col("p")).cast("double") / (F.col("b_i") - F.col("i"))).alias("mean_r"),
@@ -6340,15 +6260,15 @@ def ts_binseg_changepoints(spark, sf_dir):
     cp2 = g2.withColumn("rk", F.row_number().over(ws)).filter(F.col("rk") == 1)
     out1 = cp1.select(
         F.lit(1).alias("level"), F.lit("mid").alias("side"), "k", "day",
-        q6(F.col("gain")).alias("gain"),
-        q6(F.col("mean_l")).alias("mean_l"),
-        q6(F.col("mean_r")).alias("mean_r"),
+        qround(F.col("gain")).alias("gain"),
+        qround(F.col("mean_l")).alias("mean_l"),
+        qround(F.col("mean_r")).alias("mean_r"),
     )
     out2 = cp2.select(
         F.lit(2).alias("level"), "side", "k", "day",
-        q6(F.col("gain")).alias("gain"),
-        q6(F.col("mean_l")).alias("mean_l"),
-        q6(F.col("mean_r")).alias("mean_r"),
+        qround(F.col("gain")).alias("gain"),
+        qround(F.col("mean_l")).alias("mean_l"),
+        qround(F.col("mean_r")).alias("mean_r"),
     )
     return out1.unionByName(out2)
 
@@ -6427,7 +6347,7 @@ def ts_synth_control_1nn(spark, sf_dir):
             F.col("p_brand").alias("brand"),
             F.date_trunc("week", "l_shipdate").alias("wk"),
         )
-        .agg(F.sum(q6dec(F.col("l_extendedprice"))).alias("revq"))
+        .agg(F.sum(qdec(F.col("l_extendedprice"))).alias("revq"))
     )
     brands = sales.select("brand").distinct()
     weeks = sales.select("wk").distinct()
@@ -6460,9 +6380,8 @@ def ts_synth_control_1nn(spark, sf_dir):
         .filter(F.col("wk") < F.col("cut"))
         .select("brand", F.col("rev").alias("x"), "y")
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     corr = pre_pairs.groupBy("brand").agg(
-        q9(
+        qround(
             (
                 F.count(F.lit(1)) * F.sum(F.col("x") * F.col("y"))
                 - F.sum("x") * F.sum("y")
@@ -6476,7 +6395,8 @@ def ts_synth_control_1nn(spark, sf_dir):
                     F.count(F.lit(1)) * F.sum(F.col("y") * F.col("y"))
                     - F.sum("y") * F.sum("y")
                 )
-            )
+            ),
+            9,
         ).alias("r")
     )
     donor = ckpt(corr.orderBy(F.desc("r"), F.asc("brand")).limit(1))
@@ -6495,16 +6415,15 @@ def ts_synth_control_1nn(spark, sf_dir):
     )
     pre = phases.filter(F.col("phase") == "pre").select(F.col("gap").alias("pre_gap"))
     post = phases.filter(F.col("phase") == "post").select(F.col("gap").alias("post_gap"))
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         donor.crossJoin(F.broadcast(pre))
         .crossJoin(F.broadcast(post))
         .select(
             F.col("brand").alias("donor_brand"),
-            q6(F.col("r")).alias("pre_corr"),
-            q6(F.col("pre_gap")).alias("pre_gap"),
-            q6(F.col("post_gap")).alias("post_gap"),
-            q6(F.col("post_gap") - F.col("pre_gap")).alias("effect"),
+            qround(F.col("r")).alias("pre_corr"),
+            qround(F.col("pre_gap")).alias("pre_gap"),
+            qround(F.col("post_gap")).alias("post_gap"),
+            qround(F.col("post_gap") - F.col("pre_gap")).alias("effect"),
         )
     )
 
@@ -6753,13 +6672,12 @@ def ts_haar_denoise(spark, sf_dir):
                 j.select((2 * F.col("i")).alias("i"), (F.col("v") - F.col("w")).alias("v"))
             )
         )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return base.join(b.select("i", F.col("v").alias("xhat")), "i").select(
         "i",
         "day",
         "x",
-        q6(F.col("xhat")).alias("xhat"),
-        q6(F.col("x") - F.col("xhat")).alias("err"),
+        qround(F.col("xhat")).alias("xhat"),
+        qround(F.col("x") - F.col("xhat")).alias("err"),
     )
 
 
@@ -6842,10 +6760,7 @@ def ts_pacf_durbin(spark, sf_dir):
         .select(F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i"), "x")
     )
     mu = series.agg(
-        (
-            F.floor(F.sum("x").cast("double") / F.count(F.lit(1)) * F.lit(1e9) + F.lit(0.5))
-            / F.lit(1e9)
-        ).alias("m")
+        qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
     )
     cent = series.crossJoin(F.broadcast(mu)).select(
         "i", (F.col("x") - F.col("m")).alias("xc")
@@ -6858,24 +6773,16 @@ def ts_pacf_durbin(spark, sf_dir):
         .join(b, F.col("ib") == F.col("ia") - F.col("k"))
         .groupBy("k")
         .agg(
-            (
-                F.sum(
-                    F.floor(F.col("xa") * F.col("xb") * F.lit(1e12) + F.lit(0.5)).cast(
-                        "decimal(38,12)"
-                    )
-                ).cast("double")
-                / F.lit(1e12)
-            ).alias("s")
+            qsum(F.col("xa") * F.col("xb"), 12).alias("s")
         )
     )
     s0 = lagsum.filter(F.col("k") == 0).select(F.col("s").alias("s0"))
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
     acf = (
         lagsum.filter(F.col("k") > 0)
         .crossJoin(F.broadcast(s0))
         .groupBy()
         .pivot("k", list(range(1, 11)))
-        .agg(F.first(q12(F.col("s") / F.col("s0"))))
+        .agg(F.first(qround(F.col("s") / F.col("s0"), 12)))
     )
     acf = acf.select(*[F.col(str(k)).alias(f"r{k}") for k in range(1, 11)])
     # chained Durbin-Levinson: mirror _pacf_chain_sql exactly.
@@ -6989,10 +6896,7 @@ def ts_ar2_yule_walker(spark, sf_dir):
         .select(F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i"), "x")
     )
     mu = series.agg(
-        (
-            F.floor(F.sum("x").cast("double") / F.count(F.lit(1)) * F.lit(1e9) + F.lit(0.5))
-            / F.lit(1e9)
-        ).alias("m"),
+        qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     cent = ckpt(
@@ -7008,33 +6912,31 @@ def ts_ar2_yule_walker(spark, sf_dir):
         .join(b, F.col("ib") == F.col("ia") - F.col("k"))
         .groupBy("k")
         .agg(
-            (
-                F.sum(
-                    F.floor(F.col("xa") * F.col("xb") * F.lit(1e12) + F.lit(0.5)).cast(
-                        "decimal(38,12)"
-                    )
-                ).cast("double")
-                / F.lit(1e12)
-            ).alias("s")
+            qsum(F.col("xa") * F.col("xb"), 12).alias("s")
         )
     )
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
     wide = (
         lagsum.groupBy()
         .pivot("k", [0, 1, 2])
         .agg(F.first("s"))
         .select(
             F.col("0").alias("s0"),
-            q12(F.col("1") / F.col("0")).alias("r1"),
-            q12(F.col("2") / F.col("0")).alias("r2"),
+            qround(F.col("1") / F.col("0"), 12).alias("r1"),
+            qround(F.col("2") / F.col("0"), 12).alias("r2"),
         )
     )
     fit = wide.select(
         "s0",
         "r1",
         "r2",
-        q12(F.col("r1") * (F.lit(1.0) - F.col("r2")) / (F.lit(1.0) - F.col("r1") * F.col("r1"))).alias("phi1"),
-        q12((F.col("r2") - F.col("r1") * F.col("r1")) / (F.lit(1.0) - F.col("r1") * F.col("r1"))).alias("phi2"),
+        qround(
+            F.col("r1") * (F.lit(1.0) - F.col("r2")) / (F.lit(1.0) - F.col("r1") * F.col("r1")),
+            12,
+        ).alias("phi1"),
+        qround(
+            (F.col("r2") - F.col("r1") * F.col("r1")) / (F.lit(1.0) - F.col("r1") * F.col("r1")),
+            12,
+        ).alias("phi2"),
     )
     last2 = (
         cent.select("xc", F.row_number().over(Window.orderBy(F.desc("i"))).alias("rn"))
@@ -7045,7 +6947,6 @@ def ts_ar2_yule_walker(spark, sf_dir):
             F.max(F.when(F.col("rn") == 2, F.col("xc"))).alias("x_t1"),
         )
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     f1 = F.col("m") + F.col("phi1") * F.col("x_t") + F.col("phi2") * F.col("x_t1")
     f2 = F.col("m") + F.col("phi1") * (
         F.col("phi1") * F.col("x_t") + F.col("phi2") * F.col("x_t1")
@@ -7054,9 +6955,9 @@ def ts_ar2_yule_walker(spark, sf_dir):
         fit.crossJoin(F.broadcast(last2))
         .crossJoin(F.broadcast(mu))
         .select(
-            q6(F.col("phi1")).alias("phi1"),
-            q6(F.col("phi2")).alias("phi2"),
-            q6(
+            qround(F.col("phi1")).alias("phi1"),
+            qround(F.col("phi2")).alias("phi2"),
+            qround(
                 (
                     F.lit(1.0)
                     - F.col("phi1") * F.col("r1")
@@ -7064,8 +6965,8 @@ def ts_ar2_yule_walker(spark, sf_dir):
                 )
                 * (F.col("s0") / F.col("n"))
             ).alias("sigma2"),
-            q6(f1).alias("forecast_1d"),
-            q6(f2).alias("forecast_2d"),
+            qround(f1).alias("forecast_1d"),
+            qround(f2).alias("forecast_2d"),
             (
                 (F.col("phi2") > -1.0)
                 & (F.col("phi1") + F.col("phi2") < 1.0)
@@ -7143,15 +7044,11 @@ def ts_anderson_darling(spark, sf_dir):
     daily = ckpt(
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg((F.sum(q6dec(F.col("o_totalprice"))).cast("double") / F.lit(1e6)).alias("x"))
+        .agg(qsum(F.col("o_totalprice")).alias("x"))
     )
     mom = daily.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        (
-            F.sum(F.floor(F.col("x") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("double")
-            / F.lit(1e6)
-        ).alias("sy"),
+        qsum(F.col("x")).alias("sy"),
         (
             F.sum(
                 F.floor(F.col("x") * F.col("x") * F.lit(1e2) + F.lit(0.5)).cast(
@@ -7168,11 +7065,10 @@ def ts_anderson_darling(spark, sf_dir):
             (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")) / (F.col("n") - F.lit(1.0))
         ).alias("s"),
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     zs = (
         daily.crossJoin(F.broadcast(std))
         .select(
-            q9((F.col("x") - F.col("m")) / F.col("s")).alias("z"),
+            qround((F.col("x") - F.col("m")) / F.col("s"), 9).alias("z"),
             F.row_number().over(Window.orderBy(F.asc("x"), F.asc("day"))).cast("bigint").alias("i"),
             "n",
         )
@@ -7180,27 +7076,24 @@ def ts_anderson_darling(spark, sf_dir):
     phi = F.expr(
         "0.5 * (1.0 + " + _ERFC_AS.format(x="(z) / sqrt(2.0)") + ")"
     )
-    tt = (F.lit(2.0) * F.col("i") - F.lit(1.0)) * q9(F.log(phi)) + (
+    tt = (F.lit(2.0) * F.col("i") - F.lit(1.0)) * qround(F.log(phi), 9) + (
         F.lit(2.0) * (F.col("n") - F.col("i")) + F.lit(1.0)
-    ) * q9(F.log(F.lit(1.0) - phi))
+    ) * qround(F.log(F.lit(1.0) - phi), 9)
     a2df = zs.select("n", tt.alias("tt")).agg(
         F.any_value("n").alias("n"),
         (
             -F.any_value("n")
-            - F.sum(F.floor(F.col("tt") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("double")
-            / F.lit(1e6)
+            - qsum(F.col("tt"))
             / F.any_value("n")
         ).alias("a2"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     star = F.col("a2") * (
         F.lit(1.0) + F.lit(0.75) / F.col("n") + F.lit(2.25) / (F.col("n") * F.col("n"))
     )
     return a2df.select(
         F.col("n").cast("bigint").alias("n_days"),
-        q6(F.col("a2")).alias("a2"),
-        q6(star).alias("a2_star"),
+        qround(F.col("a2")).alias("a2"),
+        qround(star).alias("a2_star"),
         (star > F.lit(0.752)).alias("reject_normal"),
     )
 
@@ -7274,7 +7167,7 @@ def ts_chain_ladder(spark, sf_dir):
             F.col("cm").alias("cohort"),
             F.least(mon - F.col("cm"), F.lit(6)).alias("age"),
         )
-        .agg(F.sum(q6dec(F.col("o_totalprice"))).alias("revq"))
+        .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     wc = Window.partitionBy("cohort").orderBy("age")
     cum = ckpt(
@@ -7287,34 +7180,32 @@ def ts_chain_ladder(spark, sf_dir):
     )
     a = cum.select(F.col("cohort").alias("ca"), F.col("age").alias("age"), F.col("c").alias("cv_a"))
     b = cum.select(F.col("cohort").alias("cb"), (F.col("age") - 1).alias("age"), F.col("c").alias("cv_b"))
-    q6d = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     factors = (
         a.join(b, (F.col("ca") == F.col("cb")) & (a["age"] == b["age"]))
         .groupBy(a["age"].alias("age"))
         .agg(
-            q9(
-                F.sum(q6d(F.col("cv_b"))).cast("double")
-                / F.sum(q6d(F.col("cv_a"))).cast("double")
+            qround(
+                F.sum(qdec(F.col("cv_b"))).cast("double")
+                / F.sum(qdec(F.col("cv_a"))).cast("double"),
+                9,
             ).alias("f")
         )
     )
     wt = Window.orderBy(F.desc("age")).rowsBetween(Window.unboundedPreceding, 0)
     tail = factors.select(
         "age",
-        F.exp(q9(F.sum(q9(F.log("f"))).over(wt))).alias("cum_f"),
+        F.exp(qround(F.sum(qround(F.log("f"), 9)).over(wt), 9)).alias("cum_f"),
     )
     latest = cum.filter(F.col("age") == F.col("max_age")).select(
         "cohort", "max_age", F.col("c").alias("latest_cum")
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         latest.join(F.broadcast(tail), latest["max_age"] == tail["age"], "left")
         .select(
             F.col("cohort").alias("cohort_month"),
             F.col("max_age").alias("latest_age"),
-            q6(F.col("latest_cum")).alias("latest_cum"),
-            q6(F.col("latest_cum") * F.coalesce(F.col("cum_f"), F.lit(1.0))).alias(
+            qround(F.col("latest_cum")).alias("latest_cum"),
+            qround(F.col("latest_cum") * F.coalesce(F.col("cum_f"), F.lit(1.0))).alias(
                 "ultimate"
             ),
         )
@@ -7388,14 +7279,14 @@ def ts_absorbing_markov(spark, sf_dir):
         F.col("event_type").alias("s"), F.lead("event_type").over(w).alias("d")
     ).filter(F.col("d").isNotNull() & (F.col("s") != "purchase"))
     tm = ckpt(seq.groupBy("s", "d").agg(F.count(F.lit(1)).cast("bigint").alias("n")))
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
     tp = ckpt(
         tm.select(
             "s",
             "d",
-            q12(
+            qround(
                 F.col("n").cast("double")
-                / F.sum("n").over(Window.partitionBy("s"))
+                / F.sum("n").over(Window.partitionBy("s")),
+                12,
             ).alias("p"),
         )
     )
@@ -7446,10 +7337,9 @@ def ts_absorbing_markov(spark, sf_dir):
     # the fold expression before the explode tail (CollapseProject would
     # otherwise substitute it into every downstream field extraction —
     # same hazard measured in ts_markov_stationary).
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return (
         fin.select(F.explode(F.expr("arrays_zip(S, v)")).alias("z"))
-        .select(F.col("z.S").alias("state"), q6(F.col("z.v")).alias("p_absorb_8"))
+        .select(F.col("z.S").alias("state"), qround(F.col("z.v")).alias("p_absorb_8"))
     )
 
 
@@ -7522,27 +7412,26 @@ def ts_markov_entropy_rate(spark, sf_dir):
         .groupBy("prev", "nxt")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     probs = trans.select(
         "prev",
         "nxt",
-        q12(F.col("n").cast("double") / F.sum("n").over(Window.partitionBy("prev"))).alias("p"),
+        qround(
+            F.col("n").cast("double") / F.sum("n").over(Window.partitionBy("prev")), 12
+        ).alias("p"),
     )
     terms = probs.join(F.broadcast(pi), "prev").select(
-        (F.col("stationary_prob") * F.col("p") * q9(F.log("p"))).alias("tt")
+        (F.col("stationary_prob") * F.col("p") * qround(F.log("p"), 9)).alias("tt")
     )
     n_states = pi.count()  # bounded state-space scalar (same as graph loops)
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     h = (
-        -F.sum(F.floor(F.col("tt") * F.lit(1e12) + F.lit(0.5)).cast("decimal(38,12)"))
+        -F.sum(qdec(F.col("tt"), 12))
         .cast("double")
         / F.lit(1e12)
     )
     return terms.agg(h.alias("h")).select(
         F.lit(n_states).cast("bigint").alias("n_states"),
-        q6(F.col("h")).alias("entropy_rate_nats"),
-        q6(F.exp(q9(F.col("h")))).alias("perplexity"),
+        qround(F.col("h")).alias("entropy_rate_nats"),
+        qround(F.exp(qround(F.col("h"), 9))).alias("perplexity"),
     )
 
 
@@ -7593,13 +7482,11 @@ def ts_spectral_entropy(spark, sf_dir):
 
     spec = ckpt(ts_periodogram(spark, sf_dir).select("power"))
     tot = spec.agg(
-        F.sum(F.col("power").cast("decimal(38,6)")).cast("double").alias("tp"),
+        dsum(F.col("power")).alias("tp"),
         F.count(F.lit(1)).cast("bigint").alias("np"),
     )
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     ps = spec.crossJoin(F.broadcast(tot)).select(
-        q12(F.col("power").cast("double") / F.col("tp")).alias("p"), "np"
+        qround(F.col("power").cast("double") / F.col("tp"), 12).alias("p"), "np"
     )
     h = ps.agg(
         F.any_value("np").alias("np"),
@@ -7607,19 +7494,16 @@ def ts_spectral_entropy(spark, sf_dir):
             -F.sum(
                 F.when(
                     F.col("p") > 0,
-                    F.floor(
-                        F.col("p") * q9(F.log("p")) * F.lit(1e12) + F.lit(0.5)
-                    ).cast("decimal(38,12)"),
+                    qdec(F.col("p") * qround(F.log("p"), 9), 12),
                 ).otherwise(F.lit(0).cast("decimal(38,12)"))
             ).cast("double")
             / F.lit(1e12)
         ).alias("hh"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return h.select(
         F.col("np").alias("n_periods"),
-        q6(F.col("hh")).alias("spectral_entropy_nats"),
-        q6(F.col("hh") / q9(F.log(F.col("np").cast("double")))).alias(
+        qround(F.col("hh")).alias("spectral_entropy_nats"),
+        qround(F.col("hh") / qround(F.log(F.col("np").cast("double")), 9)).alias(
             "normalized_entropy"
         ),
     )
@@ -7675,7 +7559,7 @@ def ts_extremal_index(spark, sf_dir):
     daily = ckpt(
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(q6dec(F.col("o_totalprice"))).alias("revq"))
+        .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     nn = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -7702,12 +7586,11 @@ def ts_extremal_index(spark, sf_dir):
         .cast("bigint")
         .alias("n_clusters"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return clusters.select(
         "n_exceed",
         "n_clusters",
-        q6(F.col("n_clusters").cast("double") / F.col("n_exceed")).alias("extremal_index"),
-        q6(F.col("n_exceed").cast("double") / F.col("n_clusters")).alias(
+        qround(F.col("n_clusters").cast("double") / F.col("n_exceed")).alias("extremal_index"),
+        qround(F.col("n_exceed").cast("double") / F.col("n_clusters")).alias(
             "mean_cluster_size"
         ),
     )
@@ -7793,14 +7676,11 @@ def ts_decompose_whiteness(spark, sf_dir):
             .alias("i"),
         )
     )
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
     mu = res.groupBy("event_type").agg(
-        q9(
-            F.sum(F.floor(F.col("x") * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)"))
-            .cast("double")
-            / F.lit(1e6)
-            / F.count(F.lit(1))
+        qround(
+            qsum(F.col("x"))
+            / F.count(F.lit(1)),
+            9,
         ).alias("m"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
@@ -7823,14 +7703,7 @@ def ts_decompose_whiteness(spark, sf_dir):
         .groupBy("event_type", "k")
         .agg(
             F.any_value("n").alias("n"),
-            (
-                F.sum(
-                    F.floor(F.col("xa") * F.col("xb") * F.lit(1e9) + F.lit(0.5)).cast(
-                        "decimal(38,9)"
-                    )
-                ).cast("double")
-                / F.lit(1e9)
-            ).alias("s"),
+            qsum(F.col("xa") * F.col("xb"), 9).alias("s"),
         )
     )
     s0 = lagsum.filter(F.col("k") == 0).select(
@@ -7839,28 +7712,23 @@ def ts_decompose_whiteness(spark, sf_dir):
     acf = (
         lagsum.filter(F.col("k") > 0)
         .join(F.broadcast(s0), F.col("et0") == F.col("event_type"))
-        .select("event_type", "k", "n", q12(F.col("s") / F.col("s0")).alias("r"))
+        .select("event_type", "k", "n", qround(F.col("s") / F.col("s0"), 12).alias("r"))
     )
     terms = acf.select(
         "event_type",
         "n",
-        F.floor(
-            F.col("r") * F.col("r") / (F.col("n") - F.col("k")) * F.lit(1e12)
-            + F.lit(0.5)
-        )
-        .cast("decimal(38,12)")
+        qdec(F.col("r") * F.col("r") / (F.col("n") - F.col("k")), 12)
         .alias("term"),
     )
     q = terms.groupBy("event_type").agg(
         F.any_value("n").alias("n"),
         (F.sum("term").cast("double") / F.lit(1e12)).alias("ssum"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     lb = F.col("n") * (F.col("n") + F.lit(2.0)) * F.col("ssum")
     return q.select(
         "event_type",
         F.col("n").cast("bigint").alias("n_days"),
-        q6(lb).alias("q_stat"),
+        qround(lb).alias("q_stat"),
         (lb < F.lit(11.0705)).alias("remainder_is_white"),
     )
 
@@ -7920,7 +7788,7 @@ def ts_max_subarray(spark, sf_dir):
     daily = ckpt(
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(q6dec(F.col("o_totalprice"))).cast("bigint").alias("revq"))
+        .agg(F.sum(qdec(F.col("o_totalprice"))).cast("bigint").alias("revq"))
     )
     mu = daily.agg(
         (F.sum("revq").cast("bigint") / F.count(F.lit(1)).cast("bigint"))
@@ -7949,12 +7817,11 @@ def ts_max_subarray(spark, sf_dir):
         "       THEN a.i + 1L ELSE a.be END,"
         " 'i', a.i + 1L))"
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return arr.select(F.col("xs"), F.expr(fold).alias("st")).select(
         F.expr("element_at(xs, cast(st.bs as int)).day").alias("streak_start"),
         F.expr("element_at(xs, cast(st.be as int)).day").alias("streak_end"),
         (F.col("st.be") - F.col("st.bs") + 1).cast("bigint").alias("streak_days"),
-        q6(F.col("st.best").cast("double") / F.lit(1e6)).alias("excess_revenue"),
+        qround(F.col("st.best").cast("double") / F.lit(1e6)).alias("excess_revenue"),
     )
 
 
@@ -8032,10 +7899,7 @@ def ts_ar_residual_outliers(spark, sf_dir):
         )
     )
     mu = series.agg(
-        (
-            F.floor(F.sum("x").cast("double") / F.count(F.lit(1)) * F.lit(1e9) + F.lit(0.5))
-            / F.lit(1e9)
-        ).alias("m")
+        qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
     )
     cent = ckpt(
         series.crossJoin(F.broadcast(mu)).select(
@@ -8050,33 +7914,26 @@ def ts_ar_residual_outliers(spark, sf_dir):
         .join(b, F.col("ib") == F.col("ia") - F.col("k"))
         .groupBy("k")
         .agg(
-            (
-                F.sum(
-                    F.floor(F.col("xa") * F.col("xb") * F.lit(1e12) + F.lit(0.5)).cast(
-                        "decimal(38,12)"
-                    )
-                ).cast("double")
-                / F.lit(1e12)
-            ).alias("s")
+            qsum(F.col("xa") * F.col("xb"), 12).alias("s")
         )
     )
-    q12 = lambda c: F.floor(c * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     fit = (
         lagsum.groupBy()
         .pivot("k", [0, 1, 2])
         .agg(F.first("s"))
         .select(
-            q12(F.col("1") / F.col("0")).alias("r1"),
-            q12(F.col("2") / F.col("0")).alias("r2"),
+            qround(F.col("1") / F.col("0"), 12).alias("r1"),
+            qround(F.col("2") / F.col("0"), 12).alias("r2"),
         )
     )
     phi = fit.select(
-        q12(
-            F.col("r1") * (F.lit(1.0) - F.col("r2")) / (F.lit(1.0) - F.col("r1") * F.col("r1"))
+        qround(
+            F.col("r1") * (F.lit(1.0) - F.col("r2")) / (F.lit(1.0) - F.col("r1") * F.col("r1")),
+            12,
         ).alias("p1"),
-        q12(
-            (F.col("r2") - F.col("r1") * F.col("r1")) / (F.lit(1.0) - F.col("r1") * F.col("r1"))
+        qround(
+            (F.col("r2") - F.col("r1") * F.col("r1")) / (F.lit(1.0) - F.col("r1") * F.col("r1")),
+            12,
         ).alias("p2"),
     )
     l1 = cent.select(F.col("i").alias("i1"), F.col("xc").alias("xc1"))
@@ -8088,20 +7945,18 @@ def ts_ar_residual_outliers(spark, sf_dir):
         .select(
             "day",
             "x",
-            q9(
-                F.col("xc") - F.col("p1") * F.col("xc1") - F.col("p2") * F.col("xc2")
+            qround(
+                F.col("xc") - F.col("p1") * F.col("xc1") - F.col("p2") * F.col("xc2"),
+                9,
             ).alias("e"),
         )
     )
     sd = resid.agg(
         F.sqrt(
-            F.sum(F.floor(F.col("e") * F.col("e") * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)"))
-            .cast("double")
-            / F.lit(1e9)
+            qsum(F.col("e") * F.col("e"), 9)
             / (F.count(F.lit(1)) - F.lit(1.0))
         ).alias("s")
     )
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     # Top-3 most-surprising days ALWAYS surface, each flagged against
     # the 3-sigma gate: on the smooth synthetic fixture no day clears
     # 3 sigma at any scale, so the original flagged-only output was
@@ -8119,8 +7974,8 @@ def ts_ar_residual_outliers(spark, sf_dir):
         .select(
             "day",
             "x",
-            q6(F.col("e")).alias("residual"),
-            q6(F.col("e") / F.col("s")).alias("z_resid"),
+            qround(F.col("e")).alias("residual"),
+            qround(F.col("e") / F.col("s")).alias("z_resid"),
             (F.abs(F.col("e")) > F.lit(3.0) * F.col("s")).alias("is_outlier"),
         )
     )
@@ -8206,9 +8061,8 @@ def ts_price_index_fisher(spark, sf_dir):
             F.col("l_quantity").cast("bigint").alias("q"),
         )
     )
-    q6f = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     pb = tagged.groupBy("brand", "period").agg(
-        q6f(F.sum("pq").cast("double") / F.lit(1e6) / F.sum("q")).alias("unit_p"),
+        qround(F.sum("pq").cast("double") / F.lit(1e6) / F.sum("q")).alias("unit_p"),
         F.sum("q").cast("bigint").alias("qty"),
     )
     wide = (
@@ -8236,9 +8090,9 @@ def ts_price_index_fisher(spark, sf_dir):
     paas = F.col("s_p1q1") / F.col("s_p0q1")
     return sums.select(
         "n_brands",
-        q6f(lasp).alias("laspeyres"),
-        q6f(paas).alias("paasche"),
-        q6f(F.sqrt(lasp * paas)).alias("fisher"),
+        qround(lasp).alias("laspeyres"),
+        qround(paas).alias("paasche"),
+        qround(F.sqrt(lasp * paas)).alias("fisher"),
     )
 
 
@@ -8305,7 +8159,6 @@ def ts_revenue_beta(spark, sf_dir):
     beta ranking."""
     li = t(spark, sf_dir, "lineitem").select("l_partkey", "l_shipdate", "l_extendedprice")
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    q6f = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     bd = ckpt(
         li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
         .groupBy(
@@ -8314,15 +8167,10 @@ def ts_revenue_beta(spark, sf_dir):
         )
         .agg(
             (
-                F.sum(q6dec(F.col("l_extendedprice"))).cast("double")
-                / F.lit(1e6)
+                qsum(F.col("l_extendedprice"))
                 / F.lit(1000.0)
             ).alias("rev")
         )
-    )
-    q6sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
     )
     # zero-filled brand x day spine: beta additivity needs every brand
     # present every day (silent days count as zero revenue)
@@ -8332,17 +8180,17 @@ def ts_revenue_beta(spark, sf_dir):
         .join(bd, ["brand", "day"], "left")
         .select("brand", "day", F.coalesce("rev", F.lit(0.0)).alias("rev"))
     )
-    td = spine.groupBy("day").agg(q6f(q6sum(F.col("rev"))).alias("mkt"))
+    td = spine.groupBy("day").agg(qround(qsum(F.col("rev"))).alias("mkt"))
     joined = spine.join(td, "day").select(
         "brand", F.col("rev").alias("y"), F.col("mkt").alias("x")
     )
     m = joined.groupBy("brand").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        q6sum(F.col("x")).alias("sx"),
-        q6sum(F.col("y")).alias("sy"),
-        q6sum(F.col("x") * F.col("x")).alias("sxx"),
-        q6sum(F.col("x") * F.col("y")).alias("sxy"),
-        q6sum(F.col("y") * F.col("y")).alias("syy"),
+        qsum(F.col("x")).alias("sx"),
+        qsum(F.col("y")).alias("sy"),
+        qsum(F.col("x") * F.col("x")).alias("sxx"),
+        qsum(F.col("x") * F.col("y")).alias("sxy"),
+        qsum(F.col("y") * F.col("y")).alias("syy"),
     )
     cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     varx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -8357,8 +8205,8 @@ def ts_revenue_beta(spark, sf_dir):
     return fit.select(
         "brand",
         F.col("n").cast("bigint").alias("n_days"),
-        q6f(F.col("beta")).alias("beta"),
-        q6f(F.col("r2")).alias("r2"),
+        qround(F.col("beta")).alias("beta"),
+        qround(F.col("r2")).alias("r2"),
         F.row_number().over(w).cast("bigint").alias("rank"),
     )
 
@@ -8426,8 +8274,7 @@ def ts_durbin_watson(spark, sf_dir):
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
             (
-                F.sum(q6dec(F.col("o_totalprice"))).cast("double")
-                / F.lit(1e6)
+                qsum(F.col("o_totalprice"))
                 / F.lit(1000.0)
             ).alias("rev")
         )
@@ -8437,42 +8284,36 @@ def ts_durbin_watson(spark, sf_dir):
             "day", "rev", F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i")
         )
     )
-    q6sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,6)")).cast("double")
-        / F.lit(1e6)
-    )
     m = series.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("i").cast("double").alias("si"),
-        q6sum(F.col("rev")).alias("sy"),
+        qsum(F.col("rev")).alias("sy"),
         F.sum(F.col("i") * F.col("i")).cast("double").alias("sii"),
-        q6sum(F.col("i") * F.col("rev")).alias("siy"),
+        qsum(F.col("i") * F.col("rev")).alias("siy"),
     )
     b = (F.col("n") * F.col("siy") - F.col("si") * F.col("sy")) / (
         F.col("n") * F.col("sii") - F.col("si") * F.col("si")
     )
     fit = m.select(b.alias("b"), ((F.col("sy") - b * F.col("si")) / F.col("n")).alias("a"))
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     resid = ckpt(
         series.crossJoin(F.broadcast(fit)).select(
-            "i", q9(F.col("rev") - F.col("a") - F.col("b") * F.col("i")).alias("e")
+            "i", qround(F.col("rev") - F.col("a") - F.col("b") * F.col("i"), 9).alias("e")
         )
     )
     lagged = resid.select(F.col("i").alias("il"), F.col("e").alias("el"))
     sdiff = (
         resid.join(lagged, F.col("il") == F.col("i") - 1)
-        .agg(q6sum((F.col("e") - F.col("el")) * (F.col("e") - F.col("el"))).alias("sdiff"))
+        .agg(qsum((F.col("e") - F.col("el")) * (F.col("e") - F.col("el"))).alias("sdiff"))
     )
     see = resid.agg(
-        q6sum(F.col("e") * F.col("e")).alias("s2"),
+        qsum(F.col("e") * F.col("e")).alias("s2"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
-    q6f = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     dw = F.col("sdiff") / F.col("s2")
     return sdiff.crossJoin(F.broadcast(see)).select(
         F.col("n").alias("n_days"),
-        q6f(dw).alias("dw_stat"),
-        q6f(F.lit(1.0) - dw / F.lit(2.0)).alias("rho_implied"),
+        qround(dw).alias("dw_stat"),
+        qround(F.lit(1.0) - dw / F.lit(2.0)).alias("rho_implied"),
         (dw < F.lit(1.5)).alias("positive_autocorr"),
     )
 
@@ -8536,7 +8377,7 @@ def ts_seasonal_indices(spark, sf_dir):
     raw = (
         t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg((F.sum(q6dec(F.col("o_totalprice"))).cast("double") / F.lit(1e6)).alias("rev"))
+        .agg(qsum(F.col("o_totalprice")).alias("rev"))
     )
     # zero-fill: a day with no orders is a genuine zero-revenue day;
     # without it sparse scales have NO complete weeks at all
@@ -8553,31 +8394,25 @@ def ts_seasonal_indices(spark, sf_dir):
             F.floor(F.datediff("day", anchor) / 7).cast("bigint").alias("week"),
         )
     )
-    q6f = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    q9 = lambda c: F.floor(c * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
     wk = daily.select(
         "dow",
         "rev",
-        q6f(F.avg("rev").over(Window.partitionBy("week"))).alias("wavg"),
+        qround(F.avg("rev").over(Window.partitionBy("week"))).alias("wavg"),
         F.count(F.lit(1)).over(Window.partitionBy("week")).cast("bigint").alias("ndays"),
     )
     # all-zero weeks (wavg = 0) carry no seasonal information
     ratios = wk.filter((F.col("ndays") == 7) & (F.col("wavg") > 0)).select(
-        "dow", q9(F.col("rev") / F.col("wavg")).alias("ratio")
-    )
-    q9sum = lambda c: (
-        F.sum(F.floor(c * F.lit(1e9) + F.lit(0.5)).cast("decimal(38,9)")).cast("double")
-        / F.lit(1e9)
+        "dow", qround(F.col("rev") / F.col("wavg"), 9).alias("ratio")
     )
     raw = ckpt(
         ratios.groupBy("dow").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_weeks"),
-            (q9sum(F.col("ratio")) / F.count(F.lit(1))).alias("idx_raw"),
+            (qsum(F.col("ratio"), 9) / F.count(F.lit(1))).alias("idx_raw"),
         )
     )
-    norm = raw.agg(q9sum(F.col("idx_raw")).alias("s"))
+    norm = raw.agg(qsum(F.col("idx_raw"), 9).alias("s"))
     return raw.crossJoin(F.broadcast(norm)).select(
         "dow",
         "n_weeks",
-        q6f(F.col("idx_raw") * F.lit(7.0) / F.col("s")).alias("seasonal_index"),
+        qround(F.col("idx_raw") * F.lit(7.0) / F.col("s")).alias("seasonal_index"),
     )

@@ -21,7 +21,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
 from ..registry import register
-from ._shared import t
+from ._shared import qround, t
 
 
 @register(
@@ -434,7 +434,7 @@ def udf_window_pandas(spark, sf_dir):
     return e.select(
         "event_id",
         "user_id",
-        (F.floor(raw * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("roll_avg"),
+        qround(raw).alias("roll_avg"),
     )
 
 

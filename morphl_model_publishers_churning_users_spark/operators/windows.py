@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import t
+from ._shared import dsum, qdec, qround, t
 
 _US_7D = 7 * 86400 * 1_000_000
 
@@ -300,14 +300,13 @@ def win_rank_pct(spark, sf_dir):
     the boundary never triggered."""
     c = t(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy("c_acctbal")
-    half_up6 = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return c.select(
         "c_custkey",
         "c_nationkey",
         F.rank().over(w).cast("bigint").alias("rnk"),
         F.dense_rank().over(w).cast("bigint").alias("drnk"),
-        half_up6(F.percent_rank().over(w)).alias("prnk"),
-        half_up6(F.cume_dist().over(w)).alias("cdist"),
+        qround(F.percent_rank().over(w)).alias("prnk"),
+        qround(F.cume_dist().over(w)).alias("cdist"),
     )
 
 
@@ -521,7 +520,6 @@ def win_rolling_corr(spark, sf_dir):
     zero-variance frames are NULL. The unpartitioned window runs on the
     already-collapsed day table — the only safe place for one (the
     ts_day_over_day discipline)."""
-    q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     daily = (
         t(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
@@ -548,7 +546,7 @@ def win_rolling_corr(spark, sf_dir):
     return m.select(
         "day",
         F.col("n").cast("bigint").alias("n_win"),
-        F.when((vx > 0) & (vy > 0), q6(corr)).alias("rolling_corr"),
+        F.when((vx > 0) & (vy > 0), qround(corr)).alias("rolling_corr"),
     )
 
 
@@ -593,7 +591,7 @@ def win_expanding_slope(spark, sf_dir):
     that runs incrementally at any scale."""
     e = t(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("d")).agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("y")
+        dsum(F.col("value")).alias("y")
     )
     w_ord = Window.partitionBy("event_type").orderBy("d")
     seq = daily.withColumn("x", F.row_number().over(w_ord))
@@ -605,9 +603,7 @@ def win_expanding_slope(spark, sf_dir):
         F.sum(F.col("x").cast("bigint") * F.col("x")).over(w).alias("sxx"),
         F.sum(F.col("y").cast("decimal(38,6)")).over(w).alias("sy"),
         F.sum(
-            F.floor(F.col("y") * F.col("x") * F.lit(1e6) + F.lit(0.5)).cast(
-                "decimal(38,6)"
-            )
+            qdec(F.col("y") * F.col("x"))
         )
         .over(w)
         .alias("sxy_q"),

@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..catalog import table
-from ..operators._shared import ckpt
+from ..operators._shared import ckpt, dsum
 
 # Fixture event horizon (FIXTURES.md: ts ∈ [2024-01-01, 2024-01-30]).
 # The fixture compresses activity into one month, so the recency
@@ -62,7 +62,7 @@ def user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("n_purchases"),
-        F.round(F.sum(F.col("value").cast("decimal(38,6)")).cast("double"), 6).alias("sum_value"),
+        F.round(dsum(F.col("value")), 6).alias("sum_value"),
         F.round(F.avg("value"), 6).alias("avg_value"),
         F.countDistinct(F.to_date("ts")).alias("active_days"),
         F.max("ts").alias("last_ts"),

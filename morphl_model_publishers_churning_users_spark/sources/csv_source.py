@@ -13,7 +13,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from ..operators._shared import scratch_dir, t
+from ..operators._shared import dsum, scratch_dir, t
 from ..registry import register
 
 
@@ -160,7 +160,7 @@ def source_tsv(spark, sf_dir):
     )
     return back.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast("double").alias("sum_bal"),
+        dsum(F.col("c_acctbal")).alias("sum_bal"),
     )
 
 
@@ -292,5 +292,5 @@ def source_csv_multichar(spark, sf_dir):
     )
     return back.groupBy("n_name").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.col("s_acctbal").cast("decimal(38,6)")).cast("double").alias("sum_bal"),
+        dsum(F.col("s_acctbal")).alias("sum_bal"),
     )

@@ -13,7 +13,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from ..operators._shared import scratch_dir, t
+from ..operators._shared import dsum, scratch_dir, t
 from ..registry import register
 
 
@@ -36,7 +36,7 @@ def sink_orc(spark, sf_dir):
     ).orc(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
+        dsum(F.col("value")).alias("sum_value"),
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
     )

@@ -31,7 +31,7 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 
-from ..operators._shared import DSUM, scratch_dir
+from ..operators._shared import DSUM, dsum, scratch_dir
 from ..registry import register
 from ..sources.stream_source import _stream_events, run_available_now, stage_events_dir
 
@@ -59,7 +59,7 @@ def ts_watermark(spark, sf_dir):
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(38,6)")).cast("double"), 6).alias("sum_value"),
+            F.round(dsum(F.col("value")), 6).alias("sum_value"),
         )
         .select(F.col("w.start").cast("date").alias("day_start"), "n_events", "sum_value")
     )
@@ -211,7 +211,7 @@ def ts_stream_join(spark, sf_dir):
     )
     agg = joined.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(38,6)")).cast("double"), 6).alias("sum_value"),
+        F.round(dsum(F.col("value")), 6).alias("sum_value"),
     )
     return run_available_now(agg, "ts_stream_join", output_mode="complete")
 
@@ -355,9 +355,7 @@ def ts_stream_sliding(spark, sf_dir):
         .groupBy(F.window("ts", "2 days", "1 day").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(38,6)")).cast("double"), 6
-            ).alias("sum_value"),
+            F.round(dsum(F.col("value")), 6).alias("sum_value"),
         )
         .select(F.col("w.start").cast("date").alias("win_start"), "n_events", "sum_value")
     )

@@ -118,24 +118,40 @@ def test_periodogram_power_consistent(spark, sf_dir):
 
 
 def test_reliable_checkpoint_knob(spark, sf_dir, tmp_path, monkeypatch):
-    """With SPARK_GRAFT_CHECKPOINT_DIR set, the iterative loops switch
-    from localCheckpoint to reliable checkpoint() and still converge to
-    the same fixpoint (judge r5: executor-local blocks die with their
-    executor at cluster scale, so the strategy must be switchable)."""
-    baseline = {
-        tuple(r) for r in _Q["graph_cc"](spark, sf_dir).collect()
-    }
-    # The checkpoint dir sticks to the SparkContext for the session, but
-    # ckpt() gates on the env var, so clearing it (monkeypatch teardown)
-    # returns later tests to the localCheckpoint path.
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
-    reliable = {
-        tuple(r) for r in _Q["graph_cc"](spark, sf_dir).collect()
-    }
-    assert reliable == baseline
+    """With SPARK_GRAFT_CHECKPOINT_DIR set, every materialization switches
+    from localCheckpoint to reliable checkpoint() and the ops still return
+    the same rows (executor-local blocks die with their
+    executor at cluster scale, so the strategy must be switchable).
+    graph_cc is an iterative loop; ml_logreg_gd materializes its
+    recency spine and feature table, both routed through `ckpt`."""
     import os
 
-    assert any(os.scandir(str(tmp_path / "ckpt"))), "checkpoint dir unused"
+    # The checkpoint dir sticks to the SparkContext for the session, but
+    # ckpt() gates on the env var, so clearing it (monkeypatch teardown)
+    # returns later tests to the localCheckpoint path. Because the dir is
+    # set only once per context, new files are looked for under
+    # sc.getCheckpointDir(), which an earlier test may already own.
+    sc = spark.sparkContext
+
+    def checkpoint_files():
+        d = sc.getCheckpointDir()
+        if d is None:
+            return set()
+        root = d.removeprefix("file:")
+        return {
+            os.path.join(dirpath, f)
+            for dirpath, _dirs, files in os.walk(root)
+            for f in files
+        }
+
+    for key in ("graph_cc", "ml_logreg_gd"):
+        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+        baseline = {tuple(r) for r in _Q[key](spark, sf_dir).collect()}
+        before = checkpoint_files()
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+        reliable = {tuple(r) for r in _Q[key](spark, sf_dir).collect()}
+        assert reliable == baseline, key
+        assert checkpoint_files() - before, f"{key}: no reliable checkpoint written"
 
 
 # --- round-6 additions -----------------------------------------------------
