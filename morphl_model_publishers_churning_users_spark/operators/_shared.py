@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import glob
 import os
+import posixpath
 import shutil
 import time
 
@@ -207,12 +208,27 @@ def ckpt(df: DataFrame) -> DataFrame:
     the whole job because the truncated lineage cannot be recomputed.
     Set ``SPARK_GRAFT_CHECKPOINT_DIR`` to a fault-tolerant path
     (HDFS/S3/NFS) to switch every materialization to reliable
-    ``checkpoint()`` — slower per round, survivable at scale.
+    ``checkpoint()`` — slower per round, survivable at scale. The
+    setting is read on every call, so a changed directory takes effect
+    at the next checkpoint. Reliable checkpoint files are deleted once
+    their DataFrame is garbage-collected only when the session was
+    launched with ``spark.cleaner.referenceTracking.cleanCheckpoints``
+    (``build_session`` sets it; a driver-owned session must set it at
+    launch, as the conf is static).
     """
     d = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if d:
         sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
+        cur = sc.getCheckpointDir()
+        # Spark checkpoints into a fresh UUID subdirectory of the dir it
+        # was given, fully qualified.
+        if cur is None or posixpath.dirname(cur.rstrip("/")) != _qualified(sc, d):
             sc.setCheckpointDir(d)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def _qualified(sc, path: str) -> str:
+    """``path`` as Hadoop qualifies it (scheme, authority, absolute)."""
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(p).toString()

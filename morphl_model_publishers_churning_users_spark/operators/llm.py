@@ -46,7 +46,7 @@ def llm_dedup_exact(spark, sf_dir):
 
 
 def _signed_corpus(spark, sf_dir):
-    """The MinHash-signed corpus, checkpointed: (doc_id, shingles,
+    """The MinHash-signed corpus, checkpointed: (doc_id, sarr, sz,
     features, hashes) per document with ≥1 distinct 3-word shingle, plus
     the fitted LSH model. Binary HashingTF → MinHashLSH(5 tables).
 
@@ -63,33 +63,11 @@ def _signed_corpus(spark, sf_dir):
     the stored set doubles as the exact-Jaccard input."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    # The fixture lands as one small parquet file → one partition, and the
-    # whole shingle→hash→minhash chain would run single-threaded. Spread
-    # the RAW rows across the cluster BEFORE any per-row transform work —
-    # projections do not migrate across an exchange, so repartitioning
-    # after shingling would still compute the shingles on one core (and
-    # shuffle the fat arrays instead of the raw text). Profiled: moving
-    # the exchange below the projection cut the transform stage ~6×.
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-    )
-    # Guard empties on the CHEAP precondition (≥3 words ⇔ ≥1 shingle),
-    # not on size(shingles): Catalyst pushes filters through exchanges
-    # with their expressions inlined, so filtering on the shingle array
-    # would evaluate the interpreted higher-order shingle lambda inside
-    # the pre-exchange scan stage — single-threaded (profiled: ~7 s of
-    # the op's runtime at sf0.1). The word-count guard pushes down for
-    # pennies and keeps the shingle projection post-exchange, parallel.
-    # It also keeps Spark 4's ANSI element_at from throwing on <3-word
-    # docs (sequence(1, 0) is [1, 0], not empty).
-    shingled = d.filter(F.size("w") >= 3).select(
-        "doc_id", F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("shingles")
+    shingled = _shingle_sets(
+        t(spark, sf_dir, "documents").select("doc_id", "text"), F.lower(F.trim("text"))
     )
     vecs = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
+        inputCol="sarr", outputCol="features", numFeatures=1 << 18, binary=True
     ).transform(shingled)
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=5, seed=42).fit(vecs)
     # Transform ONCE and MATERIALIZE the signed corpus before the
@@ -128,37 +106,6 @@ def raw_dedup_fuzzy(spark, sf_dir):
     return _lsh_pairs(*_signed_corpus(spark, sf_dir))
 
 
-def _sampled_exact_pairs(signed, min_sim: float, probe_mod: int):
-    """Exact shingle-Jaccard ≥ ``min_sim`` pairs (doc_a < doc_b) with ≥1
-    endpoint a probe doc (``doc_id % probe_mod == 0``), from the shingle
-    sets stored in the signed corpus: a probe × corpus shared-shingle
-    equi-join (bounded blocking, never all-pairs)."""
-    words = signed.select(
-        "doc_id", F.size("shingles").alias("sz"), F.explode("shingles").alias("g")
-    )
-    a = words.filter(F.col("doc_id") % probe_mod == 0).select(
-        F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"), "g"
-    )
-    b = words.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"), "g")
-    return (
-        a.join(b, "g")
-        # Each pair once: a pair of two probe docs meets in both
-        # orientations (keep doc_a < doc_b); a probe × non-probe pair
-        # meets only with the probe doc as doc_a.
-        .filter((F.col("doc_a") < F.col("doc_b")) | (F.col("doc_b") % probe_mod != 0))
-        # Jaccard ≤ min(sz)/max(sz): a pair whose sizes differ too much
-        # can never reach min_sim, so cut it before the group-by.
-        .filter(F.least("sza", "szb") >= F.greatest("sza", "szb") * min_sim)
-        .groupBy("doc_a", "doc_b", "sza", "szb")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") / (F.col("sza") + F.col("szb") - F.col("n_common")) >= min_sim)
-        .select(
-            F.least("doc_a", "doc_b").alias("doc_a"),
-            F.greatest("doc_a", "doc_b").alias("doc_b"),
-        )
-    )
-
-
 @register(
     "llm_dedup_fuzzy",
     oracle="SELECT (SELECT COUNT(*) FROM documents) AS n_docs, TRUE AS recall_ok",
@@ -188,7 +135,7 @@ def llm_dedup_fuzzy(spark, sf_dir):
     probe_mod = 3
     lsh, signed = _signed_corpus(spark, sf_dir)
     lsh_pairs = _lsh_pairs(lsh, signed).select("doc_a", "doc_b", F.lit(True).alias("hit"))
-    exact = _sampled_exact_pairs(signed, 0.4, probe_mod)
+    exact = _jaccard_pairs(signed, 0.4, probe_mod)
     recall = (
         exact.join(lsh_pairs, ["doc_a", "doc_b"], "left")
         .agg(F.count(F.lit(1)).alias("n_exact"), F.count("hit").alias("n_hit"))
@@ -283,22 +230,85 @@ _NGRAM_SH_DUCK = (
 )
 
 
-def _doc_shingles(spark, sf_dir):
-    """(doc_id, g) — DISTINCT word-3-shingles per doc, checkpointed.
+def _shingle_sets(docs, text):
+    """Every column of ``docs`` but ``text``, plus ``sarr`` (the doc's
+    DISTINCT word-3-shingles, words split on whitespace from the
+    ``text`` Column) and ``sz`` (its size, bigint). Docs with < 3 words
+    have no shingles and are dropped. The one spelling of the shingle
+    set: callers pass the normalization (``F.trim("text")`` for the
+    n-gram family, ``F.lower(F.trim("text"))`` for the MinHash family).
 
-    The shared spine of the Jaccard/containment family
-    (llm_dedup_ngram's construction, factored so the size>=3 ANSI
-    guard and the distinct stay in ONE place): feeds per-doc sizes and
-    both legs of the shared-shingle join in every consumer.
-    """
-    d = t(spark, sf_dir, "documents")
-    grams = (
-        d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)  # ANSI: shingle lambda indexes OOB on short docs
-        .select("doc_id", F.explode(F.expr(_NGRAM_SH_SPARK)).alias("g"))
-        .distinct()
+    The fixture lands as one small parquet file → one partition, and the
+    shingle work would run single-threaded. Spread the RAW rows across
+    the cluster BEFORE any per-row transform work — projections do not
+    migrate across an exchange, so repartitioning after shingling would
+    still compute the shingles on one core (and shuffle the fat arrays
+    instead of the raw text). Profiled: moving the exchange below the
+    projection cut the transform stage ~6×.
+
+    Guard empties on the CHEAP precondition (≥3 words ⇔ ≥1 shingle),
+    not on size(sarr): Catalyst pushes filters through exchanges with
+    their expressions inlined, so a filter on the shingle array would
+    evaluate the interpreted shingle lambda inside the single-task scan
+    stage (profiled: ~7 s at sf0.1). The guard also keeps Spark 4's ANSI
+    element_at from throwing on <3-word docs (sequence(1, 0) is [1, 0]).
+    The same push-down hits ``explode(sarr)``: Catalyst infers
+    ``size(sarr) > 0`` from a generator and pushes it, lambda inlined,
+    into the scan. So explode ``sarr`` only from a checkpoint
+    (:func:`_doc_shingles` and the callers' own ``ckpt``)."""
+    keep = [c for c in docs.columns if c != "text"]
+    return (
+        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        .select(*keep, F.split(text, r"\s+").alias("w"))
+        .filter(F.size("w") >= 3)
+        .select(*keep, F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("sarr"))
+        .withColumn("sz", F.size("sarr").cast("bigint"))
     )
-    return ckpt(grams)
+
+
+def _doc_shingles(spark, sf_dir):
+    """(doc_id, sarr, sz) over trimmed text, checkpointed: the shared
+    spine of the n-gram Jaccard/containment family."""
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    return ckpt(_shingle_sets(docs, F.trim("text")))
+
+
+def _jaccard_pairs(sets, min_sim: float, probe_mod: int = 1):
+    """Exact shingle-Jaccard ≥ ``min_sim`` pairs (doc_a < doc_b, jac) of
+    checkpointed shingle ``sets`` (doc_id, sarr, sz): a shared-shingle
+    equi-join, so candidates are only pairs with a common shingle, never
+    all-pairs. With ``probe_mod`` > 1, only pairs with ≥1 endpoint a
+    probe doc (``doc_id % probe_mod == 0``) are found: a sampled
+    probe × corpus join, the bounded ground truth of a recall audit.
+
+    Size filter (AllPairs, Bayardo et al. 2007): J = m/(|A|+|B|−m) ≤
+    min(|A|,|B|)/max(|A|,|B|), so a pair with min < max·min_sim can never
+    reach min_sim and is cut before the group-by. Exact in doubles too
+    (pinned in tests/test_similarity_helpers.py)."""
+    g = sets.select("doc_id", "sz", F.explode("sarr").alias("g"))
+    a = g.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza"), "g")
+    b = g.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb"), "g")
+    once = F.col("doc_a") < F.col("doc_b")
+    if probe_mod > 1:
+        a = a.filter(F.col("doc_a") % probe_mod == 0)
+        # Each pair once: a pair of two probe docs meets in both
+        # orientations (keep doc_a < doc_b); a probe × non-probe pair
+        # meets only with the probe doc as doc_a.
+        once = once | (F.col("doc_b") % probe_mod != 0)
+    jac = F.col("n_common") / (F.col("sza") + F.col("szb") - F.col("n_common"))
+    return (
+        a.join(b, "g")
+        .filter(once)
+        .filter(F.least("sza", "szb") >= F.greatest("sza", "szb") * min_sim)
+        .groupBy("doc_a", "doc_b", "sza", "szb")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+        .filter(jac >= min_sim)
+        .select(
+            F.least("doc_a", "doc_b").alias("doc_a"),
+            F.greatest("doc_a", "doc_b").alias("doc_b"),
+            jac.alias("jac"),
+        )
+    )
 
 
 @register(
@@ -326,37 +336,52 @@ def llm_dedup_ngram(spark, sf_dir):
     """Word-3-shingle Jaccard near-dup pairs. Candidates come from
     joining on shared shingles (selective — a shared trigram of words is
     rare), so cost is O(shared shingles), not O(n²) pairs."""
-    d = t(spark, sf_dir, "documents")
-    grams = (
-        d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)  # ANSI: the shingle lambda indexes OOB on short docs
-        .select("doc_id", F.explode(F.expr(_NGRAM_SH_SPARK)).alias("g"))
-        .distinct()
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = grams.select(F.col("doc_id").alias("doc_a"), "g")
-    b = grams.select(F.col("doc_id").alias("doc_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= 0.2)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    pairs = _jaccard_pairs(_doc_shingles(spark, sf_dir), 0.2)
+    return pairs.select("doc_a", "doc_b", F.round("jac", 6).alias("jaccard"))
 
 
 # ------------------------------------------------------- similarity search
 
 _DOT = "aggregate(zip_with(qe, ce, (x, y) -> cast(x as double) * cast(y as double)), 0D, (a, x) -> a + x)"
 _NORM = "sqrt(aggregate(transform({c}, x -> cast(x as double) * cast(x as double)), 0D, (a, x) -> a + x))"
+
+
+def _emb_norm():
+    """L2 norm of the ``embedding`` array column (transform-sum, codegen)."""
+    return F.expr(_NORM.format(c="embedding"))
+
+
+def _query_pairs(spark, sf_dir):
+    """(query_id, neighbor_id, qe, ce, cos_sim): exact cosine of every
+    query (vec_id < 5) × corpus pair, self-pairs excluded — the spine of
+    the exact top-k ops. The query side is broadcast, norms are computed
+    once per row, and the dot product is a zip_with/aggregate (JVM
+    codegen, no UDF). ``qe``/``ce`` stay for callers scoring a second
+    metric over the same pairs."""
+    withnorm = t(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", _emb_norm().alias("norm")
+    )
+    q = withnorm.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        F.col("norm").alias("qnorm"),
+    )
+    c = withnorm.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ce"),
+        F.col("norm").alias("cnorm"),
+    )
+    return (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            "qe",
+            "ce",
+            F.round(F.expr(_DOT) / (F.col("qnorm") * F.col("cnorm")), 6).alias("cos_sim"),
+        )
+    )
 
 
 @register(
@@ -386,29 +411,7 @@ def llm_simsearch(spark, sf_dir):
     once, dot product via zip_with/aggregate (JVM codegen — no UDF), then
     per-query top-k via window rank. At 100 TB the same plan holds with a
     bounded query set; for open-ended k-NN use llm_simsearch_ann."""
-    e = t(spark, sf_dir, "embeddings")
-    withnorm = e.select(
-        "vec_id", "embedding", F.expr(_NORM.format(c="embedding")).alias("norm")
-    )
-    q = withnorm.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
-    c = withnorm.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cnorm"),
-    )
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.expr(_DOT) / (F.col("qnorm") * F.col("cnorm")), 6).alias("cos_sim"),
-        )
-    )
+    pairs = _query_pairs(spark, sf_dir).select("query_id", "neighbor_id", "cos_sim")
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 10)
 
@@ -475,13 +478,13 @@ def llm_dedup_cosine(spark, sf_dir, bits: int = 4):
     a = sig.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("qe"),
-        F.expr(_NORM.format(c="embedding")).alias("na"),
+        _emb_norm().alias("na"),
         "bucket",
     )
     b = sig.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("ce"),
-        F.expr(_NORM.format(c="embedding")).alias("nb"),
+        _emb_norm().alias("nb"),
         "bucket",
     )
     cos = F.round(F.expr(_DOT) / (F.col("na") * F.col("nb")), 6)
@@ -896,13 +899,8 @@ def llm_fingerprint(spark, sf_dir):
     signature, the winnowing idea) — equal fingerprints ⇒ near-dup
     candidates. md5 keeps it oracle-comparable; production would use
     xxhash64."""
-    d = t(spark, sf_dir, "documents")
-    grams = (
-        d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)  # ANSI: the shingle lambda indexes OOB on short docs
-        .select("doc_id", F.explode(F.expr(_NGRAM_SH_SPARK)).alias("g"))
-        .distinct()
-        .select("doc_id", F.md5("g").alias("h"))
+    grams = _doc_shingles(spark, sf_dir).select(
+        "doc_id", F.explode(F.expr("transform(sarr, g -> md5(g))")).alias("h")
     )
     w = Window.partitionBy("doc_id").orderBy("h")
     return (
@@ -1073,18 +1071,17 @@ def llm_contamination(spark, sf_dir):
     from shared shingles, never an all-pairs comparison; the train
     shingle set is the distinct'd small side of an equi-join that AQE
     can broadcast when it fits."""
-    d = t(spark, sf_dir, "documents")
-    grams = (
-        d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)  # ANSI: the shingle lambda indexes OOB on short docs
-        .select("doc_id", F.explode(F.expr(_NGRAM_SH_SPARK)).alias("g"))
-        .distinct()
-    )
+    sets = _doc_shingles(spark, sf_dir)
+    grams = sets.select("doc_id", F.explode("sarr").alias("g"))
     train = grams.filter(F.col("doc_id") % 10 < 8).select("g").distinct()
-    eval_grams = grams.filter(F.col("doc_id") % 10 >= 8)
-    sizes = eval_grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    hits = eval_grams.join(train, "g").groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_overlap")
+    hits = (
+        grams.filter(F.col("doc_id") % 10 >= 8)
+        .join(train, "g")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_overlap"))
+    )
+    sizes = sets.filter(F.col("doc_id") % 10 >= 8).select(
+        "doc_id", F.col("sz").alias("n_grams")
     )
     joined = sizes.join(hits, "doc_id", "left")
     n_overlap = F.coalesce(F.col("n_overlap"), F.lit(0).cast("bigint"))
@@ -1921,6 +1918,35 @@ def llm_embed_quantize(spark, sf_dir):
 
 # ------------------------------------------------- pure-SQL MinHash banding
 
+_KM_M = 4503599627370496  # 2^52
+
+
+def _km_bases(sets):
+    """``sets`` plus ``xs``: the Kirsch–Mitzenmacher hash bases of each
+    shingle in ``sarr``. ONE md5 per shingle supplies two 52-bit integers
+    (x1, x2|1); md5-derived integers are bit-identical across engines."""
+    return sets.withColumn(
+        "xs",
+        F.expr(
+            "transform(sarr, s -> named_struct("
+            " 'x1', cast(conv(substr(md5(s), 1, 13), 16, 10) as bigint),"
+            " 'x2', cast(conv(substr(md5(s), 17, 13), 16, 10) as bigint) | 1L))"
+        ),
+    )
+
+
+def _km_signature():
+    """The array ``h`` of 8 min-hashes over ``xs`` (:func:`_km_bases`):
+    seeded hash_i = (x1 + i·x2) mod 2^52, i = 0..7. 52-bit pieces keep
+    i·x2 ≤ 7·2^52 < 2^63 — no int64 overflow on either engine. Compute
+    it over checkpointed bases: inlined into the seed lambda, each
+    shingle's md5 would be recomputed for every seed."""
+    return F.expr(
+        f"transform(sequence(0, 7), i -> "
+        f"array_min(transform(xs, p -> (p.x1 + i * p.x2) % {_KM_M}L)))"
+    )
+
+
 @register(
     "llm_dedup_minhash_sql",
     oracle=r"""
@@ -1996,46 +2022,18 @@ def llm_dedup_minhash_sql(spark, sf_dir):
     anchor: the only near-dup operator whose full pair set value-hashes
     against the oracle. 52-bit pieces keep i·x2 ≤ 7·2^52 < 2^63 —
     no int64 overflow on either engine."""
-    M = 4503599627370496  # 2^52
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)  # ANSI: shingle lambda indexes OOB on short docs
-    )
     # Per-doc distinct shingle array + its (x1, x2) hash bases; one md5
     # per shingle, materialized once (this is the persisted index
     # artifact in production — same rationale as the MinHashLSH
     # signature checkpoint in raw_dedup_fuzzy).
-    doc_sh = ckpt(d.select(
-        "doc_id",
-        F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("sarr"),
-    ).select(
-        "doc_id",
-        "sarr",
-        F.size("sarr").cast("bigint").alias("sz"),
-        F.expr(
-            "transform(sarr, s -> named_struct("
-            " 'x1', cast(conv(substr(md5(s), 1, 13), 16, 10) as bigint),"
-            " 'x2', cast(conv(substr(md5(s), 17, 13), 16, 10) as bigint) | 1L))"
-        ).alias("xs"),
-    ))
-    sig = doc_sh.select(
-        "doc_id",
-        "sarr",
-        "sz",
-        *[
-            F.array_min(
-                F.expr(f"transform(xs, p -> (p.x1 + {i}L * p.x2) % {M}L)")
-            ).alias(f"h{i}")
-            for i in range(8)
-        ],
-    )
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    doc_sh = ckpt(_km_bases(_shingle_sets(docs, F.lower(F.trim("text")))))
+    sig = doc_sh.select("doc_id", _km_signature().alias("h"))
     band_arr = F.array(
         *[
             F.struct(
-                F.col(f"h{2 * b}").alias("bx"), F.col(f"h{2 * b + 1}").alias("by")
+                F.element_at("h", 2 * b + 1).alias("bx"),
+                F.element_at("h", 2 * b + 2).alias("by"),
             )
             for b in range(4)
         ]
@@ -2113,13 +2111,13 @@ def llm_semdedup(spark, sf_dir):
     a = sig.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("qe"),
-        F.expr(_NORM.format(c="embedding")).alias("na"),
+        _emb_norm().alias("na"),
         "bucket",
     )
     b = sig.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("ce"),
-        F.expr(_NORM.format(c="embedding")).alias("nb"),
+        _emb_norm().alias("nb"),
         "bucket",
     )
     cos = F.round(F.expr(_DOT) / (F.col("na") * F.col("nb")), 6)
@@ -2465,29 +2463,8 @@ def llm_rank_fusion(spark, sf_dir):
     same query_id partitioning — one shuffle total after the broadcast
     join. The production shape: swap either ranker for a BM25/ANN
     candidate list and the fusion plan is unchanged."""
-    e = t(spark, sf_dir, "embeddings")
-    withnorm = e.select(
-        "vec_id", "embedding", F.expr(_NORM.format(c="embedding")).alias("norm")
-    )
-    q = withnorm.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
-    c = withnorm.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cnorm"),
-    )
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.expr(_DOT) / (F.col("qnorm") * F.col("cnorm")), 6).alias("cos_sim"),
-            F.round(F.expr(_D2), 6).alias("l2_d2"),
-        )
+    pairs = _query_pairs(spark, sf_dir).select(
+        "query_id", "neighbor_id", "cos_sim", F.round(F.expr(_D2), 6).alias("l2_d2")
     )
     w_cos = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     w_l2 = Window.partitionBy("query_id").orderBy(F.asc("l2_d2"), F.asc("neighbor_id"))
@@ -2728,13 +2705,13 @@ def llm_knn_graph(spark, sf_dir):
         "bucket",
         F.col("vec_id").alias("vec_id"),
         F.col("embedding").alias("qe"),
-        F.expr(_NORM.format(c="embedding")).alias("na"),
+        _emb_norm().alias("na"),
     )
     b = sig.select(
         "bucket",
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("ce"),
-        F.expr(_NORM.format(c="embedding")).alias("nb"),
+        _emb_norm().alias("nb"),
     )
     pairs = (
         a.join(b, "bucket")
@@ -3129,20 +3106,13 @@ def llm_ngram_novelty(spark, sf_dir):
     word-trigrams whose FIRST corpus occurrence (min doc_id, the ingest
     order) is the doc itself. The streaming-corpus freshness signal: a
     doc full of already-seen trigrams is recombination, a high-novelty
-    doc brings new text. Shuffle shape: one explode→distinct per doc,
+    doc brings new text. Shuffle shape: one shingle set per doc,
     one min-aggregate per gram (the same key the probe join reuses —
     co-partitioned, no second fact shuffle), one per-doc count. The
     score is a ratio of integers, quantized half-up at 1e-6. Docs with
     < 3 words have no trigrams and are excluded on the cheap word-count
     guard, matching the oracle's empty-list behavior."""
-    grams = ckpt(
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)
-        .select("doc_id", F.explode(F.expr(_NGRAM_SH_SPARK)).alias("g"))
-        .distinct()
-    )
+    grams = _doc_shingles(spark, sf_dir).select("doc_id", F.explode("sarr").alias("g"))
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     return (
         grams.join(firsts, "g")
@@ -3721,16 +3691,12 @@ def llm_boilerplate_ngrams(spark, sf_dir):
     on the same key — never all-pairs, and the gate output is tiny
     (bounded by distinct repeated shingles, not corpus size), exactly
     the shape that survives a 100 TB crawl partitioned by domain."""
-    d = t(spark, sf_dir, "documents")
-    grams = (
-        d.select("doc_id", "source", F.split(F.trim("text"), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)
-        .select("doc_id", "source", F.explode(F.expr(_NGRAM_SH_SPARK)).alias("g"))
-        .distinct()
+    docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    # The shingle sets feed both the frequency table and the affected-doc
+    # join. Shingles are DISTINCT per doc: count(*) == distinct docs.
+    grams = ckpt(_shingle_sets(docs, F.trim("text"))).select(
+        "doc_id", "source", F.explode("sarr").alias("g")
     )
-    # grams is DISTINCT per (doc, source, shingle): count(*) == distinct docs.
-    # It feeds both the frequency table and the affected-doc join.
-    grams = ckpt(grams)
     freq = grams.groupBy("source", "g").agg(F.count(F.lit(1)).alias("n_docs"))
     boiler = freq.filter(F.col("n_docs") >= 4).select("source", "g")
     affected = (
@@ -3793,23 +3759,18 @@ def llm_dedup_containment(spark, sf_dir):
     just the SMALLER doc's shingle count, so no extra pass beyond the
     per-doc sizes both sides already need. Exact: integer intersection
     counts over distinct shingles, one double division."""
-    grams = _doc_shingles(spark, sf_dir)  # feeds sizes + both join legs
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = grams.select(F.col("doc_id").alias("doc_a"), "g")
-    b = grams.select(F.col("doc_id").alias("doc_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    grams = _doc_shingles(spark, sf_dir).select("doc_id", "sz", F.explode("sarr").alias("g"))
+    a = grams.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"), "g")
+    b = grams.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"), "g")
     cont = F.col("n_common") / F.col("sz_a")
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter((cont >= 0.8) & (F.col("sz_a") <= F.col("sz_b")))
+        a.join(b, "g")
+        # The size condition reads only the two sizes, so it is cut before
+        # the group-by (exact: a pair's sizes are the same on every row).
+        .filter((F.col("doc_a") != F.col("doc_b")) & (F.col("sz_a") <= F.col("sz_b")))
+        .groupBy("doc_a", "doc_b", "sz_a")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+        .filter(cont >= 0.8)
         .select(
             F.col("doc_a").alias("contained_doc"),
             F.col("doc_b").alias("container_doc"),
@@ -3941,50 +3902,13 @@ def llm_lsh_tuning_curve(spark, sf_dir):
     across engines, so even this meta-analysis has a full value-hash
     twin. One signature pass (materialized once), one unioned band
     self-join keyed by (layout, band, key), one exact-truth join."""
-    M = 4503599627370496
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)
-    )
-    doc_sh = ckpt(  # feeds signatures AND exact truth
-        d.select("doc_id", F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("sarr"))
-        .select(
-            "doc_id",
-            "sarr",
-            F.size("sarr").cast("bigint").alias("sz"),
-            F.expr(
-                "transform(sarr, s -> named_struct("
-                " 'x1', cast(conv(substr(md5(s), 1, 13), 16, 10) as bigint),"
-                " 'x2', cast(conv(substr(md5(s), 17, 13), 16, 10) as bigint) | 1L))"
-            ).alias("xs"),
-        )
-    )
-    sig = ckpt(doc_sh.select(
-        "doc_id",
-        F.expr(
-            f"transform(sequence(0, 7), i -> "
-            f"array_min(transform(xs, p -> (p.x1 + i * p.x2) % {M}L)))"
-        ).alias("h"),
-    ))  # feeds all four banding layouts
-    # exact ground truth via the blocked shingle join
-    grams = doc_sh.select("doc_id", "sz", F.explode("sarr").alias("g"))
-    ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"), "g")
-    gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"), "g")
-    inter = (
-        ga.join(gb, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("nc"))
-    )
-    truth = ckpt(  # feeds the per-config join AND the total
-        inter.filter(
-            F.col("nc").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("nc"))
-            >= 0.4
-        )
-        .select("doc_a", "doc_b")
-    )
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    # feeds signatures AND exact truth
+    doc_sh = ckpt(_km_bases(_shingle_sets(docs, F.lower(F.trim("text")))))
+    sig = ckpt(doc_sh.select("doc_id", _km_signature().alias("h")))  # all four layouts
+    # exact ground truth via the blocked shingle join; feeds the
+    # per-config join AND the total
+    truth = ckpt(_jaccard_pairs(doc_sh, 0.4).select("doc_a", "doc_b"))
     cfg = spark.createDataFrame([(1,), (2,), (4,), (8,)], "r int")
     bands = (
         sig.crossJoin(F.broadcast(cfg))
@@ -4126,29 +4050,7 @@ def llm_hard_negatives(spark, sf_dir):
     at 100 TB the mining runs per anchor batch against the ANN index
     (llm_simsearch_ivf's coarse quantizer) with this exact plan as the
     rescoring stage. Ranks deterministic (cos desc, id asc)."""
-    e = t(spark, sf_dir, "embeddings")
-    withnorm = e.select(
-        "vec_id", "embedding", F.expr(_NORM.format(c="embedding")).alias("norm")
-    )
-    q = withnorm.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("norm").alias("qnorm"),
-    )
-    c = withnorm.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm").alias("cnorm"),
-    )
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.expr(_DOT) / (F.col("qnorm") * F.col("cnorm")), 6).alias("cos_sim"),
-        )
-    )
+    pairs = _query_pairs(spark, sf_dir).select("query_id", "neighbor_id", "cos_sim")
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         pairs.filter((F.col("cos_sim") >= 0.2) & (F.col("cos_sim") < 0.8))
@@ -4270,25 +4172,8 @@ def llm_preference_pairs(spark, sf_dir):
     ranking one deterministic comparison with an id tie-break. At
     100 TB this is THE cheap preference corpus: no labelers, just
     dedup byproducts re-read as supervision."""
-    d = t(spark, sf_dir, "documents")
-    grams = _doc_shingles(spark, sf_dir)
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = grams.select(F.col("doc_id").alias("doc_a"), "g")
-    b = grams.select(F.col("doc_id").alias("doc_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
-    near = (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .filter(jac >= 0.2)
-        .select("doc_a", "doc_b")
-    )
-    meta = d.select("doc_id", "n_chars")
+    near = _jaccard_pairs(_doc_shingles(spark, sf_dir), 0.2).select("doc_a", "doc_b")
+    meta = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     ma = meta.select(F.col("doc_id").alias("doc_a"), F.col("n_chars").alias("nc_a"))
     mb = meta.select(F.col("doc_id").alias("doc_b"), F.col("n_chars").alias("nc_b"))
     a_wins = (F.col("nc_a") > F.col("nc_b")) | (
@@ -4520,22 +4405,8 @@ def llm_dedup_transitivity_audit(spark, sf_dir):
     (small) pair set keyed on the shared endpoint; closure is a hash
     lookup against the same pair set — never touches the corpus
     again."""
-    grams = _doc_shingles(spark, sf_dir)
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = grams.select(F.col("doc_id").alias("doc_a"), "g")
-    b = grams.select(F.col("doc_id").alias("doc_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
     near = ckpt(  # feeds sym, the closure probe, AND the count
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .filter(jac >= 0.2)
-        .select("doc_a", "doc_b")
+        _jaccard_pairs(_doc_shingles(spark, sf_dir), 0.2).select("doc_a", "doc_b")
     )
     sym = near.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
         near.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
@@ -4614,39 +4485,13 @@ def llm_lsh_bucket_skew(spark, sf_dir):
     100 TB and the signal to add a hash or salt the band key. Same
     signature construction as llm_dedup_minhash_sql; one extra
     groupBy on the band table. Integer-exact."""
-    M = 4503599627370496
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)
-    )
-    # r13 optimization (guide §1.2 step 2): the one-shot form inlined
-    # the md5+conv hash-base extraction inside the seed lambda, so
-    # every shingle's md5 was recomputed for EACH of the 8 seeds (and
-    # CollapseProject re-inlines a lazy staging projection right back
-    # into the loop). Stage the (x1, x2) bases once per shingle behind
-    # an eager checkpoint — the exact construction (and rationale) of
-    # llm_dedup_minhash_sql's doc_sh artifact; signature values are
-    # bit-identical. Isolated noop min-of-3 at sf0.1: 8.14 s → see
-    # OPTIMIZATION_r13.md; oracle hash unchanged at sf0.001/0.01/0.1.
-    doc_sh = ckpt(
-        d.select("doc_id", F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("sarr"))
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(sarr, s -> named_struct("
-                " 'x1', cast(conv(substr(md5(s), 1, 13), 16, 10) as bigint),"
-                " 'x2', cast(conv(substr(md5(s), 17, 13), 16, 10) as bigint) | 1L))"
-            ).alias("xs"),
-        )
-    )
-    sig = doc_sh.select(
-        "doc_id",
-        F.expr(
-            f"transform(sequence(0, 7), i -> "
-            f"array_min(transform(xs, p -> (p.x1 + i * p.x2) % {M}L)))"
-        ).alias("h"),
-    )
+    # Stage the (x1, x2) bases once per shingle behind an eager
+    # checkpoint (CollapseProject would re-inline a lazy staging
+    # projection into the seed loop); see OPTIMIZATION_r13.md.
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    sets = _shingle_sets(docs, F.lower(F.trim("text")))
+    doc_sh = ckpt(_km_bases(sets).select("doc_id", "xs"))
+    sig = doc_sh.select("doc_id", _km_signature().alias("h"))
     bands = sig.select(
         F.explode(
             F.expr(
@@ -4702,7 +4547,7 @@ def llm_embed_norm_audit(spark, sf_dir):
     the array column."""
     e = t(spark, sf_dir, "embeddings")
     norms = e.select(
-        F.expr(_NORM.format(c="embedding")).alias("nrm")
+        _emb_norm().alias("nrm")
     )
     q = norms.agg(
         F.expr("percentile(nrm, 0.25D)").alias("q1"),
@@ -4833,7 +4678,7 @@ def llm_retrieval_eval(spark, sf_dir):
         "vec_id",
         "embedding",
         F.expr(_SIGN_BUCKET_SPARK).alias("bucket"),
-        F.expr(_NORM.format(c="embedding")).alias("nrm"),
+        _emb_norm().alias("nrm"),
     )
     q = sig.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),

@@ -5615,13 +5615,10 @@ def ml_knn_classify(spark, sf_dir):
     majority vote resolved by one more deterministic window (votes
     DESC, label ASC — no argmax ambiguity). Reports per-label accuracy
     so class-conditional quality is visible, not averaged away."""
-    from .llm import _NORM
+    from .llm import _emb_norm
 
     e = t(spark, sf_dir, "embeddings")
-    withnorm = e.select(
-        "vec_id", "embedding", "label",
-        F.expr(_NORM.format(c="embedding")).alias("norm"),
-    )
+    withnorm = e.select("vec_id", "embedding", "label", _emb_norm().alias("norm"))
     q = withnorm.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("true_label"),

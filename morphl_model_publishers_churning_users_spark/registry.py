@@ -59,7 +59,9 @@ _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 # red needs none, as it already sorts with the never-green keys. The ML
 # keys share the churn plan's per-user table, which is now materialized
 # once (plans/churn.labeled_users); llm_dedup_fuzzy builds its recall
-# anchor as one lazy plan over one shingled corpus.
+# anchor as one lazy plan over one shingled corpus. The llm_* keys after
+# it build their shingle sets, exact Jaccard truth and MinHash
+# signatures through the shared helpers in operators/llm.py.
 _REVERIFY: dict[str, int] = {
     "ml_split": 14,
     "ml_train": 14,
@@ -67,6 +69,17 @@ _REVERIFY: dict[str, int] = {
     "ml_infer": 14,
     "ml_crossval": 14,
     "llm_dedup_fuzzy": 14,
+    "llm_dedup_ngram": 14,
+    "llm_fingerprint": 14,
+    "llm_contamination": 14,
+    "llm_ngram_novelty": 14,
+    "llm_boilerplate_ngrams": 14,
+    "llm_dedup_containment": 14,
+    "llm_lsh_tuning_curve": 14,
+    "llm_lsh_bucket_skew": 14,
+    "llm_dedup_minhash_sql": 14,
+    "llm_preference_pairs": 14,
+    "llm_dedup_transitivity_audit": 14,
 }
 
 

@@ -8,7 +8,12 @@ ones that cannot be set at runtime. None is needed for correct results;
 one matters for speed: ``spark.sql.codegen.cache.maxEntries``, the size
 of the JVM-wide cache of compiled generated classes. It is static, so a
 driver-owned session keeps Spark's default of 100 unless the driver sets
-it at launch; ``ensure_confs`` cannot apply it.
+it at launch; ``ensure_confs`` cannot apply it. The same holds for
+``spark.cleaner.referenceTracking.cleanCheckpoints``: without it the
+reliable checkpoints that ``SPARK_GRAFT_CHECKPOINT_DIR`` turns on are
+never deleted, one directory per materialization for the life of the
+checkpoint directory. ``build_session`` sets it; a driver-owned session
+must set it at launch.
 """
 
 from __future__ import annotations
@@ -46,6 +51,10 @@ def build_session(app_name: str = "mpcu-spark", cpus: int | None = None) -> Spar
         # reuse and a warm pass recompiled 417-447 of them (~8 ms each in
         # Janino); at 1000 a warm pass compiles 0-4.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Delete a reliable checkpoint's files once its DataFrame is
+        # garbage-collected (operators/_shared.ckpt under
+        # SPARK_GRAFT_CHECKPOINT_DIR); static, so it is set here.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     # Optional config-axis overrides for test/diagnostic sessions (r12):
     # SPARK_GRAFT_EXTRA_CONFS="k1=v1;k2=v2" lets the engine-conf'd

@@ -123,21 +123,17 @@ def test_reliable_checkpoint_knob(spark, sf_dir, tmp_path, monkeypatch):
     the same rows (executor-local blocks die with their
     executor at cluster scale, so the strategy must be switchable).
     graph_cc is an iterative loop; ml_logreg_gd materializes its
-    recency spine and feature table, both routed through `ckpt`."""
+    recency spine and feature table, both routed through `ckpt`.
+
+    Each op gets its own directory, and its files must land there: the
+    setting is read at every checkpoint, so a directory changed within
+    one session takes effect, even though the SparkContext already has
+    one. The result DataFrame stays referenced while its files are
+    inspected, as the session deletes a checkpoint's files once its
+    DataFrame is garbage-collected."""
     import os
 
-    # The checkpoint dir sticks to the SparkContext for the session, but
-    # ckpt() gates on the env var, so clearing it (monkeypatch teardown)
-    # returns later tests to the localCheckpoint path. Because the dir is
-    # set only once per context, new files are looked for under
-    # sc.getCheckpointDir(), which an earlier test may already own.
-    sc = spark.sparkContext
-
-    def checkpoint_files():
-        d = sc.getCheckpointDir()
-        if d is None:
-            return set()
-        root = d.removeprefix("file:")
+    def files_under(root):
         return {
             os.path.join(dirpath, f)
             for dirpath, _dirs, files in os.walk(root)
@@ -147,11 +143,20 @@ def test_reliable_checkpoint_knob(spark, sf_dir, tmp_path, monkeypatch):
     for key in ("graph_cc", "ml_logreg_gd"):
         monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
         baseline = {tuple(r) for r in _Q[key](spark, sf_dir).collect()}
-        before = checkpoint_files()
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
-        reliable = {tuple(r) for r in _Q[key](spark, sf_dir).collect()}
-        assert reliable == baseline, key
-        assert checkpoint_files() - before, f"{key}: no reliable checkpoint written"
+        root = tmp_path / "ckpt" / key
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(root))
+        df = _Q[key](spark, sf_dir)
+        assert {tuple(r) for r in df.collect()} == baseline, key
+        assert files_under(root), f"{key}: no reliable checkpoint under {root}"
+        assert spark.sparkContext.getCheckpointDir().startswith(f"file:{root}/"), key
+        del df
+
+
+def test_session_cleans_reliable_checkpoints(spark):
+    """The built session deletes reliable checkpoint files with their
+    DataFrame; the conf is static, so it must be set at launch."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
 
 
 # --- round-6 additions -----------------------------------------------------
