@@ -10,13 +10,15 @@ date-partitioned and the sink below shows the partitioned-write shape
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 
 from ..registry import register
 from ._shared import ckpt, dsum, qround, qsum, scratch_dir, t
@@ -40,32 +42,6 @@ def _overlap_writes(*thunks):
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(th) for th in thunks]
         return [f.result() for f in futures]
-
-# Delta commit-log action schema WITH partitionValues (the on-disk add
-# shape scan_delta_partition_values folds). Module-level so diagnostic
-# scripts (delta_partition_prune_scale_r12.py) share the exact schema
-# instead of drifting on a copy (r12 review).
-DELTA_PV_ACTION_SCHEMA = (
-    "add struct<path:string,partitionValues:map<string,string>,"
-    "size:bigint,dataChange:boolean>, "
-    "remove struct<path:string,dataChange:boolean>, "
-    "commitInfo struct<operation:string>"
-)
-
-# The plain (no-partitionValues) variant scan_delta_checkpoint folds,
-# and the timestamped variant scan_delta_time_travel_ts resolves over —
-# shared with scripts/delta_checkpoint_scale_r10.py and
-# scripts/delta_time_travel_scale_r11.py for the same no-drift reason.
-DELTA_ACTION_SCHEMA = (
-    "add struct<path:string,size:bigint,dataChange:boolean>, "
-    "remove struct<path:string,dataChange:boolean>, "
-    "commitInfo struct<operation:string>"
-)
-DELTA_TS_ACTION_SCHEMA = (
-    "add struct<path:string,size:bigint,dataChange:boolean>, "
-    "remove struct<path:string,dataChange:boolean>, "
-    "commitInfo struct<operation:string,timestamp:bigint>"
-)
 
 
 @register("scan_parquet", oracle="SELECT * FROM lineitem")
@@ -1539,6 +1515,270 @@ def scan_iceberg_snapshot(spark, sf_dir):
     return out
 
 
+# ---------------------------------------------------------------------------
+# The Delta transaction log, emulated on plain files for the five
+# scan_delta_* ops (https://github.com/delta-io/delta/blob/master/PROTOCOL.md).
+# A table dir holds parquet data files plus `_delta_log/`, whose commit v is
+# the line-delimited JSON file `{v:020d}.json` of commitInfo + add/remove
+# actions with paths RELATIVE to the table dir. The helpers below are the
+# only spelling of that format: one writer, one reader, one fold.
+
+# Every action field any op writes; a field an op never writes reads as
+# null. A re-`add` may carry a deletionVector descriptor (storageType 'u' =
+# path-referenced sidecar; cardinality = tombstones in THIS file).
+DELTA_ACTION_SCHEMA = (
+    "add struct<path:string,partitionValues:map<string,string>,size:bigint,"
+    "dataChange:boolean,deletionVector:struct<storageType:string,"
+    "pathOrInlineDv:string,cardinality:bigint>>, "
+    "remove struct<path:string,dataChange:boolean>, "
+    "commitInfo struct<operation:string,timestamp:bigint>"
+)
+
+# Commit times are deterministic, never wall clock: t_v = 2020-01-01T00:00Z
+# + v days, in epoch ms (Delta's commitInfo.timestamp unit). Pure integers,
+# so timestamp AS-OF resolution is session-timezone-independent.
+_T0_MS, _DAY_MS = 1577836800000, 86400000
+
+
+def _delta_table(name):
+    """A fresh, empty table `scratch_dir(name)`; returns (tbl, log_dir)."""
+    tbl = scratch_dir(name)
+    log_dir = os.path.join(tbl, "_delta_log")
+    shutil.rmtree(tbl, ignore_errors=True)
+    os.makedirs(log_dir)
+    return tbl, log_dir
+
+
+def _log_file(log_dir, v, ext=".json"):
+    """Commit v's file (or, with ext, its checkpoint): the path is
+    constructed from the version number, never found by listing."""
+    return os.path.join(log_dir, f"{v:020d}{ext}")
+
+
+def _uri(tbl, rel):
+    """A table-relative path as the `_metadata.file_path` a scan reports."""
+    return "file:" + os.path.join(tbl, rel)
+
+
+def _part_files(tbl, sub):
+    """Table-relative paths of the parquet part files under data/<sub>,
+    partition dirs included, listed on the driver: O(files) metadata the
+    local fs already has, where a Spark read-back of the files just
+    written was a whole extra scan job per slice (r13)."""
+    return sorted(
+        os.path.relpath(os.path.join(d, f), tbl)
+        for d, _, names in os.walk(os.path.join(tbl, "data", sub))
+        for f in names
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+
+
+def _write_slice(tbl, df, sub, n):
+    """Write `df` as exactly `n` parquet files under data/<sub> and return
+    their table-relative paths. repartition(n) promises at most n
+    non-empty files, not n, and the ops' oracles hard-code file counts: a
+    slice too small or skewed to fill n files fails here, loudly, instead
+    of flipping an oracle hash with no local diagnostic (ADVICE r10)."""
+    df.repartition(n).write.mode("overwrite").parquet(os.path.join(tbl, "data", sub))
+    files = _part_files(tbl, sub)
+    if len(files) != n:
+        raise AssertionError(
+            f"Delta fixture slice {sub}: expected {n} parquet files, got "
+            f"{len(files)} — fixture too small/skewed for the hard-coded "
+            f"file-count oracle"
+        )
+    return files
+
+
+def _add(tbl, rel, data_change=True, **fields):
+    """An add action; the size is read driver-side (O(files), the local-fs
+    stand-in for what the writer's task commit reports). `fields`:
+    partitionValues, deletionVector."""
+    size = os.path.getsize(os.path.join(tbl, rel))
+    return {"add": {"path": rel, "size": size, "dataChange": data_change, **fields}}
+
+
+def _remove(rel, data_change=True):
+    return {"remove": {"path": rel, "dataChange": data_change}}
+
+
+def _commit(log_dir, v, op, actions):
+    """Write commit v: its commitInfo, then `actions`."""
+    info = {"commitInfo": {"operation": op, "timestamp": _T0_MS + v * _DAY_MS}}
+    with open(_log_file(log_dir, v), "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in [info, *actions]))
+
+
+def _actions(spark, paths):
+    """One schema'd read of commit files (a log dir or a list of commit
+    paths), O(actions): per action row the commit version parsed from
+    its file name, the `path` it adds or removes (null on the commitInfo
+    row), `is_add`, and the raw `add` and `commitInfo` structs."""
+    return (
+        spark.read.schema(DELTA_ACTION_SCHEMA)
+        .json(paths)
+        .select(
+            F.regexp_extract("_metadata.file_path", r"(\d{20})\.json$", 1)
+            .cast("bigint")
+            .alias("version"),
+            F.coalesce("add.path", "remove.path").alias("path"),
+            F.col("add.path").isNotNull().alias("is_add"),
+            "add",
+            "commitInfo",
+        )
+    )
+
+
+def _fold(actions, by=(), **carry):
+    """The last-action-wins fold: per (*by, path) the action with the
+    greatest (version, is_add) decides, and the path is live iff that is
+    an add, so within one commit an add beats a remove of the same path
+    (a deletion-vector update). Each `carry` column is taken from the
+    winning add. Returns (*by, path, *carry) of the live paths.
+
+    (version, is_add) is ordered as ONE bigint, 2·version + is_add: a
+    primitive key keeps this a single hash aggregate over O(actions) rows
+    (a struct key plans as a sort aggregate)."""
+    key = F.col("version") * 2 + F.col("is_add").cast("bigint")
+    return (
+        actions.filter(F.col("path").isNotNull())
+        .groupBy(*by, "path")
+        .agg(
+            F.max(key).alias("last"),
+            *[F.max_by(c, key).alias(name) for name, c in carry.items()],
+        )
+        .filter(F.col("last") % 2 == 1)
+        .select(*by, "path", *carry)
+    )
+
+
+def _write_checkpoint(spark, log_dir, n, size):
+    """Fold commits 0..n once and persist the live (path, size) state as
+    the checkpoint parquet at n, named by the `_last_checkpoint` pointer
+    (`size` = its action count) — Delta's exact on-disk shape, and the
+    only read of the pre-checkpoint log."""
+    commits = [_log_file(log_dir, v) for v in range(n + 1)]
+    live = _fold(_actions(spark, commits), size="add.size")
+    live.write.mode("overwrite").parquet(_log_file(log_dir, n, ".checkpoint.parquet"))
+    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as f:
+        f.write(json.dumps({"version": n, "size": size}))
+
+
+def _state_at(spark, log_dir, m):
+    """(state, n_opened): the (version, path, is_add) rows whose fold is
+    version m, and the number of JSON commits read for them. After an
+    O(1) pointer read, a version m >= the checkpoint's N is its adds
+    (O(live files at N), entering as version N) plus commits N+1..m, so
+    the read is O(m - N) however long the log before N. The checkpoint
+    folds state AT N and cannot serve an earlier version: m < N replays
+    commits 0..m."""
+    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
+        n = json.loads(f.read())["version"]
+    tail = [_log_file(log_dir, v) for v in range(n + 1 if m >= n else 0, m + 1)]
+    parts = []
+    if m >= n:
+        # Schema'd: an inferred parquet schema costs a job per read.
+        ckpt_adds = spark.read.schema("path string, size bigint").parquet(
+            _log_file(log_dir, n, ".checkpoint.parquet")
+        )
+        parts.append(
+            ckpt_adds.select(
+                F.lit(n).cast("bigint").alias("version"), "path", F.lit(True).alias("is_add")
+            )
+        )
+    if tail:
+        parts.append(_actions(spark, tail).select("version", "path", "is_add"))
+    return reduce(DataFrame.unionByName, parts), len(tail)
+
+
+def _totals_by(spark, tbl, live, label):
+    """n_files / n_rows / sum_total of the rows live at each `label` of a
+    fold `live` (label, path). The (label, path) pairs are collected,
+    O(labels x live files) — what a Delta client materializes for its
+    scan planner. Each distinct live file is then scanned ONCE and its
+    rows attributed to every label it is live at through a broadcast
+    (file uri -> label) join (r13: a union of per-label aggregates
+    re-read the shared files, the dominant cost at 100 TB). Readers never
+    list data directories: a version read stays O(log)."""
+    pairs = live.select(label, "path").collect()
+    files = spark.createDataFrame(
+        [(_uri(tbl, r["path"]), r[label]) for r in pairs], ["fp", label]
+    )
+    scan = spark.read.parquet(
+        *sorted({os.path.join(tbl, r["path"]) for r in pairs})
+    ).select("price", F.col("_metadata.file_path").alias("fp"))
+    return (
+        scan.join(F.broadcast(files), "fp")
+        .groupBy(label)
+        .agg(
+            F.count_distinct("fp").cast("bigint").alias("n_files"),
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            dsum(F.col("price")).alias("sum_total"),
+        )
+    )
+
+
+def _date_slice(spark, sf_dir, tbl, sub, n, lo=None, hi=None):
+    """A thunk writing (o_orderkey, price) of the orders with
+    lo <= o_orderdate < hi as n files."""
+    d = F.col("o_orderdate")
+    cond = F.lit(True)
+    if lo:
+        cond &= d >= F.lit(lo).cast("timestamp_ntz")
+    if hi:
+        cond &= d < F.lit(hi).cast("timestamp_ntz")
+    df = t(spark, sf_dir, "orders").filter(cond).select(
+        "o_orderkey", F.round("o_totalprice", 6).alias("price")
+    )
+    return lambda: _write_slice(tbl, df, sub, n)
+
+
+def _compaction_log(spark, tbl, log_dir, base, appended):
+    """Commits v0 WRITE `base` (4 files), v1 APPEND `appended`, and v2
+    OPTIMIZE: remove x4 (the base files) + add x1, their rewrite
+    (dataChange=false) — the same CONTENT as v1 through different files,
+    the metadata-only swap. The rewrite reads v0's content from the log's
+    live-file list (not from the slice predicate), as a real OPTIMIZE
+    would. Returns the compacted file list."""
+    compacted = _write_slice(
+        tbl, spark.read.parquet(*[os.path.join(tbl, p) for p in base]), "c1", 1
+    )
+    _commit(log_dir, 0, "WRITE", [_add(tbl, p) for p in base])
+    _commit(log_dir, 1, "APPEND", [_add(tbl, p) for p in appended])
+    _commit(
+        log_dir,
+        2,
+        "OPTIMIZE",
+        [_remove(p, False) for p in base] + [_add(tbl, p, False) for p in compacted],
+    )
+    return compacted
+
+
+def _four_commit_table(spark, sf_dir, name):
+    """The table scan_delta_checkpoint and scan_delta_time_travel_ts read:
+
+        v0  WRITE: add x4 (orders before 2000)
+        v1  APPEND: add x2 (2000 <= orders < 2001)
+        v2  OPTIMIZE: remove v0's 4 files + add x1 compacted
+            (dataChange=false) -> live = 3 files
+        --- checkpoint parquet at N=2 ---
+        v3  APPEND: add x2 (orders >= 2001) -> live = 5 files
+
+    Returns (tbl, log_dir)."""
+    tbl, log_dir = _delta_table(name)
+    # b1/b2/b3 are independent slices — written concurrently (r14, guide
+    # §2.6; see _overlap_writes). c1 reads b1's files: it follows.
+    base, appended, late = _overlap_writes(
+        _date_slice(spark, sf_dir, tbl, "b1", 4, hi="2000-01-01"),
+        _date_slice(spark, sf_dir, tbl, "b2", 2, lo="2000-01-01", hi="2001-01-01"),
+        _date_slice(spark, sf_dir, tbl, "b3", 2, lo="2001-01-01"),
+    )
+    compacted = _compaction_log(spark, tbl, log_dir, base, appended)
+    _commit(log_dir, 3, "APPEND", [_add(tbl, p) for p in late])
+    _write_checkpoint(spark, log_dir, 2, len(appended) + len(compacted))
+    return tbl, log_dir
+
+
 @register(
     "scan_delta_log",
     oracle="""
@@ -1583,142 +1823,41 @@ def scan_delta_log(spark, sf_dir):
     RELATIVE paths, exactly Delta's on-disk shape. Reading version N =
     `spark.read.json` over the log (schema'd, O(commits)), version
     parsed from `_metadata.file_path`, then the LAST-ACTION-WINS fold:
-    per path, `max_by(is_add, version)` over commits 0..N — a path is
-    live iff its latest action is an add. All three version cutoffs
-    fold in ONE hash aggregate over O(total actions) rows (broadcast
-    version spine, group by (as_of, path) — r13: was one fold+collect
-    per version); the pair collect is O(versions x live files), same
-    bound as a real Delta client materializing the file list for the
-    scan planner (checkpoints parquet + log truncation keep that bound
-    at 100 TB — out of scope here, as are the jar's protocol checks).
-    Readers never list data directories: version reads stay O(log),
-    not O(objects-in-bucket), and each live data file is scanned ONCE
-    and attributed to its versions via a broadcast (file -> version)
-    join (r13: was a union of per-version aggs re-reading shared
-    files). The emulation proves isolation the same way the iceberg op
-    does — DISTINCT _metadata.file_path within each version's
-    attributed rows must match the fold's file count (4 / 6 / 3) while
-    v2 hash-matches v1's content exactly. File sizes ride driver-side os.path.getsize
-    (O(files), local-fs emulation of what the writer's task commit
-    reports)."""
-    import json as _json
-
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round("o_totalprice", 6).alias("price"),
-        F.col("o_orderdate"),
-    )
-    cutoff = F.lit("2000-01-01").cast("timestamp_ntz")
-    tbl = scratch_dir("delta_log_table")
-    log_dir = os.path.join(tbl, "_delta_log")
-    shutil.rmtree(log_dir, ignore_errors=True)
-    os.makedirs(log_dir)
-
-    def write_files(df, sub, n_files):
-        path = os.path.join(tbl, "data", sub)
-        df.select("o_orderkey", "price").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(path)
-        # Driver-side os.listdir, not a Spark read-back of the parquet
-        # just written: the listing is O(files) metadata the local fs
-        # already has, and the read-back was a whole extra scan job per
-        # slice (r13 optimization — guide §5, driver/job-count overhead).
-        return sorted(
-            os.path.join("data", sub, f)
-            for f in os.listdir(path)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-
+    per path, the latest action over commits 0..N decides — a path is
+    live iff it is an add. All three version cutoffs fold in ONE hash
+    aggregate over O(total actions) rows (broadcast version spine,
+    group by (as_of, path) — r13: was one fold+collect per version);
+    the pair collect is O(versions x live files), same bound as a real
+    Delta client materializing the file list for the scan planner
+    (checkpoints parquet + log truncation keep that bound at 100 TB —
+    see scan_delta_checkpoint; the jar's protocol checks are out of
+    scope). Readers never list data directories: version reads stay
+    O(log), not O(objects-in-bucket), and each live data file is
+    scanned ONCE and attributed to its versions via a broadcast
+    (file -> version) join (r13: was a union of per-version aggs
+    re-reading shared files). The emulation proves isolation the same
+    way the iceberg op does — DISTINCT _metadata.file_path within each
+    version's attributed rows must match the fold's file count
+    (4 / 6 / 3) while v2 hash-matches v1's content exactly."""
+    tbl, log_dir = _delta_table("delta_log_table")
     # b1/b2 are independent slices — written concurrently (r14, guide
     # §2.6; see _overlap_writes). c1 reads b1's files, so it follows.
-    base_files, appended = _overlap_writes(
-        lambda: write_files(o.filter(F.col("o_orderdate") < cutoff), "b1", 4),
-        lambda: write_files(o.filter(F.col("o_orderdate") >= cutoff), "b2", 2),
+    base, appended = _overlap_writes(
+        _date_slice(spark, sf_dir, tbl, "b1", 4, hi="2000-01-01"),
+        _date_slice(spark, sf_dir, tbl, "b2", 2, lo="2000-01-01"),
     )
-    # Compaction rewrites v0's content from the LOG's live-file list at
-    # v0 (not from the filter predicate), as a real OPTIMIZE would.
-    compacted = write_files(
-        spark.read.parquet(*[os.path.join(tbl, p) for p in base_files]), "c1", 1
+    _compaction_log(spark, tbl, log_dir, base, appended)
+    # All three AS-OF cutoffs fold in ONE job: the action rows range-join
+    # a broadcast 3-row version spine (version <= as_of) and the fold
+    # groups by (as_of, path).
+    spine = spark.createDataFrame([(v,) for v in range(3)], "as_of bigint")
+    live = _fold(
+        _actions(spark, log_dir).join(
+            F.broadcast(spine), F.col("version") <= F.col("as_of")
+        ),
+        by=["as_of"],
     )
-
-    def add(p, data_change=True):
-        return {
-            "add": {
-                "path": p,
-                "size": os.path.getsize(os.path.join(tbl, p)),
-                "dataChange": data_change,
-            }
-        }
-
-    commits = {
-        0: [{"commitInfo": {"operation": "WRITE"}}] + [add(p) for p in base_files],
-        1: [{"commitInfo": {"operation": "APPEND"}}] + [add(p) for p in appended],
-        2: [{"commitInfo": {"operation": "OPTIMIZE"}}]
-        + [{"remove": {"path": p, "dataChange": False}} for p in base_files]
-        + [add(p, data_change=False) for p in compacted],
-    }
-    for v, actions in commits.items():  # O(commits) driver writes
-        with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as f:
-            f.write("\n".join(_json.dumps(a) for a in actions) + "\n")
-
-    # The reader: one schema'd pass over the whole log, version from the
-    # commit file name. All three AS-OF cutoffs fold in ONE job — the
-    # action rows range-join a broadcast 3-row version spine
-    # (version <= as_of) and the last-action-wins aggregate groups by
-    # (as_of, path) — instead of the r9-r12 shape of one filtered fold
-    # + collect per version (3 jobs over the same checkpointed actions;
-    # r13 optimization, guide §2.4/§5).
-    actions = (
-        spark.read.schema(
-            "add struct<path:string,size:bigint,dataChange:boolean>, "
-            "remove struct<path:string,dataChange:boolean>, "
-            "commitInfo struct<operation:string>"
-        )
-        .json(log_dir)
-        .select(
-            F.regexp_extract(F.col("_metadata.file_path"), r"(\d{20})\.json$", 1)
-            .cast("bigint")
-            .alias("version"),
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-        )
-        .filter(F.col("path").isNotNull())
-    )
-    spine = spark.createDataFrame(
-        [(v,) for v in sorted(commits)], "as_of bigint"
-    )
-    live_pairs = (
-        actions.join(F.broadcast(spine), F.col("version") <= F.col("as_of"))
-        .groupBy("as_of", "path")
-        .agg(F.max_by("is_add", "version").alias("live"))
-        .filter(F.col("live"))
-        .collect()  # O(versions x live files): 13 rows
-    )
-
-    # Each live data file is scanned ONCE, then attributed to every
-    # version it is live in via a broadcast (file uri -> as_of) join —
-    # the r9-r12 union-of-3-aggs re-read shared files per version
-    # (13 file-reads for 7 distinct files). At 100 TB the shared-file
-    # re-read is the dominant cost; this is the one-scan shape.
-    uri = lambda rel: "file:" + os.path.join(tbl, rel)
-    pairs = spark.createDataFrame(
-        [(uri(r["path"]), r["as_of"]) for r in live_pairs],
-        "fp string, version bigint",
-    )
-    scan = spark.read.parquet(
-        *sorted({os.path.join(tbl, r["path"]) for r in live_pairs})
-    ).select("price", F.col("_metadata.file_path").alias("fp"))
-    return (
-        scan.join(F.broadcast(pairs), "fp")
-        .groupBy("version")
-        .agg(
-            F.count_distinct("fp").cast("bigint").alias("n_files"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            dsum(F.col("price"))
-            .alias("sum_total"),
-        )
-        .select("version", "n_files", "n_rows", "sum_total")
-    )
+    return _totals_by(spark, tbl, live.withColumnRenamed("as_of", "version"), "version")
 
 
 @register(
@@ -1778,205 +1917,24 @@ def scan_delta_checkpoint(spark, sf_dir):
     hash-matches the oracle's date-slice recomputation. At 100 TB the
     checkpoint parquet is additionally the scan planner's stats
     source; here it carries (path, size) like the real format."""
-    import json as _json
-
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round("o_totalprice", 6).alias("price"),
-        F.col("o_orderdate"),
-    )
-    c2000 = F.lit("2000-01-01").cast("timestamp_ntz")
-    c2001 = F.lit("2001-01-01").cast("timestamp_ntz")
-    tbl = scratch_dir("delta_checkpoint_table")
-    log_dir = os.path.join(tbl, "_delta_log")
-    shutil.rmtree(log_dir, ignore_errors=True)
-    os.makedirs(log_dir)
-
-    def write_files(df, sub, n_files):
-        path = os.path.join(tbl, "data", sub)
-        df.select("o_orderkey", "price").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(path)
-        # Driver-side listing, not a Spark read-back scan job (r13
-        # optimization — see scan_delta_log.write_files).
-        return sorted(
-            os.path.join("data", sub, f)
-            for f in os.listdir(path)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-
-    # b1/b2/b3 are independent slices — written concurrently (r14,
-    # guide §2.6; see _overlap_writes). c1 reads b1's files: it follows.
-    base_files, appended, late = _overlap_writes(
-        lambda: write_files(o.filter(F.col("o_orderdate") < c2000), "b1", 4),
-        lambda: write_files(
-            o.filter(
-                (F.col("o_orderdate") >= c2000) & (F.col("o_orderdate") < c2001)
-            ),
-            "b2",
-            2,
-        ),
-        lambda: write_files(o.filter(F.col("o_orderdate") >= c2001), "b3", 2),
-    )
-    compacted = write_files(
-        spark.read.parquet(*[os.path.join(tbl, p) for p in base_files]), "c1", 1
-    )
-
-    # ADVICE r10: repartition(n) guarantees at most n non-empty output
-    # files, not exactly n — a tiny or skewed future fixture slice would
-    # silently emit fewer and flip the oracle hash with no local
-    # diagnostic. Fail loudly at the source instead.
-    for got, want, sub in (
-        (base_files, 4, "b1"),
-        (appended, 2, "b2"),
-        (compacted, 1, "c1"),
-        (late, 2, "b3"),
-    ):
-        if len(got) != want:
-            raise AssertionError(
-                f"scan_delta_checkpoint fixture slice {sub}: expected {want} "
-                f"parquet files, got {len(got)} — fixture too small/skewed "
-                f"for the hardcoded file-count oracle"
-            )
-
-    def add(p, data_change=True):
-        return {
-            "add": {
-                "path": p,
-                "size": os.path.getsize(os.path.join(tbl, p)),
-                "dataChange": data_change,
-            }
-        }
-
-    commits = {
-        0: [{"commitInfo": {"operation": "WRITE"}}] + [add(p) for p in base_files],
-        1: [{"commitInfo": {"operation": "APPEND"}}] + [add(p) for p in appended],
-        2: [{"commitInfo": {"operation": "OPTIMIZE"}}]
-        + [{"remove": {"path": p, "dataChange": False}} for p in base_files]
-        + [add(p, data_change=False) for p in compacted],
-        3: [{"commitInfo": {"operation": "APPEND"}}] + [add(p) for p in late],
-    }
-    for v, actions in commits.items():  # O(commits) driver writes
-        with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as f:
-            f.write("\n".join(_json.dumps(a) for a in actions) + "\n")
-
-    # --- checkpoint WRITER at N=2: fold commits 0..2 once, persist the
-    # live state as parquet + the `_last_checkpoint` pointer. This is
-    # the only read of the pre-checkpoint log in the whole op.
-    ckpt_version = 2
-    action_schema = DELTA_ACTION_SCHEMA
-    pre_paths = [
-        os.path.join(log_dir, f"{v:020d}.json") for v in range(ckpt_version + 1)
-    ]
-    live_at_ckpt = (
-        spark.read.schema(action_schema)
-        .json(pre_paths)
-        .select(
-            F.regexp_extract(F.col("_metadata.file_path"), r"(\d{20})\.json$", 1)
-            .cast("bigint")
-            .alias("version"),
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-            F.col("add.size").alias("size"),
-        )
-        .filter(F.col("path").isNotNull())
-        .groupBy("path")
-        .agg(
-            F.max_by("is_add", "version").alias("live"),
-            F.max_by("size", "version").alias("size"),
-        )
-        .filter(F.col("live"))
-        .select("path", "size")
-    )
-    ckpt_path = os.path.join(log_dir, f"{ckpt_version:020d}.checkpoint.parquet")
-    live_at_ckpt.write.mode("overwrite").parquet(ckpt_path)
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as f:
-        f.write(_json.dumps({"version": ckpt_version, "size": 3}))
-
-    # --- checkpoint READER: O(1) pointer read, O(live@N) checkpoint
-    # scan, O(M-N) replay with commit paths CONSTRUCTED, not listed.
-    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
-        n = _json.loads(f.read())["version"]
-    ckpt_state = spark.read.parquet(ckpt_path).select(
-        F.lit(n).cast("bigint").alias("version"),
-        "path",
-        F.lit(True).alias("is_add"),
-    )
-
-    # Both version reads fold in ONE job (r13 optimization, guide
-    # §2.4/§5 — was one fold + collect + scan per version): each read's
-    # state (checkpoint rows, plus the constructed replay tail for
-    # m > N) is labeled with its as-of version and unioned, the
-    # last-action-wins aggregate groups by (as_of, path), and the pair
-    # collect is O(versions x live files). The checkpoint branch
-    # semantics are unchanged: version 2 is served from the checkpoint
-    # ALONE, version 3 replays exactly commit 3.
-    states = []
-    replayed = {}
-    for m in (ckpt_version, 3):
-        tail_paths = [
-            os.path.join(log_dir, f"{v:020d}.json") for v in range(n + 1, m + 1)
-        ]
-        replayed[m] = len(tail_paths)
-        state = ckpt_state
-        if tail_paths:
-            replay = (
-                spark.read.schema(action_schema)
-                .json(tail_paths)
-                .select(
-                    F.regexp_extract(
-                        F.col("_metadata.file_path"), r"(\d{20})\.json$", 1
-                    )
-                    .cast("bigint")
-                    .alias("version"),
-                    F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-                    F.col("add.path").isNotNull().alias("is_add"),
-                )
-                .filter(F.col("path").isNotNull())
-            )
-            state = state.unionByName(replay)
+    tbl, log_dir = _four_commit_table(spark, sf_dir, "delta_checkpoint_table")
+    # Both version reads fold in ONE job (r13, guide §2.4/§5): each
+    # read's state is labeled with its as-of version and unioned, and
+    # the fold groups by (as_of, path).
+    states, replayed = [], {}
+    for m in (2, 3):
+        state, replayed[m] = _state_at(spark, log_dir, m)
         states.append(state.withColumn("as_of", F.lit(m).cast("bigint")))
-    combined = states[0]
-    for s in states[1:]:
-        combined = combined.unionByName(s)
-    live_pairs = (
-        combined.groupBy("as_of", "path")
-        .agg(F.max_by("is_add", "version").alias("live"))
-        .filter(F.col("live"))
-        .collect()  # O(versions x live files): 8 rows
-    )
-
-    # One scan of the distinct live files; each row attributed to its
-    # versions via a broadcast (file uri -> as_of) join (r13: was a
-    # union of per-version aggs re-reading the 3 files shared by both
-    # versions).
-    uri = lambda rel: "file:" + os.path.join(tbl, rel)
-    pairs = spark.createDataFrame(
-        [(uri(r["path"]), r["as_of"]) for r in live_pairs],
-        "fp string, version bigint",
-    )
-    n_replayed = F.create_map(
-        *[x for m, c in replayed.items() for x in (F.lit(m), F.lit(c))]
-    )
-    scan = spark.read.parquet(
-        *sorted({os.path.join(tbl, r["path"]) for r in live_pairs})
-    ).select("price", F.col("_metadata.file_path").alias("fp"))
-    return (
-        scan.join(F.broadcast(pairs), "fp")
-        .groupBy("version")
-        .agg(
-            F.count_distinct("fp").cast("bigint").alias("n_files"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            dsum(F.col("price"))
-            .alias("sum_total"),
-        )
-        .select(
-            "version",
-            n_replayed[F.col("version")].cast("bigint").alias("n_commits_replayed"),
-            "n_files",
-            "n_rows",
-            "sum_total",
-        )
+    live = _fold(reduce(DataFrame.unionByName, states), by=["as_of"])
+    n_replayed = F.create_map(*[F.lit(x) for kv in replayed.items() for x in kv])
+    return _totals_by(
+        spark, tbl, live.withColumnRenamed("as_of", "version"), "version"
+    ).select(
+        "version",
+        n_replayed[F.col("version")].cast("bigint").alias("n_commits_replayed"),
+        "n_files",
+        "n_rows",
+        "sum_total",
     )
 
 
@@ -2017,10 +1975,10 @@ def scan_delta_time_travel_ts(spark, sf_dir):
     whose commit timestamp <= ts, then reads that version through the
     scan_delta_checkpoint path. Same 4-commit fixture as
     scan_delta_checkpoint (v0 write x4 / v1 append x2 / v2 optimize ->
-    3 live / v3 append -> 5 live, checkpoint parquet at N=2), with each
-    commit's `commitInfo` now carrying the epoch-ms `timestamp` field —
-    Delta's on-disk shape for commit times. Three probes bracket the
-    history:
+    3 live / v3 append -> 5 live, checkpoint parquet at N=2), each
+    commit's `commitInfo` carrying the epoch-ms `timestamp` field —
+    Delta's on-disk shape for commit times (t_v = 2020-01-01 + v days).
+    Three probes bracket the history:
 
         mid_v0    t0 + 12h  -> v0 (before the first append)
         at_v2     exactly t2 -> v2 (boundary: `<=` keeps the commit)
@@ -2048,139 +2006,21 @@ def scan_delta_time_travel_ts(spark, sf_dir):
     asserted from DISTINCT _metadata.file_path within each probe's
     attributed rows; content hash-matches the oracle's date-slice
     recomputation."""
-    import json as _json
+    tbl, log_dir = _four_commit_table(spark, sf_dir, "delta_tt_table")
 
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round("o_totalprice", 6).alias("price"),
-        F.col("o_orderdate"),
-    )
-    c2000 = F.lit("2000-01-01").cast("timestamp_ntz")
-    c2001 = F.lit("2001-01-01").cast("timestamp_ntz")
-    tbl = scratch_dir("delta_tt_table")
-    log_dir = os.path.join(tbl, "_delta_log")
-    shutil.rmtree(log_dir, ignore_errors=True)
-    os.makedirs(log_dir)
-
-    def write_files(df, sub, n_files):
-        path = os.path.join(tbl, "data", sub)
-        df.select("o_orderkey", "price").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(path)
-        # Driver-side listing, not a Spark read-back scan job (r13
-        # optimization — see scan_delta_log.write_files).
-        return sorted(
-            os.path.join("data", sub, f)
-            for f in os.listdir(path)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-
-    # b1/b2/b3 independent — concurrent (r14, guide §2.6); c1 follows.
-    base_files, appended, late = _overlap_writes(
-        lambda: write_files(o.filter(F.col("o_orderdate") < c2000), "b1", 4),
-        lambda: write_files(
-            o.filter(
-                (F.col("o_orderdate") >= c2000) & (F.col("o_orderdate") < c2001)
-            ),
-            "b2",
-            2,
-        ),
-        lambda: write_files(o.filter(F.col("o_orderdate") >= c2001), "b3", 2),
-    )
-    compacted = write_files(
-        spark.read.parquet(*[os.path.join(tbl, p) for p in base_files]), "c1", 1
-    )
-    for got, want, sub in (
-        (base_files, 4, "b1"),
-        (appended, 2, "b2"),
-        (compacted, 1, "c1"),
-        (late, 2, "b3"),
-    ):
-        if len(got) != want:
-            raise AssertionError(
-                f"scan_delta_time_travel_ts fixture slice {sub}: expected "
-                f"{want} parquet files, got {len(got)}"
-            )
-
-    # Deterministic commit times: t_v = 2020-01-01T00:00:00Z + v days
-    # (epoch ms, Delta's commitInfo.timestamp unit — pure integers, so
-    # resolution is session-timezone-independent by construction).
-    t0 = 1577836800000
-    day = 86400000
-    commit_ts = {v: t0 + v * day for v in range(4)}
-
-    def add(p, data_change=True):
-        return {
-            "add": {
-                "path": p,
-                "size": os.path.getsize(os.path.join(tbl, p)),
-                "dataChange": data_change,
-            }
-        }
-
-    def info(v, op):
-        return {"commitInfo": {"operation": op, "timestamp": commit_ts[v]}}
-
-    commits = {
-        0: [info(0, "WRITE")] + [add(p) for p in base_files],
-        1: [info(1, "APPEND")] + [add(p) for p in appended],
-        2: [info(2, "OPTIMIZE")]
-        + [{"remove": {"path": p, "dataChange": False}} for p in base_files]
-        + [add(p, data_change=False) for p in compacted],
-        3: [info(3, "APPEND")] + [add(p) for p in late],
-    }
-    for v, actions in commits.items():  # O(commits) driver writes
-        with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as f:
-            f.write("\n".join(_json.dumps(a) for a in actions) + "\n")
-
-    action_schema = DELTA_TS_ACTION_SCHEMA
-
-    # Checkpoint WRITER at N=2 (scan_delta_checkpoint's mechanism).
-    ckpt_version = 2
-    pre_paths = [
-        os.path.join(log_dir, f"{v:020d}.json") for v in range(ckpt_version + 1)
-    ]
-    live_at_ckpt = (
-        spark.read.schema(action_schema)
-        .json(pre_paths)
-        .select(
-            F.regexp_extract(F.col("_metadata.file_path"), r"(\d{20})\.json$", 1)
-            .cast("bigint")
-            .alias("version"),
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-        )
-        .filter(F.col("path").isNotNull())
-        .groupBy("path")
-        .agg(F.max_by("is_add", F.struct("version", "is_add")).alias("live"))
-        .filter(F.col("live"))
-        .select("path")
-    )
-    ckpt_path = os.path.join(log_dir, f"{ckpt_version:020d}.checkpoint.parquet")
-    live_at_ckpt.write.mode("overwrite").parquet(ckpt_path)
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as f:
-        f.write(_json.dumps({"version": ckpt_version, "size": 3}))
-
-    # --- TIMESTAMP -> VERSION resolution: one schema'd pass over the
-    # commitInfo rows (O(commits)), probes as a broadcast 3-row spine,
-    # greatest version with commit ts <= probe. `<=` is Delta's
+    # --- TIMESTAMP -> VERSION resolution: probes as a broadcast 3-row
+    # spine, greatest version with commit ts <= probe. `<=` is Delta's
     # AS-OF-timestamp contract: a probe landing exactly on a commit
     # time reads THAT commit.
     commit_rows = (
-        spark.read.schema(action_schema)
-        .json(log_dir)
+        _actions(spark, log_dir)
         .filter(F.col("commitInfo").isNotNull())
-        .select(
-            F.regexp_extract(F.col("_metadata.file_path"), r"(\d{20})\.json$", 1)
-            .cast("bigint")
-            .alias("version"),
-            F.col("commitInfo.timestamp").alias("commit_ts"),
-        )
+        .select("version", F.col("commitInfo.timestamp").alias("commit_ts"))
     )
     probe_rows = [
-        ("mid_v0", t0 + day // 2),
-        ("at_v2", commit_ts[2]),
-        ("after_v3", commit_ts[3] + 3600000),
+        ("mid_v0", _T0_MS + _DAY_MS // 2),
+        ("at_v2", _T0_MS + 2 * _DAY_MS),
+        ("after_v3", _T0_MS + 3 * _DAY_MS + 3600000),
     ]
     probes = spark.createDataFrame(probe_rows, "probe string, probe_ts bigint")
     resolved = (
@@ -2204,92 +2044,27 @@ def scan_delta_time_travel_ts(spark, sf_dir):
             f"time-travel probes before the first commit: {sorted(missing)}"
         )
 
-    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
-        n = _json.loads(f.read())["version"]
-    ckpt_state = spark.read.parquet(ckpt_path).select(
-        F.lit(n).cast("bigint").alias("version"),
-        "path",
-        F.lit(True).alias("is_add"),
-    )
-
-    # All three probe reads fold in ONE job (r13 optimization, guide
-    # §2.4/§5 — was one fold + collect + scan per probe): each probe's
-    # state (checkpoint rows for m >= N, constructed replay tail /
-    # pre-checkpoint replay for m < N) is labeled with its probe name
-    # and unioned, the last-action-wins aggregate groups by
-    # (probe, path), and the pair collect is O(probes x live files).
-    # The branch semantics are unchanged: at_v2 is served from the
-    # checkpoint alone, after_v3 replays exactly commit 3, mid_v0
-    # replays commits 0..0 because the checkpoint cannot serve an
-    # EARLIER version.
+    # All three probe reads fold in ONE job (r13, guide §2.4/§5): each
+    # probe's state is labeled with its probe name and unioned, and the
+    # fold groups by (probe, path). at_v2 is served from the checkpoint
+    # alone, after_v3 replays exactly commit 3, mid_v0 replays commits
+    # 0..0.
     states = []
     meta = {}  # probe -> (version, n_commits_replayed)
     for r in sorted(resolved, key=lambda x: x["version"]):
-        label, m = r["probe"], r["version"]
-        if m >= n:  # checkpoint + O(m-n) constructed tail paths
-            tail_paths = [
-                os.path.join(log_dir, f"{v:020d}.json") for v in range(n + 1, m + 1)
-            ]
-            state = ckpt_state
-        else:  # version predates the checkpoint: replay commits 0..m
-            tail_paths = [
-                os.path.join(log_dir, f"{v:020d}.json") for v in range(m + 1)
-            ]
-            state = None
-        meta[label] = (m, len(tail_paths))
-        if tail_paths:
-            replay = (
-                spark.read.schema(action_schema)
-                .json(tail_paths)
-                .select(
-                    F.regexp_extract(
-                        F.col("_metadata.file_path"), r"(\d{20})\.json$", 1
-                    )
-                    .cast("bigint")
-                    .alias("version"),
-                    F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-                    F.col("add.path").isNotNull().alias("is_add"),
-                )
-                .filter(F.col("path").isNotNull())
-            )
-            state = replay if state is None else state.unionByName(replay)
-        states.append(state.withColumn("probe", F.lit(label)))
-    combined = states[0]
-    for s in states[1:]:
-        combined = combined.unionByName(s)
-    live_pairs = (
-        combined.groupBy("probe", "path")
-        .agg(F.max_by("is_add", F.struct("version", "is_add")).alias("live"))
-        .filter(F.col("live"))
-        .collect()  # O(probes x live files): 12 rows
-    )
+        state, n_opened = _state_at(spark, log_dir, r["version"])
+        meta[r["probe"]] = (r["version"], n_opened)
+        states.append(state.withColumn("probe", F.lit(r["probe"])))
+    live = _fold(reduce(DataFrame.unionByName, states), by=["probe"])
 
-    # One scan of the distinct live files; rows attributed to probes
-    # via a broadcast (file uri -> probe) join, per-probe constants
-    # (version, n_commits_replayed) attached from a broadcast 3-row
-    # spine (r13: was a union of per-probe aggs re-reading the files
-    # shared by at_v2 and after_v3).
-    uri = lambda rel: "file:" + os.path.join(tbl, rel)
-    pairs = spark.createDataFrame(
-        [(uri(r2["path"]), r2["probe"]) for r2 in live_pairs],
-        "fp string, probe string",
-    )
+    # Per-probe constants (version, n_commits_replayed) attach from a
+    # broadcast 3-row spine.
     consts = spark.createDataFrame(
         [(p, v, c) for p, (v, c) in meta.items()],
         "probe string, version bigint, n_commits_replayed bigint",
     )
-    scan = spark.read.parquet(
-        *sorted({os.path.join(tbl, r2["path"]) for r2 in live_pairs})
-    ).select("price", F.col("_metadata.file_path").alias("fp"))
     return (
-        scan.join(F.broadcast(pairs), "fp")
-        .groupBy("probe")
-        .agg(
-            F.count_distinct("fp").cast("bigint").alias("n_files"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            dsum(F.col("price"))
-            .alias("sum_total"),
-        )
+        _totals_by(spark, tbl, live, "probe")
         .join(F.broadcast(consts), "probe")
         .select(
             "probe", "version", "n_commits_replayed", "n_files", "n_rows", "sum_total"
@@ -2353,43 +2128,29 @@ def scan_delta_partition_values(spark, sf_dir):
     + DECIMAL(38,6) sums) hash-matches the oracle's recomputation with
     the same predicate INCLUDING the v2 delete's key%2 slice — a fold
     error, a pruning leak, or a wrong partition map flips the hash."""
-    import json as _json
-
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round("o_totalprice", 6).alias("price"),
         F.year("o_orderdate").cast("int").alias("o_year"),
     )
-    tbl = scratch_dir("delta_partition_values_table")
-    log_dir = os.path.join(tbl, "_delta_log")
-    shutil.rmtree(log_dir, ignore_errors=True)
-    os.makedirs(log_dir)
+    tbl, log_dir = _delta_table("delta_partition_values_table")
 
     def write_partitioned(df, sub):
         """partitionBy write (data files OMIT o_year, like Delta);
         returns {year: relative_path} — one file per year by
         construction (repartition by the partition key first)."""
-        path = os.path.join(tbl, "data", sub)
         df.repartition("o_year").write.mode("overwrite").partitionBy(
             "o_year"
-        ).parquet(path)
-        # Driver-side walk of the partition dirs, not a Spark read-back
-        # scan job (r13 optimization — see scan_delta_log.write_files).
+        ).parquet(os.path.join(tbl, "data", sub))
         out = {}
-        for d in os.listdir(path):
-            m = re.fullmatch(r"o_year=(\d+)", d)
-            if not m:
-                continue
-            year = int(m.group(1))
-            for f in os.listdir(os.path.join(path, d)):
-                if not (f.startswith("part-") and f.endswith(".parquet")):
-                    continue
-                if year in out:
-                    raise AssertionError(
-                        f"scan_delta_partition_values fixture: partition "
-                        f"o_year={year} in {sub} produced more than one file"
-                    )
-                out[year] = os.path.join("data", sub, d, f)
+        for rel in _part_files(tbl, sub):
+            year = int(re.search(r"o_year=(\d+)", rel).group(1))
+            if year in out:
+                raise AssertionError(
+                    f"scan_delta_partition_values fixture: partition "
+                    f"o_year={year} in {sub} produced more than one file"
+                )
+            out[year] = rel
         return out
 
     # v0/v1 are independent slices — concurrent (r14, guide §2.6).
@@ -2412,64 +2173,28 @@ def scan_delta_partition_values(spark, sf_dir):
         )
 
     def add(rel, year):
-        return {
-            "add": {
-                "path": rel,
-                "partitionValues": {"o_year": str(year)},
-                "size": os.path.getsize(os.path.join(tbl, rel)),
-                "dataChange": True,
-            }
-        }
+        return _add(tbl, rel, partitionValues={"o_year": str(year)})
 
-    commits = {
-        0: [{"commitInfo": {"operation": "WRITE"}}]
-        + [add(rel, y) for y, rel in sorted(v0_files.items())],
-        1: [{"commitInfo": {"operation": "APPEND"}}, add(v1_files[1998], 1998)],
-        2: [
-            {"commitInfo": {"operation": "DELETE"}},
-            {"remove": {"path": v0_files[1998], "dataChange": True}},
-        ],
-    }
-    for v, actions in commits.items():  # O(commits) driver writes
-        with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as f:
-            f.write("\n".join(_json.dumps(a) for a in actions) + "\n")
+    _commit(log_dir, 0, "WRITE", [add(rel, y) for y, rel in sorted(v0_files.items())])
+    _commit(log_dir, 1, "APPEND", [add(v1_files[1998], 1998)])
+    _commit(log_dir, 2, "DELETE", [_remove(v0_files[1998])])
 
-    # --- fold the log ONCE (last-action-wins per path), carrying the
-    # partitionValues map: O(actions) metadata, zero data-file reads.
-    live = (
-        spark.read.schema(DELTA_PV_ACTION_SCHEMA)
-        .json(log_dir)
-        .select(
-            F.regexp_extract(F.col("_metadata.file_path"), r"(\d{20})\.json$", 1)
-            .cast("bigint")
-            .alias("version"),
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-            F.col("add.partitionValues")["o_year"].alias("pv_year"),
-        )
-        .filter(F.col("path").isNotNull())
-        .groupBy("path")
-        .agg(
-            F.max_by("is_add", "version").alias("live"),
-            # partitionValues are immutable per path and present only on
-            # the add row — max over (year, null-from-remove) recovers it
-            F.max("pv_year").cast("int").alias("o_year"),
-        )
-        .filter(F.col("live"))
-        .select("path", "o_year")
-    )
-    live_rows = live.collect()  # O(live files): 7
+    # --- fold the log ONCE, carrying the partitionValues map: O(actions)
+    # metadata, zero data-file reads.
+    live_rows = _fold(
+        _actions(spark, log_dir),
+        o_year=F.col("add.partitionValues")["o_year"].cast("int"),
+    ).collect()  # O(live files): 7
     pruned = [r for r in live_rows if 1997 <= r["o_year"] <= 1998]
     out_of_range = [r for r in live_rows if not 1997 <= r["o_year"] <= 1998]
     n_live_total, n_pruned = len(live_rows), len(pruned)
 
     # --- the pruned read: ONLY the in-range files are opened. Partition
     # column reconstructed via a broadcast (file uri -> o_year) map.
-    uri = lambda rel: "file:" + os.path.join(tbl, rel)
     pruned_map = spark.createDataFrame(
-        [(uri(r["path"]), r["o_year"]) for r in pruned], "fp string, o_year int"
+        [(_uri(tbl, r["path"]), r["o_year"]) for r in pruned], "fp string, o_year int"
     )
-    out_uris = [uri(r["path"]) for r in out_of_range]
+    out_uris = [_uri(tbl, r["path"]) for r in out_of_range]
     pruned_scan = spark.read.parquet(
         *[os.path.join(tbl, r["path"]) for r in pruned]
     ).select(
@@ -2486,7 +2211,7 @@ def scan_delta_partition_values(spark, sf_dir):
     scanned_fps = {
         r["fp"] for r in pruned_scan.select("fp").distinct().collect()
     }  # O(pruned files): 2
-    map_covers_scan = scanned_fps == {uri(r["path"]) for r in pruned}
+    map_covers_scan = scanned_fps == {_uri(tbl, r["path"]) for r in pruned}
     scanned = pruned_scan.join(F.broadcast(pruned_map), "fp", "left")
     return scanned.groupBy("o_year").agg(
         F.count_distinct("fp").cast("bigint").alias("n_files"),
@@ -2504,18 +2229,6 @@ def scan_delta_partition_values(spark, sf_dir):
             & F.lit(n_live_total == 7)
         ).alias("pruned_ok"),
     )
-
-
-# Action schema for the deletion-vector read path: a re-`add` may carry
-# a deletionVector descriptor (Delta's DV shape: storageType 'u' =
-# path-referenced sidecar; cardinality = tombstones in THIS file).
-DELTA_DV_ACTION_SCHEMA = (
-    "add struct<path:string,size:bigint,dataChange:boolean,"
-    "deletionVector:struct<storageType:string,pathOrInlineDv:string,"
-    "cardinality:bigint>>, "
-    "remove struct<path:string,dataChange:boolean>, "
-    "commitInfo struct<operation:string>"
-)
 
 
 @register(
@@ -2548,8 +2261,8 @@ def scan_delta_deletion_vectors(spark, sf_dir):
     dead rows with a LEFT ANTI join of ``_metadata.row_index`` against
     the BROADCAST sidecar — zero shuffle of the data side.
 
-    Fixture (the exact skeleton proven by
-    ``scripts/deletion_vector_prototype_r12.py``):
+    Fixture (the skeleton of the r12 deletion-vector prototype study,
+    SURVEY.md):
 
         v0  WRITE: lineitem as 8 data files (8 adds)
         v1  DELETE: rows with l_orderkey % 997 == 0 (~0.1%) die; the
@@ -2580,43 +2293,21 @@ def scan_delta_deletion_vectors(spark, sf_dir):
     The oracle recomputes counts, DECIMAL(38,6) sums, and the dead-row
     cardinality from the same predicate, so a fold error, a dropped
     tombstone, or a DV applied to the wrong file flips the hash."""
-    import json as _json
-
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_returnflag",
         F.round("l_extendedprice", 6).alias("price"),
     )
-    tbl = scratch_dir("delta_deletion_vectors_table")
-    log_dir = os.path.join(tbl, "_delta_log")
-    shutil.rmtree(tbl, ignore_errors=True)
-    os.makedirs(log_dir)
+    tbl, log_dir = _delta_table("delta_deletion_vectors_table")
 
     # ---- v0 WRITE: 8 data files + their add actions -----------------
-    data0 = os.path.join(tbl, "data", "v0")
-    li.repartition(8).write.mode("overwrite").parquet(data0)
-    files0 = sorted(
-        os.path.join("data", "v0", f)
-        for f in os.listdir(data0)
-        if f.endswith(".parquet")
-    )
-    actions0 = [{"commitInfo": {"operation": "WRITE"}}] + [
-        {
-            "add": {
-                "path": rel,
-                "size": os.path.getsize(os.path.join(tbl, rel)),
-                "dataChange": True,
-            }
-        }
-        for rel in files0
-    ]
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as f:
-        f.write("\n".join(_json.dumps(a) for a in actions0) + "\n")
+    files0 = _write_slice(tbl, li, "v0", 8)
+    _commit(log_dir, 0, "WRITE", [_add(tbl, rel) for rel in files0])
 
     # ---- v1 DELETE: write the DV sidecar + re-add touched files -----
     dv_dir = os.path.join(tbl, "dv")
     dead = (
-        spark.read.parquet(data0)
+        spark.read.parquet(os.path.join(tbl, "data", "v0"))
         .select(
             F.col("_metadata.file_path").alias("fp"),
             F.col("_metadata.row_index").alias("ri"),
@@ -2631,54 +2322,32 @@ def scan_delta_deletion_vectors(spark, sf_dir):
         r["fp"]: r["n"]
         for r in sidecar.groupBy("fp").agg(F.count("*").alias("n")).collect()
     }  # O(touched files) driver rows: <= 8
-    actions1 = [{"commitInfo": {"operation": "DELETE"}}]
-    for rel in files0:
-        abs_fp = "file:" + os.path.join(tbl, rel)
-        if abs_fp in per_file:  # re-add same bytes, now carrying a DV
-            actions1.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "size": os.path.getsize(os.path.join(tbl, rel)),
-                        "dataChange": False,
-                        "deletionVector": {
-                            "storageType": "u",
-                            "pathOrInlineDv": "dv",
-                            "cardinality": per_file[abs_fp],
-                        },
-                    }
-                }
+    _commit(
+        log_dir,
+        1,
+        "DELETE",
+        [  # re-add same bytes, now carrying a DV
+            _add(
+                tbl,
+                rel,
+                False,
+                deletionVector={
+                    "storageType": "u",
+                    "pathOrInlineDv": "dv",
+                    "cardinality": per_file[_uri(tbl, rel)],
+                },
             )
-    with open(os.path.join(log_dir, f"{1:020d}.json"), "w") as f:
-        f.write("\n".join(_json.dumps(a) for a in actions1) + "\n")
+            for rel in files0
+            if _uri(tbl, rel) in per_file
+        ],
+    )
 
     # ---- fold the log ONCE: last-add-wins carrying the DV -----------
-    live = (
-        spark.read.schema(DELTA_DV_ACTION_SCHEMA)
-        .json(log_dir)
-        .select(
-            F.regexp_extract(F.col("_metadata.file_path"), r"(\d{20})\.json$", 1)
-            .cast("bigint")
-            .alias("version"),
-            "add",
-            "remove",
-        )
-        .filter(F.col("add").isNotNull() | F.col("remove").isNotNull())
-        .groupBy(F.coalesce("add.path", "remove.path").alias("path"))
-        .agg(
-            F.max_by(
-                F.struct(
-                    F.col("add").isNotNull().alias("is_add"),
-                    F.col("add.deletionVector.pathOrInlineDv").alias("dv_path"),
-                    F.col("add.deletionVector.cardinality").alias("dv_card"),
-                ),
-                F.struct("version", F.col("add").isNotNull().alias("is_add")),
-            ).alias("last")
-        )
-        .filter(F.col("last.is_add"))
-        .select("path", "last.dv_path", "last.dv_card")
-        .collect()
-    )  # O(live files): 8 — a real Delta client does driver-side log replay
+    live = _fold(
+        _actions(spark, log_dir),
+        dv_path="add.deletionVector.pathOrInlineDv",
+        dv_card="add.deletionVector.cardinality",
+    ).collect()  # O(live files): 8 — a real Delta client does driver-side log replay
     dv_files = [r for r in live if r["dv_card"] is not None]
     card_total = sum(r["dv_card"] for r in dv_files)
     sidecar_rows = sidecar.count()  # O(deleted) sidecar count job
@@ -2690,8 +2359,7 @@ def scan_delta_deletion_vectors(spark, sf_dir):
     )
 
     # ---- the DV read: broadcast anti-join restricted to DV'd files --
-    uri = lambda rel: "file:" + os.path.join(tbl, rel)
-    dv_uris = [uri(r["path"]) for r in dv_files]
+    dv_uris = [_uri(tbl, r["path"]) for r in dv_files]
     tombstones = F.broadcast(sidecar.filter(F.col("fp").isin(dv_uris)))
     surviving = (
         spark.read.parquet(*[os.path.join(tbl, r["path"]) for r in live])

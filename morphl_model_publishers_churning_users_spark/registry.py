@@ -61,7 +61,9 @@ _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 # once (plans/churn.labeled_users); llm_dedup_fuzzy builds its recall
 # anchor as one lazy plan over one shingled corpus. The llm_* keys after
 # it build their shingle sets, exact Jaccard truth and MinHash
-# signatures through the shared helpers in operators/llm.py.
+# signatures through the shared helpers in operators/llm.py. The
+# scan_delta_* keys write, read and fold their commit logs through the
+# shared Delta helpers in operators/scans.py (one action schema, one fold).
 _REVERIFY: dict[str, int] = {
     "ml_split": 14,
     "ml_train": 14,
@@ -80,6 +82,11 @@ _REVERIFY: dict[str, int] = {
     "llm_dedup_minhash_sql": 14,
     "llm_preference_pairs": 14,
     "llm_dedup_transitivity_audit": 14,
+    "scan_delta_log": 14,
+    "scan_delta_checkpoint": 14,
+    "scan_delta_time_travel_ts": 14,
+    "scan_delta_partition_values": 14,
+    "scan_delta_deletion_vectors": 14,
 }
 
 

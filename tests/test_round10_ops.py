@@ -79,6 +79,10 @@ def test_delta_checkpoint_read_never_opens_pre_checkpoint_log(spark, sf_dir):
     from morphl_model_publishers_churning_users_spark.operators._shared import (
         scratch_dir,
     )
+    from morphl_model_publishers_churning_users_spark.operators.scans import (
+        _fold,
+        _state_at,
+    )
 
     before = {
         (r["version"], r["n_commits_replayed"], r["n_files"], r["n_rows"])
@@ -92,32 +96,9 @@ def test_delta_checkpoint_read_never_opens_pre_checkpoint_log(spark, sf_dir):
 
     # Rebuild ONLY the read half against the truncated log: the
     # operator rewrites the table on each call, so re-running it would
-    # restore the files; instead replay its reader logic directly.
-    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
-        n = json.loads(f.read())["version"]
-    ckpt = spark.read.parquet(
-        os.path.join(log_dir, f"{n:020d}.checkpoint.parquet")
-    ).select(F.lit(n).cast("bigint").alias("version"), "path", F.lit(True).alias("is_add"))
-    replay = (
-        spark.read.schema(
-            "add struct<path:string,size:bigint,dataChange:boolean>, "
-            "remove struct<path:string,dataChange:boolean>, "
-            "commitInfo struct<operation:string>"
-        )
-        .json([os.path.join(log_dir, f"{v:020d}.json") for v in (3,)])
-        .select(
-            F.lit(3).cast("bigint").alias("version"),
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-        )
-        .filter(F.col("path").isNotNull())
-    )
-    live3 = (
-        ckpt.unionByName(replay)
-        .groupBy("path")
-        .agg(F.max_by("is_add", "version").alias("live"))
-        .filter(F.col("live"))
-    )
+    # restore the files; instead call its reader and fold directly.
+    state, _ = _state_at(spark, log_dir, 3)
+    live3 = _fold(state)
     paths = [os.path.join(tbl, r["path"]) for r in live3.collect()]
     got = spark.read.parquet(*paths).count()
     want = next(n_rows for v, c, f_, n_rows in before if v == 3)
