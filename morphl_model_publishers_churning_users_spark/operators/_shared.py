@@ -25,7 +25,7 @@ import shutil
 import time
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
 
 from ..catalog import table
 
@@ -61,6 +61,20 @@ def dsum(col: Column, k: int = 6) -> Column:
     """Exact, order-independent sum of a double column through
     decimal(38,k) (→ double)."""
     return F.sum(col.cast(f"decimal(38,{k})")).cast("double")
+
+
+def day_of(col: str | Column = "ts") -> Column:
+    """The calendar day of a TIMESTAMP_NTZ (or DATE) column: the one
+    spelling of the day key. An NTZ timestamp's day is its wall-clock
+    date under any session timezone. DuckDB twin: ``CAST(ts AS DATE)``."""
+    return F.to_date(col)
+
+
+def by_day(df: DataFrame, *by: str | Column, col: str | Column = "ts") -> GroupedData:
+    """``df`` grouped by ``*by`` plus ``day_of(col)`` as ``day``: the
+    daily series every day-grain operator aggregates. Callers add their
+    own ``.agg``."""
+    return df.groupBy(*by, day_of(col).alias("day"))
 
 
 def DSUM(expr: str) -> str:

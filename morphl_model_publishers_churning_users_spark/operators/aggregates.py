@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, t
+from ._shared import DSUM, by_day, ckpt, day_of, dsum, qdec, qround, qsum, t
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -385,9 +385,7 @@ def agg_sketch_hll(spark, sf_dir):
     invariant as approx_ok (oracle emits literal TRUE); the same bound
     is property-tested in tests/test_engine.py."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.hll_sketch_agg("user_id").alias("sketch")
-    )
+    daily = by_day(ev, "event_type").agg(F.hll_sketch_agg("user_id").alias("sketch"))
     merged = daily.groupBy("event_type").agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("approx_users")
     )
@@ -669,9 +667,7 @@ def agg_hll_union(spark, sf_dir):
     DuckDB, the ±5% union-estimate invariant as approx_ok (oracle emits
     literal TRUE)."""
     ev = t(spark, sf_dir, "events")
-    partials = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.expr("hll_sketch_agg(user_id)").alias("sk")
-    )
+    partials = by_day(ev, "event_type").agg(F.expr("hll_sketch_agg(user_id)").alias("sk"))
     rolled = partials.groupBy("event_type").agg(
         F.expr("CAST(hll_sketch_estimate(hll_union_agg(sk)) AS BIGINT)").alias("approx_users"),
         F.count(F.lit(1)).alias("n_partials"),
@@ -784,7 +780,7 @@ def agg_multi_distinct(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
-        F.countDistinct(F.to_date("ts")).alias("n_days"),
+        F.countDistinct(day_of()).alias("n_days"),
         F.count(F.lit(1)).alias("n_events"),
     )
 
@@ -816,14 +812,12 @@ def agg_reaggregate(spark, sf_dir):
     (day, type) partitioning — AQE plans the second stage exchange-free
     when the grouping is a superset-prefix."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.to_date(F.date_trunc("day", "ts")).alias("day"), "event_type"
-    ).agg(
+    daily = by_day(ev, "event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(38,6)")).alias("sv"),
     )
     return daily.groupBy(
-        F.to_date(F.date_trunc("week", "day")).alias("week"), "event_type"
+        day_of(F.date_trunc("week", "day")).alias("week"), "event_type"
     ).agg(
         F.sum("n").cast("bigint").alias("n_events"),
         F.round(F.sum("sv").cast("double"), 6).alias("sum_value"),
@@ -1798,7 +1792,7 @@ def agg_qq_normal(spark, sf_dir):
     curvature ⇒ heavy tails ⇒ prefer the robust ops
     (ts_anomaly_robust, agg_mad)."""
     e = t(spark, sf_dir, "events")
-    daily = ckpt(e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
+    daily = ckpt(by_day(e).agg(
         dsum(F.col("value")).alias("v")
     ))  # feeds moments AND every quantile probe
     mom = daily.agg(

@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, scan_is_underparallel, t
+from ._shared import DSUM, ckpt, day_of, dsum, scan_is_underparallel, t
 
 
 @register(
@@ -964,7 +964,7 @@ def join_scd2_asof(spark, sf_dir):
     daily = (
         ev.select(
             "user_id",
-            F.to_date("ts").alias("day"),
+            day_of().alias("day"),
             F.col("event_type").alias("status"),
             "ts",
             "event_id",
@@ -986,7 +986,7 @@ def join_scd2_asof(spark, sf_dir):
         "valid_from",
         F.lead("valid_from").over(w_iv).alias("valid_to"),
     )
-    fact = ev.select("user_id", F.to_date("ts").alias("day"))
+    fact = ev.select("user_id", day_of().alias("day"))
     joined = fact.join(
         dim,
         (fact["user_id"] == dim["user_id"])

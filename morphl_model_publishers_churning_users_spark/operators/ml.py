@@ -20,7 +20,7 @@ from pyspark.sql import Window
 
 from ..plans import churn
 from ..registry import register
-from ._shared import ckpt, dsum, qdec, qround, qsum, t
+from ._shared import by_day, ckpt, day_of, dsum, qdec, qround, qsum, t
 
 # Exact anchor shared by most ML oracles: the feature matrix has one row
 # per user with ≥1 event, so COUNT(DISTINCT user_id) over events is the
@@ -1822,10 +1822,8 @@ def ml_pinball_loss(spark, sf_dir):
     quantized 1e-6 into the decimal mean. One day-grain shuffle, one
     per-type window, a 2-way τ fan-out on the tiny summary."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("d")
-    ).agg(dsum(F.col("value")).alias("y"))
-    w = Window.partitionBy("event_type").orderBy("d")
+    daily = by_day(e, "event_type").agg(dsum(F.col("value")).alias("y"))
+    w = Window.partitionBy("event_type").orderBy("day")
     paired = daily.withColumn("yhat", F.lag("y", 7).over(w)).filter(
         F.col("yhat").isNotNull()
     )
@@ -2209,7 +2207,7 @@ def ml_km_greenwood(spark, sf_dir):
         per_user
         .crossJoin(F.broadcast(horizon))
         .select(
-            F.datediff(F.to_date("last_ts"), F.to_date("first_ts")).alias("t_days"),
+            F.datediff(day_of("last_ts"), day_of("first_ts")).alias("t_days"),
             F.when(
                 F.col("last_ts") < F.col("h") - F.expr("INTERVAL 3 DAY"), 1
             )
@@ -2724,10 +2722,8 @@ def ml_conformal_interval(spark, sf_dir):
     shuffle + one type-keyed window; the calibration table is
     O(series × days)."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("d")).agg(
-        dsum(F.col("value")).alias("y")
-    )
-    w = Window.partitionBy("event_type").orderBy("d")
+    daily = by_day(e, "event_type").agg(dsum(F.col("value")).alias("y"))
+    w = Window.partitionBy("event_type").orderBy("day")
     paired = ckpt(  # feeds the calibration quantile AND the test join
         daily.withColumn("yhat", F.lag("y", 7).over(w))
         .withColumn("rn", F.row_number().over(w))
@@ -2994,7 +2990,7 @@ def ml_km_rmst(spark, sf_dir):
     ))
     horizon = per_user.agg(F.max("last_ts").alias("h"))
     users = per_user.crossJoin(F.broadcast(horizon)).select(
-        F.datediff(F.to_date("last_ts"), F.to_date("first_ts")).alias("t_days"),
+        F.datediff(day_of("last_ts"), day_of("first_ts")).alias("t_days"),
         F.when(F.col("last_ts") < F.col("h") - F.expr("INTERVAL 3 DAY"), 1)
         .otherwise(0)
         .alias("churned"),
@@ -3674,8 +3670,7 @@ def ml_bh_fdr(spark, sf_dir):
     collapse is the only data-sized pass, and the BH window runs on
     one row per metric."""
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"), "event_type")
         .agg(F.count(F.lit(1)).alias("y"))
     )
     lims = daily.groupBy("event_type").agg(
@@ -4053,10 +4048,7 @@ def ml_evalue_sequential(spark, sf_dir):
     windows over the day table; at 100 TB the day table is tiny and
     the single events shuffle dominates."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", "ts").cast("date").alias("day"),
-        (F.col("user_id") % 2).alias("arm"),
-    ).agg(
+    daily = by_day(ev, (F.col("user_id") % 2).alias("arm")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("k"),
     )
@@ -7293,10 +7285,7 @@ def ml_brown_forsythe(spark, sf_dir):
     decision vs the F(6, inf) 5% point ~2.1. One day aggregate + one
     per-group window + O(weekdays) algebra."""
     daily = ckpt(
-        t(spark, sf_dir, "orders")
-        .groupBy(
-            F.col("o_orderdate").cast("date").alias("day"),
-        )
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(
             (
                 qsum(F.col("o_totalprice"))

@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import ckpt, dsum, qdec, qround, qsum, t
+from ._shared import by_day, ckpt, day_of, dsum, qround, qsum, t
 
 
 @register(
@@ -82,7 +82,7 @@ def cast_types(spark, sf_dir):
         "event_id",
         F.col("user_id").cast("double").alias("uid_double"),
         F.col("user_id").cast("string").alias("uid_str"),
-        F.to_date(F.date_format("ts", "yyyy-MM-dd")).alias("ts_day"),
+        day_of(F.date_format("ts", "yyyy-MM-dd")).alias("ts_day"),
         F.floor("value").cast("bigint").alias("value_floor"),
     )
 
@@ -1008,9 +1008,7 @@ def dq_observe_metrics(spark, sf_dir):
         F.date_format(F.max("ts"), fmt).alias("max_ts"),
         F.sum((F.col("event_type") == "purchase").cast("long")).alias("n_purchases"),
     )
-    daily = ev.groupBy(F.date_trunc("day", "ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    daily = by_day(ev).agg(F.count(F.lit(1)).alias("n"))
     n_days = len(daily.collect())  # executes THIS QueryExecution
     om = daily._jdf.queryExecution().observedMetrics()
     it = om.iterator()

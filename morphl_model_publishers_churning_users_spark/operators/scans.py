@@ -18,10 +18,11 @@ from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import register
-from ._shared import ckpt, dsum, qround, qsum, scratch_dir, t
+from ._shared import ckpt, day_of, dsum, qround, qsum, scratch_dir, t
 
 
 def _overlap_writes(*thunks):
@@ -38,9 +39,11 @@ def _overlap_writes(*thunks):
     re-verified). Spark's scheduler runs concurrent actions FIFO,
     which is exactly the back-fill behaviour the guide describes; 2–3
     jobs in flight is the sweet spot and the pool never exceeds the
-    thunk count."""
+    thunk count. Each thunk runs through ``inheritable_thread_target``,
+    so its jobs carry the caller's job group, description, pool and tags."""
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(th) for th in thunks]
+        futures = [pool.submit(inherit(th)) for th in thunks]
         return [f.result() for f in futures]
 
 
@@ -169,7 +172,7 @@ def scan_partition_pruned(spark, sf_dir):
     if not os.path.exists(marker):
         (
             t(spark, sf_dir, "events")
-            .withColumn("day", F.to_date("ts"))
+            .withColumn("day", day_of())
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(out)
@@ -233,7 +236,9 @@ def scan_csv_malformed(spark, sf_dir):
     then keeps clean rows only. At 100 TB some dirty line always exists,
     so fail-the-stage is not an option and silently-drop loses audit —
     the corrupt column gives per-row lineage. Oracle: the clean nation
-    table (exactly what must survive)."""
+    table (exactly what must survive). The parsed rows are materialized
+    before the ``_corrupt`` filter: a query that reads only the corrupt
+    column (``.count()``'s pruned scan) is refused by Spark."""
     out = scratch_dir("csv_malformed")
     path = os.path.join(out, "nation_dirty.csv")
     rows = (
@@ -248,7 +253,7 @@ def scan_csv_malformed(spark, sf_dir):
             f.write(f"{r.n_nationkey},{r.n_name},{r.n_regionkey}\n")
             if i % 10 == 0:
                 f.write(f"not_an_int,BROKEN{i}\n")
-    df = (
+    df = ckpt(
         spark.read.schema(
             "n_nationkey bigint, n_name string, n_regionkey bigint, _corrupt string"
         )
@@ -353,7 +358,7 @@ def join_dpp(spark, sf_dir):
     if not os.path.exists(marker):
         (
             t(spark, sf_dir, "events")
-            .withColumn("day", F.to_date("ts"))
+            .withColumn("day", day_of())
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(out)

@@ -20,7 +20,48 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, t
+from ._shared import DSUM, by_day, ckpt, day_of, dsum, qdec, qround, qsum, t
+
+
+def _day_index():
+    """Each row's 1-based position in day order, as bigint: the integer
+    time axis of a daily series. DuckDB twin:
+    ``CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT)``."""
+    return F.row_number().over(Window.orderBy("day")).cast("bigint")
+
+
+def _day_grid(daily, *by):
+    """``daily`` left-joined onto the dense day grid of each ``*by``
+    group's first-to-last-day span: every calendar day appears, and a day
+    without a row in ``daily`` carries nulls. ``sequence``/``explode``
+    generate the grid executor-side, sized by each group's own span."""
+    span = daily.groupBy(*by).agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
+    grid = span.select(*by, F.explode(F.sequence("d0", "d1")).alias("day"))
+    return grid.join(daily, [*by, "day"], "left")
+
+
+def _lag_sums(cent, lags, by=(), k=12):
+    """``(*by, k, s)``: for each lag ``k`` in ``lags`` (a ``range``), the
+    sum ``s`` of ``xc_i * xc_(i-k)`` over the index pairs of ``cent``
+    (columns ``*by, i, xc``) within each ``*by`` group, summed exactly by
+    ``qsum(..., k)``. The lags are a broadcast range, so the self-join is
+    bounded by ``len(lags)`` times the series length."""
+    ks = cent.sparkSession.range(lags.start, lags.stop).select(
+        F.col("id").cast("bigint").alias("k")
+    )
+    a = cent.select(*by, F.col("i").alias("ia"), F.col("xc").alias("xa"))
+    b = cent.select(
+        *[F.col(c).alias(f"{c}_b") for c in by], F.col("i").alias("ib"), F.col("xc").alias("xb")
+    )
+    on = F.col("ib") == F.col("ia") - F.col("k")
+    for c in by:
+        on = (F.col(f"{c}_b") == F.col(c)) & on
+    return (
+        a.crossJoin(F.broadcast(ks))
+        .join(b, on)
+        .groupBy(*by, "k")
+        .agg(qsum(F.col("xa") * F.col("xb"), k).alias("s"))
+    )
 
 
 @register(
@@ -138,14 +179,10 @@ def ts_gap_fill(spark, sf_dir):
     own active range, so a 100 TB corpus with short-lived users never
     materializes a global calendar cross join."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.round(dsum(F.col("value")), 6).alias("day_value")
-    )
-    spans = daily.groupBy("user_id").agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    cal = spans.select("user_id", F.explode(F.sequence("d0", "d1")).alias("day"))
+    daily = by_day(ev, "user_id").agg(F.round(dsum(F.col("value")), 6).alias("day_value"))
     w = Window.partitionBy("user_id").orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     return (
-        cal.join(daily, ["user_id", "day"], "left")
+        _day_grid(daily, "user_id")
         .select(
             "user_id",
             "day",
@@ -183,7 +220,7 @@ def ts_resample_ohlc(spark, sf_dir):
     row_number twin (DuckDB arg_min/arg_max lack composite tiebreaks)."""
     ev = t(spark, sf_dir, "events")
     ord_key = F.struct(F.col("ts"), F.col("event_id"))
-    return ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+    return by_day(ev, "user_id").agg(
         F.round(F.min_by("value", ord_key), 6).alias("open"),
         F.round(F.max("value"), 6).alias("high"),
         F.round(F.min("value"), 6).alias("low"),
@@ -252,7 +289,7 @@ def ts_ewma(spark, sf_dir):
         f"aggregate({vals_sorted}, CAST(NULL AS DOUBLE),"
         " (acc, x) -> CASE WHEN acc IS NULL THEN x ELSE 0.5D * acc + 0.5D * x END)"
     )
-    day_chunks = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+    day_chunks = by_day(ev, "user_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.expr(b_lin).alias("b_lin"),
         F.expr(f_fresh).alias("y"),  # seed: fresh-start result carried in y
@@ -360,7 +397,7 @@ def ts_retention_cohorts(spark, sf_dir):
     engines; /7 is exact (week-aligned)."""
     ev = t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
-        F.collect_set(F.to_date(F.date_trunc("week", "ts"))).alias("wks")
+        F.collect_set(day_of(F.date_trunc("week", "ts"))).alias("wks")
     )
     exploded = per_user.select(
         F.array_min("wks").alias("cohort_week"), F.explode("wks").alias("wk")
@@ -522,9 +559,7 @@ def ts_active_users(spark, sf_dir):
     — bounded by the window, not the data. At larger windows, swap the
     band join for HLL partial union."""
     ev = t(spark, sf_dir, "events")
-    acts = ev.select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).distinct()
+    acts = ev.select("user_id", day_of().alias("day")).distinct()
     days = acts.select("day").distinct()
     banded = acts.withColumnRenamed("day", "act_day").join(
         F.broadcast(days),
@@ -588,7 +623,7 @@ def ts_user_ltv(spark, sf_dir):
     the whole feature block costs a single shuffle on user_id."""
     ev = t(spark, sf_dir, "events")
     total = dsum(F.col("value"))
-    tenure = F.datediff(F.to_date(F.max("ts")), F.to_date(F.min("ts"))).cast("bigint")
+    tenure = F.datediff(day_of(F.max("ts")), day_of(F.min("ts"))).cast("bigint")
     return ev.groupBy("user_id").agg(
         F.min("ts").alias("first_seen"),
         F.max("ts").alias("last_seen"),
@@ -631,9 +666,7 @@ def ts_peak_concurrency(spark, sf_dir):
     (localCheckpoint) instead of letting Catalyst inline the event scan
     + aggregate into each leg."""
     ev = t(spark, sf_dir, "events")
-    iv = ckpt(ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.min("ts").alias("s"), F.max("ts").alias("e")
-    ))
+    iv = ckpt(by_day(ev, "user_id").agg(F.min("ts").alias("s"), F.max("ts").alias("e")))
     pts = iv.select("day", F.col("s").alias("t"), F.lit(1).alias("delta")).unionByName(
         iv.select("day", F.col("e").alias("t"), F.lit(-1).alias("delta"))
     )
@@ -699,12 +732,8 @@ def ts_interpolate_linear(spark, sf_dir):
     (localCheckpoint) instead of re-deriving the event scan + aggregate
     per consumer."""
     ev = t(spark, sf_dir, "events")
-    daily = ckpt(ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.round(dsum(F.col("value")), 6).alias("v")
-    ))
-    spans = daily.groupBy("user_id").agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    cal = spans.select("user_id", F.explode(F.sequence("d0", "d1")).alias("day"))
-    g = cal.join(daily, ["user_id", "day"], "left")
+    daily = ckpt(by_day(ev, "user_id").agg(F.round(dsum(F.col("value")), 6).alias("v")))
+    g = _day_grid(daily, "user_id")
     wb = Window.partitionBy("user_id").orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -762,7 +791,7 @@ def ts_cohort_value_curve(spark, sf_dir):
     the way to the final cast. Heavy data is touched exactly once."""
     ev = t(spark, sf_dir, "events")
     acts = ev.groupBy(
-        "user_id", F.to_date(F.date_trunc("week", "ts")).alias("wk")
+        "user_id", day_of(F.date_trunc("week", "ts")).alias("wk")
     ).agg(F.sum(F.col("value").cast("decimal(38,6)")).alias("wv"))
     tagged = acts.withColumn(
         "cohort_week", F.min("wk").over(Window.partitionBy("user_id"))
@@ -861,7 +890,7 @@ def ts_survival_curve(spark, sf_dir):
     tenure table is the only data-sized object and it's touched once."""
     ev = t(spark, sf_dir, "events")
     tenure = ev.groupBy("user_id").agg(
-        F.datediff(F.to_date(F.max("ts")), F.to_date(F.min("ts"))).alias("t_days")
+        F.datediff(day_of(F.max("ts")), day_of(F.min("ts"))).alias("t_days")
     )
     spine = spark.range(0, 30).select(F.col("id").cast("bigint").alias("day_n"))
     surviving = F.count(F.when(F.col("t_days") >= F.col("day_n"), 1))
@@ -911,9 +940,7 @@ def ts_anomaly_robust(spark, sf_dir):
     framed quantiles linearly, so the doubles agree bit-for-bit before
     the shared floor-rounding."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
     nd = F.col("n").cast("double")
     med = F.percentile(nd, F.lit(0.5)).over(w)
@@ -978,7 +1005,7 @@ def ts_scd2_history(spark, sf_dir):
     daily = (
         ev.select(
             "user_id",
-            F.to_date("ts").alias("day"),
+            day_of().alias("day"),
             F.col("event_type").alias("status"),
             "ts",
             "event_id",
@@ -1042,9 +1069,7 @@ def ts_forecast_linear(spark, sf_dir):
     both engines fit on identical (x, n) pairs and the floor-rounded
     projections hash-match."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("n")
-    )
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).cast("double").alias("n"))
     w = Window.partitionBy("event_type")
     idx = daily.select(
         "event_type",
@@ -1116,9 +1141,7 @@ def ts_holt_forecast(spark, sf_dir):
     first day-struct and folds the rest, mirroring DuckDB's
     list_reduce semantics exactly."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("n")
-    )
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).cast("double").alias("n"))
     # elements carry (n, l, b) so the FIRST element doubles as the fold
     # seed (l = first n, b = 0) — list_reduce-compatible on both sides.
     days_expr = (
@@ -1187,9 +1210,7 @@ def ts_seasonal_decompose(spark, sf_dir):
     events, then windows/joins over the tiny day×type table — the
     decomposition itself is O(days·types) regardless of event volume."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("n")
-    )
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).cast("double").alias("n"))
     w7 = (
         Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     )
@@ -1266,9 +1287,7 @@ def ts_autocorr(spark, sf_dir):
     chosen so quantized products stay exactly representable), and the
     final ratio quantizes at 1e-6."""
     ev = t(spark, sf_dir, "events")
-    daily = ckpt(ev.groupBy(F.to_date("ts").alias("day")).agg(
-        dsum(F.col("value")).alias("r")
-    ))
+    daily = ckpt(by_day(ev).agg(dsum(F.col("value")).alias("r")))
     mu = daily.agg(
         (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
     )
@@ -1325,9 +1344,7 @@ def ts_changepoint(spark, sf_dir):
     engines (a float cusum could flip the argmax between two near-tied
     peaks). Flags every day whose |cusum| equals the maximum."""
     ev = t(spark, sf_dir, "events")
-    daily = ckpt(ev.groupBy(F.to_date("ts").alias("day")).agg(
-        dsum(F.col("value")).alias("r")
-    ))
+    daily = ckpt(by_day(ev).agg(dsum(F.col("value")).alias("r")))
     mu = daily.agg(
         (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
     )
@@ -1455,9 +1472,7 @@ def ts_holt_winters(spark, sf_dir):
     (ts_ewma's discipline), so event volume never inflates it. Types
     with under 8 days are excluded (no seasonal cycle to fit)."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("x")
-    )
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).cast("double").alias("x"))
     arr = "sort_array(collect_list(struct(day, x)))"
     # Seed from days 1..7; fold days 8..n. All element_at calls 1-based.
     seed = (
@@ -1575,9 +1590,7 @@ def ts_periodogram(spark, sf_dir):
     1e-9, sums run in DECIMAL(38,12), and the final power is an exact
     integer floor of products of identical doubles."""
     ev = t(spark, sf_dir, "events")
-    daily = ckpt(ev.groupBy(F.to_date("ts").alias("day")).agg(
-        dsum(F.col("value")).alias("r")
-    ))
+    daily = ckpt(by_day(ev).agg(dsum(F.col("value")).alias("r")))
     mu = daily.agg(
         (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
     )
@@ -1649,9 +1662,7 @@ def ts_backtest_metrics(spark, sf_dir):
     quantize at 1e-9 before their DECIMAL mean. One event-scale
     rollup; the lag windows run over the bounded day×type table."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("x")
-    )
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).cast("double").alias("x"))
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
         "event_type",
@@ -1711,9 +1722,7 @@ def ts_lag_features(spark, sf_dir):
     Trailing mean numerators sum through DECIMAL; everything else is
     exact reindexing."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dsum(F.col("value")).alias("r")
-    )
+    daily = by_day(ev, "user_id").agg(dsum(F.col("value")).alias("r"))
     w = Window.partitionBy("user_id").orderBy("day")
     wf = w.rowsBetween(-6, Window.currentRow)
     return daily.select(
@@ -1769,8 +1778,7 @@ def ts_cusum(spark, sf_dir):
     # aggregate and the cumulative window — materialize it once
     # (duplicate-scan sweep discipline; it is bounded at types×days).
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     stats = daily.groupBy("event_type").agg(
@@ -1846,8 +1854,7 @@ def ts_theta_forecast(spark, sf_dir):
     integer power sums (slope quantized 1e-9). One daily aggregate + one
     per-type aggregate: O(types) rows out."""
     daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     wt = Window.partitionBy("event_type").orderBy("day")
@@ -1946,8 +1953,7 @@ def ts_sax(spark, sf_dir):
     # Materialized once: the daily rollup feeds both the μ/σ aggregate
     # and the PAA branch (duplicate-scan sweep discipline).
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     wt = Window.partitionBy("event_type").orderBy("day")
@@ -2073,9 +2079,7 @@ def ts_max_drawdown(spark, sf_dir):
     over the ~days table, all sharing one sort; the event-scale work is
     a single filtered daily rollup."""
     daily = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase"))
         .agg(F.sum(F.col("value").cast("decimal(38,6)")).alias("rev"))
     )
     w = Window.orderBy("day")
@@ -2361,12 +2365,8 @@ def ts_hurst_rs(spark, sf_dir):
     runs on the tiny daily summary — chunking is a projection, the
     window partitions by (n, chunk)."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        dsum(F.col("value")).alias("v")
-    )
-    series = daily.select(
-        "v", (F.row_number().over(Window.orderBy("d")) - 1).alias("rn")
-    )
+    daily = by_day(e).agg(dsum(F.col("value")).alias("v"))
+    series = daily.select("v", (_day_index() - 1).alias("rn"))
     sizes = spark.range(0, 3).select(
         F.expr("shiftleft(4, cast(id as int))").cast("bigint").alias("n")
     )
@@ -2555,11 +2555,9 @@ def ts_haar_energy(spark, sf_dir):
     the final squared-coefficient energies are quantized into decimal
     accumulation. One fact-table shuffle; the cascade is free."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        dsum(F.col("value")).alias("v")
-    )
+    daily = by_day(e).agg(dsum(F.col("value")).alias("v"))
     series = ckpt(
-        daily.select("v", (F.row_number().over(Window.orderBy("d")) - 1).alias("rn"))
+        daily.select("v", (_day_index() - 1).alias("rn"))
         .filter(F.col("rn") < 24)
     )
 
@@ -2638,11 +2636,9 @@ def ts_weekday_anova(spark, sf_dir):
     the documented dialect seam (DuckDB 0=Sunday vs Spark 1=Sunday).
     One day-grain shuffle; the test itself runs on ≤ 7 group rows."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        dsum(F.col("value")).alias("v")
-    )
+    daily = by_day(e).agg(dsum(F.col("value")).alias("v"))
     # feeds grand mean, group means, AND the within-group join
-    tagged = ckpt(daily.select(F.dayofweek("d").alias("wd"), "v"))
+    tagged = ckpt(daily.select(F.dayofweek("day").alias("wd"), "v"))
     grand = tagged.agg(
         (dsum(F.col("v")) / F.count(F.lit(1))).alias("gm"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -2995,7 +2991,7 @@ def ts_stickiness(spark, sf_dir):
     division."""
     e = t(spark, sf_dir, "events")
     # feeds DAU, the spine, and both window contributions
-    user_days = ckpt(e.select("user_id", F.to_date("ts").alias("day")).distinct())
+    user_days = ckpt(e.select("user_id", day_of().alias("day")).distinct())
     spine = user_days.select("day").distinct()
     dau = user_days.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
 
@@ -3401,11 +3397,9 @@ def ts_event_study(spark, sf_dir):
     anchors = (
         e.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
-        .agg(F.min(F.to_date("ts")).alias("a_day"))
+        .agg(F.min(day_of()).alias("a_day"))
     )
-    daily = e.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dsum(F.col("value")).alias("v")
-    )
+    daily = by_day(e, "user_id").agg(dsum(F.col("value")).alias("v"))
     aligned = (
         daily.join(anchors, "user_id")
         .select(
@@ -3530,7 +3524,7 @@ def ts_demand_classification(spark, sf_dir):
     Purchasers with < 4 demand days excluded (the taxonomy is
     meaningless there). One user-day aggregate + one user rollup."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+    daily = by_day(e, "user_id").agg(
         F.sum(
             F.when(
                 F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
@@ -3621,9 +3615,7 @@ def ts_extreme_value_gumbel(spark, sf_dir):
     hourly = e.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    daily_max = hourly.groupBy(F.to_date("h").alias("day")).agg(
-        F.max("n").cast("double").alias("mx")
-    )
+    daily_max = by_day(hourly, col="h").agg(F.max("n").cast("double").alias("mx"))
     mom = daily_max.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         dsum(F.col("mx")).alias("sm"),
@@ -3708,8 +3700,7 @@ def ts_intervention_its(spark, sf_dir):
     # pin it so the events scan+shuffle runs once (duplicate-scan sweep
     # discipline; the series is ~calendar-days rows)
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )
     lims = daily.agg(
@@ -3798,9 +3789,7 @@ def ts_poisson_rate_ratio(spark, sf_dir):
     exact-integer-derived rationals and are 1e-6-rounded on both
     engines."""
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase"))
         .agg(F.count(F.lit(1)).alias("y"))
     )
     lims = daily.agg(
@@ -3880,8 +3869,7 @@ def ts_runs_test(spark, sf_dir):
     E[R]/Var[R] normal approximation in exact-integer arithmetic
     until the final divisions."""
     daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).alias("y"))
     )
     wd = Window.orderBy("day")
@@ -3984,8 +3972,7 @@ def ts_seasonality_strength(spark, sf_dir):
     the 6th decimal. Components are 1e-6-quantized BEFORE the variance
     so both engines square identical grid values."""
     daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"), "event_type")
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
     )
     w7 = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
@@ -4195,11 +4182,10 @@ def ts_croston_forecast(spark, sf_dir):
     identical fold in identical day order with identical double
     arithmetic: Spark's aggregate() vs the unrolled recursive CTE."""
     dem = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 20)
-        .groupBy(
+        by_day(
+            t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 20),
             F.col("l_partkey").alias("part"),
-            F.date_trunc("day", "l_shipdate").cast("date").alias("day"),
+            col="l_shipdate",
         )
         .agg(dsum(F.col("l_quantity")).alias("q"))
     )
@@ -4281,9 +4267,10 @@ def ts_lag_correlation(spark, sf_dir):
     lags with <8 overlapping days are dropped (no meaningful
     correlation)."""
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(
+            t(spark, sf_dir, "events").filter(F.col("event_type").isin("click", "purchase")),
+            "event_type",
+        )
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
     )
     lags = spark.range(-7, 8).select(F.col("id").cast("int").alias("lag"))
@@ -4377,8 +4364,7 @@ def ts_dtw_distance(spark, sf_dir):
     partitions freely — 10k store-pairs at 100 TB is 10k independent
     folds, not a shuffle."""
     daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"), "event_type")
         .agg(F.count(F.lit(1)).cast("double").alias("n"))
     )
     series = ckpt(
@@ -4526,13 +4512,9 @@ def ts_retention_curve_fit(spark, sf_dir):
     run on identically-derived doubles on both engines and the three
     outputs are 1e-6-rounded."""
     e = t(spark, sf_dir, "events")
-    fd = ckpt(
-        e.groupBy("user_id").agg(
-            F.min(F.date_trunc("day", "ts").cast("date")).alias("d0")
-        )
-    )
+    fd = ckpt(e.groupBy("user_id").agg(F.min(day_of()).alias("d0")))
     activity = (
-        e.select("user_id", F.date_trunc("day", "ts").cast("date").alias("day"))
+        e.select("user_id", day_of().alias("day"))
         .join(fd, "user_id")
         .select("user_id", F.datediff("day", "d0").alias("age"))
         .distinct()
@@ -4605,8 +4587,7 @@ def ts_mann_kendall(spark, sf_dir):
     aggregate; never on raw events. Integer-exact S and tie terms,
     1e-6-rounded z."""
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).alias("y"))
     )
     a = daily.select(F.col("day").alias("da"), F.col("y").alias("ya"))
@@ -4685,8 +4666,7 @@ def ts_theil_sen(spark, sf_dir):
     median interpolates identically on both engines (percentile ≡
     quantile_cont on doubles)."""
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )
     d0 = daily.agg(F.min("day").alias("dmin"))
@@ -4780,34 +4760,23 @@ def ts_ljung_box(spark, sf_dir):
     1e-6 quantized DECIMAL sums; the lag joins run on the ≤31-row
     deviation table."""
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )
-    q6d = lambda c, s: F.sum(
-        F.floor(c * F.lit(1e6) + F.lit(0.5)).cast(f"decimal(38,{s})")
-    ).cast("double") / F.lit(1e6)
     m = daily.agg(
-        (q6d(F.col("y"), 6) / F.count(F.lit(1))).alias("mu"),
+        (qsum(F.col("y")) / F.count(F.lit(1))).alias("mu"),
         F.count(F.lit(1)).cast("double").alias("n"),
     )
-    wd = Window.orderBy("day")
     dev = ckpt(
         daily.crossJoin(F.broadcast(m)).select(
-            F.row_number().over(wd).alias("i"), (F.col("y") - F.col("mu")).alias("d"), "n"
+            _day_index().alias("i"), (F.col("y") - F.col("mu")).alias("xc"), "n"
         )
     )
-    denom = dev.agg(q6d(F.col("d") * F.col("d"), 12).alias("c0"), F.max("n").alias("n"))
-    lags = spark.range(1, 9).select(F.col("id").alias("k"))
-    a = dev.select(F.col("i").alias("ia"), F.col("d").alias("da"))
-    b = dev.select(F.col("i").alias("ib"), F.col("d").alias("db"))
+    denom = dev.agg(qsum(F.col("xc") * F.col("xc")).alias("c0"), F.max("n").alias("n"))
     rhos = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("ib") == F.col("ia") + F.col("k"))
-        .groupBy("k")
-        .agg(q6d(F.col("da") * F.col("db"), 12).alias("num"))
+        _lag_sums(dev, range(1, 9), k=6)
         .crossJoin(F.broadcast(denom))
-        .select("k", (F.col("num") / F.col("c0")).alias("rho"), "n")
+        .select("k", (F.col("s") / F.col("c0")).alias("rho"), "n")
     )
     s = rhos.agg(
         qsum(F.col("rho") * F.col("rho") / (F.col("n") - F.col("k")), 12).alias("s"),
@@ -4875,8 +4844,7 @@ def ts_spc_control_chart(spark, sf_dir):
     window for the rule-4 sign count; DECIMAL means keep the limits
     bit-identical."""
     daily = ckpt(
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )
     wd = Window.orderBy("day")
@@ -4907,7 +4875,7 @@ def ts_spc_control_chart(spark, sf_dir):
         F.round(lcl, 6).alias("lcl"),
         ((F.col("y") > ucl) | (F.col("y") < lcl)).alias("beyond_3sigma"),
         (
-            sign_sum.isin(8, -8) & (F.row_number().over(wd) >= 8)
+            sign_sum.isin(8, -8) & (_day_index() >= 8)
         ).alias("run_of_8_one_side"),
     ).orderBy("day")
 
@@ -5052,8 +5020,7 @@ def ts_var_cvar(spark, sf_dir):
     division, so the two engines agree bit-for-bit. One day
     aggregate + one ordered window over the tiny day table."""
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     nn = daily.agg(
@@ -5129,9 +5096,7 @@ def ts_kalman_level(spark, sf_dir):
     quantization. Cited shape: Durbin & Koopman sec 2.2; Spark-side fold
     idiom shared with ts_holt_forecast."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("n")
-    )
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).cast("double").alias("n"))
     arr = "sort_array(collect_list(struct(day, n)))"
     # Fold over the day-ordered array: acc = (x, p, lv[]); the gain
     # expression is inlined (lambda bindings aren't available) — every
@@ -5360,7 +5325,7 @@ def ts_granger_causality(spark, sf_dir):
     n grows; the F statistic itself is reported for any exact
     downstream lookup."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
+    daily = by_day(ev).agg(
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
         .cast("bigint")
         .alias("y"),
@@ -5522,8 +5487,7 @@ def ts_pot_gpd_tail(spark, sf_dir):
     # AND the exceedance join (duplicate-scan sweep: orders was being
     # re-scanned 4x without these).
     daily = ckpt(
-        t(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     nn = daily.agg(
@@ -5646,7 +5610,7 @@ def ts_kendall_tau(spark, sf_dir):
     reported alongside the exact counts."""
     ev = t(spark, sf_dir, "events")
     daily = ckpt(
-        ev.groupBy(F.to_date("ts").alias("day")).agg(
+        by_day(ev).agg(
             F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
             .cast("bigint")
             .alias("x"),
@@ -5779,15 +5743,13 @@ def ts_cointegration_eg(spark, sf_dir):
     long-run equilibrium view."""
     o = t(spark, sf_dir, "orders").select("o_custkey", "o_orderdate", "o_totalprice")
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    seg = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
-        .groupBy(
-            F.col("o_orderdate").cast("date").alias("day"),
-            F.col("c_mktsegment").alias("seg"),
-        )
-        .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
-    )
+    seg = by_day(
+        o.join(c, o["o_custkey"] == c["c_custkey"]).filter(
+            F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
+        ),
+        F.col("c_mktsegment").alias("seg"),
+        col="o_orderdate",
+    ).agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     zero = F.lit(0).cast("decimal(38,6)")
     spine = seg.groupBy("day").agg(
         F.sum(F.when(F.col("seg") == "BUILDING", F.col("revq")).otherwise(zero)).alias("bx"),
@@ -5909,12 +5871,8 @@ def ts_matrix_profile(spark, sf_dir):
     O(windows^2) of that bounded frame — the classic post-aggregate
     all-pairs that stays tiny at any fact scale."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
-    series = daily.select(
-        F.row_number().over(Window.orderBy("day")).alias("i"), "x"
-    )
+    daily = by_day(ev).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+    series = daily.select(_day_index().alias("i"), "x")
     wf = Window.orderBy("i").rowsBetween(0, 6)
     win = ckpt(
         series.select(
@@ -5948,8 +5906,8 @@ def ts_matrix_profile(spark, sf_dir):
         dists.withColumn("rk", F.row_number().over(wn))
         .filter(F.col("rk") == 1)
         .select(
-            F.col("ia").alias("idx"),
-            F.col("ib").alias("nn_idx"),
+            F.col("ia").cast("int").alias("idx"),
+            F.col("ib").cast("int").alias("nn_idx"),
             qround(F.col("d")).alias("nn_dist"),
             F.row_number().over(wm).cast("bigint").alias("motif_rank"),
         )
@@ -6182,15 +6140,13 @@ def ts_binseg_changepoints(spark, sf_dir):
     selection is cross-engine deterministic. 100 TB shape: one fact
     aggregate, one window, two bounded argmax reductions."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
+    daily = by_day(ev).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
     wo = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     series = ckpt(
         daily.select(
             "day",
             "x",
-            F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i"),
+            _day_index().alias("i"),
             F.sum("x").over(wo).cast("bigint").alias("p"),
             F.sum(F.col("x") * F.col("x")).over(wo).cast("bigint").alias("q"),
         )
@@ -6483,11 +6439,9 @@ def ts_peak_prominence(spark, sf_dir):
     Output: top-10 by (prominence, recency-stable day tiebreak)."""
     ev = t(spark, sf_dir, "events")
     series = ckpt(
-        ev.groupBy(F.to_date("ts").alias("day"))
+        by_day(ev)
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .select(
-            "day", "x", F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i")
-        )
+        .select("day", "x", _day_index().alias("i"))
     )
     wi = Window.orderBy("i")
     peaks = (
@@ -6629,14 +6583,11 @@ def ts_haar_denoise(spark, sf_dir):
     the same 5 analysis + 5 synthesis rounds over O(32)-row frames;
     the only fact-scale work is the day aggregate."""
     daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
     )
     base = ckpt(
-        daily.select(
-            "day", "x", F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i")
-        ).filter(F.col("i") <= 32)
+        daily.select("day", "x", _day_index().alias("i")).filter(F.col("i") <= 32)
     )
     a = base.select("i", F.col("x").cast("double").alias("v"))
     details = {}
@@ -6755,9 +6706,9 @@ def ts_pacf_durbin(spark, sf_dir):
     ACF side by side."""
     ev = t(spark, sf_dir, "events")
     series = ckpt(
-        ev.groupBy(F.to_date("ts").alias("day"))
+        by_day(ev)
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .select(F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i"), "x")
+        .select(_day_index().alias("i"), "x")
     )
     mu = series.agg(
         qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
@@ -6765,17 +6716,7 @@ def ts_pacf_durbin(spark, sf_dir):
     cent = series.crossJoin(F.broadcast(mu)).select(
         "i", (F.col("x") - F.col("m")).alias("xc")
     )
-    ks = spark.range(0, 11).select(F.col("id").cast("bigint").alias("k"))
-    a = cent.select(F.col("i").alias("ia"), F.col("xc").alias("xa"))
-    b = cent.select(F.col("i").alias("ib"), F.col("xc").alias("xb"))
-    lagsum = (
-        a.crossJoin(F.broadcast(ks))
-        .join(b, F.col("ib") == F.col("ia") - F.col("k"))
-        .groupBy("k")
-        .agg(
-            qsum(F.col("xa") * F.col("xb"), 12).alias("s")
-        )
-    )
+    lagsum = _lag_sums(cent, range(0, 11))
     s0 = lagsum.filter(F.col("k") == 0).select(F.col("s").alias("s0"))
     acf = (
         lagsum.filter(F.col("k") > 0)
@@ -6891,9 +6832,9 @@ def ts_ar2_yule_walker(spark, sf_dir):
     aggregate + a 3-lag bounded join."""
     ev = t(spark, sf_dir, "events")
     series = ckpt(
-        ev.groupBy(F.to_date("ts").alias("day"))
+        by_day(ev)
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .select(F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i"), "x")
+        .select(_day_index().alias("i"), "x")
     )
     mu = series.agg(
         qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m"),
@@ -6904,17 +6845,7 @@ def ts_ar2_yule_walker(spark, sf_dir):
             "i", (F.col("x") - F.col("m")).alias("xc"), "m", "n"
         )
     )
-    ks = spark.range(0, 3).select(F.col("id").cast("bigint").alias("k"))
-    a = cent.select(F.col("i").alias("ia"), F.col("xc").alias("xa"))
-    b = cent.select(F.col("i").alias("ib"), F.col("xc").alias("xb"))
-    lagsum = (
-        a.crossJoin(F.broadcast(ks))
-        .join(b, F.col("ib") == F.col("ia") - F.col("k"))
-        .groupBy("k")
-        .agg(
-            qsum(F.col("xa") * F.col("xb"), 12).alias("s")
-        )
-    )
+    lagsum = _lag_sums(cent, range(0, 3))
     wide = (
         lagsum.groupBy()
         .pivot("k", [0, 1, 2])
@@ -7042,8 +6973,7 @@ def ts_anderson_darling(spark, sf_dir):
     # ckpt: the day aggregate (the only fact pass) feeds BOTH the
     # moment aggregate and the z-scoring branch (dup-scan sweep).
     daily = ckpt(
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(qsum(F.col("o_totalprice")).alias("x"))
     )
     mom = daily.agg(
@@ -7557,8 +7487,7 @@ def ts_extremal_index(spark, sf_dir):
     O(exceedances) frame for gaps — all integer until the two final
     divisions."""
     daily = ckpt(
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
     nn = daily.agg(
@@ -7685,29 +7614,11 @@ def ts_decompose_whiteness(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     cent = res.join(F.broadcast(mu), "event_type").select(
-        "event_type", "i", (F.col("x") - F.col("m")).alias("xc"), "n"
+        "event_type", "i", (F.col("x") - F.col("m")).alias("xc")
     )
-    ks = spark.range(0, 6).select(F.col("id").cast("bigint").alias("k"))
-    a = cent.select(
-        F.col("event_type"), F.col("i").alias("ia"), F.col("xc").alias("xa"), "n"
-    )
-    b = cent.select(
-        F.col("event_type").alias("et_b"), F.col("i").alias("ib"), F.col("xc").alias("xb")
-    )
-    lagsum = (
-        a.crossJoin(F.broadcast(ks))
-        .join(
-            b,
-            (F.col("et_b") == F.col("event_type")) & (F.col("ib") == F.col("ia") - F.col("k")),
-        )
-        .groupBy("event_type", "k")
-        .agg(
-            F.any_value("n").alias("n"),
-            qsum(F.col("xa") * F.col("xb"), 9).alias("s"),
-        )
-    )
-    s0 = lagsum.filter(F.col("k") == 0).select(
-        F.col("event_type").alias("et0"), F.col("s").alias("s0")
+    lagsum = _lag_sums(cent, range(0, 6), by=("event_type",), k=9)
+    s0 = lagsum.filter(F.col("k") == 0).join(F.broadcast(mu), "event_type").select(
+        F.col("event_type").alias("et0"), F.col("s").alias("s0"), "n"
     )
     acf = (
         lagsum.filter(F.col("k") > 0)
@@ -7786,8 +7697,7 @@ def ts_max_subarray(spark, sf_dir):
     display division) while the oracle runs the identical recursion as
     a recursive CTE. One fact aggregate; the fold touches O(days)."""
     daily = ckpt(
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).cast("bigint").alias("revq"))
     )
     mu = daily.agg(
@@ -7892,11 +7802,9 @@ def ts_ar_residual_outliers(spark, sf_dir):
     hide that, so the full row content is hashed)."""
     ev = t(spark, sf_dir, "events")
     series = ckpt(
-        ev.groupBy(F.to_date("ts").alias("day"))
+        by_day(ev)
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .select(
-            "day", "x", F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i")
-        )
+        .select("day", "x", _day_index().alias("i"))
     )
     mu = series.agg(
         qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
@@ -7906,17 +7814,7 @@ def ts_ar_residual_outliers(spark, sf_dir):
             "i", "day", "x", (F.col("x") - F.col("m")).alias("xc")
         )
     )
-    ks = spark.range(0, 3).select(F.col("id").cast("bigint").alias("k"))
-    a = cent.select(F.col("i").alias("ia"), F.col("xc").alias("xa"))
-    b = cent.select(F.col("i").alias("ib"), F.col("xc").alias("xb"))
-    lagsum = (
-        a.crossJoin(F.broadcast(ks))
-        .join(b, F.col("ib") == F.col("ia") - F.col("k"))
-        .groupBy("k")
-        .agg(
-            qsum(F.col("xa") * F.col("xb"), 12).alias("s")
-        )
-    )
+    lagsum = _lag_sums(cent, range(0, 3))
     fit = (
         lagsum.groupBy()
         .pivot("k", [0, 1, 2])
@@ -8160,10 +8058,10 @@ def ts_revenue_beta(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem").select("l_partkey", "l_shipdate", "l_extendedprice")
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     bd = ckpt(
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .groupBy(
+        by_day(
+            li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"]),
             F.col("p_brand").alias("brand"),
-            F.col("l_shipdate").cast("date").alias("day"),
+            col="l_shipdate",
         )
         .agg(
             (
@@ -8270,8 +8168,7 @@ def ts_durbin_watson(spark, sf_dir):
     bounded day frame. Complements ts_ljung_box (which tests the raw
     series) by testing the MODEL'S residuals."""
     daily = ckpt(
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(
             (
                 qsum(F.col("o_totalprice"))
@@ -8279,11 +8176,7 @@ def ts_durbin_watson(spark, sf_dir):
             ).alias("rev")
         )
     )
-    series = ckpt(
-        daily.select(
-            "day", "rev", F.row_number().over(Window.orderBy("day")).cast("bigint").alias("i")
-        )
-    )
+    series = ckpt(daily.select("day", "rev", _day_index().alias("i")))
     m = series.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("i").cast("double").alias("si"),
@@ -8375,18 +8268,13 @@ def ts_seasonal_indices(spark, sf_dir):
     (additive, trend-aware) with the multiplicative index table."""
     anchor = F.lit("1970-01-05").cast("date")
     raw = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(qsum(F.col("o_totalprice")).alias("rev"))
     )
     # zero-fill: a day with no orders is a genuine zero-revenue day;
     # without it sparse scales have NO complete weeks at all
-    span = raw.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    spine = span.select(
-        F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day")
-    )
     daily = ckpt(
-        spine.join(raw, "day", "left")
+        _day_grid(raw)
         .select(
             "day",
             F.coalesce("rev", F.lit(0.0)).alias("rev"),

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import dsum, qdec, qround, t
+from ._shared import by_day, day_of, dsum, qdec, qround, t
 
 _US_7D = 7 * 86400 * 1_000_000
 
@@ -247,7 +247,7 @@ def win_streak(spark, sf_dir):
     aggregate finds every streak — the engagement-streak feature the
     churn model wants, with no self-join and state linear in active days."""
     ev = t(spark, sf_dir, "events")
-    days = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
+    days = ev.select("user_id", day_of().alias("day")).distinct()
     w = Window.partitionBy("user_id").orderBy("day")
     grp = days.withColumn("g", F.date_sub("day", F.row_number().over(w)))
     streaks = grp.groupBy("user_id", "g").agg(
@@ -521,8 +521,7 @@ def win_rolling_corr(spark, sf_dir):
     already-collapsed day table — the only safe place for one (the
     ts_day_over_day discipline)."""
     daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        by_day(t(spark, sf_dir, "events"))
         .agg(
             F.sum((F.col("event_type") == "click").cast("long")).alias("x"),
             F.sum((F.col("event_type") == "purchase").cast("long")).alias("y"),
@@ -590,15 +589,13 @@ def win_expanding_slope(spark, sf_dir):
     ordered window; no per-row re-fit, O(1) state per step — the form
     that runs incrementally at any scale."""
     e = t(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.date_trunc("day", "ts").alias("d")).agg(
-        dsum(F.col("value")).alias("y")
-    )
-    w_ord = Window.partitionBy("event_type").orderBy("d")
+    daily = by_day(e, "event_type").agg(dsum(F.col("value")).alias("y"))
+    w_ord = Window.partitionBy("event_type").orderBy("day")
     seq = daily.withColumn("x", F.row_number().over(w_ord))
     w = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     cums = seq.select(
         "event_type",
-        "d",
+        F.col("day").cast("timestamp").alias("d"),
         F.sum("x").over(w).alias("sx"),
         F.sum(F.col("x").cast("bigint") * F.col("x")).over(w).alias("sxx"),
         F.sum(F.col("y").cast("decimal(38,6)")).over(w).alias("sy"),
@@ -733,9 +730,7 @@ def win_hampel_filter(spark, sf_dir):
     flags any deviation, documented. One keyed window over the
     post-aggregate day table; full frames only."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
+    daily = by_day(ev, "event_type").agg(F.count(F.lit(1)).cast("bigint").alias("x"))
     wf = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     framed = daily.select(
         "event_type", "day", "x", F.collect_list("x").over(wf).alias("w")

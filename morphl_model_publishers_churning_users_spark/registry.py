@@ -64,6 +64,10 @@ _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 # signatures through the shared helpers in operators/llm.py. The
 # scan_delta_* keys write, read and fold their commit logs through the
 # shared Delta helpers in operators/scans.py (one action schema, one fold).
+# scan_csv_malformed checkpoints its parsed rows before the corrupt-record
+# filter. The keys after it build their daily series through the
+# time-series spine (_shared.by_day, timeseries._lag_sums/_day_index/
+# _day_grid), which moved their plans but not their rows.
 _REVERIFY: dict[str, int] = {
     "ml_split": 14,
     "ml_train": 14,
@@ -87,6 +91,42 @@ _REVERIFY: dict[str, int] = {
     "scan_delta_time_travel_ts": 14,
     "scan_delta_partition_values": 14,
     "scan_delta_deletion_vectors": 14,
+    "scan_csv_malformed": 14,
+    "ts_active_users": 14,
+    "agg_qq_normal": 14,
+    "ml_pinball_loss": 14,
+    "ml_conformal_interval": 14,
+    "ml_bh_fdr": 14,
+    "ml_evalue_sequential": 14,
+    "ts_cusum": 14,
+    "ts_theta_forecast": 14,
+    "ts_sax": 14,
+    "ts_max_drawdown": 14,
+    "ts_hurst_rs": 14,
+    "ts_haar_energy": 14,
+    "ts_weekday_anova": 14,
+    "ts_intervention_its": 14,
+    "ts_poisson_rate_ratio": 14,
+    "ts_runs_test": 14,
+    "ts_seasonality_strength": 14,
+    "ts_croston_forecast": 14,
+    "ts_lag_correlation": 14,
+    "ts_dtw_distance": 14,
+    "ts_retention_curve_fit": 14,
+    "ts_mann_kendall": 14,
+    "ts_theil_sen": 14,
+    "ts_ljung_box": 14,
+    "ts_spc_control_chart": 14,
+    "ts_var_cvar": 14,
+    "ts_pot_gpd_tail": 14,
+    "ts_cointegration_eg": 14,
+    "ts_matrix_profile": 14,
+    "ts_decompose_whiteness": 14,
+    "ts_seasonal_indices": 14,
+    "win_rolling_corr": 14,
+    "win_expanding_slope": 14,
+    "agg_reaggregate": 14,
+    "dq_observe_metrics": 14,
 }
 
 

@@ -133,28 +133,44 @@ def source_python_ds_stream(spark, sf_dir):
     drain the 4 synthetic batches for oracle comparison (AvailableNow
     snapshots just the first offset of a simple reader, so a short
     processing-time trigger + stop is the bounded-run idiom)."""
-    import time
-    import uuid
-
     from ..catalog import ensure_confs
 
     ensure_confs(spark)
     spark.dataSource.register(SyntheticStreamSource)
-    name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
+    stream = spark.readStream.format("synthetic_stream").load()
+    return _drain(spark, stream, _STREAM_BATCHES * _ROWS_PER_PART)
+
+
+def _drain(spark, stream, expected):
+    """Run the streaming DataFrame ``stream`` into a memory sink until
+    the sink holds ``expected`` rows, stop it, and return the sink table.
+    Raises the query's own exception when it dies, and ``TimeoutError``
+    when 120 s pass first: a short table is never returned as if it
+    were complete."""
+    import time
+    import uuid
+
     from ..operators._shared import scratch_dir
 
+    name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
     q = (
-        spark.readStream.format("synthetic_stream")
-        .load()
-        .writeStream.format("memory")
+        stream.writeStream.format("memory")
         .queryName(name)
         .option("checkpointLocation", scratch_dir(f"ckpt_{name}"))
         .trigger(processingTime="0 seconds")
         .start()
     )
-    expected = _STREAM_BATCHES * _ROWS_PER_PART
     deadline = time.time() + 120
-    while time.time() < deadline and spark.table(name).count() < expected:
-        time.sleep(0.3)
-    q.stop()
+    try:
+        while (n := spark.table(name).count()) < expected:
+            if q.exception() is not None or not q.isActive:
+                # Read the exception again: a query sets it before it stops.
+                raise q.exception() or RuntimeError(
+                    f"stream {name} stopped with {n} of {expected} rows"
+                )
+            if time.time() >= deadline:
+                raise TimeoutError(f"stream {name} held {n} of {expected} rows after 120 s")
+            time.sleep(0.3)
+    finally:
+        q.stop()
     return spark.table(name)

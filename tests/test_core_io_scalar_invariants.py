@@ -238,3 +238,11 @@ def test_fn_struct_last_event_recompute(spark, sf_dir):
         lt, lts = expect[r["user_id"]]
         assert r["last_ts"] == lts
         assert r["last_type"] == lt
+
+
+def test_scan_csv_malformed_survives_count(spark, sf_dir):
+    """``.count()`` prunes the scan to ``_corrupt`` alone, which Spark
+    refuses on an unmaterialized PERMISSIVE read; the clean rows must
+    count the same as they collect."""
+    df = get_queries()["scan_csv_malformed"](spark, sf_dir)
+    assert df.count() == len(df.collect()) == 25

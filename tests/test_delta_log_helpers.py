@@ -165,3 +165,19 @@ def test_format_is_spelled_once():
     ):
         assert src.count(spelling) == 1, spelling
     assert re.findall(r"^(DELTA_\w+) =", src, re.M) == ["DELTA_ACTION_SCHEMA"]
+
+
+def test_overlap_writes_carry_the_callers_job_group(spark):
+    """Fixture writes run on pool threads; each must see the caller's
+    job group, so its jobs count toward the caller's span."""
+    sc = spark.sparkContext
+    sc.setJobGroup("overlap-probe", "overlap writes inherit the job group")
+    try:
+        got = scans._overlap_writes(
+            lambda: sc.getLocalProperty("spark.jobGroup.id"),
+            lambda: sc.getLocalProperty("spark.jobGroup.id"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == ["overlap-probe", "overlap-probe"]

@@ -5,12 +5,16 @@ run against the same checkpoint processes only newly-arrived files."""
 from __future__ import annotations
 
 import shutil
+import time
 import uuid
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from morphl_model_publishers_churning_users_spark.catalog import table
 from morphl_model_publishers_churning_users_spark.operators._shared import scratch_dir
+from morphl_model_publishers_churning_users_spark.sources.python_ds import _drain
 
 
 def _run_counts(spark, src, ckpt, name):
@@ -132,3 +136,15 @@ def test_dedup_state_survives_restart(spark, sf_dir):
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_dead_stream_raises_before_the_deadline(spark):
+    """A stream that dies mid-run is an error, not a short table: the
+    drain loop raises the query's exception long before its deadline,
+    and leaves no query running."""
+    dying = spark.readStream.format("rate").load().select(F.raise_error(F.lit("boom")))
+    t0 = time.time()
+    with pytest.raises(StreamingQueryException, match="boom"):
+        _drain(spark, dying, expected=100)
+    assert time.time() - t0 < 45
+    assert not [q for q in spark.streams.active if q.name.startswith("pyds_stream_")]
