@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from ..operators._shared import qdec, qround, t
+from ..operators._shared import qdec, qround, t, with_stats
 from ..registry import register
 
 
@@ -1283,12 +1283,8 @@ def fn_fiscal_445(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("date").alias("d"), "o_totalprice"
     )
-    anchor = o.agg(
-        F.expr(
-            "date_sub(min(d), (dayofweek(min(d)) + 5) % 7)"
-        ).alias("a")
-    )
-    mapped = o.crossJoin(F.broadcast(anchor)).select(
+    anchor = F.expr("date_sub(min(d), (dayofweek(min(d)) + 5) % 7)").alias("a")
+    mapped = with_stats(o, anchor).select(
         F.floor(F.datediff("d", "a") / 7).cast("bigint").alias("wk"),
         qdec(F.col("o_totalprice"))
         .alias("pq"),

@@ -77,6 +77,27 @@ def by_day(df: DataFrame, *by: str | Column, col: str | Column = "ts") -> Groupe
     return df.groupBy(*by, day_of(col).alias("day"))
 
 
+def revenue() -> Column:
+    """Exact purchase revenue of a group of events (an aggregate): the
+    sum of ``value`` over purchase events through decimal(38,6), other
+    events adding 0, as a double. DuckDB twin: ``CAST(SUM(CASE WHEN
+    event_type = 'purchase' THEN CAST(value AS DECIMAL(38,6)) ELSE 0
+    END) AS DOUBLE)``."""
+    return F.sum(
+        F.when(
+            F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
+        ).otherwise(F.lit(0).cast("decimal(38,6)"))
+    ).cast("double")
+
+
+def with_stats(df: DataFrame, *aggs: Column) -> DataFrame:
+    """``df`` with the one-row table ``df.agg(*aggs)`` appended to every
+    row: the one spelling of a whole-table statistic joined back. The
+    table is broadcast, so the join never shuffles a cartesian
+    product."""
+    return df.crossJoin(F.broadcast(df.agg(*aggs)))
+
+
 def DSUM(expr: str) -> str:
     """DuckDB twin of :func:`dsum`."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS DOUBLE)"
@@ -175,16 +196,19 @@ def scan_is_underparallel(df: DataFrame, par: int) -> bool:
     and when that bound already reaches `par` the repartition is skipped
     without ever planning the query. The bound is driver-side metadata
     only (the file list is already materialized by the DataFrame's file
-    index). Where file sizes are unreadable (non-local URIs), the file
-    count stands in — at warehouse scale the file count alone exceeds
-    any core count, which is the only fact the callers need. The gate is
-    purely a performance decision: a false True costs one narrow
-    exchange, never a result change. So is an unparseable
-    `maxPartitionBytes` (a fractional size, garbage): it widens.
+    index). For local files it is always the byte bound, never the file
+    count: Spark packs small files together (each costs
+    `openCostInBytes`), so par + 1 tiny files can arrive as 2 splits.
+    Where file sizes are unreadable (non-local URIs), the file count
+    stands in — at warehouse scale the file count alone exceeds any core
+    count, which is the only fact the callers need. The gate is purely a
+    performance decision: a false True costs one narrow exchange, never
+    a result change. So is an unparseable `maxPartitionBytes` (a
+    fractional size, garbage): it widens.
     """
     files = df.inputFiles()
-    if len(files) >= par:
-        return False
+    if not all(uri.startswith("file:") for uri in files):
+        return len(files) < par
     raw = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m")
     s = raw.strip().lower().removesuffix("b")
     units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
@@ -197,8 +221,6 @@ def scan_is_underparallel(df: DataFrame, par: int) -> bool:
         return True
     total = 0
     for uri in files:
-        if not uri.startswith("file:"):
-            return True  # unreadable sizes + few files: widen
         path = uri[len("file:"):]
         while path.startswith("//"):
             path = path[1:]

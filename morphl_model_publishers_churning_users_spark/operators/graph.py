@@ -42,7 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import ckpt, dsum, qdec, qround, qsum, t
+from ._shared import ckpt, dsum, qdec, qround, qsum, t, with_stats
 
 # Shared DuckDB edge CTEs (kept textually identical across oracles).
 _EDGES_DUCK = """
@@ -1188,13 +1188,11 @@ def graph_hits(spark, sf_dir):
             )
         else:
             ar = ckpt(edges.join(h, "o").groupBy("p").agg(qsum(F.col("h"), 12).alias("s")))
-        at = ar.agg(qsum(F.col("s"), 12).alias("t"))
-        a = ar.crossJoin(F.broadcast(at)).select(
+        a = with_stats(ar, qsum(F.col("s"), 12).alias("t")).select(
             "p", (F.col("s") / F.col("t")).alias("a")
         )
         hr = edges.join(a, "p").groupBy("o").agg(qsum(F.col("a"), 12).alias("s"))  # lazy
-        ht = hr.agg(qsum(F.col("s"), 12).alias("t"))
-        h = hr.crossJoin(F.broadcast(ht)).select(
+        h = with_stats(hr, qsum(F.col("s"), 12).alias("t")).select(
             "o", (F.col("s") / F.col("t")).alias("h")
         )
     return (

@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, scan_is_underparallel, t
+from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, scan_is_underparallel, t, with_stats
 
 # ---------------------------------------------------------------- dedup
 
@@ -1761,13 +1761,13 @@ def llm_mixture_balance(spark, sf_dir):
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("n_tokens"),
     ))
-    tot = g.agg(
-        F.sum("n_tokens").cast("double").alias("tot_tokens"),
-        F.count(F.lit(1)).cast("double").alias("n_groups"),
-    )
     actual = F.col("n_tokens") / F.col("tot_tokens")
     target = F.lit(1.0) / F.col("n_groups")
-    return g.crossJoin(F.broadcast(tot)).select(
+    return with_stats(
+        g,
+        F.sum("n_tokens").cast("double").alias("tot_tokens"),
+        F.count(F.lit(1)).cast("double").alias("n_groups"),
+    ).select(
         "source",
         "lang",
         "n_docs",
@@ -2322,11 +2322,11 @@ def llm_sample_weighted(spark, sf_dir):
         tok.groupBy("source")
         .agg(F.sum("n_tokens").alias("src_tokens"))
     )
-    tot = src.agg(
+    w = with_stats(
+        src,
         F.sum("src_tokens").cast("double").alias("all_tokens"),
         F.count(F.lit(1)).cast("double").alias("n_sources"),
-    )
-    w = src.crossJoin(F.broadcast(tot)).select(
+    ).select(
         "source",
         F.least(
             (F.lit(1.0) / F.col("n_sources"))
@@ -3229,16 +3229,16 @@ def llm_odds_ratio_terms(spark, sf_dir):
             F.sum((F.col("lang") == "de").cast("long")).cast("bigint").alias("n_de"),
         )
     )
-    tot = counts.agg(
-        F.sum("n_en").cast("double").alias("t_en"),
-        F.sum("n_de").cast("double").alias("t_de"),
-        F.count(F.lit(1)).cast("double").alias("v"),
-    )
     lo = qround(
         F.log((F.col("n_en") + 0.5) / (F.col("t_en") - F.col("n_en") + 0.5 * F.col("v")))
         - F.log((F.col("n_de") + 0.5) / (F.col("t_de") - F.col("n_de") + 0.5 * F.col("v")))
     )
-    scored = counts.crossJoin(F.broadcast(tot)).select(
+    scored = with_stats(
+        counts,
+        F.sum("n_en").cast("double").alias("t_en"),
+        F.sum("n_de").cast("double").alias("t_de"),
+        F.count(F.lit(1)).cast("double").alias("v"),
+    ).select(
         "word", "n_en", "n_de", lo.alias("log_odds")
     )
     w = Window.orderBy(F.desc("log_odds"), F.asc("word"))
@@ -3999,10 +3999,8 @@ def llm_corpus_card(spark, sf_dir):
         F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens"),
         F.md5(F.lower(F.trim("text"))).alias("chash"),
     ))  # feeds the dup scalar AND the main rollup
-    dup = toks.agg(
-        (F.count(F.lit(1)) - F.countDistinct("chash")).cast("bigint").alias("n_exact_dups")
-    )
-    return toks.crossJoin(F.broadcast(dup)).groupBy("n_exact_dups").agg(
+    dups = (F.count(F.lit(1)) - F.countDistinct("chash")).cast("bigint")
+    return with_stats(toks, dups.alias("n_exact_dups")).groupBy("n_exact_dups").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
         F.sum("n_tokens").cast("bigint").alias("total_tokens"),
@@ -4549,13 +4547,13 @@ def llm_embed_norm_audit(spark, sf_dir):
     norms = e.select(
         _emb_norm().alias("nrm")
     )
-    q = norms.agg(
-        F.expr("percentile(nrm, 0.25D)").alias("q1"),
-        F.expr("percentile(nrm, 0.75D)").alias("q3"),
-    )
     lo = F.col("q1") - 1.5 * (F.col("q3") - F.col("q1"))
     hi = F.col("q3") + 1.5 * (F.col("q3") - F.col("q1"))
-    return norms.crossJoin(F.broadcast(q)).agg(
+    return with_stats(
+        norms,
+        F.expr("percentile(nrm, 0.25D)").alias("q1"),
+        F.expr("percentile(nrm, 0.75D)").alias("q3"),
+    ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
         F.sum(((F.col("nrm") < lo) | (F.col("nrm") > hi)).cast("long"))
         .cast("bigint")
@@ -5767,8 +5765,7 @@ def llm_source_diversity(spark, sf_dir):
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    tot = counts.agg(F.sum("n").cast("double").alias("t"))
-    terms = counts.crossJoin(F.broadcast(tot)).select(
+    terms = with_stats(counts, F.sum("n").cast("double").alias("t")).select(
         (F.col("n") / F.col("t")).alias("p")
     ).select(
         qdec(F.col("p") * qround(F.log("p"), 9), 12).alias("plogp"),

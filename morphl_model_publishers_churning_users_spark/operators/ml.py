@@ -20,7 +20,7 @@ from pyspark.sql import Window
 
 from ..plans import churn
 from ..registry import register
-from ._shared import by_day, ckpt, day_of, dsum, qdec, qround, qsum, t
+from ._shared import by_day, ckpt, day_of, dsum, qdec, qround, qsum, revenue, t, with_stats
 
 # Exact anchor shared by most ML oracles: the feature matrix has one row
 # per user with ≥1 event, so COUNT(DISTINCT user_id) over events is the
@@ -454,12 +454,10 @@ def ml_calibration_bins(spark, sf_dir):
     predicted probabilities mean what they say. Fully oracle-twinned
     (unlike the fitted-model stages) because the score is exact integer
     arithmetic: microsecond recencies divided as int64 ratios, so both
-    engines bin identically. Two aggregations and two broadcast scalars
-    — no per-model state, scales as a pure groupBy."""
-    s = _recency(spark, sf_dir).select("user_id", "last_ts", _rec())
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
-    scored = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"), _churned()
+    engines bin identically. Two aggregations and one broadcast
+    statistics row — no per-model state, scales as a pure groupBy."""
+    scored = _rec_scored(spark, sf_dir).select(
+        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"), "churned"
     )
     return scored.groupBy(
         F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("bigint").alias("bin")
@@ -521,11 +519,7 @@ def ml_woe_iv(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.when(
-            F.max("ts") < F.lit(churn.CHURN_CUTOFF).cast("timestamp"), 1
-        )
-        .otherwise(0)
-        .alias("churned"),
+        churn.churned(F.max("ts")).alias("churned"),
     )
     w = Window.orderBy("n_events", "user_id")
     binned = u.select("churned", F.ntile(5).over(w).alias("bucket"))
@@ -536,14 +530,14 @@ def ml_woe_iv(spark, sf_dir):
         F.sum("churned").alias("n_bad"),
         (F.count(F.lit(1)) - F.sum("churned")).alias("n_good"),
     ))
-    tot = per.agg(
-        F.sum("n_bad").cast("double").alias("bad_t"),
-        F.sum("n_good").cast("double").alias("good_t"),
-    )
     bs = (F.col("n_bad") + 0.5) / (F.col("bad_t") + 2.5)
     gs = (F.col("n_good") + 0.5) / (F.col("good_t") + 2.5)
     woe = qround(F.log(bs), 9) - qround(F.log(gs), 9)
-    return per.crossJoin(F.broadcast(tot)).select(
+    return with_stats(
+        per,
+        F.sum("n_bad").cast("double").alias("bad_t"),
+        F.sum("n_good").cast("double").alias("good_t"),
+    ).select(
         "bucket",
         F.col("n_users").cast("bigint").alias("n_users"),
         F.col("n_bad").cast("bigint").alias("n_bad"),
@@ -611,14 +605,14 @@ def ml_psi(spark, sf_dir):
         types.join(w1, "event_type", "left")
         .join(w2, "event_type", "left")
     )
-    tot = joined.agg(
+    p1 = (F.coalesce("c1", F.lit(0)) + 0.5) / (F.col("t1") + 0.5 * F.col("k"))
+    p2 = (F.coalesce("c2", F.lit(0)) + 0.5) / (F.col("t2") + 0.5 * F.col("k"))
+    return with_stats(
+        joined,
         F.sum(F.coalesce("c1", F.lit(0))).cast("double").alias("t1"),
         F.sum(F.coalesce("c2", F.lit(0))).cast("double").alias("t2"),
         F.count(F.lit(1)).cast("double").alias("k"),
-    )
-    p1 = (F.coalesce("c1", F.lit(0)) + 0.5) / (F.col("t1") + 0.5 * F.col("k"))
-    p2 = (F.coalesce("c2", F.lit(0)) + 0.5) / (F.col("t2") + 0.5 * F.col("k"))
-    return joined.crossJoin(F.broadcast(tot)).select(
+    ).select(
         "event_type",
         qround(p1).alias("p1"),
         qround(p2).alias("p2"),
@@ -664,11 +658,7 @@ def ml_target_encode(spark, sf_dir):
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
-    lab = ev.groupBy("user_id").agg(
-        F.when(F.max("ts") < F.lit(churn.CHURN_CUTOFF).cast("timestamp"), 1)
-        .otherwise(0)
-        .alias("churned")
-    )
+    lab = ev.groupBy("user_id").agg(churn.churned(F.max("ts")).alias("churned"))
     joined = ckpt(lab.join(F.broadcast(cust), "user_id"))
     seg = joined.groupBy("segment").agg(
         F.sum("churned").cast("double").alias("seg_sum"),
@@ -748,16 +738,26 @@ u AS (
 )"""
 
 
-def _recency(spark, sf_dir, *aggs):
+def _recency(spark, sf_dir, *aggs, stats=()):
     """The churn recency spine: per-user ``last_ts`` (plus ``aggs``)
-    crossJoined with the corpus max ``cmax``. The per-user aggregate is
-    materialized once: it feeds the corpus-max scalar AND the recency
-    projection, and without the checkpoint Catalyst re-derives the full
-    event scan + user aggregate once per consumer."""
+    with one row of corpus statistics: the max ``cmax`` of ``last_ts``,
+    the score's max ``maxrec`` (plus ``stats``). ``maxrec`` is max(rec)
+    over users, floored at 1: rec is integer microseconds and falls as
+    ``last_ts`` rises, so its max is the span from the earliest
+    ``last_ts`` to ``cmax``. The per-user aggregate is materialized
+    once: it feeds the statistics AND the recency projection, and
+    without the checkpoint Catalyst re-derives the full event scan +
+    user aggregate once per consumer."""
     e = t(spark, sf_dir, "events")
     u = ckpt(e.groupBy("user_id").agg(F.max("ts").alias("last_ts"), *aggs))
-    m = u.agg(F.max("last_ts").alias("cmax"))
-    return u.crossJoin(F.broadcast(m))
+    return with_stats(
+        u,
+        F.max("last_ts").alias("cmax"),
+        F.greatest(
+            F.expr("timestampdiff(MICROSECOND, min(last_ts), max(last_ts))"), F.lit(1)
+        ).alias("maxrec"),
+        *stats,
+    )
 
 
 def _rec():
@@ -765,21 +765,18 @@ def _rec():
     unix_micros: events.ts is TIMESTAMP_NTZ (catalog nanos conversion) and
     the diff must be timezone-free so it matches DuckDB's naive epoch_us
     subtraction even across DST boundaries."""
-    return F.expr("timestampdiff(MICROSECOND, last_ts, cmax)").alias("rec")
-
-
-def _churned(name="churned"):
-    """1 when the user's last event precedes the churn cutoff, else 0."""
-    return (
-        F.when(F.col("last_ts") < F.to_timestamp(F.lit(churn.CHURN_CUTOFF)), 1)
-        .otherwise(0)
-        .alias(name)
-    )
+    return F.expr("timestampdiff(MICROSECOND, last_ts, cmax)")
 
 
 def _rec_scored(spark, sf_dir):
-    """(user_id, rec, churned) — int64 recency + label, one event pass."""
-    return _recency(spark, sf_dir).select("user_id", _rec(), _churned())
+    """(user_id, rec, churned, maxrec) — int64 recency, label and the
+    score's max, one event pass."""
+    return _recency(spark, sf_dir).select(
+        "user_id",
+        _rec().alias("rec"),
+        churn.churned(F.col("last_ts")).alias("churned"),
+        "maxrec",
+    )
 
 
 _REC2_SQL = """
@@ -799,7 +796,10 @@ u2 AS (
 def _rec_scored2(spark, sf_dir):
     """(user_id, rec, ne, churned) — recency + activity + label."""
     return _recency(spark, sf_dir, F.count(F.lit(1)).alias("ne")).select(
-        "user_id", _rec(), "ne", _churned()
+        "user_id",
+        _rec().alias("rec"),
+        "ne",
+        churn.churned(F.col("last_ts")).alias("churned"),
     )
 
 
@@ -894,9 +894,7 @@ def ml_confusion_matrix(spark, sf_dir):
     bit-exact on both engines (a float threshold can flip boundary
     users). One conditional aggregate over the user table; the F1 uses
     the 2TP/(2TP+FP+FN) form, which is total-order-safe."""
-    s = _rec_scored(spark, sf_dir)
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
-    pred = s.crossJoin(F.broadcast(mx)).select(
+    pred = _rec_scored(spark, sf_dir).select(
         "churned",
         F.when(2 * F.col("rec") >= F.col("maxrec"), 1).otherwise(0).alias("predicted"),
     )
@@ -956,17 +954,15 @@ def ml_ks_stat(spark, sf_dir):
         F.sum("churned").cast("double").alias("pos"),
         (F.count(F.lit(1)) - F.sum("churned")).cast("double").alias("neg"),
     ))
-    tot = per.agg(F.sum("pos").alias("np"), F.sum("neg").alias("nn"))
     w = Window.orderBy("rec").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cdf = per.crossJoin(F.broadcast(tot)).select(
+    cdf = with_stats(per, F.sum("pos").alias("np"), F.sum("neg").alias("nn")).select(
         "rec",
         (F.sum("pos").over(w) / F.col("np")).alias("cp"),
         (F.sum("neg").over(w) / F.col("nn")).alias("cn"),
     )
     scored = cdf.select("rec", qround(F.abs(F.col("cp") - F.col("cn"))).alias("d"))
-    mx = scored.agg(F.max("d").alias("mxks"))
     return (
-        scored.crossJoin(F.broadcast(mx))
+        with_stats(scored, F.max("d").alias("mxks"))
         .filter(F.col("d") == F.col("mxks"))
         .agg(F.min("rec").alias("ks_rec"), F.max("d").alias("ks"))
     )
@@ -1007,9 +1003,8 @@ def ml_lift_gains(spark, sf_dir):
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("churned").cast("double").alias("pos"),
     ))
-    tot = per.agg(F.sum("n").alias("nt"), F.sum("pos").alias("post"))
     wc = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return per.crossJoin(F.broadcast(tot)).select(
+    return with_stats(per, F.sum("n").alias("nt"), F.sum("pos").alias("post")).select(
         F.col("decile").cast("bigint").alias("decile"),
         F.col("n").cast("bigint").alias("n_users"),
         F.col("pos").cast("bigint").alias("n_churned"),
@@ -1184,10 +1179,8 @@ def ml_brier_score(spark, sf_dir):
     sum is order-independent; the reported score and base rate are
     1e-6-rounded. One event pass (shared _rec_scored aggregate), one
     1-row max broadcast, one global aggregate."""
-    s = _rec_scored(spark, sf_dir)
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
-    p = s.crossJoin(F.broadcast(mx)).select(
-        "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
+    p = _rec_scored(spark, sf_dir).select(
+        "churned", qround(F.col("rec") / F.col("maxrec").cast("double"), 9).alias("phat")
     )
     sqerr = qround((F.col("phat") - F.col("churned")) * (F.col("phat") - F.col("churned")), 9)
     return p.agg(
@@ -1244,13 +1237,13 @@ def ml_roc_points(spark, sf_dir):
             (F.count(F.lit(1)) - F.sum("churned")).cast("bigint").alias("neg"),
         )
     )
-    tot = per.agg(
-        F.sum("pos").cast("double").alias("n_pos"),
-        F.sum("neg").cast("double").alias("n_neg"),
-    )
     wc = Window.orderBy("decile")
     return (
-        per.crossJoin(F.broadcast(tot))
+        with_stats(
+            per,
+            F.sum("pos").cast("double").alias("n_pos"),
+            F.sum("neg").cast("double").alias("n_neg"),
+        )
         .select(
             "decile",
             qround(F.sum("pos").over(wc) / F.col("n_pos")).alias("tpr"),
@@ -1297,13 +1290,11 @@ def ml_fairness_metrics(spark, sf_dir):
     (customer dim broadcast) + one bounded per-segment aggregate; all
     rates are integer ratios quantized half-up at 1e-6. O(segments)
     rows at any scale."""
-    s = _rec_scored(spark, sf_dir)
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
     cust = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     pred = (
-        s.crossJoin(F.broadcast(mx))
+        _rec_scored(spark, sf_dir)
         .join(F.broadcast(cust), "user_id")
         .select(
             "segment",
@@ -1322,10 +1313,8 @@ def ml_fairness_metrics(spark, sf_dir):
             F.sum("churned").cast("bigint").alias("pos"),
         )
     )
-    g = seg.agg(
-        (F.sum("n_flagged").cast("double") / F.sum("n")).alias("g_rate")
-    )
-    return seg.crossJoin(F.broadcast(g)).select(
+    g_rate = (F.sum("n_flagged").cast("double") / F.sum("n")).alias("g_rate")
+    return with_stats(seg, g_rate).select(
         "segment",
         "n",
         "n_flagged",
@@ -1510,10 +1499,8 @@ def ml_isotonic_pav(spark, sf_dir):
     int64/int64 divisions and min/max over them, identical in both
     engines. The score is the same deterministic recency score as
     ml_calibration_bins (integer microsecond arithmetic)."""
-    s = _recency(spark, sf_dir).select("last_ts", _rec())
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
-    scored = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"), _churned()
+    scored = _rec_scored(spark, sf_dir).select(
+        (F.col("rec").cast("double") / F.col("maxrec")).alias("score"), "churned"
     )
     bins = ckpt(
         scored.groupBy(
@@ -1641,9 +1628,7 @@ def ml_bootstrap_metric_ci(spark, sf_dir):
     only state and replica count scales the fan-out linearly."""
     e = t(spark, sf_dir, "events")
     lab = ckpt(  # feeds the point estimate AND 16 replicas
-        e.groupBy("user_id")
-        .agg(F.max("ts").alias("last_ts"))
-        .select("user_id", _churned())
+        e.groupBy("user_id").agg(churn.churned(F.max("ts")).alias("churned"))
     )
     reps = spark.range(0, 16).select(F.col("id").cast("bigint").alias("b"))
     uv = (
@@ -1685,10 +1670,7 @@ def ml_bootstrap_metric_ci(spark, sf_dir):
             / F.lit(1e12)
         ).alias("r"),
     ))  # feeds mean AND variance passes
-    m = rq.agg(
-        (dsum(F.col("r"), 12) / F.lit(16)).alias("m")
-    )
-    dev = rq.crossJoin(F.broadcast(m)).select(
+    dev = with_stats(rq, (dsum(F.col("r"), 12) / F.lit(16)).alias("m")).select(
         "m",
         qdec(
             (F.col("r").cast("double") - F.col("m"))
@@ -1764,8 +1746,11 @@ def ml_drift_jsd(spark, sf_dir):
             (F.col("ts") >= F.to_timestamp(F.lit("2024-01-16 00:00:00"))).cast("long")
         ).alias("n_q"),
     ))  # feeds the totals scalar AND the terms
-    tot = counts.agg(F.sum("n_p").alias("tp"), F.sum("n_q").alias("tq"))
-    probs = counts.crossJoin(F.broadcast(tot)).select(
+    probs = with_stats(
+        counts,
+        F.sum("n_p").alias("tp"),
+        F.sum("n_q").alias("tq"),
+    ).select(
         (F.col("n_p").cast("double") / F.col("tp")).alias("p"),
         (F.col("n_q").cast("double") / F.col("tq")).alias("q"),
     )
@@ -1917,10 +1902,11 @@ def ml_auc_delong_se(spark, sf_dir):
         F.coalesce(F.sum("neg").over(wb), F.lit(0)).alias("cumneg_before"),
         F.coalesce(F.sum("pos").over(wa), F.lit(0)).alias("cumpos_after"),
     ))  # feeds totals, AUC, and both variance passes
-    tot = ranked.agg(
-        F.sum("pos").cast("double").alias("m"), F.sum("neg").cast("double").alias("nn")
-    )
-    placed = ckpt(ranked.crossJoin(F.broadcast(tot)).select(
+    placed = ckpt(with_stats(
+        ranked,
+        F.sum("pos").cast("double").alias("m"),
+        F.sum("neg").cast("double").alias("nn"),
+    ).select(
         "pos",
         "neg",
         ((F.col("cumneg_before") + 0.5 * F.col("neg")) / F.col("nn")).alias("v10"),
@@ -2022,7 +2008,7 @@ def ml_propensity_match(spark, sf_dir):
         "user_id",
         "n_events",
         "outcome",
-        _churned("treated"),
+        churn.churned(F.col("last_ts")).alias("treated"),
     ))  # feeds both sides of the match join
     tr = lab.filter(F.col("treated") == 1).select(
         F.col("user_id").alias("treated_id"),
@@ -2142,6 +2128,54 @@ def ml_diff_in_diff(spark, sf_dir):
     )
 
 
+def _tenure(spark, sf_dir, *aggs, hours=True):
+    """The survival frame: per user, ``user_id``, the ``tenure`` from
+    first to last event, the censor flag ``churned`` and the per-user
+    ``aggs``. By default tenure is in whole hours and a user churned
+    when their last event is more than 12 h before the horizon (the
+    fixture users are active to within ~2 days of the horizon, so
+    day-grain censoring would leave ZERO churn events at sf0.01); with
+    ``hours=False`` it is in whole calendar days with a 3-day cut. The
+    horizon is the max of the per-user maxima, NOT a second scan of the
+    fact table, and the per-user table is materialized once because it
+    feeds both the horizon and the tenure rows."""
+    e = t(spark, sf_dir, "events")
+    per_user = ckpt(e.groupBy("user_id").agg(
+        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"), *aggs
+    ))
+    if hours:
+        tenure = F.floor(
+            F.expr("timestampdiff(MICROSECOND, first_ts, last_ts)") / F.lit(3600000000)
+        )
+        cut = F.expr("INTERVAL 12 HOUR")
+    else:
+        tenure = F.datediff(day_of("last_ts"), day_of("first_ts"))
+        cut = F.expr("INTERVAL 3 DAY")
+    return with_stats(per_user, F.max("last_ts").alias("hz")).select(
+        "user_id",
+        tenure.alias("tenure"),
+        F.when(F.col("last_ts") < F.col("hz") - cut, 1).otherwise(0).alias("churned"),
+        *per_user.columns[3:],
+    )
+
+
+def _km_risk(users):
+    """(day_n, d, n_risk): the Kaplan-Meier risk table of a tenure frame
+    from :func:`_tenure` — the churns ``d`` at each tenure ``day_n`` and
+    the users still at risk there (all users minus those whose tenure
+    ended earlier). The tenure histogram is materialized once: it feeds
+    the total AND the risk window."""
+    daily = ckpt(users.groupBy(F.col("tenure").alias("day_n")).agg(
+        F.sum("churned").alias("d"),
+        (F.count(F.lit(1)) - F.sum("churned")).alias("c"),
+    ))
+    wb = Window.orderBy("day_n").rowsBetween(Window.unboundedPreceding, -1)
+    gone = F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb), F.lit(0))
+    return with_stats(daily, F.sum(F.col("d") + F.col("c")).alias("n0")).select(
+        "day_n", "d", (F.col("n0") - gone).alias("n_risk")
+    )
+
+
 @register(
     "ml_km_greenwood",
     oracle="""
@@ -2196,38 +2230,7 @@ def ml_km_greenwood(spark, sf_dir):
     table, so both engines exponentiate bit-identical accumulations.
     One user-grain aggregate is the only fact-scale pass; the whole
     estimator runs on the tenure histogram."""
-    e = t(spark, sf_dir, "events")
-    per_user = ckpt(e.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-    ))  # feeds the horizon scalar AND the tenure rows
-    # Corpus horizon = max of the per-user maxima — NOT a second scan of
-    # the fact table (duplicate-scan discipline).
-    horizon = per_user.agg(F.max("last_ts").alias("h"))
-    users = (
-        per_user
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            F.datediff(day_of("last_ts"), day_of("first_ts")).alias("t_days"),
-            F.when(
-                F.col("last_ts") < F.col("h") - F.expr("INTERVAL 3 DAY"), 1
-            )
-            .otherwise(0)
-            .alias("churned"),
-        )
-    )
-    daily = ckpt(users.groupBy(F.col("t_days").alias("day_n")).agg(
-        F.sum("churned").alias("d"),
-        (F.count(F.lit(1)) - F.sum("churned")).alias("c"),
-    ))  # feeds the total AND the risk window
-    tot = daily.agg(F.sum(F.col("d") + F.col("c")).alias("n0"))
-    wb = Window.orderBy("day_n").rowsBetween(Window.unboundedPreceding, -1)
-    risk = daily.crossJoin(F.broadcast(tot)).select(
-        "day_n",
-        "d",
-        (F.col("n0") - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb), F.lit(0))).alias(
-            "n_risk"
-        ),
-    )
+    risk = _km_risk(_tenure(spark, sf_dir, hours=False))
     q12 = lambda c: (
         qdec(c, 12) / F.lit(1e12)
     )
@@ -2488,15 +2491,16 @@ def ml_logreg_gd(spark, sf_dir):
 def _gd_features(spark, sf_dir):
     """(x1, x2, y): scaled recency, scaled activity and the churn label,
     materialized once because the table feeds every GD step."""
-    s = _rec_scored2(spark, sf_dir)
-    mx = s.agg(
-        F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"),
-        F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),
+    s = _recency(
+        spark,
+        sf_dir,
+        F.count(F.lit(1)).alias("ne"),
+        stats=(F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),),
     )
-    return ckpt(s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("x1"),
+    return ckpt(s.select(
+        (_rec().cast("double") / F.col("maxrec")).alias("x1"),
         (F.col("ne").cast("double") / F.col("maxne")).alias("x2"),
-        F.col("churned").cast("double").alias("y"),
+        churn.churned(F.col("last_ts")).cast("double").alias("y"),
     ))
 
 
@@ -2630,13 +2634,7 @@ def ml_ips_offpolicy(spark, sf_dir):
     standard support-mismatch alarm."""
     e = t(spark, sf_dir, "events")
     logs = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
-            ).otherwise(F.lit(0).cast("decimal(38,6)"))
-        )
-        .cast("double")
-        .alias("reward"),
+        revenue().alias("reward"),
         F.count(F.lit(1)).alias("ne"),
     )
     logged_action = (
@@ -2899,10 +2897,9 @@ def ml_hosmer_lemeshow(spark, sf_dir):
     decimal sums of the scores; each bin's term is 1e-9-quantized into
     the decimal total. One user aggregate + one decile aggregate —
     the same two-pass spine as the calibration family."""
-    s = _recency(spark, sf_dir).select("last_ts", _rec())
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
-    scored = s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("p"), _churned("y")
+    scored = _rec_scored(spark, sf_dir).select(
+        (F.col("rec").cast("double") / F.col("maxrec")).alias("p"),
+        F.col("churned").alias("y"),
     )
     binned = scored.groupBy(
         F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("bigint").alias("bin")
@@ -2984,30 +2981,7 @@ def ml_km_rmst(spark, sf_dir):
     1e-9-quantized into decimal accumulation on both engines. Same
     single fact-scale pass as ml_km_greenwood; the integral runs on
     the ≤30-row step table."""
-    e = t(spark, sf_dir, "events")
-    per_user = ckpt(e.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-    ))
-    horizon = per_user.agg(F.max("last_ts").alias("h"))
-    users = per_user.crossJoin(F.broadcast(horizon)).select(
-        F.datediff(day_of("last_ts"), day_of("first_ts")).alias("t_days"),
-        F.when(F.col("last_ts") < F.col("h") - F.expr("INTERVAL 3 DAY"), 1)
-        .otherwise(0)
-        .alias("churned"),
-    )
-    daily = ckpt(users.groupBy(F.col("t_days").alias("day_n")).agg(
-        F.sum("churned").alias("d"),
-        (F.count(F.lit(1)) - F.sum("churned")).alias("c"),
-    ))
-    tot = daily.agg(F.sum(F.col("d") + F.col("c")).alias("n0"))
-    wb = Window.orderBy("day_n").rowsBetween(Window.unboundedPreceding, -1)
-    risk = daily.crossJoin(F.broadcast(tot)).select(
-        "day_n",
-        "d",
-        (F.col("n0") - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wb), F.lit(0))).alias(
-            "n_risk"
-        ),
-    )
+    risk = _km_risk(_tenure(spark, sf_dir, hours=False))
     steps = risk.filter(F.col("d") < F.col("n_risk")).select(
         "day_n",
         qdec(F.log(1.0 - F.col("d").cast("double") / F.col("n_risk")), 12).alias(
@@ -3126,19 +3100,8 @@ def ml_gbm_stumps(spark, sf_dir):
     bit-identical cross-engine: residual sums 1e-12-quantized, leaf
     means exact ratios, predictions re-quantized 1e-9 per round.
     Output: train MSE + mean prediction after 4 rounds."""
-    s = _rec_scored2(spark, sf_dir)
-    mx = s.agg(
-        F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"),
-        F.greatest(F.max("ne"), F.lit(1)).alias("maxne"),
-    )
-    feats = ckpt(s.crossJoin(F.broadcast(mx)).select(
-        (F.col("rec").cast("double") / F.col("maxrec")).alias("x1"),
-        (F.col("ne").cast("double") / F.col("maxne")).alias("x2"),
-        F.col("churned").cast("double").alias("y"),
-        F.lit(0.5).alias("pred"),
-    ))
+    p = _gd_features(spark, sf_dir).withColumn("pred", F.lit(0.5))
     cand = [(f, t / 10.0) for f in (1, 2) for t in range(1, 10)]
-    p = feats
     for _ in range(4):
         xcol = lambda f: F.col("x1") if f == 1 else F.col("x2")
         aggs = []
@@ -3243,11 +3206,11 @@ def ml_shap_linear(spark, sf_dir):
     100 TB costs one aggregate, not a SHAP-sampler fleet."""
     feats = _gd_features(spark, sf_dir)
     w, _ = _gd_fit(feats, ("x1", "x2"), 10)
-    centers = feats.agg(
+    phis = with_stats(
+        feats,
         (qsum(F.col("x1"), 12) / F.count(F.lit(1))).alias("mx1"),
         (qsum(F.col("x2"), 12) / F.count(F.lit(1))).alias("mx2"),
-    )
-    phis = feats.crossJoin(F.broadcast(centers)).select(
+    ).select(
         (F.lit(w[1]) * (F.col("x1") - F.col("mx1"))).alias("phi1"),
         (F.lit(w[2]) * (F.col("x2") - F.col("mx2"))).alias("phi2"),
     )
@@ -3444,11 +3407,8 @@ def ml_platt_scaling(spark, sf_dir, iters: int = 5):
     ml_logreg_gd, is the bit-exact optimization trajectory, not a
     converged win. Same 100 TB shape as every GD op here: per step
     one combinable aggregate + a 2-double broadcast."""
-    s2 = _rec_scored2(spark, sf_dir)
-    mx = s2.agg(F.greatest(F.max("rec"), F.lit(1)).alias("maxrec"))
     feats = ckpt(
-        s2.crossJoin(F.broadcast(mx))
-        .select(
+        _rec_scored(spark, sf_dir).select(
             (F.col("rec").cast("double") / F.col("maxrec")).alias("s"),
             F.col("churned").cast("double").alias("y"),
         )
@@ -3527,24 +3487,8 @@ def ml_logrank_test(spark, sf_dir):
     one tenure histogram joined against the ≤30-row pooled event-time
     grid — all integer until the E/V terms, which ride q12 DECIMAL
     sums. The fact-scale cost is exactly one user-grain aggregate."""
-    e = t(spark, sf_dir, "events")
-    per_user = ckpt(
-        e.groupBy("user_id").agg(
-            F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-        )
-    )
-    horizon = per_user.agg(F.max("last_ts").alias("hz"))
-    # hour-grain tenure + a 12 h censor cut: the fixture users are
-    # active to within ~2 days of the horizon, so day-grain censoring
-    # would leave ZERO churn events (probed at sf0.01)
-    users = per_user.crossJoin(F.broadcast(horizon)).select(
-        (F.col("user_id") % 2).alias("g"),
-        F.floor(
-            F.expr("timestampdiff(MICROSECOND, first_ts, last_ts)") / F.lit(3600000000)
-        ).alias("t_days"),
-        F.when(F.col("hz") - F.expr("INTERVAL 12 HOUR") > F.col("last_ts"), 1)
-        .otherwise(0)
-        .alias("churned"),
+    users = _tenure(spark, sf_dir).select(
+        (F.col("user_id") % 2).alias("g"), F.col("tenure").alias("t_days"), "churned"
     )
     hist = ckpt(
         users.groupBy("g", "t_days").agg(
@@ -4514,23 +4458,8 @@ def ml_cox_score(spark, sf_dir):
     enters only at O(event-times) scalar divisions, then q12-DECIMAL
     summed. Same tenure/censoring frame as ml_logrank_test; p via the
     shared A&S erf polynomial."""
-    e = t(spark, sf_dir, "events")
-    per_user = ckpt(
-        e.groupBy("user_id").agg(
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            F.count(F.lit(1)).cast("bigint").alias("xn"),
-        )
-    )
-    horizon = per_user.agg(F.max("last_ts").alias("hz"))
-    users = per_user.crossJoin(F.broadcast(horizon)).select(
-        F.floor(
-            F.expr("timestampdiff(MICROSECOND, first_ts, last_ts)") / F.lit(3600000000)
-        ).alias("t_hours"),
-        F.when(F.col("hz") - F.expr("INTERVAL 12 HOUR") > F.col("last_ts"), 1)
-        .otherwise(0)
-        .alias("churned"),
-        "xn",
+    users = _tenure(spark, sf_dir, F.count(F.lit(1)).cast("bigint").alias("xn")).select(
+        F.col("tenure").alias("t_hours"), "churned", "xn"
     )
     grp = users.groupBy("t_hours").agg(
         F.count(F.lit(1)).cast("bigint").alias("c"),
@@ -4780,13 +4709,7 @@ def ml_doubly_robust(spark, sf_dir):
     variance/bias trade is visible in the output."""
     e = t(spark, sf_dir, "events")
     logs = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
-            ).otherwise(F.lit(0).cast("decimal(38,6)"))
-        )
-        .cast("double")
-        .alias("reward"),
+        revenue().alias("reward"),
         F.count(F.lit(1)).alias("ne"),
     )
     policy = ckpt(
@@ -5010,11 +4933,8 @@ def ml_bradley_terry(spark, sf_dir):
         raw = denom.join(F.broadcast(wtot.select("brand", "w_s")), "brand").select(
             "brand", (F.col("w_s") / F.col("denom")).alias("raw")
         )
-        s = raw.agg(
-            qsum(F.col("raw"), 12).alias("s")
-        )
         ratings = ckpt(
-            raw.crossJoin(F.broadcast(s)).select(
+            with_stats(raw, qsum(F.col("raw"), 12).alias("s")).select(
                 "brand",
                 qround(F.col("raw") / F.col("s"), 12).alias("r"),
             )
@@ -5104,16 +5024,11 @@ def ml_permutation_test(spark, sf_dir):
     dq_dp_count_release). Diffs are q6-quantized before the >=
     comparison so the tally is cross-engine exact."""
     e = t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
-            ).otherwise(F.lit(0).cast("decimal(38,6)"))
-        )
-        .cast("double")
-        .alias("y"),
-    ).select("user_id", "y", (F.col("user_id") % 2).alias("g"))
-    per_user = ckpt(per_user)
+    per_user = ckpt(
+        e.groupBy("user_id")
+        .agg(revenue().alias("y"))
+        .select("user_id", "y", (F.col("user_id") % 2).alias("g"))
+    )
     yq = qdec(F.col("y"))
     zero = F.lit(0).cast("decimal(38,6)")
     mean_side = lambda cond: (
@@ -5176,6 +5091,23 @@ def ml_permutation_test(spark, sf_dir):
     )
 
 
+def _arms(df, key, cols, arms=((1, "1"), (0, "0"))):
+    """One row holding each arm's ``cols`` side by side. ``df`` has one
+    row per value of ``key``; for every ``(value, suffix)`` of ``arms``
+    the row where ``key == value`` gives each ``name: column`` of
+    ``cols`` as ``name + suffix``. Both sides are single rows, so the
+    join is a broadcast cross join."""
+    sides = [
+        F.broadcast(
+            df.filter(F.col(key) == v).select(
+                *[c.alias(name + sfx) for name, c in cols.items()]
+            )
+        )
+        for v, sfx in arms
+    ]
+    return sides[0].crossJoin(sides[1])
+
+
 @register(
     "ml_iv_wald",
     oracle="""
@@ -5229,13 +5161,7 @@ def ml_iv_wald(spark, sf_dir):
     are exact bigints."""
     e = t(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
-            ).otherwise(F.lit(0).cast("decimal(38,6)"))
-        )
-        .cast("double")
-        .alias("y"),
+        revenue().alias("y"),
         F.count(F.lit(1)).cast("bigint").alias("x"),
     ).select(
         "y",
@@ -5264,15 +5190,13 @@ def ml_iv_wald(spark, sf_dir):
         / (F.col("n") - F.lit(1.0))
         / F.col("n")
     )
-    side = lambda z: F.broadcast(
-        g.filter(F.col("z") == z).select(
-            F.col("n").alias(f"n{z}"),
-            (F.col("sy") / F.col("n")).alias(f"my{z}"),
-            (F.col("sx").cast("double") / F.col("n")).alias(f"mx{z}"),
-            var_term.alias(f"v{z}"),
-        )
-    )
-    w = side(1).crossJoin(side(0)).select(
+    arms = _arms(g, "z", {
+        "n": F.col("n"),
+        "my": F.col("sy") / F.col("n"),
+        "mx": F.col("sx").cast("double") / F.col("n"),
+        "v": var_term,
+    })
+    w = arms.select(
         (F.col("n1") + F.col("n0")).cast("bigint").alias("n_users"),
         (F.col("my1") - F.col("my0")).alias("itt_y"),
         (F.col("mx1") - F.col("mx0")).alias("itt_x"),
@@ -5668,13 +5592,7 @@ def _ipw_weighted_frame(spark, sf_dir):
     audit (ml_covariate_balance) weights the SAME frame the ATE uses."""
     e = t(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
-            ).otherwise(F.lit(0).cast("decimal(38,6)"))
-        )
-        .cast("double")
-        .alias("y"),
+        revenue().alias("y"),
         F.count(F.lit(1)).alias("ne"),
         F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
         .cast("bigint")
@@ -5789,14 +5707,12 @@ def ml_ipw_ate(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n"),
         )
     )
-    side = lambda tval, prefix: F.broadcast(
-        sums.filter(F.col("treated") == tval).select(
-            (F.col("swy") / F.col("sw")).alias(f"mu_{prefix}"),
-            (F.col("sw") * F.col("sw") / F.col("sww")).alias(f"ess_{prefix}"),
-            F.col("n").alias(f"n_{prefix}"),
-        )
-    )
-    return side(1, "treated").crossJoin(side(0, "control")).select(
+    arms = _arms(sums, "treated", {
+        "mu_": F.col("swy") / F.col("sw"),
+        "ess_": F.col("sw") * F.col("sw") / F.col("sww"),
+        "n_": F.col("n"),
+    }, arms=((1, "treated"), (0, "control")))
+    return arms.select(
         (F.col("n_treated") + F.col("n_control")).cast("bigint").alias("n_users"),
         qround(F.col("mu_treated")).alias("mu_treated"),
         qround(F.col("mu_control")).alias("mu_control"),
@@ -6062,14 +5978,14 @@ def ml_meta_analysis_dl(spark, sf_dir):
             ).alias("v"),
         )
     )
-    fixed = strata.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        qsum(F.lit(1.0) / F.col("v"), 9).alias("sw"),
-        qsum(F.col("e") / F.col("v"), 9).alias("swe"),
-        qsum(F.lit(1.0) / (F.col("v") * F.col("v")), 9).alias("sww"),
-    )
     qstat = (
-        strata.crossJoin(F.broadcast(fixed))
+        with_stats(
+            strata,
+            F.count(F.lit(1)).cast("bigint").alias("k"),
+            qsum(F.lit(1.0) / F.col("v"), 9).alias("sw"),
+            qsum(F.col("e") / F.col("v"), 9).alias("swe"),
+            qsum(F.lit(1.0) / (F.col("v") * F.col("v")), 9).alias("sww"),
+        )
         .groupBy("k", "sw", "swe", "sww")
         .agg(
             qsum(
@@ -6182,26 +6098,8 @@ def ml_weibull_survival_grid(spark, sf_dir):
     ln and q6 exp) and the sums ride DECIMAL; tenure is shifted +1 h
     so zero-tenure users are well-defined (documented). Same
     tenure/censor frame as ml_logrank_test/ml_cox_score."""
-    e = t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-    )
-    horizon = per_user.agg(F.max("last_ts").alias("hz"))
-    users = ckpt(
-        per_user.crossJoin(F.broadcast(horizon)).select(
-            (
-                F.floor(
-                    F.expr("timestampdiff(MICROSECOND, first_ts, last_ts)")
-                    / F.lit(3600000000)
-                )
-                + F.lit(1.0)
-            ).alias("th"),
-            F.when(
-                F.col("hz") - F.expr("INTERVAL 12 HOUR") > F.col("last_ts"), 1
-            )
-            .otherwise(0)
-            .alias("churned"),
-        )
+    users = _tenure(spark, sf_dir).select(
+        (F.col("tenure") + F.lit(1.0)).alias("th"), "churned"
     )
     grid = spark.range(0, 21).select((F.lit(0.5) + F.lit(0.125) * F.col("id")).alias("k"))
     lnt = qround(F.log(F.col("th")), 9)
@@ -6338,16 +6236,16 @@ def ml_silhouette_rfm(spark, sf_dir):
             F.col("monetary").cast("double").alias("v3"),
         )
     )
-    mom = feats.agg(
-        F.avg("v1").alias("m1"),
-        F.avg("v2").alias("m2"),
-        F.avg("v3").alias("m3"),
-        F.stddev_pop("v1").alias("s1"),
-        F.stddev_pop("v2").alias("s2"),
-        F.stddev_pop("v3").alias("s3"),
-    )
     z = ckpt(
-        feats.crossJoin(F.broadcast(mom)).select(
+        with_stats(
+            feats,
+            F.avg("v1").alias("m1"),
+            F.avg("v2").alias("m2"),
+            F.avg("v3").alias("m3"),
+            F.stddev_pop("v1").alias("s1"),
+            F.stddev_pop("v2").alias("s2"),
+            F.stddev_pop("v3").alias("s3"),
+        ).select(
             "user_id",
             "seg",
             qround((F.col("v1") - F.col("m1")) / F.col("s1"), 9).alias("z1"),
@@ -6629,19 +6527,9 @@ def ml_yuen_trimmed_t(spark, sf_dir):
             ).alias("sw2"),
         )
     )
-    side = lambda a, pre: F.broadcast(
-        m.filter(F.col("arm") == a).select(
-            F.col("mt").alias(f"mt{pre}"),
-            (
-                (F.col("n") - F.lit(1.0))
-                * F.col("sw2")
-                / (F.col("h") * (F.col("h") - F.lit(1.0)))
-            ).alias(f"d{pre}"),
-            F.col("n").alias(f"n{pre}"),
-            F.col("g").alias(f"g{pre}"),
-        )
-    )
-    stat = side(1, "1").crossJoin(side(0, "0")).select(
+    dvar = (F.col("n") - F.lit(1.0)) * F.col("sw2") / (F.col("h") * (F.col("h") - F.lit(1.0)))
+    arms = _arms(m, "arm", {"mt": F.col("mt"), "d": dvar, "n": F.col("n"), "g": F.col("g")})
+    stat = arms.select(
         (F.col("mt1") - F.col("mt0")).alias("diff"),
         (F.col("d1") + F.col("d0")).alias("d"),
         (F.col("n1") + F.col("n0")).cast("bigint").alias("n_users"),
@@ -6703,21 +6591,8 @@ def ml_harrell_c(spark, sf_dir):
     never user x user. Everything stays integer (2*conc + ties over
     2*comparable defers the half-credit to one exact division). Same
     tenure/censor frame as the rest of the survival family."""
-    e = t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.count(F.lit(1)).cast("bigint").alias("x"),
-    )
-    horizon = per_user.agg(F.max("last_ts").alias("hz"))
-    users = per_user.crossJoin(F.broadcast(horizon)).select(
-        F.floor(
-            F.expr("timestampdiff(MICROSECOND, first_ts, last_ts)") / F.lit(3600000000)
-        ).alias("th"),
-        F.when(F.col("hz") - F.expr("INTERVAL 12 HOUR") > F.col("last_ts"), 1)
-        .otherwise(0)
-        .alias("churned"),
-        "x",
+    users = _tenure(spark, sf_dir, F.count(F.lit(1)).cast("bigint").alias("x")).select(
+        F.col("tenure").alias("th"), "churned", "x"
     )
     cells = ckpt(
         users.groupBy("th", "x").agg(
@@ -6818,10 +6693,8 @@ def ml_brier_decomposition(spark, sf_dir):
     sum. Turns the single Brier number into the WHY — calibration
     problem vs discrimination problem — for the cost of one extra
     10-row aggregate."""
-    s = _rec_scored(spark, sf_dir)
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
-    p = s.crossJoin(F.broadcast(mx)).select(
-        "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
+    p = _rec_scored(spark, sf_dir).select(
+        "churned", qround(F.col("rec") / F.col("maxrec").cast("double"), 9).alias("phat")
     )
     binned = p.select(
         F.least(F.floor(F.col("phat") * 10).cast("bigint"), F.lit(9).cast("bigint")).alias("b"),
@@ -6836,14 +6709,14 @@ def ml_brier_decomposition(spark, sf_dir):
             F.sum("churned").cast("bigint").alias("so"),
         )
     )
-    tot = per_bin.agg(
-        F.sum("nb").cast("bigint").alias("n"),
-        (F.sum("so").cast("double") / F.sum("nb")).alias("obar"),
-    )
     pbar = F.col("sp") / F.col("nb")
     obin = F.col("so").cast("double") / F.col("nb")
     parts = (
-        per_bin.crossJoin(F.broadcast(tot))
+        with_stats(
+            per_bin,
+            F.sum("nb").cast("bigint").alias("n"),
+            (F.sum("so").cast("double") / F.sum("nb")).alias("obar"),
+        )
         .groupBy("obar", "n")
         .agg(
             (qsum(F.col("nb") * (pbar - obin) * (pbar - obin), 9) / F.first("n")).alias("rel"),
@@ -6951,9 +6824,6 @@ def ml_kruskal_wallis(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("n"),
         qsum(F.col("mid_rank")).alias("sr"),
     )
-    tot = stats.agg(
-        F.sum("n").cast("bigint").alias("nt"), F.count(F.lit(1)).cast("bigint").alias("k")
-    )
     ties = (
         frame.groupBy("yq")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -6968,7 +6838,11 @@ def ml_kruskal_wallis(spark, sf_dir):
         )
     )
     h = (
-        stats.crossJoin(F.broadcast(tot))
+        with_stats(
+            stats,
+            F.sum("n").cast("bigint").alias("nt"),
+            F.count(F.lit(1)).cast("bigint").alias("k"),
+        )
         .groupBy("nt", "k")
         .agg(
             (
@@ -7083,18 +6957,18 @@ def ml_icc_anova(spark, sf_dir):
             qsum(F.col("y") * F.col("y")).alias("syy"),
         )
     )
-    tot = m.agg(
-        F.sum("n").cast("double").alias("nt"),
-        F.count(F.lit(1)).cast("double").alias("k"),
-        qsum(F.col("sy")).alias("gs"),
-        F.sum(
-            F.floor(F.col("n") * F.col("n") * F.lit(1) + F.lit(0.5)).cast("decimal(38,0)")
-        )
-        .cast("double")
-        .alias("snn"),
-    )
     ss = (
-        m.crossJoin(F.broadcast(tot))
+        with_stats(
+            m,
+            F.sum("n").cast("double").alias("nt"),
+            F.count(F.lit(1)).cast("double").alias("k"),
+            qsum(F.col("sy")).alias("gs"),
+            F.sum(
+                F.floor(F.col("n") * F.col("n") * F.lit(1) + F.lit(0.5)).cast("decimal(38,0)")
+            )
+            .cast("double")
+            .alias("snn"),
+        )
         .groupBy("nt", "k", "gs", "snn")
         .agg(
             qsum(F.col("sy") * F.col("sy") / F.col("n")).alias("sqq"),
@@ -7320,13 +7194,13 @@ def ml_brown_forsythe(spark, sf_dir):
             qsum(F.col("z") * F.col("z")).alias("szz"),
         )
     )
-    tot = gm.agg(
-        F.sum("n").cast("double").alias("nt"),
-        F.count(F.lit(1)).cast("double").alias("k"),
-        qsum(F.col("sz")).alias("gs"),
-    )
     ss = (
-        gm.crossJoin(F.broadcast(tot))
+        with_stats(
+            gm,
+            F.sum("n").cast("double").alias("nt"),
+            F.count(F.lit(1)).cast("double").alias("k"),
+            qsum(F.col("sz")).alias("gs"),
+        )
         .groupBy("nt", "k", "gs")
         .agg(
             qsum(F.col("sz") * F.col("sz") / F.col("n")).alias("sqq"),
@@ -7395,10 +7269,8 @@ def ml_tjur_r2(spark, sf_dir):
     separate in LEVEL. Same (phat, churned) frame as the Brier pair
     (shared _rec_scored helper / mirrored CTEs); the whole statistic
     is one 2-group DECIMAL mean."""
-    s = _rec_scored(spark, sf_dir)
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
-    p = s.crossJoin(F.broadcast(mx)).select(
-        "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
+    p = _rec_scored(spark, sf_dir).select(
+        "churned", qround(F.col("rec") / F.col("maxrec").cast("double"), 9).alias("phat")
     )
     sides = ckpt(
         p.groupBy("churned").agg(
@@ -7406,12 +7278,8 @@ def ml_tjur_r2(spark, sf_dir):
             qsum(F.col("phat"), 9).alias("sp"),
         )
     )
-    side = lambda v, pre: F.broadcast(
-        sides.filter(F.col("churned") == v).select(
-            (F.col("sp") / F.col("n")).alias(f"m{pre}"), F.col("n").alias(f"n{pre}")
-        )
-    )
-    return side(1, "1").crossJoin(side(0, "0")).select(
+    arms = _arms(sides, "churned", {"m": F.col("sp") / F.col("n"), "n": F.col("n")})
+    return arms.select(
         (F.col("n1") + F.col("n0")).cast("bigint").alias("n_users"),
         qround(F.col("m1")).alias("mean_p_churned"),
         qround(F.col("m0")).alias("mean_p_retained"),
@@ -7462,11 +7330,11 @@ def ml_mcc(spark, sf_dir):
     float expression at the end. Completes the eval family's scalar
     tier: AUC (ranking), Brier (calibration), Tjur (separation),
     MCC (thresholded decision quality)."""
-    s = _rec_scored(spark, sf_dir)
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
-    pred = s.crossJoin(F.broadcast(mx)).select(
+    pred = _rec_scored(spark, sf_dir).select(
         "churned",
-        (qround(F.col("rec") / F.col("maxrec"), 9) >= 0.5).cast("int").alias("yhat"),
+        (qround(F.col("rec") / F.col("maxrec").cast("double"), 9) >= 0.5)
+        .cast("int")
+        .alias("yhat"),
     )
     cm = pred.agg(
         F.sum(F.when((F.col("churned") == 1) & (F.col("yhat") == 1), 1).otherwise(0))
@@ -7545,15 +7413,11 @@ def ml_cohen_d(spark, sf_dir):
     (per-feature), this (two-group continuous). One user aggregate +
     2-row algebra."""
     e = t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
-            ).otherwise(F.lit(0).cast("decimal(38,6)"))
-        )
-        .cast("double")
-        .alias("y"),
-    ).select((F.col("user_id") % 2).alias("arm"), "y")
+    per_user = (
+        e.groupBy("user_id")
+        .agg(revenue().alias("y"))
+        .select((F.col("user_id") % 2).alias("arm"), "y")
+    )
     m = ckpt(
         per_user.groupBy("arm").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
@@ -7568,14 +7432,11 @@ def ml_cohen_d(spark, sf_dir):
             ).alias("syy"),
         )
     )
-    side = lambda a, pre: F.broadcast(
-        m.filter(F.col("arm") == a).select(
-            F.col("n").alias(f"n{pre}"),
-            (F.col("sy") / F.col("n")).alias(f"mean{pre}"),
-            (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")).alias(f"ss{pre}"),
-        )
-    )
-    w = side(1, "1").crossJoin(side(0, "0")).select(
+    w = _arms(m, "arm", {
+        "n": F.col("n"),
+        "mean": F.col("sy") / F.col("n"),
+        "ss": F.col("syy") - F.col("sy") * F.col("sy") / F.col("n"),
+    }).select(
         "n1",
         "n0",
         (F.col("mean1") - F.col("mean0")).alias("diff"),
@@ -7656,12 +7517,7 @@ def ml_risk_reduction(spark, sf_dir):
             F.sum("bad").cast("double").alias("k"),
         )
     )
-    side = lambda a, pre: F.broadcast(
-        m.filter(F.col("arm") == a).select(
-            (F.col("k") / F.col("n")).alias(f"p{pre}"), F.col("n").alias(f"n{pre}")
-        )
-    )
-    w = side(0, "0").crossJoin(side(1, "1"))
+    w = _arms(m, "arm", {"p": F.col("k") / F.col("n"), "n": F.col("n")})
     arr = F.col("p0") - F.col("p1")
     return w.select(
         (F.col("n0") + F.col("n1")).cast("bigint").alias("n_users"),
@@ -7733,11 +7589,9 @@ def ml_youden_j(spark, sf_dir):
     frame, exact integer cells, J q9-quantized before the
     deterministic argmax (thr tiebreak). Same churn-score frame as
     the rest of the eval family."""
-    s = _rec_scored(spark, sf_dir)
-    mx = s.agg(F.greatest(F.max("rec"), F.lit(1)).cast("double").alias("maxrec"))
     p = ckpt(
-        s.crossJoin(F.broadcast(mx)).select(
-            "churned", qround(F.col("rec") / F.col("maxrec"), 9).alias("phat")
+        _rec_scored(spark, sf_dir).select(
+            "churned", qround(F.col("rec") / F.col("maxrec").cast("double"), 9).alias("phat")
         )
     )
     tot = p.agg(

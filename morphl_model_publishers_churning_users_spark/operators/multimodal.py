@@ -31,7 +31,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 
 from ..registry import register
-from ._shared import qround, t
+from ._shared import qround, t, with_stats
 
 _MAGIC = b"SY1"
 _A1, _A2 = 2654435761, 40503  # affine sample-stream multipliers
@@ -637,9 +637,8 @@ def mm_modality_balance(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.sum("payload_bytes").cast("bigint").alias("total_bytes"),
     )
-    tot = per.agg(F.sum("n").alias("nt"))
     share = F.col("n").cast("double") / F.col("nt")
-    return per.crossJoin(F.broadcast(tot)).select(
+    return with_stats(per, F.sum("n").alias("nt")).select(
         "modality",
         F.col("n").cast("bigint").alias("n_docs"),
         "total_bytes",

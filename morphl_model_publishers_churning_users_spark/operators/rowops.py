@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import by_day, ckpt, day_of, dsum, qround, qsum, t
+from ._shared import by_day, ckpt, day_of, dsum, qround, qsum, t, with_stats
 
 
 @register(
@@ -949,9 +949,8 @@ def dq_freshness(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
     )
-    g = per.agg(F.max("last_ts").alias("gmax"))
     lag_us = F.expr("timestampdiff(MICROSECOND, last_ts, gmax)")
-    return per.crossJoin(F.broadcast(g)).select(
+    return with_stats(per, F.max("last_ts").alias("gmax")).select(
         "event_type",
         "last_ts",
         "n_events",
@@ -2114,9 +2113,8 @@ def dq_terminal_digit(spark, sf_dir):
         spine.join(digits.groupBy("d").agg(F.count(F.lit(1)).cast("bigint").alias("n")), "d", "left")
         .select("d", F.coalesce("n", F.lit(0)).cast("bigint").alias("n"))
     )
-    tot = counts.agg(F.sum("n").cast("bigint").alias("t"))
     exp = F.col("t") / F.lit(10.0)
-    return counts.crossJoin(F.broadcast(tot)).select(
+    return with_stats(counts, F.sum("n").cast("bigint").alias("t")).select(
         F.col("d").alias("digit"),
         "n",
         qround(F.col("n").cast("double") / F.col("t")).alias("share"),
@@ -2259,13 +2257,12 @@ def dq_benford_mad(spark, sf_dir):
             "left",
         ).select("d", F.coalesce("n", F.lit(0)).cast("bigint").alias("n"))
     )
-    tot = counts.agg(F.sum("n").cast("double").alias("t"))
     expected = qround(
         (F.log((F.col("d") + 1).cast("double")) - F.log(F.col("d").cast("double")))
         / F.log(F.lit(10.0)),
         9,
     )
-    devs = counts.crossJoin(F.broadcast(tot)).select(
+    devs = with_stats(counts, F.sum("n").cast("double").alias("t")).select(
         "t", F.abs(F.col("n") / F.col("t") - expected).alias("dev")
     )
     mad = (

@@ -22,7 +22,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import register
-from ._shared import ckpt, day_of, dsum, qround, qsum, scratch_dir, t
+from ._shared import ckpt, day_of, dsum, qround, qsum, scratch_dir, t, with_stats
 
 
 def _overlap_writes(*thunks):
@@ -1085,16 +1085,16 @@ def sink_zorder_write(spark, sf_dir):
             / F.lit(86400000000)
         ).alias("dy"),
     )
-    mm = o.agg(
+    # Integer `div` (not float `/`+floor): bit-identical to DuckDB's `//`
+    # at any magnitude — float division can flip a bucket at an exact
+    # boundary once keys outgrow the 2^53 exact-double range.
+    coded = with_stats(
+        o,
         F.min("ck").alias("minc"),
         F.max("ck").alias("maxc"),
         F.min("dy").alias("mind"),
         F.max("dy").alias("maxd"),
-    )
-    # Integer `div` (not float `/`+floor): bit-identical to DuckDB's `//`
-    # at any magnitude — float division can flip a bucket at an exact
-    # boundary once keys outgrow the 2^53 exact-double range.
-    coded = o.crossJoin(F.broadcast(mm)).select(
+    ).select(
         "ck",
         "dy",
         F.expr("CAST((ck - minc) * 16 div (maxc - minc + 1) AS INT)").alias("bc"),
@@ -2185,11 +2185,15 @@ def scan_delta_partition_values(spark, sf_dir):
     _commit(log_dir, 2, "DELETE", [_remove(v0_files[1998])])
 
     # --- fold the log ONCE, carrying the partitionValues map: O(actions)
-    # metadata, zero data-file reads.
-    live_rows = _fold(
-        _actions(spark, log_dir),
-        o_year=F.col("add.partitionValues")["o_year"].cast("int"),
-    ).collect()  # O(live files): 7
+    # metadata, zero data-file reads. Sorted by path, so the pruned read
+    # and its IN (...) check list the files in the same order every run.
+    live_rows = sorted(
+        _fold(
+            _actions(spark, log_dir),
+            o_year=F.col("add.partitionValues")["o_year"].cast("int"),
+        ).collect(),  # O(live files): 7
+        key=lambda r: r["path"],
+    )
     pruned = [r for r in live_rows if 1997 <= r["o_year"] <= 1998]
     out_of_range = [r for r in live_rows if not 1997 <= r["o_year"] <= 1998]
     n_live_total, n_pruned = len(live_rows), len(pruned)

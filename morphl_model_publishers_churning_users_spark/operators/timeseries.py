@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, by_day, ckpt, day_of, dsum, qdec, qround, qsum, t
+from ._shared import DSUM, by_day, ckpt, day_of, dsum, qdec, qround, qsum, revenue, t, with_stats
 
 
 def _day_index():
@@ -1288,10 +1288,7 @@ def ts_autocorr(spark, sf_dir):
     final ratio quantizes at 1e-6."""
     ev = t(spark, sf_dir, "events")
     daily = ckpt(by_day(ev).agg(dsum(F.col("value")).alias("r")))
-    mu = daily.agg(
-        (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
-    )
-    dev = daily.crossJoin(F.broadcast(mu)).select(
+    dev = with_stats(daily, (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")).select(
         "day", "r", (F.col("r") - F.col("mu")).alias("dev")
     )
     den = dev.agg(dsum(qround(F.col("dev") * F.col("dev"), 3)).alias("den"))
@@ -1345,12 +1342,9 @@ def ts_changepoint(spark, sf_dir):
     peaks). Flags every day whose |cusum| equals the maximum."""
     ev = t(spark, sf_dir, "events")
     daily = ckpt(by_day(ev).agg(dsum(F.col("value")).alias("r")))
-    mu = daily.agg(
-        (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
-    )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cs = (
-        daily.crossJoin(F.broadcast(mu))
+        with_stats(daily, (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu"))
         .select(
             "day",
             F.sum(qround(F.col("r") - F.col("mu")).cast("decimal(38,6)"))
@@ -1359,8 +1353,7 @@ def ts_changepoint(spark, sf_dir):
             .alias("cusum"),
         )
     )
-    mx = cs.agg(F.max(F.abs("cusum")).alias("peak"))
-    return cs.crossJoin(F.broadcast(mx)).select(
+    return with_stats(cs, F.max(F.abs("cusum")).alias("peak")).select(
         "day",
         qround(F.col("cusum")).alias("cusum"),
         (F.abs("cusum") == F.col("peak")).alias("is_changepoint"),
@@ -1591,11 +1584,8 @@ def ts_periodogram(spark, sf_dir):
     integer floor of products of identical doubles."""
     ev = t(spark, sf_dir, "events")
     daily = ckpt(by_day(ev).agg(dsum(F.col("value")).alias("r")))
-    mu = daily.agg(
-        (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")
-    )
     w = Window.orderBy("day")
-    idx = daily.crossJoin(F.broadcast(mu)).select(
+    idx = with_stats(daily, (dsum(F.col("r")) / F.count(F.lit(1))).alias("mu")).select(
         F.row_number().over(w).alias("d"), qround(F.col("r") - F.col("mu")).alias("rd")
     )
     periods = spark.range(2, 15).select(F.col("id").cast("int").alias("period"))
@@ -2411,12 +2401,12 @@ def ts_hurst_rs(spark, sf_dir):
     # Quantize-into-decimal for the centering means AND the slope sums —
     # a raw double SUM over the pts rows is engine-order-dependent
     # (review catch: the only place this op skipped the discipline).
-    centers = pts.agg(
-        (qsum(F.col("x"), 12) / F.count(F.lit(1))).alias("ax"),
-        (qsum(F.col("y"), 12) / F.count(F.lit(1))).alias("ay"),
-    )
     fit = (
-        pts.crossJoin(F.broadcast(centers))
+        with_stats(
+            pts,
+            (qsum(F.col("x"), 12) / F.count(F.lit(1))).alias("ax"),
+            (qsum(F.col("y"), 12) / F.count(F.lit(1))).alias("ay"),
+        )
         .agg(
             (
                 F.sum(qdec((F.col("x") - F.col("ax")) * (F.col("y") - F.col("ay")), 12))
@@ -3524,15 +3514,7 @@ def ts_demand_classification(spark, sf_dir):
     Purchasers with < 4 demand days excluded (the taxonomy is
     meaningless there). One user-day aggregate + one user rollup."""
     e = t(spark, sf_dir, "events")
-    daily = by_day(e, "user_id").agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast("decimal(38,6)")
-            ).otherwise(F.lit(0).cast("decimal(38,6)"))
-        )
-        .cast("double")
-        .alias("dem")
-    )
+    daily = by_day(e, "user_id").agg(revenue().alias("dem"))
     nz = daily.filter(F.col("dem") > 0)
     intervals = nz.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_demands"),
@@ -3703,13 +3685,13 @@ def ts_intervention_its(spark, sf_dir):
         by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )
-    lims = daily.agg(
+    idx = with_stats(
+        daily,
         F.min("day").alias("d_min"),
         F.floor(F.datediff(F.max("day"), F.min("day")) / 2.0)
         .cast("double")
         .alias("t0"),
-    )
-    idx = daily.crossJoin(F.broadcast(lims)).select(
+    ).select(
         F.datediff("day", "d_min").cast("double").alias("tt"), "y", "t0"
     )
     pre = F.col("tt") <= F.col("t0")
@@ -3792,14 +3774,14 @@ def ts_poisson_rate_ratio(spark, sf_dir):
         by_day(t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase"))
         .agg(F.count(F.lit(1)).alias("y"))
     )
-    lims = daily.agg(
+    idx = with_stats(
+        daily,
         F.min("day").alias("d_min"),
         F.floor(F.datediff(F.max("day"), F.min("day")) / 2.0)
         .cast("bigint")
         .alias("t0"),
         F.datediff(F.max("day"), F.min("day")).cast("bigint").alias("t_max"),
-    )
-    idx = daily.crossJoin(F.broadcast(lims)).select(
+    ).select(
         F.datediff("day", "d_min").cast("bigint").alias("dd"), "y", "t0", "t_max"
     )
     halves = idx.agg(
@@ -4669,9 +4651,8 @@ def ts_theil_sen(spark, sf_dir):
         by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )
-    d0 = daily.agg(F.min("day").alias("dmin"))
     idx = ckpt(
-        daily.crossJoin(F.broadcast(d0)).select(
+        with_stats(daily, F.min("day").alias("dmin")).select(
             F.datediff("day", "dmin").cast("double").alias("tt"), "y"
         )
     )
@@ -4763,12 +4744,12 @@ def ts_ljung_box(spark, sf_dir):
         by_day(t(spark, sf_dir, "events"))
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )
-    m = daily.agg(
-        (qsum(F.col("y")) / F.count(F.lit(1))).alias("mu"),
-        F.count(F.lit(1)).cast("double").alias("n"),
-    )
     dev = ckpt(
-        daily.crossJoin(F.broadcast(m)).select(
+        with_stats(
+            daily,
+            (qsum(F.col("y")) / F.count(F.lit(1))).alias("mu"),
+            F.count(F.lit(1)).cast("double").alias("n"),
+        ).select(
             _day_index().alias("i"), (F.col("y") - F.col("mu")).alias("xc"), "n"
         )
     )
@@ -4853,14 +4834,14 @@ def ts_spc_control_chart(spark, sf_dir):
             "day", "y", F.abs(F.col("y") - F.lag("y").over(wd)).alias("moving_range")
         )
     )
-    lims = mr.agg(
+    f = with_stats(
+        mr,
         (qsum(F.col("y")) / F.count(F.lit(1))).alias("xbar"),
         (
             qsum(F.coalesce("moving_range", F.lit(0.0)))
             / (F.count(F.lit(1)) - 1)
         ).alias("mrbar"),
     )
-    f = mr.crossJoin(F.broadcast(lims))
     ucl = F.col("xbar") + 2.66 * F.col("mrbar")
     lcl = F.col("xbar") - 2.66 * F.col("mrbar")
     w8 = Window.orderBy("day").rowsBetween(-7, Window.currentRow)
@@ -5023,11 +5004,11 @@ def ts_var_cvar(spark, sf_dir):
         by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
-    nn = daily.agg(
+    ranked = with_stats(
+        daily,
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.expr("(count(1) + 19) div 20").cast("bigint").alias("k"),
-    )
-    ranked = daily.crossJoin(F.broadcast(nn)).select(
+    ).select(
         "revq",
         F.row_number()
         .over(Window.orderBy(F.col("revq").asc(), F.col("day").asc()))
@@ -5490,11 +5471,11 @@ def ts_pot_gpd_tail(spark, sf_dir):
         by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
-    nn = daily.agg(
+    ranked = with_stats(
+        daily,
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.expr("(9 * count(1) + 9) div 10").cast("bigint").alias("k"),
-    )
-    ranked = daily.crossJoin(F.broadcast(nn)).select(
+    ).select(
         "revq",
         "n",
         "k",
@@ -6710,12 +6691,8 @@ def ts_pacf_durbin(spark, sf_dir):
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select(_day_index().alias("i"), "x")
     )
-    mu = series.agg(
-        qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
-    )
-    cent = series.crossJoin(F.broadcast(mu)).select(
-        "i", (F.col("x") - F.col("m")).alias("xc")
-    )
+    mean = qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
+    cent = with_stats(series, mean).select("i", (F.col("x") - F.col("m")).alias("xc"))
     lagsum = _lag_sums(cent, range(0, 11))
     s0 = lagsum.filter(F.col("k") == 0).select(F.col("s").alias("s0"))
     acf = (
@@ -7411,11 +7388,11 @@ def ts_spectral_entropy(spark, sf_dir):
     from .timeseries import ts_periodogram  # self-module, explicit
 
     spec = ckpt(ts_periodogram(spark, sf_dir).select("power"))
-    tot = spec.agg(
+    ps = with_stats(
+        spec,
         dsum(F.col("power")).alias("tp"),
         F.count(F.lit(1)).cast("bigint").alias("np"),
-    )
-    ps = spec.crossJoin(F.broadcast(tot)).select(
+    ).select(
         qround(F.col("power").cast("double") / F.col("tp"), 12).alias("p"), "np"
     )
     h = ps.agg(
@@ -7490,11 +7467,11 @@ def ts_extremal_index(spark, sf_dir):
         by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).alias("revq"))
     )
-    nn = daily.agg(
+    ranked = with_stats(
+        daily,
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.expr("(9 * count(1) + 9) div 10").cast("bigint").alias("k"),
-    )
-    ranked = daily.crossJoin(F.broadcast(nn)).select(
+    ).select(
         "day",
         "revq",
         F.row_number().over(Window.orderBy(F.asc("revq"), F.asc("day"))).alias("rn"),
@@ -7700,12 +7677,8 @@ def ts_max_subarray(spark, sf_dir):
         by_day(t(spark, sf_dir, "orders"), col="o_orderdate")
         .agg(F.sum(qdec(F.col("o_totalprice"))).cast("bigint").alias("revq"))
     )
-    mu = daily.agg(
-        (F.sum("revq").cast("bigint") / F.count(F.lit(1)).cast("bigint"))
-        .cast("bigint")
-        .alias("m")
-    )
-    series = daily.crossJoin(F.broadcast(mu)).select(
+    mean = (F.sum("revq").cast("bigint") / F.count(F.lit(1)).cast("bigint")).cast("bigint")
+    series = with_stats(daily, mean.alias("m")).select(
         "day", (F.col("revq") - F.col("m")).alias("d")
     )
     arr = series.agg(
@@ -7806,13 +7779,9 @@ def ts_ar_residual_outliers(spark, sf_dir):
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select("day", "x", _day_index().alias("i"))
     )
-    mu = series.agg(
-        qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
-    )
+    mean = qround(F.sum("x").cast("double") / F.count(F.lit(1)), 9).alias("m")
     cent = ckpt(
-        series.crossJoin(F.broadcast(mu)).select(
-            "i", "day", "x", (F.col("x") - F.col("m")).alias("xc")
-        )
+        with_stats(series, mean).select("i", "day", "x", (F.col("x") - F.col("m")).alias("xc"))
     )
     lagsum = _lag_sums(cent, range(0, 3))
     fit = (
@@ -7849,12 +7818,6 @@ def ts_ar_residual_outliers(spark, sf_dir):
             ).alias("e"),
         )
     )
-    sd = resid.agg(
-        F.sqrt(
-            qsum(F.col("e") * F.col("e"), 9)
-            / (F.count(F.lit(1)) - F.lit(1.0))
-        ).alias("s")
-    )
     # Top-3 most-surprising days ALWAYS surface, each flagged against
     # the 3-sigma gate: on the smooth synthetic fixture no day clears
     # 3 sigma at any scale, so the original flagged-only output was
@@ -7865,8 +7828,9 @@ def ts_ar_residual_outliers(spark, sf_dir):
     # additive outliers). |e| is q9-quantized, so the rank order is
     # engine-exact; ties break on day.
     wr = Window.orderBy(F.desc(F.abs(F.col("e"))), F.asc("day"))
+    sd = F.sqrt(qsum(F.col("e") * F.col("e"), 9) / (F.count(F.lit(1)) - F.lit(1.0)))
     return (
-        resid.crossJoin(F.broadcast(sd))
+        with_stats(resid, sd.alias("s"))
         .withColumn("rnk", F.row_number().over(wr))
         .filter(F.col("rnk") <= 3)
         .select(
@@ -8298,8 +8262,7 @@ def ts_seasonal_indices(spark, sf_dir):
             (qsum(F.col("ratio"), 9) / F.count(F.lit(1))).alias("idx_raw"),
         )
     )
-    norm = raw.agg(qsum(F.col("idx_raw"), 9).alias("s"))
-    return raw.crossJoin(F.broadcast(norm)).select(
+    return with_stats(raw, qsum(F.col("idx_raw"), 9).alias("s")).select(
         "dow",
         "n_weeks",
         qround(F.col("idx_raw") * F.lit(7.0) / F.col("s")).alias("seasonal_index"),

@@ -85,12 +85,18 @@ def user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats
 
 
+def churned(last_ts: Column) -> Column:
+    """The churn label: 1 when a user's last event falls before the
+    cutoff, else 0. ``last_ts`` is TIMESTAMP_NTZ and so is the cutoff,
+    so the comparison is wall-clock under any session timezone. DuckDB
+    twin: ``CASE WHEN last_ts < TIMESTAMP '2024-01-29 20:00:00' THEN 1
+    ELSE 0 END``."""
+    return F.when(last_ts < F.lit(CHURN_CUTOFF).cast("timestamp_ntz"), 1).otherwise(0)
+
+
 def label_churn(features: DataFrame) -> DataFrame:
     """Reference churn definition: recency threshold on last activity."""
-    cutoff = F.lit(CHURN_CUTOFF).cast("timestamp_ntz")
-    return features.withColumn(
-        "churned", F.when(F.col("last_ts") < cutoff, 1).otherwise(0)
-    )
+    return features.withColumn("churned", churned(F.col("last_ts")))
 
 
 def labeled_users(spark: SparkSession, sf_dir: str) -> DataFrame:

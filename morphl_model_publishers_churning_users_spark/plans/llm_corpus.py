@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
+from ..operators._shared import with_stats
 
 
 def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,11 +54,11 @@ def run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # draws its uniform from md5(doc_id) — reproducible run-over-run,
     # membership is a narrow per-row expression after one broadcast.
     src = curated.groupBy("source").agg(F.sum("n_words").alias("src_tokens"))
-    tot = src.agg(
+    weights = with_stats(
+        src,
         F.sum("src_tokens").cast("double").alias("all_tokens"),
         F.count(F.lit(1)).cast("double").alias("n_sources"),
-    )
-    weights = src.crossJoin(F.broadcast(tot)).select(
+    ).select(
         "source",
         F.least(
             (F.lit(1.0) / F.col("n_sources"))

@@ -67,7 +67,10 @@ _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 # scan_csv_malformed checkpoints its parsed rows before the corrupt-record
 # filter. The keys after it build their daily series through the
 # time-series spine (_shared.by_day, timeseries._lag_sums/_day_index/
-# _day_grid), which moved their plans but not their rows.
+# _day_grid), which moved their plans but not their rows. The ml_* keys
+# after dq_observe_metrics take the score's max from the recency spine's
+# statistics row (ml._recency), their survival frame from ml._tenure or
+# their arm row from ml._arms: new plans, the same rows.
 _REVERIFY: dict[str, int] = {
     "ml_split": 14,
     "ml_train": 14,
@@ -127,6 +130,28 @@ _REVERIFY: dict[str, int] = {
     "win_expanding_slope": 14,
     "agg_reaggregate": 14,
     "dq_observe_metrics": 14,
+    "ml_calibration_bins": 14,
+    "ml_confusion_matrix": 14,
+    "ml_brier_score": 14,
+    "ml_fairness_metrics": 14,
+    "ml_ece": 14,
+    "ml_isotonic_pav": 14,
+    "ml_km_greenwood": 14,
+    "ml_logreg_gd": 14,
+    "ml_hosmer_lemeshow": 14,
+    "ml_km_rmst": 14,
+    "ml_gbm_stumps": 14,
+    "ml_shap_linear": 14,
+    "ml_platt_scaling": 14,
+    "ml_logrank_test": 14,
+    "ml_cox_score": 14,
+    "ml_weibull_survival_grid": 14,
+    "ml_harrell_c": 14,
+    "ml_brier_decomposition": 14,
+    "ml_tjur_r2": 14,
+    "ml_mcc": 14,
+    "ml_risk_reduction": 14,
+    "ml_youden_j": 14,
 }
 
 

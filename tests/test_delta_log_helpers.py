@@ -181,3 +181,20 @@ def test_overlap_writes_carry_the_callers_job_group(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert got == ["overlap-probe", "overlap-probe"]
+
+
+def test_partition_values_plan_is_the_same_every_build(spark, sf_dir):
+    """scan_delta_partition_values lists its live files in path order, so
+    two builds give one normalized optimized plan (the file names differ
+    only by their write UUIDs)."""
+    from morphl_model_publishers_churning_users_spark.registry import get_queries
+
+    def plan(df):
+        s = df._jdf.queryExecution().optimizedPlan().toString()
+        s = re.sub(r"#\d+L?", "#", s)
+        return re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "UUID", s)
+
+    q = get_queries()["scan_delta_partition_values"]
+    first, second = plan(q(spark, sf_dir)), plan(q(spark, sf_dir))
+    assert "UUID" in first
+    assert first == second

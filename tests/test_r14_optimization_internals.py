@@ -185,3 +185,27 @@ def test_scan_is_underparallel_widens_on_unparseable_conf(tmp_path):
     assert not scan_is_underparallel(scan("4b"), 2)
     for raw in ("garbage", "0.5g", "m", "0"):
         assert scan_is_underparallel(scan(raw), 2), raw
+
+
+def test_scan_is_underparallel_packs_tiny_local_files(tmp_path):
+    """par + 1 tiny local files: Spark packs small files into shared
+    splits (each costs only openCostInBytes), so the file count proves
+    nothing and the byte bound decides — one split, under-parallel."""
+    par = 4
+    uris = []
+    for i in range(par + 1):
+        f = tmp_path / f"part-{i}.parquet"
+        f.write_bytes(b"x" * 10)
+        uris.append(f"file://{f}")
+
+    def scan(files):
+        conf = SimpleNamespace(get=lambda key, default: "128m")
+        return SimpleNamespace(
+            inputFiles=lambda: files, sparkSession=SimpleNamespace(conf=conf)
+        )
+
+    assert scan_is_underparallel(scan(uris), par)
+    # unreadable sizes: the file count stands in
+    remote = [u.replace("file://", "hdfs://nn") for u in uris]
+    assert not scan_is_underparallel(scan(remote), par)
+    assert scan_is_underparallel(scan(remote[:2]), par)
