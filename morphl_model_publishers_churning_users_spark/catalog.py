@@ -83,6 +83,10 @@ _SEMANTIC_CONFS = frozenset(
 # App ids that already had the package shipped to their Python workers.
 _pyfiles_shipped: set[str] = set()
 
+# App id -> the performance confs its launcher set (builder or
+# spark-submit). A launch conf is fixed for the life of the application.
+_launch_confs: dict[str, frozenset[str]] = {}
+
 
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
@@ -137,10 +141,20 @@ def ensure_confs(spark: SparkSession) -> None:
 
     Safe to call repeatedly; called by every table load so driver-owned
     sessions get the right behavior too. Raises if a result-changing conf
-    (``_SEMANTIC_CONFS``) cannot be set.
+    (``_SEMANTIC_CONFS``) cannot be set. A performance conf the launcher
+    set is left as launched (a config-axis run asks for it on purpose);
+    the result-changing ones are always forced.
     """
     _ship_package(spark)
+    sc = spark.sparkContext
+    launched = _launch_confs.get(sc.applicationId)
+    if launched is None:
+        conf = sc.getConf()
+        launched = frozenset(k for k in _RUNTIME_CONFS if conf.contains(k)) - _SEMANTIC_CONFS
+        _launch_confs[sc.applicationId] = launched
     for k, v in _RUNTIME_CONFS.items():
+        if k in launched:
+            continue
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -90,6 +90,34 @@ def revenue() -> Column:
     ).cast("double")
 
 
+def norm_text() -> Column:
+    """The normalized text of a document, the one text policy every
+    dedup, similarity and text-analysis operator starts from:
+    ``lower(trim(text))``. DuckDB twin: ``lower(trim(text))``."""
+    return F.lower(F.trim("text"))
+
+
+def words(text: Column | None = None) -> Column:
+    """The whitespace tokens of ``text`` (default ``trim(text)``):
+    ``split(text, '\\s+')``; ``words(norm_text())`` is the lowercase
+    token array. DuckDB twin: ``string_split_regex(text, '\\s+')``. The
+    default is built per call, as a classic Column needs an active
+    SparkContext."""
+    return F.split(F.trim("text") if text is None else text, r"\s+")
+
+
+def content_hash() -> Column:
+    """The exact-dedup key of a document: ``md5(lower(trim(text)))``.
+    DuckDB twin: ``md5(lower(trim(text)))``."""
+    return F.md5(norm_text())
+
+
+def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The non-empty corpus: ``documents`` rows whose trimmed text is not
+    empty. DuckDB twin: ``FROM documents WHERE length(trim(text)) > 0``."""
+    return t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+
+
 def with_stats(df: DataFrame, *aggs: Column) -> DataFrame:
     """``df`` with the one-row table ``df.agg(*aggs)`` appended to every
     row: the one spelling of a whole-table statistic joined back. The

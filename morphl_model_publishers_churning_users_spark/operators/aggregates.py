@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, by_day, ckpt, day_of, dsum, qdec, qround, qsum, t
+from ._shared import DSUM, by_day, ckpt, day_of, docs, dsum, norm_text, qdec, qround, qsum, t, words
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -2286,12 +2286,8 @@ def agg_heavy_hitters(spark, sf_dir, k: int = 50):
     (SpaceSaving/CMS+heap) deploys on Spark."""
     import pandas as pd
 
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-    )
-    toks = docs.select(F.explode("w").alias("term"))
+    corpus = docs(spark, sf_dir).select(words(norm_text()).alias("w"))
+    toks = corpus.select(F.explode("w").alias("term"))
 
     def mg_partition(batches):
         counters: dict[str, int] = {}

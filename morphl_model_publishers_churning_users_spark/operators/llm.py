@@ -21,7 +21,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from ..registry import register
-from ._shared import DSUM, ckpt, dsum, qdec, qround, qsum, scan_is_underparallel, t, with_stats
+from ._shared import (
+    DSUM, ckpt, content_hash, docs, dsum, norm_text, qdec, qround, qsum, scan_is_underparallel, t,
+    with_stats, words,
+)
 
 # ---------------------------------------------------------------- dedup
 
@@ -39,7 +42,7 @@ def llm_dedup_exact(spark, sf_dir):
     doc_id per group (deterministic survivor policy)."""
     d = t(spark, sf_dir, "documents")
     return (
-        d.select(F.md5(F.lower(F.trim("text"))).alias("content_hash"), "doc_id")
+        d.select(content_hash().alias("content_hash"), "doc_id")
         .groupBy("content_hash")
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("dup_count"))
     )
@@ -63,9 +66,7 @@ def _signed_corpus(spark, sf_dir):
     the stored set doubles as the exact-Jaccard input."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    shingled = _shingle_sets(
-        t(spark, sf_dir, "documents").select("doc_id", "text"), F.lower(F.trim("text"))
-    )
+    shingled = _shingle_sets(t(spark, sf_dir, "documents").select("doc_id", "text"), norm_text())
     vecs = HashingTF(
         inputCol="sarr", outputCol="features", numFeatures=1 << 18, binary=True
     ).transform(shingled)
@@ -155,16 +156,14 @@ def raw_dedup_simhash(spark, sf_dir):
     One explode + one aggregate; signature join is a hash shuffle on a
     single long — the textbook 100 TB near-dup first pass."""
     d = t(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
-    ).withColumn("h", F.xxhash64("w"))
+    toks = d.select("doc_id", F.explode(words()).alias("w")).withColumn("h", F.xxhash64("w"))
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{b}")
         for b in range(64)
     ]
-    agg = words.groupBy("doc_id").agg(*votes)
+    agg = toks.groupBy("doc_id").agg(*votes)
     # Assemble the signature: bit b set iff the vote is positive.
     sig = None
     for b in range(64):
@@ -197,9 +196,7 @@ def llm_dedup_simhash(spark, sf_dir):
     identical per-bit votes; a simhash that splits exact duplicates is
     broken by construction). Raw signatures via raw_dedup_simhash()."""
     sigs = raw_dedup_simhash(spark, sf_dir).select("doc_id", "simhash")
-    norm = t(spark, sf_dir, "documents").select(
-        "doc_id", F.lower(F.trim("text")).alias("norm")
-    )
+    norm = t(spark, sf_dir, "documents").select("doc_id", norm_text().alias("norm"))
     per_group = (
         norm.join(sigs, "doc_id")
         .groupBy("norm")
@@ -230,13 +227,27 @@ _NGRAM_SH_DUCK = (
 )
 
 
+def _bigrams():
+    """The string bigrams of the token array ``w``, in order:
+    ``transform(sequence(1, size(w) - 1), i -> concat_ws(' ',
+    element_at(w, i), element_at(w, i + 1)))``. DuckDB twin:
+    ``list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])``.
+    Callers keep their ``size(w) >= 2`` guard: on a one-word doc the
+    sequence is [1, 0] and ANSI ``element_at(w, 0)`` throws. Split
+    tokens are never null, so ``concat_ws`` and ``||`` agree."""
+    return F.expr(
+        "transform(sequence(1, size(w) - 1),"
+        " i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"
+    )
+
+
 def _shingle_sets(docs, text):
     """Every column of ``docs`` but ``text``, plus ``sarr`` (the doc's
     DISTINCT word-3-shingles, words split on whitespace from the
     ``text`` Column) and ``sz`` (its size, bigint). Docs with < 3 words
     have no shingles and are dropped. The one spelling of the shingle
     set: callers pass the normalization (``F.trim("text")`` for the
-    n-gram family, ``F.lower(F.trim("text"))`` for the MinHash family).
+    n-gram family, ``norm_text()`` for the MinHash family).
 
     The fixture lands as one small parquet file → one partition, and the
     shingle work would run single-threaded. Spread the RAW rows across
@@ -259,7 +270,7 @@ def _shingle_sets(docs, text):
     keep = [c for c in docs.columns if c != "text"]
     return (
         docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        .select(*keep, F.split(text, r"\s+").alias("w"))
+        .select(*keep, words(text).alias("w"))
         .filter(F.size("w") >= 3)
         .select(*keep, F.array_distinct(F.expr(_NGRAM_SH_SPARK)).alias("sarr"))
         .withColumn("sz", F.size("sarr").cast("bigint"))
@@ -676,7 +687,7 @@ FROM documents GROUP BY lang
 def llm_textstats(spark, sf_dir):
     """Corpus text statistics per language — document counts, char/word totals and means from one split-free length pass plus a word count per doc."""
     d = t(spark, sf_dir, "documents")
-    n_words = F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
+    n_words = F.size(words()).cast("bigint")
     sum_chars = dsum(F.col("n_chars").cast("double"))
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -734,8 +745,7 @@ def llm_quality(spark, sf_dir):
     """Heuristic quality scoring: length / punctuation / stopword-ratio
     signals with a pass/fail gate — all codegen expressions."""
     d = t(spark, sf_dir, "documents")
-    words = F.split(F.trim("text"), r"\s+")
-    n_words = F.size(words).cast("bigint")
+    n_words = F.size(words()).cast("bigint")
     n_stop = F.size(
         F.expr(f"filter(split(trim(text), '\\\\s+'), w -> w IN {_STOPWORDS})")
     ).cast("bigint")
@@ -771,7 +781,7 @@ def llm_tokens(spark, sf_dir):
         F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), F.lit(0)))
         .cast("bigint")
         .alias("n_bpe_tokens"),
-        F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_ws_tokens"),
+        F.size(words()).cast("bigint").alias("n_ws_tokens"),
         F.ceil(F.col("n_chars") / 4.0).cast("bigint").alias("n_est_tokens"),
     )
 
@@ -1156,7 +1166,7 @@ def llm_pack(spark, sf_dir):
     toks = d.select(
         "doc_id",
         "lang",
-        F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens"),
+        F.size(words()).cast("bigint").alias("n_tokens"),
     )
     w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     packed = toks.withColumn(
@@ -1412,9 +1422,7 @@ def llm_dedup_keep_best(spark, sf_dir):
     sort over the corpus; the oracle's row_number formulation is the
     semantic spec."""
     d = t(spark, sf_dir, "documents")
-    hashed = d.select(
-        "doc_id", "lang", "n_chars", F.md5(F.lower(F.trim("text"))).alias("content_hash")
-    )
+    hashed = d.select("doc_id", "lang", "n_chars", content_hash().alias("content_hash"))
     best = hashed.groupBy("content_hash").agg(
         F.expr("max_by(struct(doc_id, lang, n_chars), struct(n_chars, -doc_id))").alias("b"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -1487,14 +1495,10 @@ def llm_ngram_freq(spark, sf_dir):
     count ties would otherwise make LIMIT nondeterministic and the
     whole result incomparable."""
     d = t(spark, sf_dir, "documents")
-    bigram_expr = (
-        "transform(sequence(1, size(w) - 1),"
-        " i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"
-    )
     return (
         d.select(F.split(F.trim("text"), " ").alias("w"))
         .filter(F.size("w") >= 2)  # ANSI: sequence(1,0)=[1,0] indexes OOB on 1-word docs
-        .select(F.explode(F.expr(bigram_expr)).alias("bigram"))
+        .select(F.explode(_bigrams()).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
@@ -1607,9 +1611,7 @@ def llm_repetition(spark, sf_dir):
     grained enough that no reducer sees more than one doc's bigrams.
     Both engines compute identical integer counts and one final double
     division, so the oracle is a full value twin."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w")
-    )
+    d = t(spark, sf_dir, "documents").select("doc_id", words(norm_text()).alias("w"))
     # NB: DuckDB's range(1, greatest(len-k, 1)) twin emits one partial
     # gram for short docs, so both sides use the same greatest(..., 1)
     # bound. try_element_at (NOT element_at): under Spark 4's default
@@ -1750,9 +1752,7 @@ def llm_mixture_balance(spark, sf_dir):
     so at 100 TB the only data-sized cost is the map-side token count.
     Shares are rounded with the bit-identical floor(x·1e6+0.5)/1e6 form
     on both engines."""
-    d = t(spark, sf_dir, "documents").select(
-        "source", "lang", F.size(F.split(F.trim("text"), r"\s+")).alias("n_tok")
-    )
+    d = t(spark, sf_dir, "documents").select("source", "lang", F.size(words()).alias("n_tok"))
     # Materialize the vocabulary-sized group table: it feeds both the
     # corpus-total scalar and the final share projection, and without
     # this the corpus tokenize+aggregate pass runs once per consumer
@@ -1816,7 +1816,7 @@ def llm_winnow_fingerprint(spark, sf_dir):
     bit-identical on both engines; windows shorter than 4 degrade to
     one whole-doc fingerprint on both sides."""
     d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w")
+        "doc_id", words(norm_text()).alias("w")
     ).filter(F.size("w") >= 3)
     kg = d.select(
         "doc_id",
@@ -2027,7 +2027,7 @@ def llm_dedup_minhash_sql(spark, sf_dir):
     # artifact in production — same rationale as the MinHashLSH
     # signature checkpoint in raw_dedup_fuzzy).
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    doc_sh = ckpt(_km_bases(_shingle_sets(docs, F.lower(F.trim("text")))))
+    doc_sh = ckpt(_km_bases(_shingle_sets(docs, norm_text())))
     sig = doc_sh.select("doc_id", _km_signature().alias("h"))
     band_arr = F.array(
         *[
@@ -2176,18 +2176,14 @@ def llm_perplexity_filter(spark, sf_dir):
     vocab broadcasts; an open 100 TB web-corpus vocab would OOM an
     unconditional broadcast hint, so past the bound the hint is dropped
     and AQE's runtime shuffle stats pick the join strategy."""
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-    )
-    words = docs.select("doc_id", F.explode("w").alias("word"))
+    wdocs = docs(spark, sf_dir).select("doc_id", words(norm_text()).alias("w"))
+    toks = wdocs.select("doc_id", F.explode("w").alias("word"))
     # The vocab LM is the persisted model artifact: materialize it once —
     # it feeds both the corpus-total scalar and the scoring join, and
     # without this the tokenize→explode→count pass over the corpus runs
     # twice (caught by the duplicate-scan plan sweep).
     vocab = ckpt(
-        words.groupBy("word")
+        toks.groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     corpus = vocab.agg(
@@ -2201,7 +2197,7 @@ def llm_perplexity_filter(spark, sf_dir):
     # vocab side fits (autoBroadcastJoinThreshold), and leave it a
     # shuffle join when a web-scale vocabulary exceeds executor memory.
     return (
-        words.join(vocab, "word")
+        toks.join(vocab, "word")
         .crossJoin(F.broadcast(corpus))
         .groupBy("doc_id")
         .agg(
@@ -2253,8 +2249,8 @@ def llm_cc_pipeline(spark, sf_dir):
         "lang",
         "source",
         "n_chars",
-        F.size(F.split(F.lower(F.trim("text")), r"\s+")).alias("n_words"),
-        F.md5(F.lower(F.trim("text"))).alias("content_hash"),
+        F.size(words(norm_text())).alias("n_words"),
+        content_hash().alias("content_hash"),
     )
     gated = d.filter(
         (F.col("n_words") >= 20)
@@ -2313,7 +2309,7 @@ def llm_sample_weighted(spark, sf_dir):
     tok = t(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.split(F.lower(F.trim("text")), r"\s+")).cast("bigint").alias("n_tokens"),
+        F.size(words(norm_text())).cast("bigint").alias("n_tokens"),
     )
     # Materialize the per-source totals (tiny): they feed both the
     # corpus-total scalar and the weight table — without this the
@@ -2385,7 +2381,7 @@ def llm_dedup_incremental(spark, sf_dir):
     — the incremental cost never re-touches history."""
     hashed = t(spark, sf_dir, "documents").select(
         "doc_id",
-        F.md5(F.lower(F.trim("text"))).alias("content_hash"),
+        content_hash().alias("content_hash"),
         (F.col("doc_id") % 2 == 0).alias("in_index"),
     )
     index_hashes = (
@@ -2544,9 +2540,7 @@ def llm_bm25(spark, sf_dir):
     doc_id. At 100 TB with an open vocabulary the same plan runs off a
     posting-list table (llm_tfidf's explode output) instead of
     array_filter; the per-query shape here never touches it."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w")
-    )
+    d = t(spark, sf_dir, "documents").select("doc_id", words(norm_text()).alias("w"))
     stats = d.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg(F.size("w").cast("double")).alias("avgdl"),
@@ -2626,7 +2620,7 @@ def llm_dedup_substring(spark, sf_dir):
     their shared-run count."""
     docs = (
         t(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
+        .select("doc_id", words(norm_text()).alias("w"))
         .filter(F.size("w") >= 8)
     )
     # The window table feeds three consumers (frequency gate + both join
@@ -2772,12 +2766,8 @@ def llm_zipf_fit(spark, sf_dir):
     both engines fit on bit-identical points. The top-100 restriction
     keeps the fit o(1) regardless of vocabulary size — at 100 TB the
     word count is the only corpus-sized pass."""
-    words = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
-    )
-    freq = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
+    toks = docs(spark, sf_dir).select(F.explode(words(norm_text())).alias("word"))
+    freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy(F.desc("c"), F.asc("word"))
     top = freq.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 100)
     pts = top.select(
@@ -2841,16 +2831,12 @@ def llm_keyword_extract(spark, sf_dir):
     the driver hash). The idf ln() is quantized at 1e-9 and the score
     at 1e-6 before ranking so cross-engine ties are impossible by
     construction; remaining equal-score ties break lexically."""
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    corpus = docs(spark, sf_dir).select("doc_id", words(norm_text()).alias("w"))
+    n_docs = corpus.agg(F.count(F.lit(1)).cast("double").alias("n"))
     # TF feeds both the DF aggregate and the scoring join — materialize
     # the explode→count pass once (duplicate-scan sweep discipline).
     tfc = ckpt(
-        docs.select("doc_id", F.explode("w").alias("term"))
+        corpus.select("doc_id", F.explode("w").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
@@ -2918,14 +2904,13 @@ def llm_token_budget_trim(spark, sf_dir):
     embarrassingly parallel across sources, which is exactly how a
     100 TB mixture build shards. Integer arithmetic end to end: the
     cut row is bit-determined, no float drift can move the boundary."""
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
+    corpus = (
+        docs(spark, sf_dir)
         .select(
             "doc_id",
             "source",
             "n_chars",
-            F.size(F.split(F.lower(F.trim("text")), r"\s+")).cast("bigint").alias("n_tok"),
+            F.size(words(norm_text())).cast("bigint").alias("n_tok"),
         )
     )
     w = (
@@ -2933,7 +2918,7 @@ def llm_token_budget_trim(spark, sf_dir):
         .orderBy(F.desc("n_chars"), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return docs.select(
+    return corpus.select(
         "doc_id",
         "source",
         "n_tok",
@@ -2992,17 +2977,13 @@ def llm_importance_resample(spark, sf_dir):
     selection shape: LM build = two hash aggs, scoring = one join +
     one keyed agg over the token stream, no model server in the
     loop."""
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", "lang", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-    )
-    words = ckpt(docs.select("doc_id", "lang", F.explode("w").alias("word")))
-    corpus_lm = ckpt(words.groupBy("word").agg(
+    corpus = docs(spark, sf_dir).select("doc_id", "lang", words(norm_text()).alias("w"))
+    toks = ckpt(corpus.select("doc_id", "lang", F.explode("w").alias("word")))
+    corpus_lm = ckpt(toks.groupBy("word").agg(
         F.count(F.lit(1)).cast("double").alias("cc")
     ))
     target_lm = (
-        words.filter(F.col("lang") == "en")
+        toks.filter(F.col("lang") == "en")
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("double").alias("ct"))
     )
@@ -3016,7 +2997,7 @@ def llm_importance_resample(spark, sf_dir):
         9,
     ) - qround(F.log((F.col("cc") + 1.0) / (F.col("nc") + F.col("v"))), 9)
     scored = (
-        words.join(corpus_lm, "word")
+        toks.join(corpus_lm, "word")
         .join(target_lm, "word", "left")
         .crossJoin(F.broadcast(scal))
         .groupBy("doc_id", "lang")
@@ -3066,14 +3047,10 @@ def llm_blocklist_filter(spark, sf_dir):
     an open 10k-term blocklist the same plan swaps the IN-list for a
     broadcast join against the term table — the per-row shape is
     unchanged."""
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
-    )
+    corpus = docs(spark, sf_dir).select("doc_id", words(norm_text()).alias("w"))
     inlist = ", ".join(f"'{x}'" for x in _BLOCKLIST)
     hits = F.expr(f"size(filter(w, x -> x IN ({inlist})))")
-    return docs.select(
+    return corpus.select(
         "doc_id",
         hits.cast("bigint").alias("n_hits"),
         F.size("w").cast("bigint").alias("n_words"),
@@ -3159,14 +3136,11 @@ def llm_template_prefix(spark, sf_dir):
     only groups with ≥ 2 docs, with the earliest doc as exemplar —
     O(templates), not O(corpus), output."""
     pref = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
+        docs(spark, sf_dir)
         .select(
             "doc_id",
             "source",
-            F.array_join(
-                F.slice(F.split(F.lower(F.trim("text")), r"\s+"), 1, 10), " "
-            ).alias("prefix"),
+            F.array_join(F.slice(words(norm_text()), 1, 10), " ").alias("prefix"),
         )
     )
     return (
@@ -3217,13 +3191,13 @@ def llm_odds_ratio_terms(spark, sf_dir):
     computed per vocab row and top-15 ranked (ties break on the word).
     The corpus-scale work is exactly one explode + one hash aggregate —
     the same shape at 100 TB, with the vocab table as the only state."""
-    words = (
-        t(spark, sf_dir, "documents")
-        .filter((F.length(F.trim("text")) > 0) & F.col("lang").isin("en", "de"))
-        .select("lang", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
+    toks = (
+        docs(spark, sf_dir)
+        .filter(F.col("lang").isin("en", "de"))
+        .select("lang", F.explode(words(norm_text())).alias("word"))
     )
     counts = ckpt(
-        words.groupBy("word")
+        toks.groupBy("word")
         .agg(
             F.sum((F.col("lang") == "en").cast("long")).cast("bigint").alias("n_en"),
             F.sum((F.col("lang") == "de").cast("long")).cast("bigint").alias("n_de"),
@@ -3297,22 +3271,11 @@ def llm_kn_bigram_lm(spark, sf_dir):
     Docs with < 2 words have no bigrams and drop out on the cheap
     word-count guard."""
     toks = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
+        docs(spark, sf_dir)
+        .select("doc_id", words(norm_text()).alias("w"))
         .filter(F.size("w") >= 2)
     )
-    bgrows = ckpt(
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(w) - 1), "
-                    "i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))"
-                )
-            ).alias("g"),
-        )
-    )
+    bgrows = ckpt(toks.select("doc_id", F.explode(_bigrams()).alias("g")))
     bgc = ckpt(
         bgrows.groupBy("g")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
@@ -3378,20 +3341,16 @@ def llm_vocab_coverage(spark, sf_dir):
     onto the same token stream for a membership flag; O(docs) output.
     The rank cut is on the BOUNDED vocab table, so the corpus never
     sorts globally."""
-    words = ckpt(
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
-    )
+    toks = ckpt(docs(spark, sf_dir).select("doc_id", F.explode(words(norm_text())).alias("word")))
     wv = Window.orderBy(F.desc("cnt"), F.asc("word"))
     vocab = (
-        words.groupBy("word")
+        toks.groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("r", F.row_number().over(wv))
         .filter(F.col("r") <= 1000)
         .select("word", F.lit(True).alias("in_vocab"))
     )
-    flagged = words.join(F.broadcast(vocab), "word", "left")
+    flagged = toks.join(F.broadcast(vocab), "word", "left")
     return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.sum(F.coalesce(F.col("in_vocab"), F.lit(False)).cast("long"))
@@ -3498,15 +3457,11 @@ def llm_burstiness(spark, sf_dir):
     densification, which is what makes this computable at 100 TB. One
     integer-ratio division per word, quantized at 1e-6; ties on the
     total-count ranking break lexically."""
-    words = ckpt(
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
-    )
-    percount = words.groupBy("word", "doc_id").agg(
+    toks = ckpt(docs(spark, sf_dir).select("doc_id", F.explode(words(norm_text())).alias("word")))
+    percount = toks.groupBy("word", "doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    nd = words.agg(F.countDistinct("doc_id").cast("double").alias("n"))
+    nd = toks.agg(F.countDistinct("doc_id").cast("double").alias("n"))
     stats = (
         percount.crossJoin(F.broadcast(nd))
         .groupBy("word", "n")
@@ -3577,8 +3532,7 @@ def llm_compression_filter(spark, sf_dir):
         return s.map(ratio)
 
     d = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
+        docs(spark, sf_dir)
         .select("doc_id", F.length(F.trim("text")).cast("bigint").alias("n_chars"), "text")
     )
     scored = d.withColumn("ratio", zratio("text"))
@@ -3806,7 +3760,7 @@ def llm_kwic_spans(spark, sf_dir):
     vs DuckDB `list[a:b]`) — exactly the off-by-one seam the oracle
     hash exists to catch."""
     d = t(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.split(F.trim("text"), r"\s+").alias("words"))
+    w = d.select("doc_id", words().alias("words"))
     hits = w.withColumn("pos", F.array_position("words", "spark")).filter(
         F.col("pos") > 0
     )
@@ -3904,7 +3858,7 @@ def llm_lsh_tuning_curve(spark, sf_dir):
     self-join keyed by (layout, band, key), one exact-truth join."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     # feeds signatures AND exact truth
-    doc_sh = ckpt(_km_bases(_shingle_sets(docs, F.lower(F.trim("text")))))
+    doc_sh = ckpt(_km_bases(_shingle_sets(docs, norm_text())))
     sig = ckpt(doc_sh.select("doc_id", _km_signature().alias("h")))  # all four layouts
     # exact ground truth via the blocked shingle join; feeds the
     # per-config join AND the total
@@ -3996,8 +3950,8 @@ def llm_corpus_card(spark, sf_dir):
         "lang",
         "source",
         "n_chars",
-        F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens"),
-        F.md5(F.lower(F.trim("text"))).alias("chash"),
+        F.size(words()).cast("bigint").alias("n_tokens"),
+        content_hash().alias("chash"),
     ))  # feeds the dup scalar AND the main rollup
     dups = (F.count(F.lit(1)) - F.countDistinct("chash")).cast("bigint")
     return with_stats(toks, dups.alias("n_exact_dups")).groupBy("n_exact_dups").agg(
@@ -4097,7 +4051,7 @@ def llm_span_corruption(spark, sf_dir):
     any corpus size."""
     d = t(spark, sf_dir, "documents")
     sized = d.select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
+        "doc_id", words().alias("w")
     ).select("doc_id", "w", F.size("w").cast("bigint").alias("n")).filter(
         F.col("n") >= 12
     )
@@ -4218,7 +4172,7 @@ def llm_bpe_first_merges(spark, sf_dir):
     Integer counts, deterministic ties."""
     d = t(spark, sf_dir, "documents")
     wc = (
-        d.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
+        d.select(F.explode(words()).alias("w"))
         .filter(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -4269,8 +4223,8 @@ def llm_curriculum_order(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     scored = d.select(
         "doc_id",
-        F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
-        F.size(F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias("n_types"),
+        F.size(words()).alias("n_tokens"),
+        F.size(F.array_distinct(words())).alias("n_types"),
     ).filter(F.col("n_tokens") > 0)
     ttr = F.col("n_types").cast("double") / F.col("n_tokens")
     diff = scored.select(
@@ -4326,9 +4280,7 @@ def llm_watermark_ztest(spark, sf_dir):
     z-test is arithmetic on two integers per doc. Short docs (< 16
     tokens) excluded — the normal approximation is dishonest there."""
     d = t(spark, sf_dir, "documents")
-    flagged = d.select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
-    ).select(
+    flagged = d.select("doc_id", F.explode(words()).alias("w")).select(
         "doc_id",
         (
             F.conv(F.substring(F.md5("w"), 1, 6), 16, 10).cast("bigint") % 2 == 0
@@ -4487,7 +4439,7 @@ def llm_lsh_bucket_skew(spark, sf_dir):
     # checkpoint (CollapseProject would re-inline a lazy staging
     # projection into the seed loop); see OPTIMIZATION_r13.md.
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    sets = _shingle_sets(docs, F.lower(F.trim("text")))
+    sets = _shingle_sets(docs, norm_text())
     doc_sh = ckpt(_km_bases(sets).select("doc_id", "xs"))
     sig = doc_sh.select("doc_id", _km_signature().alias("h"))
     bands = sig.select(
@@ -4595,7 +4547,7 @@ def llm_dedup_impact(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     w = Window.partitionBy("chash").orderBy("doc_id")
     hashed = d.select(
-        "doc_id", "n_chars", F.md5(F.lower(F.trim("text"))).alias("chash")
+        "doc_id", "n_chars", content_hash().alias("chash")
     ).withColumn("rn", F.row_number().over(w))
     keep = (F.col("rn") == 1).cast("long")
     return hashed.agg(
@@ -4787,9 +4739,9 @@ def llm_agreement_kappa(spark, sf_dir):
     confusion table AND the marginals — agreement on a 100 TB corpus
     costs exactly one scan, no join between the raters because they
     ride the same row."""
-    d = t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    d = docs(spark, sf_dir)
     trimmed = F.trim("text")
-    wc = F.size(F.split(trimmed, r"\s+"))
+    wc = F.size(words())
     mwl = F.length(trimmed).cast("double") / wc
     lab = d.select(
         F.when((mwl >= 3.0) & (mwl <= 7.0), 1).otherwise(0).alias("a"),
@@ -4905,12 +4857,11 @@ def llm_split_leakage(spark, sf_dir):
     escalation for paraphrase-level leakage is llm_dedup_fuzzy
     composed over the same split key."""
     base = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
+        docs(spark, sf_dir)
         .select(
             "doc_id",
             (F.col("doc_id") % 10 >= 8).cast("int").alias("is_test"),
-            F.md5(F.lower(F.trim("text"))).alias("h_exact"),
+            content_hash().alias("h_exact"),
             F.md5(
                 F.trim(
                     F.regexp_replace(
@@ -4996,7 +4947,7 @@ def llm_readability(spark, sf_dir):
     long sentence instead of dividing by zero. Integer counts make
     every division cross-engine identical. Cites the same whitespace
     tokenization contract as llm_textstats/llm_tokens."""
-    d = t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    d = docs(spark, sf_dir)
     n_sent = F.greatest(
         F.lit(1), F.size(F.regexp_extract_all("text", F.lit("[.!?]+"), F.lit(0)))
     ).cast("bigint")
@@ -5008,7 +4959,7 @@ def llm_readability(spark, sf_dir):
     counted = d.select(
         "doc_id",
         n_sent.alias("n_sentences"),
-        F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_words"),
+        F.size(words()).cast("bigint").alias("n_words"),
         syl.cast("bigint").alias("n_syllables"),
     )
     wps = F.col("n_words").cast("double") / F.col("n_sentences")
@@ -5067,7 +5018,7 @@ def llm_mattr(spark, sf_dir):
     arithmetic is spelled to the same element set in both engines
     (Spark slice takes a LENGTH, DuckDB list_slice an inclusive
     end)."""
-    d = t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    d = docs(spark, sf_dir)
     w = 50
     mattr_long = (
         F.expr(
@@ -5077,11 +5028,11 @@ def llm_mattr(spark, sf_dir):
         )
         / (
             F.lit(float(w))
-            * (F.size(F.split(F.trim("text"), r"\s+")) - F.lit(w) + 1)
+            * (F.size(words()) - F.lit(w) + 1)
         )
     )
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
-    n_types = F.size(F.array_distinct(F.split(F.trim("text"), r"\s+"))).cast("bigint")
+    n_tokens = F.size(words()).cast("bigint")
+    n_types = F.size(F.array_distinct(words())).cast("bigint")
     ttr = n_types.cast("double") / n_tokens
     return d.select(
         "doc_id",
@@ -5165,16 +5116,11 @@ def llm_greedy_coverage(spark, sf_dir):
     against. Gains are exact integers, so cross-engine parity needs no
     quantization anywhere; coverage_pct divides two exact counts.
     The oracle unrolls the identical 10 rounds as CTEs."""
-    bigram_expr = (
-        "transform(sequence(1, size(w) - 1),"
-        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
-    )
     toks = ckpt(
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
+        docs(spark, sf_dir)
+        .select("doc_id", words(norm_text()).alias("w"))
         .filter(F.size("w") >= 2)
-        .select("doc_id", F.explode(F.expr(bigram_expr)).alias("word"))
+        .select("doc_id", F.explode(_bigrams()).alias("word"))
         .distinct()
     )
     uni = toks.agg(F.countDistinct("word").cast("bigint").alias("u"))
@@ -5265,9 +5211,9 @@ def llm_hill_tail_index(spark, sf_dir):
     ranks (word tiebreak), each log-excess q9-quantized into a
     DECIMAL sum, one division at the end. One token aggregate + one
     ordered window over the vocabulary frame."""
-    d = t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    d = docs(spark, sf_dir)
     freqs = ckpt(
-        d.select(F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
+        d.select(F.explode(words(norm_text())).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
     )
@@ -5467,24 +5413,24 @@ def llm_pmi_collocations(spark, sf_dir):
     aggregate + one unigram aggregate + two marginal joins (unigram
     table bounded by vocabulary — broadcast at any corpus size);
     ln q9-quantized, top-20 rank-deterministic."""
-    d = t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    words = ckpt(d.select(F.split(F.lower(F.trim("text")), r"\s+").alias("w")))
+    d = docs(spark, sf_dir)
+    toks = ckpt(d.select(words(norm_text()).alias("w")))
     bigram_expr = (
         "transform(sequence(1, size(w) - 1),"
         " i -> named_struct('a', element_at(w, i), 'b', element_at(w, i + 1)))"
     )
     bg = (
-        words.filter(F.size("w") >= 2)
+        toks.filter(F.size("w") >= 2)
         .select(F.explode(F.expr(bigram_expr)).alias("bg"))
         .groupBy(F.col("bg.a").alias("a"), F.col("bg.b").alias("b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("nab"))
     )
     uc = ckpt(
-        words.select(F.explode("w").alias("word"))
+        toks.select(F.explode("w").alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    n_docs = words.count()  # bounded driver scalar (doc count for bigram total)
+    n_docs = toks.count()  # bounded driver scalar (doc count for bigram total)
     tot = uc.agg(
         F.sum("n").cast("double").alias("nt"),
         (F.sum("n") - F.lit(n_docs)).cast("double").alias("nbg"),
@@ -5580,11 +5526,7 @@ def llm_burrows_delta(spark, sf_dir):
     DECIMAL, zero-variance words drop on both sides identically.
     Bounded everywhere after the one token aggregate: 30 words x 5
     groups x 10 pairs."""
-    toks = ckpt(
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("lang", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
-    )
+    toks = ckpt(docs(spark, sf_dir).select("lang", F.explode(words(norm_text())).alias("word")))
     top_words = (
         toks.groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -5685,11 +5627,7 @@ def llm_dedup_by_source(spark, sf_dir):
     groups joined back once — pair counts come from per-group
     source-count products, never materializing the pairs at fact
     scale. Exact integers throughout."""
-    hashed = ckpt(
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("source", F.md5(F.lower(F.trim("text"))).alias("h"))
-    )
+    hashed = ckpt(docs(spark, sf_dir).select("source", content_hash().alias("h")))
     per_hs = hashed.groupBy("h", "source").agg(F.count(F.lit(1)).alias("c"))
     dup_groups = (
         per_hs.groupBy("h").agg(F.sum("c").alias("tot")).filter(F.col("tot") > 1)
@@ -5828,20 +5766,15 @@ def llm_self_similarity(spark, sf_dir):
     pairs by construction (one offset self-join, never n^2), exact
     integer set sizes, one division per pair q9-quantized into the
     DECIMAL mean."""
-    bigram_expr = (
-        "array_distinct(transform(sequence(1, size(w) - 1),"
-        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1))))"
-    )
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w"))
+    corpus = (
+        docs(spark, sf_dir)
+        .select("doc_id", words(norm_text()).alias("w"))
         .filter(F.size("w") >= 2)
     )
     grams = ckpt(
-        docs.select(
+        corpus.select(
             F.row_number().over(Window.orderBy("doc_id")).cast("bigint").alias("rn"),
-            F.expr(bigram_expr).alias("bg"),
+            F.array_distinct(_bigrams()).alias("bg"),
         ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()).cast("bigint"))
     )
     a = grams.select("rn", "n", F.col("bg").alias("ba"))

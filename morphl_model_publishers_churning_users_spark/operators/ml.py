@@ -20,7 +20,9 @@ from pyspark.sql import Window
 
 from ..plans import churn
 from ..registry import register
-from ._shared import by_day, ckpt, day_of, dsum, qdec, qround, qsum, revenue, t, with_stats
+from ._shared import (
+    by_day, ckpt, day_of, docs, dsum, qdec, qround, qsum, revenue, t, with_stats, words,
+)
 
 # Exact anchor shared by most ML oracles: the feature matrix has one row
 # per user with ≥1 event, so COUNT(DISTINCT user_id) over events is the
@@ -4126,11 +4128,11 @@ def _nb_scored(spark, sf_dir):
     """Per-(doc, class) quantized NB log-scores — the model surface
     shared by ml_naive_bayes (argmax) and llm_uncertainty_sample
     (margin). Twin of the _NB_SCORED_SQL CTE prefix."""
-    d = t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    d = docs(spark, sf_dir)
     tok = d.select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.trim("text"), r"\s+")).alias("word"),
+        F.explode(words()).alias("word"),
     )
     counts = ckpt(
         tok.groupBy("doc_id", "lang", "word").agg(

@@ -31,7 +31,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 
 from ..registry import register
-from ._shared import qround, t, with_stats
+from ._shared import norm_text, qround, t, with_stats, words
 
 _MAGIC = b"SY1"
 _A1, _A2 = 2654435761, 40503  # affine sample-stream multipliers
@@ -370,11 +370,11 @@ def mm_caption_align(spark, sf_dir):
     explode-aggregate, one equi-join on the pair key, linear in total
     words. A real deployment swaps the hashed histogram for a text-tower
     embedding; the pairing join and the sparse-dot shape are unchanged."""
-    words = t(spark, sf_dir, "documents").select(
+    toks = t(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"),
+        F.explode(words(norm_text())).alias("word"),
     )
-    bucketed = words.groupBy(
+    bucketed = toks.groupBy(
         "doc_id",
         (
             F.conv(F.substring(F.md5("word"), 1, 13), 16, 10).cast("bigint") % 64

@@ -1476,42 +1476,31 @@ def scan_iceberg_snapshot(spark, sf_dir):
     )
     cutoff = F.lit("2000-01-01").cast("timestamp_ntz")
     tbl = scratch_dir("iceberg_snapshot")
-    d1, d2, d3 = (os.path.join(tbl, "data", b) for b in ("b1", "b2", "c1"))
+    rows = "o_orderkey bigint, price double"
 
-    def write_and_list(df, path, n_files):
-        df.select("o_orderkey", "price").repartition(n_files).write.mode(
+    def write(df, sub, n):
+        """The URIs of ``df`` written as exactly ``n`` files."""
+        return [_uri(tbl, p) for p in _write_slice(tbl, df.select("o_orderkey", "price"), sub, n)]
+
+    def manifest(snap, uris):
+        """Commit snapshot ``snap``'s manifest and read it back, as a
+        reader resolves a snapshot: from its manifest, never a listing."""
+        mpath = os.path.join(tbl, "manifests", f"v{snap}")
+        spark.createDataFrame([(u,) for u in uris], "path string").write.mode(
             "overwrite"
-        ).parquet(path)
-        return (
-            spark.read.parquet(path)
-            .select(F.col("_metadata.file_path").alias("path"))
-            .distinct()
-        )
+        ).parquet(mpath)
+        return [r["path"] for r in spark.read.schema("path string").parquet(mpath).collect()]
 
-    base = o.filter(F.col("o_orderdate") < cutoff)
-    appended = o.filter(F.col("o_orderdate") >= cutoff)
-    f1 = write_and_list(base, d1, 4)
-    f2 = write_and_list(appended, d2, 2)
+    b1 = write(o.filter(F.col("o_orderdate") < cutoff), "b1", 4)
+    b2 = write(o.filter(F.col("o_orderdate") >= cutoff), "b2", 2)
+    v1 = manifest(1, b1)
     # Compaction rewrites v1's content from v1's own manifest paths —
     # not from the filter predicate — exactly as a table service would.
-    m1 = os.path.join(tbl, "manifests", "v1")
-    f1.write.mode("overwrite").parquet(m1)
-    v1_paths = [r["path"] for r in spark.read.parquet(m1).collect()]  # O(files)
-    f3 = write_and_list(spark.read.parquet(*v1_paths), d3, 1)
-
-    manifests = {
-        1: f1,
-        2: f1.unionByName(f2),
-        3: f3.unionByName(f2),
-    }
+    c1 = write(spark.read.schema(rows).parquet(*v1), "c1", 1)
+    snapshots = {1: v1, 2: manifest(2, v1 + b2), 3: manifest(3, c1 + b2)}
     out = None
-    for snap, files in manifests.items():
-        mpath = os.path.join(tbl, "manifests", f"v{snap}")
-        if snap != 1:  # v1 already written above
-            files.write.mode("overwrite").parquet(mpath)
-        paths = [r["path"] for r in spark.read.parquet(mpath).collect()]
-        snap_df = spark.read.parquet(*paths)
-        agg = snap_df.agg(
+    for snap, paths in snapshots.items():
+        agg = spark.read.schema(rows).parquet(*paths).agg(
             F.count_distinct(F.col("_metadata.file_path")).cast("bigint").alias("n_files"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             dsum(F.col("price")).alias("sum_total"),
@@ -1588,7 +1577,7 @@ def _write_slice(tbl, df, sub, n):
     files = _part_files(tbl, sub)
     if len(files) != n:
         raise AssertionError(
-            f"Delta fixture slice {sub}: expected {n} parquet files, got "
+            f"fixture slice {sub}: expected {n} parquet files, got "
             f"{len(files)} — fixture too small/skewed for the hard-coded "
             f"file-count oracle"
         )

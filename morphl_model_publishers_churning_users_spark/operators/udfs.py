@@ -21,7 +21,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
 from ..registry import register
-from ._shared import qround, t
+from ._shared import docs, qround, t
 
 
 @register(
@@ -388,7 +388,7 @@ def udf_pandas_struct(spark, sf_dir):
             {"n_chars": n_chars, "n_words": n_words, "chars_per_word": cpw}
         )
 
-    d = t(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
+    d = docs(spark, sf_dir)
     return d.select("doc_id", textshape("text").alias("s")).select(
         "doc_id", "s.n_chars", "s.n_words", "s.chars_per_word"
     )

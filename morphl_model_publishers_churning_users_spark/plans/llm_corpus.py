@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
-from ..operators._shared import with_stats
+from ..operators._shared import content_hash, with_stats, words
 
 
 def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -26,8 +26,7 @@ def run(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality/token metadata."""
     d = table(spark, sf_dir, "documents")
 
-    words = F.split(F.trim("text"), r"\s+")
-    n_words = F.size(words).cast("bigint")
+    n_words = F.size(words()).cast("bigint")
     scored = d.select(
         "doc_id",
         "text",
@@ -36,7 +35,7 @@ def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         n_words.alias("n_words"),
         F.ceil(F.col("n_chars") / 4.0).cast("bigint").alias("n_est_tokens"),
-        F.md5(F.lower(F.trim("text"))).alias("content_hash"),
+        content_hash().alias("content_hash"),
     )
 
     gated = scored.filter((F.col("n_words") >= 10) & (F.col("n_chars") >= 50))

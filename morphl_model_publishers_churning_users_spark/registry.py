@@ -70,7 +70,11 @@ _ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 # _day_grid), which moved their plans but not their rows. The ml_* keys
 # after dq_observe_metrics take the score's max from the recency spine's
 # statistics row (ml._recency), their survival frame from ml._tenure or
-# their arm row from ml._arms: new plans, the same rows.
+# their arm row from ml._arms: new plans, the same rows. The last three
+# take their bigrams from llm._bigrams (concat_ws, where they spelled
+# concat) or write and read their snapshot slices through the shared
+# scans._write_slice and schema'd reads: new checkpointed or collected
+# frames, the same rows.
 _REVERIFY: dict[str, int] = {
     "ml_split": 14,
     "ml_train": 14,
@@ -152,6 +156,9 @@ _REVERIFY: dict[str, int] = {
     "ml_mcc": 14,
     "ml_risk_reduction": 14,
     "ml_youden_j": 14,
+    "llm_greedy_coverage": 14,
+    "llm_self_similarity": 14,
+    "scan_iceberg_snapshot": 14,
 }
 
 

@@ -22,7 +22,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .catalog import ensure_confs
+from .catalog import _RUNTIME_CONFS, ensure_confs
 
 
 def build_session(app_name: str = "mpcu-spark", cpus: int | None = None) -> SparkSession:
@@ -34,12 +34,6 @@ def build_session(app_name: str = "mpcu-spark", cpus: int | None = None) -> Spar
         # One shuffle partition per core in local mode; AQE coalesces further.
         # On a real cluster this would be ~2-3x total cores (set per deploy).
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -56,6 +50,9 @@ def build_session(app_name: str = "mpcu-spark", cpus: int | None = None) -> Spar
         # SPARK_GRAFT_CHECKPOINT_DIR); static, so it is set here.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
+    # The engine's runtime confs (catalog._RUNTIME_CONFS), set at launch.
+    for k, v in _RUNTIME_CONFS.items():
+        builder = builder.config(k, v)
     # Optional config-axis overrides for test/diagnostic sessions (r12):
     # SPARK_GRAFT_EXTRA_CONFS="k1=v1;k2=v2" lets the engine-conf'd
     # pytest suite run under any robustness axis (state-store provider,
@@ -71,19 +68,21 @@ def build_session(app_name: str = "mpcu-spark", cpus: int | None = None) -> Spar
         requested[k.strip()] = v.strip()
         builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
+    ensure_confs(spark)
     # getOrCreate silently ignores builder confs when it returns a
     # pre-existing session (and static/core confs can never be applied
     # post-launch) — the OTHER way an axis can record a green sweep
-    # without ever engaging (r12 advice). Read every requested conf
-    # back and fail loudly on a mismatch.
+    # without ever engaging (r12 advice). ensure_confs forces the
+    # result-changing confs, so a request for another value of one of
+    # those fails here too. Read every requested conf back, after
+    # ensure_confs, and fail loudly on a mismatch.
     for k, v in requested.items():
         applied = spark.conf.get(k, None)
         if applied != v:
             raise RuntimeError(
                 f"SPARK_GRAFT_EXTRA_CONFS: {k}={v!r} was not applied "
-                f"(session reports {applied!r}) — getOrCreate likely "
-                f"returned a pre-existing session; stop it first or set "
-                f"the conf at runtime"
+                f"(session reports {applied!r}) — the engine forces this "
+                f"conf, or getOrCreate returned a pre-existing session; "
+                f"stop it first or set the conf at runtime"
             )
-    ensure_confs(spark)
     return spark

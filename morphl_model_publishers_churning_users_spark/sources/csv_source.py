@@ -13,7 +13,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from ..operators._shared import dsum, scratch_dir, t
+from ..operators._shared import dsum, scratch_dir, t, words
 from ..registry import register
 
 
@@ -197,9 +197,7 @@ def source_text_lines(spark, sf_dir):
     docs.write.mode("overwrite").text(out)
     back = spark.read.text(out)
     return (
-        back.select(
-            F.size(F.split(F.trim("value"), r"\s+")).cast("bigint").alias("n_tokens")
-        )
+        back.select(F.size(words(F.trim("value"))).cast("bigint").alias("n_tokens"))
         .groupBy("n_tokens")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_lines"))
     )
